@@ -10,16 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
 
     // warm the catalog + JVM (file listing, codegen compiler, shuffle infra)
     Tables.all.foreach(n => Tables.load(spark, sfDir, n).count())
@@ -50,6 +41,9 @@ object Bench {
     // themselves use
     val calFirst = (1 to 3).map(_ => calibrate()).min
 
+    // every query that failed a rep, with its last error: the -1 entries
+    // below stay for compatibility, but a failure is never only a -1
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       // the cache clear sits in finally: a FAILED extraction query may
@@ -62,6 +56,7 @@ object Bench {
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed(name) = String.valueOf(e.getMessage)
           -1.0
       } finally spark.catalog.clearCache()
     }
@@ -130,8 +125,37 @@ object Bench {
         Double.box(if (med >= 0 && calRef > 0) med / calRef else -1.0))
     }.mkString("{", ",", "}")
     val calSeriesJson = calSeries.map(n3).mkString("[", ",", "]")
+    // error text as a JSON string body; control chars (multi-line
+    // messages) become spaces
+    def jsonStr(v: String): String = v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => " "
+      case c => c.toString
+    }
+    val failedJson = failed.map { case (k, m) =>
+      "\"" + k + "\":\"" + jsonStr(m) + "\"" }.mkString("{", ",", "}")
     val cal = s""""calibration":{"first_sec":${n3(calFirst)},"last_sec":${n3(calLast)},"mid_series_sec":$calSeriesJson,"norm_ref_sec":${n3(calRef)},"drift":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(drift))},"drift_direction":"$direction","unstable":$unstable,"contended":$contended,"rule":"min-of-3 each side; drift>1.5 flags unstable in either direction; contended additionally requires the LAST side slower (slowdown=contention; a speed-up reads as warm-up but may be early contention that subsided - cross-check queries_min vs queries)","norm_rule":"queries_norm[q] = queries[q] / norm_ref_sec, where norm_ref_sec = median of first/last (min-of-3 each) + one mid-run sentinel reading every 30 queries - unitless multiples of the calibration sentinel; compare THESE across rounds/machines, raw seconds only within one run"}"""
-    println(s"""{"metric":"total","value":${n3(total)},"unit":"sec","reps":$reps,"queries":$qs,"queries_min":$qmin,"queries_norm":$qnorm,$cal,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${n3(total)},"unit":"sec","reps":$reps,"queries":$qs,"queries_min":$qmin,"queries_norm":$qnorm,"failed":$failedJson,$cal,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** THE measurement session — Bench's confs, on `SPARK_GRAFT_CPUS`
+    * local cores (default 32). Every profiling main (TimeTool,
+    * StageProbe, ExplainTool) builds its session here, so what they time
+    * and plan is what the bench runs.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
   }
 }

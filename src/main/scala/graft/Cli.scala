@@ -557,7 +557,7 @@ object Cli {
         }
         // reclaim predecessors an append-refresh superseded (7-day
         // concurrent-reader grace — a young dir is never deleted)
-        val vacuumed = Dedup.vacuumIndexes(spark, srcDir)
+        val vacuumed = graft.index.StandingIndex.vacuumIndexes(spark, srcDir)
         log(s"index: ${lines.mkString(", ")}, " +
           s"vacuumed=${vacuumed.size} superseded -> " +
           spark.conf.getOption("spark.graft.index.root")

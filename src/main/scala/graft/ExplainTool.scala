@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection helper:
   * `runMain graft.ExplainTool <sfDir> <query>[,<query>...] [mode] [outDir] [suffix]`
   * prints the chosen explain mode (default "formatted") for each registered
@@ -16,13 +14,8 @@ object ExplainTool {
     val mode = if (args.length > 2) args(2) else "formatted"
     val outDir = if (args.length > 3) Some(args(3)) else None
     val suffix = if (args.length > 4) args(4) else "plan"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session, so the dumped plans are the plans the bench runs
+    val spark = Bench.session()
     outDir.foreach(d => new java.io.File(d).mkdirs())
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.index.StandingIndex
+import graft.index.StandingIndex.cachedCorpusTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -310,8 +312,7 @@ object Dedup {
     * time, so the persisted table is the already-bounded join input.
     */
   def corpusSubstrPostings(s: SparkSession, dir: String): DataFrame =
-    cachedPostingsIndex(s, dir, SubstrPostingsFamily.name, s"8|$DfCap|df",
-      DfCap)(SubstrPostingsFamily.post)
+    cachedPostingsIndex(s, dir, SubstrPostingsFamily, s"8|$DfCap|df")
 
   /** A DF-CAPPED standing postings family — the shared algebra behind the
     * substring-overlap and rare-gram-Jaccard probe tables, and the
@@ -358,6 +359,9 @@ object Dedup {
         .unionByName(sat.select(lit(null).cast("long").as("doc_id"),
           col("gram"), col("cnt").as("df")))
     }
+
+    /** `d`'s postings as an uncapped stored part (every df 1). */
+    def uncapped(d: DataFrame): DataFrame = post(d).withColumn("df", lit(1L))
 
     /** Per-gram TRUE df over a union of stored parts (the invariant). */
     def totals(parts: DataFrame): DataFrame =
@@ -419,60 +423,13 @@ object Dedup {
     * [[graft.operators.TextAnalysis.countsTable]]: each published part is
     * complete by atomic publish, so the merge needs no fence.
     */
-  /** Whether directory `p` exists with at least one entry — with
-    * `visible`, at least one NON-DOT entry, so an unpublished `.build_*`
-    * temp alone never makes a maintained side look present. THE
-    * directory probe every standing-index read view shares (returns
-    * Some(p) for chaining into parquet reads); previously copied
-    * verbatim at six sites, where a fix to one could silently miss the
-    * others.
-    */
-  private[graft] def existingIndexDir(
-      conf: org.apache.hadoop.conf.Configuration,
-      p: String, visible: Boolean = false): Option[String] = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val f = hp.getFileSystem(conf)
-    if (f.exists(hp) && f.listStatus(hp).exists(st => !visible ||
-        !st.getPath.getName.startsWith("."))) Some(p)
-    else None
-  }
-
-  /** [[existingIndexDir]] additionally requiring Spark's job-commit
-    * `_SUCCESS` marker — the probe for SEEDED bases written by a direct
-    * overwrite (Export.flush has no two-phase publish): a driver killed
-    * during job commit can leave committed part files WITHOUT the
-    * marker, and serving them would silently return partial rows
-    * forever (the hazard publishIndexDir's protocol exists for). An
-    * unmarked dir reads as absent — re-seed to repair. Maintained sides
-    * keep the plain probe: their parts publish atomically with their
-    * own markers.
-    */
-  private[graft] def existingSeededDir(
-      conf: org.apache.hadoop.conf.Configuration,
-      p: String): Option[String] = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    if (hp.getFileSystem(conf).exists(
-        new org.apache.hadoop.fs.Path(hp, "_SUCCESS"))) Some(p)
-    else None
-  }
-
   def postingsTable(s: SparkSession, root: String,
-                    fam: PostingsFamily): Option[DataFrame] = {
-    val conf = s.sessionState.newHadoopConf()
-    def existing(p: String, visible: Boolean = false): Option[String] =
-      existingIndexDir(conf, p, visible)
-    val cols = Seq(col("doc_id"), col("gram"), col("df"))
-    val base = existingSeededDir(conf, s"$root/postings")
-      .map(p => s.read.parquet(p).select(cols: _*))
-    val maintained = existing(s"$root/postings_m", visible = true)
-      .map(p => s.read.parquet(p).select(cols: _*))
-    (base, maintained) match {
-      case (Some(a), Some(b)) => Some(fam.live(a.unionByName(b)))
-      case (Some(a), None) => Some(fam.live(a))
-      case (None, Some(b)) => Some(fam.live(b))
-      case _ => None
-    }
-  }
+                    fam: PostingsFamily): Option[DataFrame] =
+    StandingIndex.maintainedRows(s, root, "postings", PostingsCols)
+      .map(fam.live)
+
+  /** Stored-part columns of every postings family. */
+  private val PostingsCols = Seq("doc_id", "gram", "df")
 
   /** Seed a maintainable postings root from the corpus-so-far: the cold
     * tombstoned build written to `root/postings` (the batch half of
@@ -481,20 +438,15 @@ object Dedup {
   def seedPostingsIndex(s: SparkSession, dir: String, fam: PostingsFamily,
                         root: String): Unit =
     graft.sources.Export.flush(
-      fam.compactForm(fam.post(Tables.spread(docs(s, dir)))
-        .withColumn("df", lit(1L))),
+      fam.compactForm(fam.uncapped(Tables.spread(docs(s, dir)))),
       s"$root/postings")
 
-  /** Janitor for a maintained postings root (counterpart of
-    * TextAnalysis.vacuumCountsIndex): sweeps crashed dot-named build
-    * temps under `postings_m` once idle past max(graceMs, 1 hour).
+  /** Janitor for a maintained postings root: sweeps crashed dot-named
+    * build temps under `postings_m` ([[StandingIndex.vacuumMaintained]]).
     */
   def vacuumPostingsIndex(s: SparkSession, root: String,
-                          graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/postings_m")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    sweepBuildTemps(fs, p, graceMs)
-  }
+                          graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] =
+    StandingIndex.vacuumMaintained(s, root, "postings", graceMs)
 
   /** Compact a maintained postings root into a FRESH root: base + parts
     * fold to the compact stored form (saturated grams' accumulated
@@ -507,41 +459,14 @@ object Dedup {
     */
   def compactPostingsIndex(s: SparkSession, root: String, newRoot: String,
                            fam: PostingsFamily): Unit = {
-    val conf = s.sessionState.newHadoopConf()
-    def existing(p: String, visible: Boolean = false): Option[String] =
-      graft.operators.Dedup.existingIndexDir(conf, p, visible)
-    val cols = Seq(col("doc_id"), col("gram"), col("df"))
-    // `visible` on the maintained side: a dir holding only a crashed
-    // maintainer's dot-named temp would otherwise fail schema inference
-    // and abort the whole compaction (the postingsTable rule)
-    val parts = (existingSeededDir(conf, s"$root/postings") ++
-      existing(s"$root/postings_m", visible = true)).toSeq
-      .map(p => s.read.parquet(p).select(cols: _*))
-      .reduceOption(_.unionByName(_))
+    // the read view's own parts: a maintained dir holding only a crashed
+    // maintainer's dot-named temp reads as absent instead of failing
+    // schema inference and aborting the whole compaction
+    val parts = StandingIndex.maintainedRows(s, root, "postings", PostingsCols)
       .getOrElse(throw new IllegalStateException(
         s"no postings to compact at $root"))
     graft.sources.Export.flush(fam.compactForm(parts), s"$newRoot/postings")
-    val mRootPath = new org.apache.hadoop.fs.Path(s"$root/postings_m")
-    val fs = mRootPath.getFileSystem(conf)
-    val idPaths =
-      if (!fs.exists(mRootPath)) Seq.empty
-      else fs.listStatus(mRootPath).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-        .map(st => new org.apache.hadoop.fs.Path(st.getPath, "_ids"))
-        .filter(fs.exists(_)).map(_.toString)
-    if (idPaths.nonEmpty) {
-      val newM = s"$newRoot/postings_m"
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = s"$newM/.build_compact_$token"
-      parts.limit(0).write.parquet(tmp)
-      s.read.parquet(idPaths: _*).select("doc_id").distinct()
-        .write.parquet(s"$tmp/_ids")
-      val tfs = new org.apache.hadoop.fs.Path(newM).getFileSystem(conf)
-      publishIndexDir(tfs,
-        new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$newM/batch=compact_$token"),
-        marker = "_ids/_SUCCESS"): Unit
-    }
+    StandingIndex.carryFence(s, root, newRoot, "postings", parts)
   }
 
   /** Standing df-capped postings table over (doc_id, gram) rows from
@@ -555,32 +480,14 @@ object Dedup {
     * Tombstone count ∝ distinct saturated grams, a sliver of the
     * postings they replace. Readers get the live (doc_id, gram) rows.
     */
-  private def cachedPostingsIndex(s: SparkSession, dir: String, tag: String,
-                                  params: String, cap: Int)(
-                                  post: DataFrame => DataFrame): DataFrame = {
-    def withDf(p: DataFrame) = {
-      val dfT = p.groupBy("gram").agg(count(lit(1)).as("df"))
-      p.join(dfT.filter(col("df") <= cap), "gram")
-        .select(col("doc_id"), col("gram"), col("df"))
-        .unionByName(dfT.filter(col("df") > cap)
-          .select(lit(null).cast("long").as("doc_id"), col("gram"), col("df")))
-    }
-    cachedCorpusTable(s, dir, tag, params,
-      incr = (old, newDocs) => {
-        val oldSat = old.filter(col("doc_id").isNull)
-          .select(col("gram"), col("df").as("odf"))
-        val newPost = post(newDocs)
-        val satUpd = oldSat
-          .join(newPost.groupBy("gram").agg(count(lit(1)).as("ndf")),
-            Seq("gram"), "left")
-          .select(lit(null).cast("long").as("doc_id"), col("gram"),
-            (col("odf") + coalesce(col("ndf"), lit(0L))).as("df"))
-        val live = old.filter(col("doc_id").isNotNull).select("doc_id", "gram")
-          .unionByName(newPost.join(oldSat.select("gram"), Seq("gram"),
-            "left_anti"))
-        withDf(live).unionByName(satUpd)
-      })(
-      withDf(post(Tables.spread(docs(s, dir)))))
+  private def cachedPostingsIndex(s: SparkSession, dir: String,
+                                  fam: PostingsFamily, params: String): DataFrame = {
+    // the compact form of (stored parts ∪ new postings) IS the grown
+    // corpus's compact form: the df invariant counts the old tombstones
+    cachedCorpusTable(s, dir, fam.name, params,
+      incr = (old, newDocs) =>
+        fam.compactForm(old.unionByName(fam.uncapped(newDocs))))(
+      fam.compactForm(fam.uncapped(Tables.spread(docs(s, dir)))))
       .filter(col("doc_id").isNotNull).select("doc_id", "gram")
   }
 
@@ -594,8 +501,7 @@ object Dedup {
     * the 16-hex digests the other families key on.
     */
   def corpusRareGramPostings(s: SparkSession, dir: String): DataFrame =
-    cachedPostingsIndex(s, dir, RareGramPostingsFamily.name, s"2|en|$DfCap",
-      DfCap)(RareGramPostingsFamily.post)
+    cachedPostingsIndex(s, dir, RareGramPostingsFamily, s"2|en|$DfCap")
 
   /** Scored containment pair frame shared by q_ngram_containment and
     * q_containment_hubs: the SAME df-capped standing-postings pair join
@@ -879,386 +785,9 @@ object Dedup {
     * table both simhash queries probe (column renamed to `sig`, the index
     * side's name).
     */
-  def corpusSimhashSigs(s: SparkSession, dir: String): DataFrame = {
+  def corpusSimhashSigs(s: SparkSession, dir: String): DataFrame =
     // per-doc rows: append-refresh unions the new files' signatures
-    val fam = SimhashFamily
-    cachedCorpusTable(s, dir, fam.name, s"$SimhashBits",
-      incr = (old, newDocs) => fam.merge(old.unionByName(fam.counts(newDocs))))(
-      fam.counts(Tables.spread(Tables.load(s, dir, "documents"))))
-  }
-
-  /** Build-once/probe-many materialization of a deterministic corpus
-    * derivation: builds into a parquet table under [[Tables.indexRoot]]
-    * (shared storage on a cluster; tmpdir only in single-JVM local mode)
-    * on first use, then every caller reads the table. The cache key covers
-    * the corpus path,
-    * every data file's (name, length, mtime), and `params`, so a
-    * regenerated corpus — even one with the same row count — never reads
-    * a stale table.
-    *
-    * INCREMENTAL REFRESH on corpus append: when `incr` is given and the
-    * corpus has only GROWN since an earlier build (every file of some
-    * prior index's recorded stamp still present byte-identically, new
-    * files added — the ingestion-append shape), the new index is derived
-    * from that predecessor plus ONLY the new files:
-    * `incr(predecessorIndex, newDocs)`. Appending one file to a 100 TB
-    * corpus then costs index-merge + new-file work instead of a full
-    * corpus re-derivation — the all-or-nothing rebuild was this ladder's
-    * last 100 TB cost cliff. Each index directory stays IMMUTABLE
-    * (content-keyed name, `_SUCCESS` publish marker), so concurrent
-    * readers of the old index are never torn by a refresh; the stamp
-    * sidecar (`_GRAFT_STAMP`) records which corpus files a directory
-    * covers, and predecessor detection is a metadata-only listing. Any
-    * in-place file change or removal fails the subset check and falls
-    * back to a cold build — correctness never depends on `incr`.
-    */
-  private[operators] def cachedCorpusTable(s: SparkSession, dir: String, tag: String,
-                                params: String, table: String = "documents",
-                                incr: (DataFrame, DataFrame) => DataFrame = null)(
-                                build: => DataFrame): DataFrame =
-    synchronized {
-      val conf = s.sessionState.newHadoopConf()
-      val corpus = Tables.path(dir, table)
-      val entries = corpusFiles(s, dir, table)
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$corpus|${entries.map(_._2).mkString("|")}|$params"
-          .getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val idxRoot = Tables.indexRoot(s, dir)
-      val root = s"$idxRoot/graft_${tag}_$key"
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_SUCCESS"))) {
-        val pred =
-          if (incr == null) None
-          else predecessorIndex(fs, idxRoot, tag, corpus, table, params,
-            entries.map(_._2).toSet)
-        // two-phase publish ([[buildAndPublishIndex]]) — two DRIVERS
-        // sharing an index root (the intended cluster deployment) can
-        // race the same content key, and the pre-r8 direct flush let the
-        // second build overwrite in place under a reader that had
-        // already seen _SUCCESS. Loser reads the winner: same key ⇒ same
-        // corpus+params ⇒ equivalent table.
-        buildAndPublishIndex(fs, idxRoot, root, s"${tag}_$key") { tmp =>
-          pred match {
-            case Some((predRoot, predEntries)) =>
-              val newPaths = entries.collect {
-                case (p, e) if !predEntries.contains(e) => p }
-              graft.sources.Export.flush(
-                incr(s.read.parquet(predRoot),
-                  Tables.spread(s.read.parquet(newPaths: _*))), tmp)
-            case None => graft.sources.Export.flush(build, tmp)
-          }
-          writeStampFile(fs, tmp, corpus, table, params, entries.map(_._2))
-        }
-      }
-      // content-keyed dir (the key hashes corpus identity + params), so
-      // the footer-schema memo is safe: same path ⇒ same table
-      Tables.parquetImmutable(s, root)
-    }
-
-  /** Atomically publish a fully-built index directory at its final
-    * content-keyed path. Returns true when this builder WON (root is now
-    * its data); false when a concurrent builder published first — the
-    * loser's temp dir is cleaned up and the caller reads the winner's
-    * (equivalent, same content key) table. Per scheme:
-    *
-    *  - `file://`: NIO ATOMIC_MOVE — a true rename(2), which fails on an
-    *    existing non-empty destination instead of merging into it;
-    *  - HDFS-family: `rename` is atomic but renames INTO an existing
-    *    destination directory — detected afterwards by the nested
-    *    dot-named dir (invisible to readers while nested) and undone;
-    *  - object stores: rename is copy+delete, so the publish cannot be
-    *    made atomic from this side alone; the exists-then-rename below
-    *    narrows the window but two racing builders on s3a can still
-    *    interleave — co-locate shared index roots on an atomic-rename
-    *    filesystem (the same guidance Versioned commits enforce).
-    */
-  private[graft] def publishIndexDir(fs: org.apache.hadoop.fs.FileSystem,
-                                         tmp: org.apache.hadoop.fs.Path,
-                                         root: org.apache.hadoop.fs.Path,
-                                         marker: String = "_SUCCESS")
-      : Boolean = {
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file")
-    def moveOnce(): Boolean =
-      if (scheme == "file") {
-        try {
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(fs.makeQualified(tmp).toUri),
-            java.nio.file.Paths.get(fs.makeQualified(root).toUri),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.nio.file.DirectoryNotEmptyException => false
-          case _: java.nio.file.FileSystemException if fs.exists(root) =>
-            false
-        }
-      } else {
-        if (fs.exists(root)) false
-        else if (!fs.rename(tmp, root)) false
-        else {
-          val nested = new org.apache.hadoop.fs.Path(root, tmp.getName)
-          if (fs.exists(nested)) { fs.delete(nested, true); false } else true
-        }
-      }
-    var won = moveOnce()
-    // before conceding, VERIFY the occupant is a completed publish: a
-    // real winner always moves a complete dir (marker included) into
-    // place atomically, so a markerless occupant is garbage — e.g. a
-    // pre-two-phase crashed direct flush, which parquet would silently
-    // serve PARTIAL rows from forever while every rebuild concedes to
-    // it. Evict by ATOMIC RENAME-ASIDE, never delete: if a complete
-    // index was in fact published between the marker check and the
-    // evict (ms-scale race), it moves aside INTACT — nothing is ever
-    // half-deleted at the final path under a reader, and the end state
-    // is this builder's equivalent (same content key) index. The
-    // dot-named trash dir is reclaimed by the same idle-keyed sweep
-    // that handles crashed builds (vacuumIndexes).
-    if (!won && !fs.exists(new org.apache.hadoop.fs.Path(root, marker))) {
-      val trash = new org.apache.hadoop.fs.Path(root.getParent,
-        s".build_evicted_${java.util.UUID.randomUUID.toString.take(8)}")
-      val evicted = fs.rename(root, trash)
-      won = moveOnce()
-      // conceding is only correct when the marker PROVES a complete
-      // publish. Losing the retried move with the marker still absent
-      // must be loud whatever happened to the eviction: either the
-      // markerless occupant is still in place (rename failed), or the
-      // eviction succeeded and a SECOND markerless writer recreated the
-      // root inside the window — both leave partial parquet live, which
-      // readers would silently serve forever. (A racing WINNER losing us
-      // the retry is the one benign case, and then the marker exists.)
-      if (!won && !fs.exists(new org.apache.hadoop.fs.Path(root, marker))) {
-        fs.delete(tmp, true)
-        throw new java.io.IOException(
-          s"standing-index publish: no complete publish exists at $root " +
-            s"after eviction (evicted=$evicted to $trash) and the retried " +
-            "move lost — refusing to leave partial data live")
-      }
-    }
-    if (!won) fs.delete(tmp, true)
-    won
-  }
-
-  /** The two-phase standing-index publish EVERY builder shares: build
-    * into a dot-named temp dir under the index root (invisible to
-    * predecessor detection, vacuum, and Spark's file listings), then
-    * atomically move to the final content-keyed path via
-    * [[publishIndexDir]]. `marker` is the root-relative path whose
-    * presence proves a complete publish (nested for the multi-table
-    * indexes, e.g. "lists/_SUCCESS"). Holding the protocol in one place
-    * keeps the four builder families from drifting — a publish-rule fix
-    * lands everywhere at once. After return, `root` holds an equivalent
-    * published table whichever racing builder won.
-    */
-  private[graft] def buildAndPublishIndex(fs: org.apache.hadoop.fs.FileSystem,
-                                          idxRoot: String, root: String,
-                                          tmpName: String,
-                                          marker: String = "_SUCCESS")(
-                                          build: String => Unit): Unit = {
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = s"$idxRoot/.build_${tmpName}_$token"
-    Tables.indexWrite(idxRoot) {
-      build(tmp)
-      publishIndexDir(fs, new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(root), marker): Unit
-    }
-  }
-
-  /** Most complete already-published index of the same (corpus, table,
-    * params) family whose recorded corpus files are a strict subset of the
-    * current ones — i.e. a build of an earlier, smaller version of this
-    * corpus that pure appends have grown. Metadata-only: one directory
-    * listing plus one tiny stamp read per candidate.
-    */
-  private[operators] def predecessorIndex(fs: org.apache.hadoop.fs.FileSystem,
-                               idxRoot: String, tag: String, corpus: String,
-                               table: String, params: String,
-                               current: Set[String],
-                               marker: String = "_SUCCESS")
-      : Option[(String, Set[String])] = {
-    val rootPath = new org.apache.hadoop.fs.Path(idxRoot)
-    if (!fs.exists(rootPath)) return None
-    val cands = fs.listStatus(rootPath).iterator
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"graft_${tag}_"))
-      .flatMap { st =>
-        val d = st.getPath.toString
-        val stampP = new org.apache.hadoop.fs.Path(s"$d/_GRAFT_STAMP")
-        if (!fs.exists(stampP) ||
-            !fs.exists(new org.apache.hadoop.fs.Path(s"$d/$marker"))) None
-        else {
-          val lines = readSmallText(fs, stampP).split("\n", -1).toSeq
-          if (lines.length < 3 || lines(0) != corpus || lines(1) != table ||
-              lines(2) != params) None
-          else {
-            val files = lines.drop(3).filter(_.nonEmpty).toSet
-            if (files.nonEmpty && files != current && files.subsetOf(current))
-              Some((d, files))
-            else None
-          }
-        }
-      }.toSeq
-    if (cands.isEmpty) None else Some(cands.maxBy(_._2.size))
-  }
-
-  private[operators] def writeStampFile(fs: org.apache.hadoop.fs.FileSystem, root: String,
-                             corpus: String, table: String, params: String,
-                             entries: Seq[String]): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$root/_GRAFT_STAMP"), true)
-    try out.write(
-      (Seq(corpus, table, params) ++ entries).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Delete SUPERSEDED standing-index directories under this corpus's
-    * index root: append-refresh publishes a new immutable directory per
-    * corpus version and leaves the predecessor readable for concurrent
-    * probes, so a long-lived ingest pipeline accumulates one obsolete
-    * dir per (family, append) — the mechanism's own small-files problem.
-    * A dir is superseded when another PUBLISHED dir of the same family
-    * (same corpus, table, params, tag) records a strict superset of its
-    * corpus files — and "published" means its `_GRAFT_STAMP` exists,
-    * which every build writes LAST (after all data flushes), so a
-    * crashed partial build can never supersede a complete predecessor.
-    * `graceMs` is the concurrent-reader fence and keys on the
-    * SUPERSESSOR's age — i.e. on how long ago the supersession happened
-    * — not on the victim's build time (a 30-day-old index deleted
-    * seconds after its replacement appears would tear exactly the
-    * long-running reader the fence exists for). Pass 0 only when no
-    * concurrent reader can exist. Returns the deleted paths.
-    *
-    * The supersession rule additionally requires the supersessor's own
-    * stamp to still be a SUBSET of the current corpus files: corpora do
-    * not only grow, and after files are removed in place the freshly
-    * built CURRENT index's stamp is a strict subset of a stale
-    * pre-shrink dir's — without the guard that stale, past-grace dir
-    * would "supersede" the live index and vacuum would delete it
-    * immediately (tearing concurrent probes and forcing rebuild churn
-    * on the next query; the CLI `index` command runs this vacuum
-    * automatically). A dir whose stamp exactly matches the current
-    * corpus is never deleted for the same reason.
-    */
-  def vacuumIndexes(s: SparkSession, dir: String,
-                    graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
-    val conf = s.sessionState.newHadoopConf()
-    val idxRoot = new org.apache.hadoop.fs.Path(Tables.indexRoot(s, dir))
-    val fs = idxRoot.getFileSystem(conf)
-    if (!fs.exists(idxRoot)) return Seq.empty
-    final case class Idx(path: org.apache.hadoop.fs.Path, tag: String,
-                         head: Seq[String], files: Set[String],
-                         mtime: Long, published: Boolean)
-    val dirs = fs.listStatus(idxRoot).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("graft_"))
-      .flatMap { st =>
-        val name = st.getPath.getName.stripPrefix("graft_")
-        val cut = name.lastIndexOf('_')
-        val stampP = new org.apache.hadoop.fs.Path(s"${st.getPath}/_GRAFT_STAMP")
-        if (cut <= 0 || !fs.exists(stampP)) None
-        else {
-          val lines = readSmallText(fs, stampP).split("\n", -1).toSeq
-          if (lines.length < 3) None
-          else {
-            val published =
-              fs.exists(new org.apache.hadoop.fs.Path(s"${st.getPath}/_SUCCESS")) ||
-                fs.listStatus(st.getPath).exists(sub => sub.isDirectory &&
-                  fs.exists(new org.apache.hadoop.fs.Path(s"${sub.getPath}/_SUCCESS")))
-            Some(Idx(st.getPath, name.substring(0, cut), lines.take(3),
-              lines.drop(3).filter(_.nonEmpty).toSet,
-              st.getModificationTime, published))
-          }
-        }
-      }
-    val cutoff = System.currentTimeMillis() - math.max(0L, graceMs)
-    // current corpus files per stamped table, for the shrink guard below;
-    // a missing table (corpus deleted) resolves to an empty set, which
-    // conservatively blocks all deletion in that family
-    val currentByTable = scala.collection.mutable.Map.empty[String, Set[String]]
-    def currentFiles(table: String): Set[String] =
-      currentByTable.getOrElseUpdate(table,
-        scala.util.Try(corpusFiles(s, dir, table).map(_._2).toSet)
-          .getOrElse(Set.empty))
-    dirs.groupBy(i => (i.tag, i.head)).values.toSeq.flatMap { fam =>
-      val head = fam.head.head
-      val (corpus, table) = (head(0), head(1))
-      // only vacuum families of THIS corpus dir: a shared index root
-      // (GRAFT_INDEX_ROOT) holds other corpora's families too, and their
-      // current-file sets are unknowable from here — each corpus's own
-      // vacuum call owns them
-      if (corpus != Tables.path(dir, table)) Seq.empty
-      else {
-        val current = currentFiles(table)
-        fam.filter { i =>
-          // shrink guard: the live index's stamp IS the current corpus —
-          // never deletable, and only a supersessor that is itself still
-          // a subset of the current corpus counts (a stale pre-shrink
-          // superset is not a successor, it is garbage awaiting its own
-          // supersession)
-          i.files != current &&
-            fam.exists(o => o.published && (o.path != i.path) &&
-              i.files.subsetOf(o.files) && i.files != o.files &&
-              o.files.subsetOf(current) && o.mtime <= cutoff)
-        }.map { i => fs.delete(i.path, true); i.path.toString }
-      }
-    }.sorted ++ sweepBuildTemps(fs, idxRoot, graceMs)
-  }
-
-  /** Sweep crashed builders' dot-named `.build_*` temp dirs under `root`
-    * (a driver killed between flush and publish — routine with spot
-    * instances); nothing else ever touches dot-named dirs. Unlike
-    * published dirs, an IN-FLIGHT build may be writing right now and
-    * grace=0 callers (tests, single-process CLI) cannot know about OTHER
-    * builders sharing the root — so the sweep keeps a one-hour floor
-    * regardless of grace, measured as IDLENESS: the top dir's mtime
-    * freezes at job start while Spark writes into the nested _temporary
-    * subtree, so a long-running legitimate build would look hours old by
-    * top mtime alone. A dir is swept only when its entire SUBTREE has
-    * gone quiet past the floor (recursive max-mtime — bounded: only
-    * top-mtime-stale candidates pay the listing, and crashed trees stop
-    * changing, so repeated vacuums converge on the same answer). Shared
-    * by [[vacuumIndexes]] and the maintained count roots' janitor
-    * (TextAnalysis.vacuumCountsIndex).
-    */
-  private[graft] def sweepBuildTemps(fs: org.apache.hadoop.fs.FileSystem,
-                                     root: org.apache.hadoop.fs.Path,
-                                     graceMs: Long): Seq[String] = {
-    if (!fs.exists(root)) return Seq.empty
-    val buildCutoff = System.currentTimeMillis() -
-      math.max(math.max(0L, graceMs), 3600L * 1000)
-    // seeded from the PARENT's listing entry and guarded throughout:
-    // the walked tree belongs to a possibly-LIVE job (or a concurrent
-    // vacuum's victim) and may vanish mid-walk — a vanished subtree
-    // reads as "no younger writes there", never as a sweep abort
-    def newestMtime(st0: org.apache.hadoop.fs.FileStatus): Long = {
-      val kids = try fs.listStatus(st0.getPath) catch {
-        case _: java.io.FileNotFoundException => Array.empty[
-          org.apache.hadoop.fs.FileStatus]
-      }
-      kids.foldLeft(st0.getModificationTime) { (m, st) =>
-        math.max(m, if (st.isDirectory) newestMtime(st)
-          else st.getModificationTime)
-      }
-    }
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(".build_") &&
-        st.getModificationTime <= buildCutoff &&
-        newestMtime(st) <= buildCutoff)
-      .map { st => fs.delete(st.getPath, true); st.getPath.toString }
-      .sorted
-  }
-
-  private def readSmallText(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, "UTF-8")
-    } finally in.close()
-  }
+    SimhashFamily.standing(s, dir, s"$SimhashBits")
 
   /** (doc_id, band, bkey) band keys of a signature table (h0..h7) — the
     * LSH bucket membership rows, uncapped.
@@ -1300,53 +829,6 @@ object Dedup {
   val IncrMod = 5
   val IncrEstMicro: Long = 2L * (1000000 / NumSeeds)
 
-  /** Location of the persisted MinHash index for a corpus partition:
-    * keyed by corpus path, footer row count, and the signature/cap/split
-    * params, so a re-generated corpus never reads a stale index.
-    */
-  def minhashIndexDir(s: SparkSession, dir: String, mod: Int): String = {
-    // keyed by the full file stamp (name:length:mtime per data file), NOT
-    // the row count: a regenerated corpus with the same row count must
-    // rebuild, or incremental dedup probes a stale index
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${corpusStamp(s, dir, "documents")}|$mod|$NumSeeds|$BucketCap"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"${Tables.indexRoot(s, dir)}/graft_minhash_$key"
-  }
-
-  /** Corpus identity stamp shared by every persisted-index key: path plus
-    * each data file's (name, length, mtime). Same stamp ⇒ byte-identical
-    * corpus for caching purposes.
-    */
-  private[operators] def corpusStamp(s: SparkSession, dir: String,
-                                     table: String): String =
-    Tables.path(dir, table) + "|" +
-      corpusFiles(s, dir, table).map(_._2).mkString("|")
-
-  /** The corpus's DATA files as (full path, "name:length:mtime") entries,
-    * name-sorted. Metadata files (`_SUCCESS`, `.crc`, …) are excluded: an
-    * append-mode write rewrites them without changing any data, and
-    * including them would turn every pure append into a full-rebuild
-    * stamp miss.
-    */
-  private[operators] def corpusFiles(s: SparkSession, dir: String,
-                                     table: String): Seq[(String, String)] = {
-    val corpus = Tables.path(dir, table)
-    val conf = s.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(corpus)
-    val fs = p.getFileSystem(conf)
-    val sts =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filterNot { st =>
-          val n = st.getPath.getName
-          n.startsWith("_") || n.startsWith(".")
-        }.sortBy(_.getPath.getName)
-      else Array(fs.getFileStatus(p))
-    sts.iterator.map(st => (st.getPath.toString,
-      s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")).toSeq
-  }
-
   /** MinHash index BUILD — run once per ingested corpus, never per batch:
     * signatures + capped band keys of every already-ingested document
     * (doc_id % mod != 0), written as two parquet tables via the Export
@@ -1357,15 +839,28 @@ object Dedup {
     * the index already exists (parquet _SUCCESS marker).
     */
   def buildMinhashIndex(s: SparkSession, dir: String,
-                        mod: Int = IncrMod): String = synchronized {
-    val root = minhashIndexDir(s, dir, mod)
-    val conf = s.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/bands/_SUCCESS")))
-      return root
-    val corpus = Tables.path(dir, "documents")
-    val entries = corpusFiles(s, dir, "documents")
-    val params = s"$mod|$NumSeeds|$BucketCap"
+                        mod: Int = IncrMod): String =
+    // cachedCorpusTable's monitor: minhash and cached-table builds
+    // exclude each other within one JVM
+    StandingIndex.synchronized {
+    def coldBuild(tmp: String): Unit = {
+      val old = Tables.spread(Tables.load(s, dir, "documents"))
+        .filter(pmod(col("doc_id"), lit(mod)) =!= 0)
+      // the sig computation feeds both writes; localCheckpoint
+      // materializes the shingle explode + 8-way min aggregate once
+      val sigs = minhashSignatures(old).localCheckpoint()
+      graft.sources.Export.flush(sigs, s"$tmp/sigs")
+      // normalized-content keepers: the sidecar streaming maintenance
+      // needs to drop cross-batch byte-copies exactly like this
+      // build's corpus-wide exact-dedup pre-pass (bands written
+      // LAST — its _SUCCESS is the index-complete marker)
+      graft.sources.Export.flush(
+        old.select(md5s(TextAnalysis.normText(col("text"))).as("h"),
+            col("doc_id"))
+          .groupBy("h").agg(min(col("doc_id")).as("doc_id")),
+        s"$tmp/reps")
+      graft.sources.Export.flush(cappedBandKeys(sigs), s"$tmp/bands")
+    }
     // append-refresh: like cachedCorpusTable, an earlier build of a
     // smaller version of this corpus (pure file appends since) seeds the
     // new index — only the NEW files' documents are normalized, designed
@@ -1376,37 +871,12 @@ object Dedup {
     // shape the STREAMING maintainer applies per micro-batch
     // (Docs.maintainMinhashIndex), so for the doc_id-ascending appends an
     // ingestion pipeline produces, refresh ≡ cold rebuild exactly
-    // (IncrementalIndexSpec pins it).
-    val pred = predecessorIndex(fs, Tables.indexRoot(s, dir), "minhash",
-      corpus, "documents", params, entries.map(_._2).toSet,
-      marker = "bands/_SUCCESS")
-    // same two-phase publish as cachedCorpusTable: all three subtables
-    // and the stamp land in a dot-named temp root, then one atomic move
-    // makes the whole index visible — a second driver racing this build
-    // loses the move and probes the winner's (same-keyed) index
-    buildAndPublishIndex(fs, Tables.indexRoot(s, dir), root, "minhash",
-        marker = "bands/_SUCCESS") { tmp =>
-      def coldBuild(): Unit = {
-        val old = Tables.spread(Tables.load(s, dir, "documents"))
-          .filter(pmod(col("doc_id"), lit(mod)) =!= 0)
-        // the sig computation feeds both writes; localCheckpoint
-        // materializes the shingle explode + 8-way min aggregate once
-        val sigs = minhashSignatures(old).localCheckpoint()
-        graft.sources.Export.flush(sigs, s"$tmp/sigs")
-        // normalized-content keepers: the sidecar streaming maintenance
-        // needs to drop cross-batch byte-copies exactly like this
-        // build's corpus-wide exact-dedup pre-pass (bands written
-        // LAST — its _SUCCESS is the index-complete marker)
-        graft.sources.Export.flush(
-          old.select(md5s(TextAnalysis.normText(col("text"))).as("h"),
-              col("doc_id"))
-            .groupBy("h").agg(min(col("doc_id")).as("doc_id")),
-          s"$tmp/reps")
-        graft.sources.Export.flush(cappedBandKeys(sigs), s"$tmp/bands")
-      }
-      val refreshable = pred.flatMap { case (predRoot, predEntries) =>
-        val newPaths = entries.collect {
-          case (p, e) if !predEntries.contains(e) => p }
+    // (IncrementalIndexSpec pins it). All three subtables and the stamp
+    // publish together: a second driver racing this build loses the move
+    // and probes the winner's (same-keyed) index.
+    StandingIndex.stampedBuild(s, dir, "minhash", "documents",
+        s"$mod|$NumSeeds|$BucketCap", marker = "bands/_SUCCESS")(
+      cold = coldBuild, grow = Some { (tmp, predRoot, newPaths) =>
         val newDocs = Tables.spread(s.read.parquet(newPaths: _*))
           .filter(pmod(col("doc_id"), lit(mod)) =!= 0)
         // the per-bucket cap is doc_id-ordered, so only an ASCENDING
@@ -1421,10 +891,8 @@ object Dedup {
           .agg(max(col("doc_id"))).first()
         val ascending = minNew.isNullAt(0) || maxOld.isNullAt(0) ||
           minNew.getLong(0) > maxOld.getLong(0)
-        if (ascending) Some((predRoot, newDocs)) else None
-      }
-      refreshable match {
-        case Some((predRoot, newDocs)) =>
+        if (!ascending) coldBuild(tmp)
+        else {
           val oldReps = s.read.parquet(s"$predRoot/reps")
           val withH = newDocs.withColumn("__h",
             md5s(TextAnalysis.normText(col("text"))))
@@ -1452,11 +920,8 @@ object Dedup {
             .select("doc_id", "band", "bkey")
           graft.sources.Export.flush(oldBands.unionByName(admitted),
             s"$tmp/bands")
-        case None => coldBuild()
-      }
-      writeStampFile(fs, tmp, corpus, "documents", params, entries.map(_._2))
-    }
-    root
+        }
+      })
   }
 
   /** Read a MinHash-index subtable INCLUDING streaming-maintained rows:
@@ -1480,7 +945,7 @@ object Dedup {
     // dir survives, and parquet schema inference on it would fail the
     // whole read instead of falling back to the other side
     def existing(p: String): Option[String] =
-      graft.operators.Dedup.existingIndexDir(conf, p)
+      StandingIndex.existingIndexDir(conf, p)
     val base = existing(s"$root/$sub").map(s.read.parquet(_))
     val maintained = existing(s"$root/${sub}_m").map { p =>
       val d = s.read.parquet(p)

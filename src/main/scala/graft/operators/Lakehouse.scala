@@ -161,7 +161,7 @@ object Lakehouse {
   private def cdfTable(s: SparkSession, dir: String): String = synchronized {
     import graft.sources.Versioned
     import graft.streaming.Cdc
-    val stamps = Dedup.corpusFiles(s, dir, "orders").map(_._2).mkString("|")
+    val stamps = graft.index.StandingIndex.corpusFiles(s, dir, "orders").map(_._2).mkString("|")
     val keyH = java.security.MessageDigest.getInstance("MD5")
       .digest(s"cdf1|$dir|$stamps".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)

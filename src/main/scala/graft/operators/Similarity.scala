@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.index.StandingIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -171,19 +172,6 @@ object Similarity {
   val IvfNprobe = 4
   val IvfIters = 3
 
-  /** Location of the persisted IVF index for a corpus: keyed by the full
-    * file stamp (per-file name:length:mtime — Dedup.corpusStamp) and the
-    * build params. A row-count key was not enough: a REGENERATED corpus
-    * with the same row count would silently probe the old centroids.
-    */
-  def ivfIndexDir(s: SparkSession, dir: String, k: Int, iters: Int): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${Dedup.corpusStamp(s, dir, "embeddings")}|$k|$iters"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"${Tables.indexRoot(s, dir)}/graft_ivf_$key"
-  }
-
   /** IVF index BUILD — the expensive phase, run once per corpus, never per
     * query: spherical-k-means training (k corpus passes × iters), vector
     * assignment, and the two index tables written as parquet via the
@@ -222,17 +210,6 @@ object Similarity {
   def buildIvfIndex(s: SparkSession, dir: String, k: Int = IvfK,
                     iters: Int = IvfIters): String = synchronized {
     graft.functions.VectorOps.register(s)
-    val root = ivfIndexDir(s, dir, k, iters)
-    val conf = s.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/lists/_SUCCESS")))
-      return root
-    def unitize(d: org.apache.spark.sql.DataFrame) = unitizeVecs(d)
-    def assign(u: org.apache.spark.sql.DataFrame,
-               cents: org.apache.spark.sql.DataFrame) = ivfAssign(u, cents)
-    val corpus = Tables.path(dir, "embeddings")
-    val entries = Dedup.corpusFiles(s, dir, "embeddings")
-    val params = s"$k|$iters"
     // append-refresh: centroids are MODEL STATE frozen at train time —
     // retraining on every append would shift every assignment and
     // invalidate the whole inverted file, so (like every production IVF)
@@ -243,34 +220,18 @@ object Similarity {
     // distribution (SimilaritySpec pins the bound on a half-then-append
     // build); rebuild cold when the appended fraction grows large by
     // deleting the index dirs (or bumping params).
-    val pred = Dedup.predecessorIndex(fs, Tables.indexRoot(s, dir), "ivf",
-      corpus, "embeddings", params, entries.map(_._2).toSet,
-      marker = "lists/_SUCCESS")
-    // two-phase publish (Dedup.buildAndPublishIndex): concurrent drivers
-    // sharing the index root race the atomic move, never the directory
-    Dedup.buildAndPublishIndex(fs, Tables.indexRoot(s, dir), root, "ivf",
-        marker = "lists/_SUCCESS") { tmp =>
-      pred match {
-        case Some((predRoot, predEntries)) =>
-          val newPaths = entries.collect {
-            case (p, e) if !predEntries.contains(e) => p }
-          val cents = s.read.parquet(s"$predRoot/centroids")
-          val newLists = assign(
-            unitize(Tables.spread(s.read.parquet(newPaths: _*))), cents)
-          graft.sources.Export.flush(cents, s"$tmp/centroids")
-          graft.sources.Export.flush(
-            s.read.parquet(s"$predRoot/lists").unionByName(newLists),
-            s"$tmp/lists")
-        case None =>
-          val unitized = unitize(emb(s, dir))
-          val cents = kmeansCentroids(unitized, k, iters)
-          graft.sources.Export.flush(cents, s"$tmp/centroids")
-          graft.sources.Export.flush(assign(unitized, cents), s"$tmp/lists")
-      }
-      Dedup.writeStampFile(fs, tmp, corpus, "embeddings", params,
-        entries.map(_._2))
-    }
-    root
+    StandingIndex.stampedBuild(s, dir, "ivf", "embeddings", s"$k|$iters",
+        marker = "lists/_SUCCESS")(
+      cold = seedIvfIndex(s, dir, _, k, iters),
+      grow = Some { (tmp, predRoot, newPaths) =>
+        val cents = s.read.parquet(s"$predRoot/centroids")
+        val newLists = ivfAssign(
+          unitizeVecs(Tables.spread(s.read.parquet(newPaths: _*))), cents)
+        graft.sources.Export.flush(cents, s"$tmp/centroids")
+        graft.sources.Export.flush(
+          s.read.parquet(s"$predRoot/lists").unionByName(newLists),
+          s"$tmp/lists")
+      })
   }
 
   val PqM = 8        // subvectors per vector
@@ -371,17 +332,6 @@ object Similarity {
       .agg(min(struct(col("dist"), col("code"))).as("mn"))
       .select(col("c_id"), col("sub"), col("mn.code").as("code"))
 
-  /** Location of the persisted PQ index — same stamp rules as
-    * [[ivfIndexDir]].
-    */
-  def pqIndexDir(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${Dedup.corpusStamp(s, dir, "embeddings")}|$PqM|$PqK|$PqIters"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"${Tables.indexRoot(s, dir)}/graft_pq_$key"
-  }
-
   /** PQ index BUILD — the 100 TB ANN *memory* path: each corpus vector is
     * stored as m small codes instead of dim floats (here 8 codes ≈ 16×
     * smaller than 64 float32s), so the searchable corpus fits in a
@@ -396,55 +346,29 @@ object Similarity {
     */
   def buildPqIndex(s: SparkSession, dir: String): String = synchronized {
     graft.functions.VectorOps.register(s)
-    val root = pqIndexDir(s, dir)
-    val conf = s.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/codes/_SUCCESS")))
-      return root
-    def subvecsOf(d: org.apache.spark.sql.DataFrame) = pqSubvecs(d)
-    def encode(sv: org.apache.spark.sql.DataFrame,
-               cb: org.apache.spark.sql.DataFrame) = pqEncode(sv, cb)
-    val corpus = Tables.path(dir, "embeddings")
-    val entries = Dedup.corpusFiles(s, dir, "embeddings")
-    val params = s"$PqM|$PqK|$PqIters"
     // append-refresh mirrors the IVF rule: the codebook is frozen model
     // state (retrained codes would re-encode the whole corpus), a grown
     // corpus encodes only the NEW files' vectors against it and appends
     // their code rows; ADC quality on appended vectors carries the same
     // explicit staleness trade (spec-pinned).
-    val pred = Dedup.predecessorIndex(fs, Tables.indexRoot(s, dir), "pq",
-      corpus, "embeddings", params, entries.map(_._2).toSet,
-      marker = "codes/_SUCCESS")
-    Dedup.buildAndPublishIndex(fs, Tables.indexRoot(s, dir), root, "pq",
-        marker = "codes/_SUCCESS") { tmp =>
-      pred match {
-        case Some((predRoot, predEntries)) =>
-          val newPaths = entries.collect {
-            case (p, e) if !predEntries.contains(e) => p }
-          val cb = s.read.parquet(s"$predRoot/codebook")
-          graft.sources.Export.flush(cb, s"$tmp/codebook")
-          graft.sources.Export.flush(
-            s.read.parquet(s"$predRoot/codes").unionByName(
-              encode(subvecsOf(Tables.spread(s.read.parquet(newPaths: _*))),
-                cb)),
-            s"$tmp/codes")
-        case None =>
-          val subvecs = subvecsOf(emb(s, dir))
-          val cb = pqCodebooks(subvecs, PqM, PqK, PqIters).persist()
-          graft.sources.Export.flush(cb, s"$tmp/codebook")
-          graft.sources.Export.flush(encode(subvecs, cb), s"$tmp/codes")
-          cb.unpersist(blocking = false)
-      }
-      Dedup.writeStampFile(fs, tmp, corpus, "embeddings", params,
-        entries.map(_._2))
-    }
-    root
+    StandingIndex.stampedBuild(s, dir, "pq", "embeddings",
+        s"$PqM|$PqK|$PqIters", marker = "codes/_SUCCESS")(
+      cold = seedPqIndex(s, dir, _),
+      grow = Some { (tmp, predRoot, newPaths) =>
+        val cb = s.read.parquet(s"$predRoot/codebook")
+        graft.sources.Export.flush(cb, s"$tmp/codebook")
+        graft.sources.Export.flush(
+          s.read.parquet(s"$predRoot/codes").unionByName(
+            pqEncode(pqSubvecs(Tables.spread(s.read.parquet(newPaths: _*))),
+              cb)),
+          s"$tmp/codes")
+      })
   }
 
   /** Seed a MAINTAINABLE IVF root from the corpus-so-far: centroids
     * trained here become the root's FROZEN model state, the corpus's
     * inverted-file rows its static base — the vector counterpart of
-    * TextAnalysis.seedCountsIndex. A maintainer
+    * TextAnalysis.seedCountsIndex, and the cold body of [[buildIvfIndex]]. A maintainer
     * ([[graft.streaming.Docs.maintainIvfIndex]]) then assigns arriving
     * vectors against the frozen centroids, exactly the batch
     * append-refresh rule.
@@ -470,35 +394,17 @@ object Similarity {
     cb.unpersist(blocking = false): Unit
   }
 
-  /** Read a STREAMING-MAINTAINED vector-index row table: the static base
-    * at `root/<sub>` merged with every maintained batch part under
-    * `root/<sub>_m/batch=*` — plain union (list/code rows are per-vector,
-    * batches vec-disjoint by the maintainer's `_ids` fence). None when
-    * neither side exists. Same economics as TextAnalysis.countsTable.
+  /** The live inverted file of a maintainable IVF root: the static base
+    * lists plus every maintained part — a plain union (list rows are
+    * per-vector, batches vec-disjoint by the maintainer's `_ids` fence).
+    * None when neither side exists.
     */
-  private def derivedRowsTable(s: SparkSession, root: String, sub: String,
-                               cols: Seq[String]): Option[DataFrame] = {
-    val conf = s.sessionState.newHadoopConf()
-    def existing(p: String, visible: Boolean = false): Option[String] =
-      graft.operators.Dedup.existingIndexDir(conf, p, visible)
-    val cs = cols.map(col)
-    val base = graft.operators.Dedup.existingSeededDir(conf, s"$root/$sub")
-      .map(p => s.read.parquet(p).select(cs: _*))
-    val maintained = existing(s"$root/${sub}_m", visible = true)
-      .map(p => s.read.parquet(p).select(cs: _*))
-    (base, maintained) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-  }
-
-  /** The live inverted file of a maintainable IVF root. */
   def ivfListsTable(s: SparkSession, root: String): Option[DataFrame] =
-    derivedRowsTable(s, root, "lists", Seq("c_id", "ce", "cell"))
+    StandingIndex.maintainedRows(s, root, "lists", Seq("c_id", "ce", "cell"))
 
-  /** The live code table of a maintainable PQ root. */
+  /** The live code table of a maintainable PQ root (the same union). */
   def pqCodesTable(s: SparkSession, root: String): Option[DataFrame] =
-    derivedRowsTable(s, root, "codes", Seq("c_id", "sub", "code"))
+    StandingIndex.maintainedRows(s, root, "codes", Seq("c_id", "sub", "code"))
 
   /** The RE-SEED TRIGGER for a maintained IVF root — the measurable half
     * of the frozen-model staleness trade: per cohort (the static `base`
@@ -517,9 +423,6 @@ object Similarity {
   def ivfDriftStats(s: SparkSession, root: String): DataFrame = {
     graft.functions.VectorOps.register(s)
     val cents = s.read.parquet(s"$root/centroids")
-    val conf = s.sessionState.newHadoopConf()
-    def existing(p: String, visible: Boolean = false): Option[String] =
-      graft.operators.Dedup.existingIndexDir(conf, p, visible)
     def fit(lists: DataFrame, origin: String): DataFrame =
       lists.join(broadcast(cents), "cell")
         .withColumn("fit", expr(dotExpr("ce", "cvec")))
@@ -527,12 +430,10 @@ object Similarity {
         .agg(count(lit(1)).as("n_vectors"),
           avg(col("fit")).as("mean_fit"),
           expr("percentile_approx(fit, 0.1)").as("p10_fit"))
-    val parts = Seq(
-      graft.operators.Dedup.existingSeededDir(conf, s"$root/lists").map(p =>
-        fit(s.read.parquet(p).select("c_id", "ce", "cell"), "base")),
-      existing(s"$root/lists_m", visible = true).map(p =>
-        fit(s.read.parquet(p).select("c_id", "ce", "cell"), "maintained")))
-      .flatten
+    val (base, maintained) = StandingIndex.maintainedParts(s, root, "lists",
+      Seq("c_id", "ce", "cell"))
+    val parts = Seq(base.map(fit(_, "base")),
+      maintained.map(fit(_, "maintained"))).flatten
     require(parts.nonEmpty, s"no IVF lists at $root")
     parts.reduce(_.unionByName(_))
   }
@@ -569,19 +470,10 @@ object Similarity {
     // id, so the new root fences its ENTIRE base (strictly stronger
     // than carrying the old batch fences): one compact fence batch of
     // zero list rows + all base vec_ids, published atomically.
-    val conf = s.sessionState.newHadoopConf()
-    val newM = s"$newRoot/lists_m"
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = s"$newM/.build_reseed_$token"
     val newLists = s.read.parquet(s"$newRoot/lists")
-    newLists.limit(0).write.parquet(tmp)
-    newLists.select(col("c_id").as("vec_id")).distinct()
-      .write.parquet(s"$tmp/_ids")
-    val tfs = new org.apache.hadoop.fs.Path(newM).getFileSystem(conf)
-    graft.operators.Dedup.publishIndexDir(tfs,
-      new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(s"$newM/batch=reseed_$token"),
-      marker = "_ids/_SUCCESS"): Unit
+    StandingIndex.publishPart(s"$newRoot/lists_m",
+      s"reseed_${java.util.UUID.randomUUID.toString.take(8)}",
+      newLists.limit(0), newLists.select(col("c_id").as("vec_id")).distinct())
   }
 
   /** The drift-policy LOOP closed into one call — what a deployment
@@ -758,7 +650,7 @@ object Similarity {
     */
   def corpusEmbedBuckets(s: SparkSession, dir: String): DataFrame = {
     val planes = embPlanes(s, dir)
-    Dedup.cachedCorpusTable(s, dir, "embbuckets", s"p$planes",
+    StandingIndex.cachedCorpusTable(s, dir, "embbuckets", s"p$planes",
       table = "embeddings",
       incr = (old, newVecs) =>
         old.unionByName(unitBuckets(s, newVecs, planes)))(
@@ -791,7 +683,7 @@ object Similarity {
     */
   def corpusEmbedPairs(s: SparkSession, dir: String): DataFrame = {
     val planes = embPlanes(s, dir)
-    Dedup.cachedCorpusTable(s, dir, "embpairs", s"tau0.30|p$planes",
+    StandingIndex.cachedCorpusTable(s, dir, "embpairs", s"tau0.30|p$planes",
       table = "embeddings",
       incr = (oldPairs, newVecs) => {
         val buckets = corpusEmbedBuckets(s, dir)
@@ -818,7 +710,7 @@ object Similarity {
     */
   def embClusterLabels(s: SparkSession, dir: String): DataFrame = {
     val planes = embPlanes(s, dir)
-    Dedup.cachedCorpusTable(s, dir, "embcc", s"tau0.30|cc|p$planes",
+    StandingIndex.cachedCorpusTable(s, dir, "embcc", s"tau0.30|cc|p$planes",
       table = "embeddings",
       incr = (oldLabels, newVecs) => {
         val pairs = corpusEmbedPairs(s, dir)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.index.StandingIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,6 +78,14 @@ object TextAnalysis {
       else parts.groupBy(keyCols.map(col): _*)
         .agg(sum(col(sumCols.head)).as(sumCols.head),
           sumCols.tail.map(c => sum(col(c)).as(c)): _*)
+
+    /** The family's stamp-keyed standing table over `dir`'s corpus: a
+      * corpus append merges the new files' counts into it.
+      */
+    def standing(s: SparkSession, dir: String, params: String): DataFrame =
+      StandingIndex.cachedCorpusTable(s, dir, name, params,
+        incr = (old, newDocs) => merge(old.unionByName(counts(newDocs))))(
+        counts(Tables.spread(Tables.load(s, dir, "documents"))))
   }
 
   /** (gh, nd) — distinct-doc counts per 5-gram hash (§2d.41m). */
@@ -122,26 +131,14 @@ object TextAnalysis {
     * compactCommit).
     */
   def countsTable(s: SparkSession, root: String,
-                  fam: CountFamily): Option[DataFrame] = {
-    val conf = s.sessionState.newHadoopConf()
-    // `visible` requires at least one non-hidden child: a maintained dir
-    // holding only crashed dot-named build attempts (invisible to the
-    // parquet read) would otherwise fail schema inference instead of
-    // falling back to the other side
-    def existing(p: String, visible: Boolean = false): Option[String] =
-      graft.operators.Dedup.existingIndexDir(conf, p, visible)
-    val cols = (fam.keyCols ++ fam.sumCols).map(col)
-    val base = graft.operators.Dedup.existingSeededDir(conf, s"$root/counts")
-      .map(p => s.read.parquet(p).select(cols: _*))
-    val maintained = existing(s"$root/counts_m", visible = true)
-      .map(p => s.read.parquet(p).select(cols: _*))
-    (base, maintained) match {
+                  fam: CountFamily): Option[DataFrame] =
+    StandingIndex.maintainedParts(s, root, "counts",
+        fam.keyCols ++ fam.sumCols) match {
       case (Some(a), Some(b)) => Some(fam.merge(a.unionByName(b)))
       case (Some(a), None) => Some(a)
       case (None, Some(b)) => Some(fam.merge(b))
       case _ => None
     }
-  }
 
   /** Seed a maintainable count-family root from the corpus-so-far: the
     * static build of the family written to `root/counts` — the batch
@@ -152,19 +149,13 @@ object TextAnalysis {
     graft.sources.Export.flush(
       fam.counts(Tables.spread(docs(s, dir))), s"$root/counts")
 
-  /** Janitor for a maintained count-family root: a maintainer killed
-    * between its temp write and the atomic publish leaks a dot-named
-    * `.build_*` dir under `counts_m` (invisible to every reader and
-    * fence — see maintainCountsIndex — but full-size on disk). Sweeps
-    * the ones whose whole subtree has been idle past
-    * max(graceMs, 1 hour); returns the deleted paths.
+  /** Janitor for a maintained count-family root: sweeps crashed
+    * dot-named build temps under `counts_m`
+    * ([[StandingIndex.vacuumMaintained]]).
     */
   def vacuumCountsIndex(s: SparkSession, root: String,
-                        graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/counts_m")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    graft.operators.Dedup.sweepBuildTemps(fs, p, graceMs)
-  }
+                        graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] =
+    StandingIndex.vacuumMaintained(s, root, "counts", graceMs)
 
   /** Compact a maintained count-family root into a FRESH root: the merged
     * counts become the new static base and every published batch's `_ids`
@@ -182,28 +173,7 @@ object TextAnalysis {
     val merged = countsTable(s, root, fam).getOrElse(
       throw new IllegalStateException(s"no counts to compact at $root"))
     graft.sources.Export.flush(merged, s"$newRoot/counts")
-    val conf = s.sessionState.newHadoopConf()
-    val mRootPath = new org.apache.hadoop.fs.Path(s"$root/counts_m")
-    val fs = mRootPath.getFileSystem(conf)
-    val idPaths =
-      if (!fs.exists(mRootPath)) Seq.empty
-      else fs.listStatus(mRootPath).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-        .map(st => new org.apache.hadoop.fs.Path(st.getPath, "_ids"))
-        .filter(fs.exists(_)).map(_.toString)
-    if (idPaths.nonEmpty) {
-      val newM = s"$newRoot/counts_m"
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val tmp = s"$newM/.build_compact_$token"
-      merged.limit(0).write.parquet(tmp)
-      s.read.parquet(idPaths: _*).select("doc_id").distinct()
-        .write.parquet(s"$tmp/_ids")
-      val tfs = new org.apache.hadoop.fs.Path(newM).getFileSystem(conf)
-      graft.operators.Dedup.publishIndexDir(tfs,
-        new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$newM/batch=compact_$token"),
-        marker = "_ids/_SUCCESS"): Unit
-    }
+    StandingIndex.carryFence(s, root, newRoot, "counts", merged)
   }
 
   /** Standing DSIR feature table (b, cr, ct) — per-bucket raw-corpus and
@@ -214,13 +184,8 @@ object TextAnalysis {
     * families. The table is at most [[DsirBuckets]] rows, so every scorer
     * probes it with a broadcast join.
     */
-  def corpusDsirFeatures(s: SparkSession, dir: String): DataFrame = {
-    val fam = DsirFamily
-    graft.operators.Dedup.cachedCorpusTable(s, dir, fam.name,
-      s"$DsirBuckets|$DsirTarget",
-      incr = (old, newDocs) => fam.merge(old.unionByName(fam.counts(newDocs))))(
-      fam.counts(Tables.spread(docs(s, dir))))
-  }
+  def corpusDsirFeatures(s: SparkSession, dir: String): DataFrame =
+    DsirFamily.standing(s, dir, s"$DsirBuckets|$DsirTarget")
 
   /** Per-doc DSIR importance score against a FROZEN feature table — the
     * scoring half shared by q_dsir_weights and the streaming twin.
@@ -497,12 +462,8 @@ object TextAnalysis {
     * context totals cu derive from this table (vocabulary-sized
     * aggregate) at read time, never from the corpus.
     */
-  def corpusBigramModel(s: SparkSession, dir: String): DataFrame = {
-    val fam = BigramFamily
-    graft.operators.Dedup.cachedCorpusTable(s, dir, fam.name, "2|occ",
-      incr = (old, newDocs) => fam.merge(old.unionByName(fam.counts(newDocs))))(
-      fam.counts(Tables.spread(docs(s, dir))))
-  }
+  def corpusBigramModel(s: SparkSession, dir: String): DataFrame =
+    BigramFamily.standing(s, dir, "2|occ")
 
   /** Standing unigram statistics (term, cw occurrences, dfw doc
     * frequency) — the corpus vocabulary table behind q_vocab_topk,
@@ -511,12 +472,8 @@ object TextAnalysis {
     * statistics are per-file additive (docs are disjoint across files),
     * so a corpus append merges counts instead of re-tokenizing.
     */
-  def corpusUnigramCounts(s: SparkSession, dir: String): DataFrame = {
-    val fam = UnigramFamily
-    graft.operators.Dedup.cachedCorpusTable(s, dir, fam.name, "1|occ+df",
-      incr = (old, newDocs) => fam.merge(old.unionByName(fam.counts(newDocs))))(
-      fam.counts(Tables.spread(docs(s, dir))))
-  }
+  def corpusUnigramCounts(s: SparkSession, dir: String): DataFrame =
+    UnigramFamily.standing(s, dir, "1|occ+df")
 
   /** Per-doc bigram surprisal against a FROZEN (w1, bg, cb) model — the
     * scoring half shared by the registered query and the streaming twin
@@ -675,10 +632,7 @@ object TextAnalysis {
     // vocabulary instead of re-gramming the corpus, and a gram whose
     // second occurrence arrives in a later file still turns duplicated.
     // The ≥ 2 filter moves to read time (parquet-pushed on nd).
-    val fam = DupGramFamily
-    graft.operators.Dedup.cachedCorpusTable(s, dir, fam.name, "5|all",
-      incr = (old, newDocs) => fam.merge(old.unionByName(fam.counts(newDocs))))(
-      fam.counts(Tables.spread(docs(s, dir))))
+    DupGramFamily.standing(s, dir, "5|all")
       .filter(col("nd") >= 2).select("gh")
   }
 

@@ -573,7 +573,7 @@ object Docs {
     *      `root/counts_m/batch=<lineage>_<batchId>` with its `_ids`
     *      sidecar (underscore name: invisible to parquet reads of the
     *      counts), built in a dot-named temp and published by ONE atomic
-    *      move ([[graft.operators.Dedup.publishIndexDir]]) — counts and
+    *      move ([[graft.index.StandingIndex.publishPart]]) — counts and
     *      ids can never land separately, so there is NO orphan corner:
     *      membership in `_ids` alone proves the doc's counts are merged,
     *      and a crash anywhere before the move leaves only invisible
@@ -597,21 +597,23 @@ object Docs {
                           family: graft.operators.TextAnalysis.CountFamily)
       : org.apache.spark.sql.streaming.StreamingQuery =
     maintainDerivedRows(docsStream, root, "counts", checkpointDir,
-      "doc_id")(family.counts)
+      "doc_id")((fr, _) => family.counts(fr))
 
   /** The shared ADDITIVE maintenance protocol: per fenced micro-batch,
-    * `derive`'s rows land under `root/<sub>_m/batch=<lineage>_<batchId>`
-    * with their `_ids` sidecar in ONE atomic publish. Factored out of
-    * maintainCountsIndex so the vector-index maintainers below run the
-    * IDENTICAL protocol (fence enumeration rule, crashed-temp
-    * invisibility, marker-skip replay, stamp-economy exit) — a protocol
-    * fix lands everywhere at once.
+    * `derive(freshRows, publishedParts)`'s rows land under
+    * `root/<sub>_m/batch=<lineage>_<batchId>` with their `_ids` sidecar
+    * in ONE atomic publish. Every maintainer here but MinHash's runs it —
+    * counts, postings, IVF lists, PQ codes — so all share the IDENTICAL
+    * protocol (fence enumeration rule, crashed-temp invisibility,
+    * marker-skip replay, stamp-economy exit) and a protocol fix lands
+    * everywhere at once.
     */
   private def maintainDerivedRows(stream: DataFrame, root: String,
                                   sub: String, checkpointDir: String,
                                   idCol: String)(
-                                  derive: DataFrame => DataFrame)
+                                  derive: (DataFrame, Seq[org.apache.hadoop.fs.Path]) => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    import graft.index.StandingIndex
     lazy val lineage: String = streamLineage(checkpointDir)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -626,20 +628,11 @@ object Docs {
           val fs = target.getFileSystem(conf)
           val marker = new org.apache.hadoop.fs.Path(target, "_ids/_SUCCESS")
           if (!fs.exists(marker)) {
-            // the fence reads the _ids of PUBLISHED batch dirs only,
-            // enumerated by their `batch=` names — NOT a `*/_ids` glob:
-            // Hadoop globs match dot-named entries, so a glob would also
-            // read a crashed prior attempt's unpublished `.build_*` temp
-            // (whose rows never landed), fence this batch's ids out,
-            // and silently lose their rows forever
-            val mRootPath = new org.apache.hadoop.fs.Path(mRoot)
-            val idPaths =
-              if (!fs.exists(mRootPath)) Seq.empty
-              else fs.listStatus(mRootPath).toSeq
-                .filter(st => st.isDirectory &&
-                  st.getPath.getName.startsWith("batch="))
-                .map(st => new org.apache.hadoop.fs.Path(st.getPath, "_ids"))
-                .filter(fs.exists(_)).map(_.toString)
+            // the fence reads the _ids of PUBLISHED batch dirs only — a
+            // crashed attempt's temp never fences its docs out
+            val published = StandingIndex.publishedBatches(fs,
+              new org.apache.hadoop.fs.Path(mRoot))
+            val idPaths = StandingIndex.fenceIdPaths(fs, published)
             val seen =
               if (idPaths.isEmpty) None
               else Some(s.read.parquet(idPaths: _*)
@@ -651,15 +644,10 @@ object Docs {
             // maintainMinhashIndex)
             val stamp = new org.apache.hadoop.fs.Path(s"$root/_GRAFT_STAMP")
             fs.delete(stamp, false): Unit
-            val token = java.util.UUID.randomUUID.toString.take(8)
-            val tmp = s"$mRoot/.build_${batchKey}_$token"
             // one batch-local materialization feeds both writes
             val fr = fresh.localCheckpoint()
-            derive(fr).write.parquet(tmp)
-            fr.select(idCol).distinct().write.parquet(s"$tmp/_ids")
-            graft.operators.Dedup.publishIndexDir(fs,
-              new org.apache.hadoop.fs.Path(tmp), target,
-              marker = "_ids/_SUCCESS"): Unit
+            StandingIndex.publishPart(mRoot, batchKey, derive(fr, published),
+              fr.select(idCol).distinct())
           }
         }
       }
@@ -688,7 +676,7 @@ object Docs {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Similarity
     maintainDerivedRows(vecsStream, root, "lists", checkpointDir,
-      "vec_id") { b =>
+      "vec_id") { (b, _) =>
       graft.functions.VectorOps.register(b.sparkSession)
       // frozen model state read per batch: immutable files, so the read
       // is deterministic across replays (and a re-seeded root would be a
@@ -710,7 +698,7 @@ object Docs {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Similarity
     maintainDerivedRows(vecsStream, root, "codes", checkpointDir,
-      "vec_id") { b =>
+      "vec_id") { (b, _) =>
       graft.functions.VectorOps.register(b.sparkSession)
       val cb = b.sparkSession.read.parquet(s"$root/codebook")
       Similarity.pqEncode(Similarity.pqSubvecs(b), cb)
@@ -754,71 +742,25 @@ object Docs {
   def maintainPostingsIndex(docsStream: DataFrame, root: String,
                             checkpointDir: String,
                             family: graft.operators.Dedup.PostingsFamily)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    lazy val lineage: String = streamLineage(checkpointDir)
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          val s = batch0.sparkSession
-          val conf = s.sessionState.newHadoopConf()
-          val batchKey = s"${lineage}_$batchId"
-          val mRoot = s"$root/postings_m"
-          val target = new org.apache.hadoop.fs.Path(s"$mRoot/batch=$batchKey")
-          val fs = target.getFileSystem(conf)
-          val marker = new org.apache.hadoop.fs.Path(target, "_ids/_SUCCESS")
-          if (!fs.exists(marker)) {
-            // fence from published `batch=` dirs only (never a `*/_ids`
-            // glob — the crashed-temp rule, see maintainCountsIndex)
-            val mRootPath = new org.apache.hadoop.fs.Path(mRoot)
-            def publishedDirs() =
-              if (!fs.exists(mRootPath)) Seq.empty[org.apache.hadoop.fs.Path]
-              else fs.listStatus(mRootPath).toSeq
-                .filter(st => st.isDirectory &&
-                  st.getPath.getName.startsWith("batch="))
-                .map(_.getPath)
-            val published = publishedDirs()
-            val idPaths = published
-              .map(p => new org.apache.hadoop.fs.Path(p, "_ids"))
-              .filter(fs.exists(_)).map(_.toString)
-            val seen =
-              if (idPaths.isEmpty) None
-              else Some(s.read.parquet(idPaths: _*)
-                .select("doc_id").distinct())
-            val fresh = seen
-              .map(ids => batch0.join(ids, Seq("doc_id"), "left_anti"))
-              .getOrElse(batch0)
-            val stamp = new org.apache.hadoop.fs.Path(s"$root/_GRAFT_STAMP")
-            fs.delete(stamp, false): Unit
-            // saturation evidence: compact base + published parts. An
-            // optimization only (a gram is dropped solely when PROVEN
-            // over-cap); the read view re-filters, so skipping this read
-            // entirely would still be correct — just fatter parts.
-            val basePath = new org.apache.hadoop.fs.Path(s"$root/postings")
-            val evidencePaths =
-              (if (fs.exists(basePath) &&
-                fs.listStatus(basePath).nonEmpty) Seq(basePath) else Seq.empty) ++
-                published
-            val known =
-              if (evidencePaths.isEmpty) None
-              else Some(family.totals(
-                s.read.parquet(evidencePaths.map(_.toString): _*)
-                  .select(col("doc_id"), col("gram"), col("df"))))
-            val token = java.util.UUID.randomUUID.toString.take(8)
-            val tmp = s"$mRoot/.build_${batchKey}_$token"
-            // one batch-local materialization feeds both writes
-            val fr = fresh.localCheckpoint()
-            family.part(family.post(fr), known).write.parquet(tmp)
-            fr.select("doc_id").distinct().write.parquet(s"$tmp/_ids")
-            graft.operators.Dedup.publishIndexDir(fs,
-              new org.apache.hadoop.fs.Path(tmp), target,
-              marker = "_ids/_SUCCESS"): Unit
-          }
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    maintainDerivedRows(docsStream, root, "postings", checkpointDir,
+      "doc_id") { (fr, published) =>
+      val s = fr.sparkSession
+      // saturation evidence: the seeded base the READ VIEW serves (its
+      // job-commit marker required — an unmarked base is no evidence,
+      // or a gram the reader counts ≤ cap would lose its postings) +
+      // published parts. An optimization only (a gram is dropped solely
+      // when PROVEN over-cap); the read view re-filters, so skipping
+      // this read entirely would still be correct — just fatter parts.
+      val evidence = graft.index.StandingIndex.existingSeededDir(
+        s.sessionState.newHadoopConf(), s"$root/postings").toSeq ++
+        published.map(_.toString)
+      val known =
+        if (evidence.isEmpty) None
+        else Some(family.totals(s.read.parquet(evidence: _*)
+          .select(col("doc_id"), col("gram"), col("df"))))
+      family.part(family.post(fr), known)
+    }
 
   def maintainMinhashIndex(docsStream: DataFrame, root: String,
                            checkpointDir: String,

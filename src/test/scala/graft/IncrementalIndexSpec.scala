@@ -1,5 +1,6 @@
 package graft
 
+import graft.index.StandingIndex
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -249,17 +250,17 @@ class IncrementalIndexSpec extends AnyFunSuite {
       .write.mode("append").parquet(s"$grown/documents.parquet")
     val afterAppend = rows(Dedup.corpusSigs(spark, grown))
     // within the grace window NOTHING deletes, superseded or not
-    assert(Dedup.vacuumIndexes(spark, grown).isEmpty,
+    assert(StandingIndex.vacuumIndexes(spark, grown).isEmpty,
       "vacuum ignored the concurrent-reader grace")
     // grace 0 (no concurrent readers here): exactly the predecessor goes
-    val gone = Dedup.vacuumIndexes(spark, grown, graceMs = 0)
+    val gone = StandingIndex.vacuumIndexes(spark, grown, graceMs = 0)
     assert(gone.exists(_.contains("graft_sigs_")), s"deleted: $gone")
     gone.foreach(p => assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(new java.net.URI(
         if (p.startsWith("file:")) p else s"file://$p")))))
     // the surviving (current) index still answers, and a re-vacuum is empty
     assert(rows(Dedup.corpusSigs(spark, grown)) == afterAppend)
-    assert(Dedup.vacuumIndexes(spark, grown, graceMs = 0).isEmpty)
+    assert(StandingIndex.vacuumIndexes(spark, grown, graceMs = 0).isEmpty)
   }
 
   test("cluster labels refresh by seeding CC with predecessor labels; a bridge doc merges clusters") {
@@ -407,11 +408,11 @@ class IncrementalIndexSpec extends AnyFunSuite {
     Seq((1L, 1L)).toDF("doc_id", "m").write.parquet(tmpA)
     Seq((1L, 2L)).toDF("doc_id", "m").write.parquet(tmpB)
     val root = new org.apache.hadoop.fs.Path(s"$idxRoot/graft_race_k")
-    val wonA = Dedup.publishIndexDir(fs,
+    val wonA = StandingIndex.publishIndexDir(fs,
       new org.apache.hadoop.fs.Path(tmpA), root)
     // a reader that resolved the winner's table mid-scan
     val reader = spark.read.parquet(root.toString)
-    val wonB = Dedup.publishIndexDir(fs,
+    val wonB = StandingIndex.publishIndexDir(fs,
       new org.apache.hadoop.fs.Path(tmpB), root)
     assert(wonA && !wonB, s"wonA=$wonA wonB=$wonB")
     // the loser's attempt neither replaced nor tore the winner's data...
@@ -437,7 +438,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // race to it forever
     val tmp = s"$idxRoot/.build_evict_k_cccc"
     Seq((1L, 7L), (2L, 7L)).toDF("doc_id", "m").write.parquet(tmp)
-    assert(Dedup.publishIndexDir(fs, new org.apache.hadoop.fs.Path(tmp), root),
+    assert(StandingIndex.publishIndexDir(fs, new org.apache.hadoop.fs.Path(tmp), root),
       "builder conceded to a markerless partial dir")
     assert(fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS")))
     assert(spark.read.parquet(root.toString).select("m")
@@ -445,7 +446,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // ...while a COMPLETE occupant (marker present) still wins the race
     val tmp2 = s"$idxRoot/.build_evict_k_dddd"
     Seq((1L, 9L)).toDF("doc_id", "m").write.parquet(tmp2)
-    assert(!Dedup.publishIndexDir(fs, new org.apache.hadoop.fs.Path(tmp2), root))
+    assert(!StandingIndex.publishIndexDir(fs, new org.apache.hadoop.fs.Path(tmp2), root))
     assert(spark.read.parquet(root.toString).select("m")
       .as[Long].collect().toSet == Set(7L))
   }
@@ -478,7 +479,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     fs.create(new org.apache.hadoop.fs.Path(busyTmp, "part-0")).close()
     fs.setTimes(busy, System.currentTimeMillis() - 8L * 24 * 3600 * 1000, -1)
     fs.setTimes(busyTmp, System.currentTimeMillis() - 8L * 24 * 3600 * 1000, -1)
-    val gone = Dedup.vacuumIndexes(spark, corpus, graceMs = 0)
+    val gone = StandingIndex.vacuumIndexes(spark, corpus, graceMs = 0)
     assert(gone.exists(_.contains(".build_tsweep_stale")),
       s"aged temp dir not swept: $gone")
     assert(!fs.exists(stale))
@@ -517,7 +518,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
         }
       }
     }
-    val gone = Dedup.vacuumIndexes(spark, grown, graceMs = 0)
+    val gone = StandingIndex.vacuumIndexes(spark, grown, graceMs = 0)
     assert(!gone.exists(_.contains("graft_sigs_")),
       s"vacuum deleted a sigs dir after a shrink (live index torn): $gone")
     // the live (pre-grow) index still answers identically

@@ -1305,6 +1305,86 @@ class StreamBatchParitySpec extends AnyFunSuite {
       .count() == 1)
   }
 
+  test("an unmarked seeded postings base is no saturation evidence for the maintainer") {
+    import graft.operators.Dedup
+    import graft.streaming.Docs
+    import graft.streaming.Docs.Doc
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+
+    // "hot" sits at the cap in the base; two more arrivals would prove it
+    // saturated — but only if the base counted, and the read view ignores
+    // a base without its job-commit marker (a driver killed in commit)
+    val fam = Dedup.PostingsFamily("unmarked", 3, d => d
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("gram"))
+      .distinct())
+    def doc(id: Long, text: String) = Doc(id, text, "en", "web", text.length.toLong)
+    val baseDocs = Seq(doc(1L, "hot a1"), doc(2L, "hot a2"), doc(3L, "hot a3"))
+    val tail = Seq(doc(4L, "hot b4"), doc(5L, "hot b5"))
+    val root = java.nio.file.Files.createTempDirectory("graft_unmarked").toString
+    graft.sources.Export.flush(
+      fam.compactForm(fam.post(baseDocs.toDF()).withColumn("df", lit(1L))),
+      s"$root/postings")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/postings/_SUCCESS"),
+      false))
+    assert(Dedup.postingsTable(spark, root, fam).isEmpty)
+
+    val in = MemoryStream[Doc]
+    val q = Docs.maintainPostingsIndex(in.toDF(), root,
+      java.nio.file.Files.createTempDirectory("graft_unmarked_ck").toString, fam)
+    try { in.addData(tail); q.processAllAvailable() } finally q.stop()
+    val want = fam.live(fam.post(tail.toDF()).withColumn("df", lit(1L)))
+      .as[(Long, String)].collect().toSet
+    assert(want.exists(_._2 == "hot"))
+    assert(Dedup.postingsTable(spark, root, fam).get
+      .as[(Long, String)].collect().toSet == want,
+      "the maintainer tombstoned on base evidence the read view ignores")
+  }
+
+  test("read views skip a crashed temp and an unmarked seeded base: counts, postings, IVF, PQ") {
+    import graft.operators.{Dedup, Similarity, TextAnalysis}
+    import spark.implicits._
+
+    val docs = Seq((1L, "alpha beta gamma", "en"), (2L, "beta gamma delta", "en"))
+      .toDF("doc_id", "text", "lang")
+    val cfam = TextAnalysis.UnigramFamily
+    val pfam = Dedup.RareGramPostingsFamily
+    val lists = Seq((1L, Seq(1.0, 0.0), 0), (2L, Seq(0.0, 1.0), 1))
+      .toDF("c_id", "ce", "cell")
+    val codes = Seq((1L, 0, 3), (1L, 1, 5), (2L, 0, 7)).toDF("c_id", "sub", "code")
+    // (sub dir, stored rows, the family's read view, its view of the rows)
+    val views: Seq[(String, org.apache.spark.sql.DataFrame,
+        String => Option[org.apache.spark.sql.DataFrame],
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("counts", cfam.counts(docs),
+        r => TextAnalysis.countsTable(spark, r, cfam), cfam.counts(docs)),
+      ("postings", pfam.part(pfam.post(docs), None),
+        r => Dedup.postingsTable(spark, r, pfam),
+        pfam.live(pfam.part(pfam.post(docs), None))),
+      ("lists", lists, r => Similarity.ivfListsTable(spark, r), lists),
+      ("codes", codes, r => Similarity.pqCodesTable(spark, r), codes))
+    val fs = new org.apache.hadoop.fs.Path(System.getProperty("java.io.tmpdir"))
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+    for ((sub, stored, read, want) <- views) {
+      val root = java.nio.file.Files.createTempDirectory(s"graft_rv_$sub").toString
+      // a maintained side holding only a dead build temp is absent…
+      stored.write.parquet(s"$root/${sub}_m/.build_dead_x")
+      assert(read(root).isEmpty, s"$sub: a dead temp read as a maintained part")
+      // …and never shadows or joins a marked seeded base
+      graft.sources.Export.flush(stored, s"$root/$sub")
+      assert(read(root).map(rows).contains(rows(want)),
+        s"$sub: the dead temp leaked into the base's view")
+      // an unmarked seeded base reads as absent
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/$sub/_SUCCESS"),
+        false))
+      assert(read(root).isEmpty, s"$sub: an unmarked seeded base was served")
+    }
+    assert(rows(views(1)._4).nonEmpty, "the postings case derived no live rows")
+  }
+
   test("streamed IVF/PQ assignment equals the batch append-refresh; search probes the live table") {
     import graft.operators.Similarity
     import graft.streaming.Docs
