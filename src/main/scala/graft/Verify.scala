@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,28 +25,8 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // The ~60 dumps are independent; submitting them from a few threads
-    // keeps the scheduler fed (one thread leaves cores idle between the
-    // many small jobs). Writes go to per-query dirs, so no output races.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val work = SparkEntry.queries.toSeq
-        .filter { case (name, _) => only.isEmpty || only(name) }
-        .map { case (name, fn) =>
-        Future {
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          }
-        }
-      }
-      Await.result(Future.sequence(work), Duration.Inf)
-    } finally pool.shutdown()
+    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) })
     // manifest of every registered query: lets the comparer flag a query
     // whose dump is MISSING (a crashed rows-only query would otherwise
     // vanish silently — no dir, no oracle entry, no failure)
@@ -70,5 +50,46 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Run each query and write its result to `<outDir>/<name>` as parquet,
+    * a few queries at a time. A query that throws has its dump dir
+    * DELETED — an earlier run's output must never pass the compare as
+    * its own — and is listed with its error in `<outDir>/failed.txt`
+    * (empty when all ran). Returns the failures, name → message.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[(String, String)] = {
+    new java.io.File(outDir).mkdirs()
+    // The ~60 dumps are independent; submitting them from a few threads
+    // keeps the scheduler fed (one thread leaves cores idle between the
+    // many small jobs). Writes go to per-query dirs, so no output races.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val failed = try {
+      val work = queries.map { case (name, fn) =>
+        Future {
+          try {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            None
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            val stale = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+            stale.getFileSystem(spark.sessionState.newHadoopConf())
+              .delete(stale, true)
+            Some(name -> String.valueOf(e.getMessage).replace('\n', ' '))
+          }
+        }
+      }
+      Await.result(Future.sequence(work), Duration.Inf).flatten.sortBy(_._1)
+    } finally pool.shutdown()
+    Files.writeString(Paths.get(s"$outDir/failed.txt"),
+      failed.map { case (n, m) => s"$n\t$m" }.mkString("\n"))
+    failed
   }
 }

@@ -88,17 +88,22 @@ object StandingIndex {
   private[graft] def fenceIdPaths(fs: FileSystem, batches: Seq[Path]): Seq[String] =
     batches.map(new Path(_, "_ids")).filter(fs.exists(_)).map(_.toString)
 
-  /** Publish one maintained part at `mRoot/batch=<key>`: `rows` and its
-    * `_ids` sidecar land in a dot-named temp, then ONE atomic move — so
-    * `_ids` membership alone proves the rows landed.
+  /** Publish one maintained part at `mRoot/batch=<key>`: its `tables`
+    * (name → rows; the name "" puts the rows at the part root, a named
+    * table in its own subdir) and its `_ids` sidecar land in a dot-named
+    * temp, then ONE atomic move — so `_ids` membership alone proves every
+    * table landed.
     */
-  private[graft] def publishPart(mRoot: String, key: String, rows: DataFrame,
+  private[graft] def publishPart(mRoot: String, key: String,
+                                 tables: Seq[(String, DataFrame)],
                                  ids: DataFrame): Unit = {
     val tmp = s"$mRoot/.build_${key}_${java.util.UUID.randomUUID.toString.take(8)}"
-    rows.write.parquet(tmp)
+    tables.foreach { case (name, rows) =>
+      rows.write.parquet(if (name.isEmpty) tmp else s"$tmp/$name")
+    }
     ids.write.parquet(s"$tmp/_ids")
     val fs = new Path(mRoot)
-      .getFileSystem(rows.sparkSession.sessionState.newHadoopConf())
+      .getFileSystem(ids.sparkSession.sessionState.newHadoopConf())
     publishIndexDir(fs, new Path(tmp), new Path(s"$mRoot/batch=$key"),
       marker = "_ids/_SUCCESS"): Unit
   }
@@ -115,16 +120,22 @@ object StandingIndex {
     if (idPaths.nonEmpty)
       publishPart(s"$newRoot/${sub}_m",
         s"compact_${java.util.UUID.randomUUID.toString.take(8)}",
-        schema.limit(0), s.read.parquet(idPaths: _*).select("doc_id").distinct())
+        Seq("" -> schema.limit(0)),
+        s.read.parquet(idPaths: _*).select("doc_id").distinct())
   }
 
   /** Janitor of a maintained root: sweeps the `.build_*` temps a killed
-    * maintainer leaked under `root/<sub>_m` ([[sweepBuildTemps]]).
+    * maintainer leaked under every `root/<sub>_m` side
+    * ([[sweepBuildTemps]]).
     */
-  private[graft] def vacuumMaintained(s: SparkSession, root: String,
-                                      sub: String, graceMs: Long): Seq[String] = {
-    val p = new Path(s"$root/${sub}_m")
-    sweepBuildTemps(p.getFileSystem(s.sessionState.newHadoopConf()), p, graceMs)
+  def vacuumMaintained(s: SparkSession, root: String,
+                       graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.endsWith("_m"))
+      .flatMap(st => sweepBuildTemps(fs, st.getPath, graceMs))
   }
 
   /** THE content key: `<idxRoot>/graft_<tag>_<md5>` over the corpus stamp

@@ -332,11 +332,10 @@ object Dedup {
     *  - the read view ([[live]]) recomputes every gram's true df from
     *    the invariant and keeps only df ≤ cap postings — byte-equivalent
     *    to a cold tombstoned rebuild whatever drops individual parts
-    *    took, which is what makes the streaming maintainer's protocol
-    *    the SIMPLE additive one (counts-style atomic publish + `_ids`
-    *    fence) instead of the MinHash occupancy/orphan machinery:
-    *    admission is deferred to read time, so batches stay
-    *    order-independent and replay-deterministic.
+    *    took, which is what keeps the streaming maintainer free of
+    *    MinHash's write-time occupancy admission: admission is deferred
+    *    to read time, so batches stay order-independent and
+    *    replay-deterministic.
     */
   final case class PostingsFamily(name: String, cap: Int,
                                   post: DataFrame => DataFrame) {
@@ -440,13 +439,6 @@ object Dedup {
     graft.sources.Export.flush(
       fam.compactForm(fam.uncapped(Tables.spread(docs(s, dir)))),
       s"$root/postings")
-
-  /** Janitor for a maintained postings root: sweeps crashed dot-named
-    * build temps under `postings_m` ([[StandingIndex.vacuumMaintained]]).
-    */
-  def vacuumPostingsIndex(s: SparkSession, root: String,
-                          graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] =
-    StandingIndex.vacuumMaintained(s, root, "postings", graceMs)
 
   /** Compact a maintained postings root into a FRESH root: base + parts
     * fold to the compact stored form (saturated grams' accumulated
@@ -867,8 +859,8 @@ object Dedup {
     // and banded; carried-over rows are read from the predecessor's
     // parquet, never re-derived from text. Byte-copies of already-indexed
     // content drop against the predecessor's reps sidecar, and new band
-    // keys admit under the existing buckets' occupancy — the identical
-    // shape the STREAMING maintainer applies per micro-batch
+    // keys admit under the existing buckets' occupancy — [[minhashGrowth]],
+    // the rule the STREAMING maintainer applies per micro-batch
     // (Docs.maintainMinhashIndex), so for the doc_id-ascending appends an
     // ingestion pipeline produces, refresh ≡ cold rebuild exactly
     // (IncrementalIndexSpec pins it). All three subtables and the stamp
@@ -892,96 +884,86 @@ object Dedup {
         val ascending = minNew.isNullAt(0) || maxOld.isNullAt(0) ||
           minNew.getLong(0) > maxOld.getLong(0)
         if (!ascending) coldBuild(tmp)
-        else {
-          val oldReps = s.read.parquet(s"$predRoot/reps")
-          val withH = newDocs.withColumn("__h",
-            md5s(TextAnalysis.normText(col("text"))))
-          val fresh = withH.join(oldReps.select(col("h").as("__h")),
-            Seq("__h"), "left_anti")
-          val sigs = minhashSignatures(fresh.drop("__h")).localCheckpoint()
-          graft.sources.Export.flush(
-            s.read.parquet(s"$predRoot/sigs").unionByName(sigs),
-            s"$tmp/sigs")
-          graft.sources.Export.flush(
-            oldReps.unionByName(
-              fresh.select(col("__h").as("h"), col("doc_id"))
-                .groupBy("h").agg(min(col("doc_id")).as("doc_id"))),
-            s"$tmp/reps")
-          val oldBands = s.read.parquet(s"$predRoot/bands")
-          val occupancy = oldBands.groupBy(col("band"), col("bkey"))
-            .agg(count(lit(1)).as("n0"))
-          val w = Window.partitionBy(col("band"), col("bkey"))
-            .orderBy(col("doc_id"))
-          val admitted = bandKeys(sigs)
-            .join(occupancy, Seq("band", "bkey"), "left")
-            .withColumn("n0", coalesce(col("n0"), lit(0L)))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("n0") + col("rn") <= BucketCap)
-            .select("doc_id", "band", "bkey")
-          graft.sources.Export.flush(oldBands.unionByName(admitted),
-            s"$tmp/bands")
-        }
+        else minhashGrowth(newDocs, Some(s.read.parquet(s"$predRoot/reps")),
+            Some(s.read.parquet(s"$predRoot/bands")), BucketCap)
+          .foreach { case (name, rows) =>
+            graft.sources.Export.flush(
+              s.read.parquet(s"$predRoot/$name").unionByName(rows),
+              s"$tmp/$name")
+          }
       })
   }
 
-  /** Read a MinHash-index subtable INCLUDING streaming-maintained rows:
-    * the static build writes `root/<sub>` once; the streaming maintainer
-    * (Docs.maintainMinhashIndex) lands each micro-batch under
-    * `root/<sub>_m/batch=<lineage>_<batchId>` with per-batch overwrite,
-    * so a replayed batch rewrites its own partition instead of appending
-    * a duplicate (and a RECREATED checkpoint, whose batch ids restart at
-    * 0 over a possibly-grown source, lands under a fresh lineage instead
-    * of clobbering the dead lineage's rows). `excludeBatch` drops one batch's partition (partition-
-    * pruned) — the maintainer's occupancy read excludes its OWN batch so
-    * a replay admits band keys against exactly the pre-batch state.
-    * Returns None when neither side exists yet.
+  /** The rows a batch of `docs` adds to a MinHash index whose standing
+    * `reps`/`bands` are given — THE growth rule that the append-refresh
+    * (unioned onto its predecessor) and the streaming maintainer
+    * (Docs.maintainMinhashIndex, published as a part) both apply, as
+    * named subtables: docs whose normalized text is already repped drop;
+    * the rest are signed (`sigs`) and repped (`reps`); their band keys
+    * admit per bucket in doc_id order while standing occupancy + rank ≤
+    * `cap` (`bands`). For doc_id-ascending growth that reproduces the cold
+    * build's lowest-doc_id cap exactly.
     */
-  def minhashIndexTable(s: SparkSession, root: String, sub: String,
-                        excludeBatch: Option[String] = None)
-      : Option[DataFrame] = {
+  private[graft] def minhashGrowth(docs: DataFrame, reps: Option[DataFrame],
+                                   bands: Option[DataFrame],
+                                   cap: Int): Seq[(String, DataFrame)] = {
+    val withH = docs.withColumn("__h", md5s(TextAnalysis.normText(col("text"))))
+    val fresh = reps.map(r => withH.join(r.select(col("h").as("__h")),
+      Seq("__h"), "left_anti")).getOrElse(withH)
+    val sigs = minhashSignatures(fresh.drop("__h")).localCheckpoint()
+    val keys = bandKeys(sigs)
+    val occupied = bands.map(b => keys.join(
+        b.groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n0")),
+        Seq("band", "bkey"), "left")
+      .withColumn("n0", coalesce(col("n0"), lit(0L))))
+      .getOrElse(keys.withColumn("n0", lit(0L)))
+    val w = Window.partitionBy(col("band"), col("bkey")).orderBy(col("doc_id"))
+    Seq("sigs" -> sigs,
+      "reps" -> fresh.select(col("__h").as("h"), col("doc_id"))
+        .groupBy("h").agg(min(col("doc_id")).as("doc_id")),
+      "bands" -> occupied.withColumn("rn", row_number().over(w))
+        .filter(col("n0") + col("rn") <= cap)
+        .select("doc_id", "band", "bkey"))
+  }
+
+  /** Read a MinHash-index subtable (`sigs`, `bands` or `reps`) INCLUDING
+    * streaming-maintained rows: the seeded base `root/<sub>` (the static
+    * build; [[StandingIndex.existingSeededDir]], the marker rule of every
+    * family) plus the `<sub>` subtable of every published
+    * `root/minhash_m/batch=<lineage>_<batchId>` part
+    * (Docs.maintainMinhashIndex). Parts publish atomically, so no read
+    * needs a fence. None when neither side exists.
+    */
+  def minhashIndexTable(s: SparkSession, root: String,
+                        sub: String): Option[DataFrame] = {
+    requireAtomicMinhashLayout(s, root)
     val conf = s.sessionState.newHadoopConf()
-    // an EMPTY directory counts as absent: a crash (or crash simulation)
-    // can delete every batch partition under `<sub>_m/` while the parent
-    // dir survives, and parquet schema inference on it would fail the
-    // whole read instead of falling back to the other side
-    def existing(p: String): Option[String] =
-      StandingIndex.existingIndexDir(conf, p)
-    val base = existing(s"$root/$sub").map(s.read.parquet(_))
-    val maintained = existing(s"$root/${sub}_m").map { p =>
-      val d = s.read.parquet(p)
-      // the partition value is "<lineage>_<batchId>" (string compare —
-      // see Docs.maintainMinhashIndex for why batchId alone is unsafe)
-      excludeBatch.map(b => d.filter(col("batch").cast("string") =!= b))
-        .getOrElse(d).drop("batch")
-    }
-    val combined = (base, maintained) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-    // RETIRED doc_ids are subtracted from the doc-keyed views: a dead
-    // lineage can leave a doc SIGNED whose content later gets repped
-    // under a different doc_id (byte-copy arrival) — its standing sig
-    // rows live in a partition no live lineage can overwrite, so the
-    // maintainer writes a retirement tombstone instead
-    // (Docs.maintainMinhashIndex). Subtracting here restores the static
-    // build's "sigs/bands describe reps only" invariant for every
-    // reader; `reps` itself is content-keyed and never dangles. The
-    // retirement read honors `excludeBatch` like the maintained rows, so
-    // a replaying batch recomputes its decisions from the pre-batch
-    // state.
-    if (sub == "sigs" || sub == "bands")
-      combined.map { d =>
-        existing(s"$root/sigs_retired_m") match {
-          case Some(p) =>
-            val r0 = s.read.parquet(p)
-            val r = excludeBatch
-              .map(b => r0.filter(col("batch").cast("string") =!= b))
-              .getOrElse(r0).select("doc_id")
-            d.join(r, Seq("doc_id"), "left_anti")
-          case None => d
-        }
-      }
-    else combined
+    val mRoot = new org.apache.hadoop.fs.Path(s"$root/minhash_m")
+    val parts = StandingIndex.publishedBatches(mRoot.getFileSystem(conf), mRoot)
+      .map(b => s"$b/$sub")
+    (StandingIndex.existingSeededDir(conf, s"$root/$sub").map(s.read.parquet(_)) ++
+      Option.when(parts.nonEmpty)(s.read.parquet(parts: _*)))
+      .reduceOption(_.unionByName(_))
+  }
+
+  /** Refuses a root the pre-atomic MinHash maintainer wrote (its separate
+    * per-subtable partition dirs): those rows follow a protocol this
+    * reader no longer applies, and ignoring them would silently serve a
+    * stale index.
+    */
+  private[graft] def requireAtomicMinhashLayout(s: SparkSession,
+                                                root: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    val legacy = if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq.map(_.getPath.getName)
+        .filter(Set("sigs_m", "bands_m", "reps_m", "sigs_retired_m"))
+    if (legacy.nonEmpty)
+      throw new IllegalStateException(
+        s"MinHash index root $root holds ${legacy.sorted.mkString(", ")} " +
+          "from the retired per-subtable maintainer layout; re-seed the " +
+          "index (buildMinhashIndex) into a fresh root and re-run its " +
+          "stream from a fresh checkpoint")
   }
 
   val SimhashBits = 64

@@ -473,7 +473,8 @@ object Similarity {
     val newLists = s.read.parquet(s"$newRoot/lists")
     StandingIndex.publishPart(s"$newRoot/lists_m",
       s"reseed_${java.util.UUID.randomUUID.toString.take(8)}",
-      newLists.limit(0), newLists.select(col("c_id").as("vec_id")).distinct())
+      Seq("" -> newLists.limit(0)),
+      newLists.select(col("c_id").as("vec_id")).distinct())
   }
 
   /** The drift-policy LOOP closed into one call — what a deployment

@@ -149,14 +149,6 @@ object TextAnalysis {
     graft.sources.Export.flush(
       fam.counts(Tables.spread(docs(s, dir))), s"$root/counts")
 
-  /** Janitor for a maintained count-family root: sweeps crashed
-    * dot-named build temps under `counts_m`
-    * ([[StandingIndex.vacuumMaintained]]).
-    */
-  def vacuumCountsIndex(s: SparkSession, root: String,
-                        graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] =
-    StandingIndex.vacuumMaintained(s, root, "counts", graceMs)
-
   /** Compact a maintained count-family root into a FRESH root: the merged
     * counts become the new static base and every published batch's `_ids`
     * fold into one compact batch partition (zero count rows, full fence),

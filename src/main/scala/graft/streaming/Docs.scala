@@ -454,73 +454,6 @@ object Docs {
       .select(col("doc_id"), col("old_id"), col("fp"))
   }
 
-  /** Streaming MAINTENANCE of the standing MinHash index — the missing
-    * half of the build-once/probe-many design: `buildMinhashIndex` builds
-    * the index from the corpus-so-far, this keeps it current as documents
-    * stream in. Per micro-batch (foreachBatch = batch context, so plain
-    * batch reads/writes apply):
-    *
-    *   1. the batch's signatures (8-way min over its shingles — batch-local
-    *      work, cost ∝ batch size) append to `root/sigs`;
-    *   2. band keys append to `root/bands` CAPPED against current bucket
-    *      occupancy: one aggregate over the existing bands table yields
-    *      per-bucket counts, new keys are admitted only while
-    *      count + rank ≤ cap. For a doc_id-ascending feed this reproduces
-    *      the static build's deterministic lowest-doc_id cap EXACTLY
-    *      (parity-pinned in StreamBatchParitySpec).
-    *
-    * Cross-batch byte-copies are dropped against the index's `reps`
-    * sidecar (normalized-content keepers — the corpus-wide face of the
-    * static build's exact-dedup pre-pass): without it, a duplicate text
-    * arriving in a LATER batch would get its own signature rows and
-    * consume cap slots the static build would never spend.
-    *
-    * The occupancy aggregate reads only (band, bkey) — column-pruned — and
-    * at warehouse scale would be a maintained count table instead of a
-    * re-aggregate; the admit rule is the same either way. The checkpoint
-    * directory is REQUIRED: without one, a restarted query replays the
-    * whole source from offset 0 under NEW batch ids — offsets must come
-    * from the checkpoint, not luck.
-    *
-    * Replay idempotence is structural: every write lands under
-    * `<sub>_m/batch=<batchId>` with overwrite, so a batch re-delivered
-    * after a crash rewrites its own partition with identical
-    * (deterministic) content instead of appending duplicates, and its
-    * occupancy read EXCLUDES its own partition so cap admission replays
-    * against exactly the pre-batch state. Readers see base + maintained
-    * rows through [[graft.operators.Dedup.minhashIndexTable]].
-    *
-    * Maintenance also deletes the root's `_GRAFT_STAMP` sidecar (when the
-    * root is a stamped static build): its contents now exceed the stamp's
-    * recorded file coverage, and a truthless stamp would let a later
-    * append-refresh inherit streamed rows — or a cold fallback plus
-    * vacuum drop streamed-only entries that exist nowhere else. A
-    * maintained index leaves the stamp economy: it is the database of
-    * record for its streamed documents, never a predecessor and never a
-    * vacuum victim.
-    *
-    * CONTRACT: `doc_id` identifies IMMUTABLE content — a doc_id must
-    * never re-arrive with different text. The fences key on doc_id and
-    * normalized-content hash independently, so a mutated re-arrival is
-    * indistinguishable from a mid-protocol crash: its new content hash
-    * would be repped while the standing signature still describes the
-    * old text (the sigs tables store no content hash to compare
-    * against). Feeds that mutate documents must assign a fresh doc_id
-    * per revision (the CDC layer's key-version pattern).
-    *
-    * RETIREMENT: a doc a dead lineage SIGNED whose content later arrives
-    * as a byte-copy under a different doc_id can never be completed (the
-    * copy's rep content-fences it out of orphan completion) nor
-    * overwritten (its partition belongs to the dead lineage) — its sig
-    * rows would dangle band-less forever, silently relaxing the static
-    * build's "sigs describe reps only" invariant. When such a doc
-    * RE-ARRIVES (identity-signed + content-repped under a different
-    * doc_id), its doc_id is written to a `sigs_retired_m` tombstone
-    * partition and every read through
-    * [[graft.operators.Dedup.minhashIndexTable]] subtracts it from the
-    * sigs/bands views — restoring the invariant without touching the
-    * dead partition.
-    */
   /** The stream's LINEAGE — an 8-hex digest of the checkpoint's stream id:
     * stable across restarts of the same checkpoint, fresh for a recreated
     * one. Every index maintainer keys its per-batch partitions on it so a
@@ -556,8 +489,7 @@ object Docs {
 
   /** Streaming MAINTENANCE of an ADDITIVE standing count family
     * ([[graft.operators.TextAnalysis.CountFamily]]: dup-gram counts,
-    * unigram vocabulary, bigram LM, DSIR features) — the generalization
-    * of [[maintainMinhashIndex]] to the families whose rows are pure
+    * unigram vocabulary, bigram LM, DSIR features), whose rows are pure
     * per-doc-disjoint counts. Without it, the 13 streaming twins score
     * live feeds against a table FROZEN at the last batch refresh — a
     * pipeline scoring today's crawl against last week's dup-gram counts
@@ -567,8 +499,8 @@ object Docs {
     *   1. doc_ids already counted by ANY published batch (the `_ids`
     *      sidecars) fence the arriving rows — a cross-lineage replay
     *      (recreated checkpoint re-feeding delivered docs) never
-    *      double-counts; same doc_id-immutability contract as the
-    *      MinHash maintainer;
+    *      double-counts (the doc_id-immutability contract of
+    *      [[maintainDerivedRows]]);
     *   2. the family's counts over the fenced batch land under
     *      `root/counts_m/batch=<lineage>_<batchId>` with its `_ids`
     *      sidecar (underscore name: invisible to parquet reads of the
@@ -583,35 +515,52 @@ object Docs {
     * skips it by marker (its content is deterministic and already
     * complete). No caps, no occupancy reads — additivity is the whole
     * protocol. Readers merge base + batches through
-    * [[graft.operators.TextAnalysis.countsTable]]; the stamp economy
-    * exit mirrors maintainMinhashIndex (a maintained root is never a
-    * predecessor and never a vacuum victim).
-    *
-    * CONTRACT (shared with maintainMinhashIndex): doc_id identifies
-    * immutable content and arrives at most once per lineage offset
-    * range; a mutated re-arrival under the same doc_id is fenced as a
-    * replay, never re-counted.
+    * [[graft.operators.TextAnalysis.countsTable]].
     */
   def maintainCountsIndex(docsStream: DataFrame, root: String,
                           checkpointDir: String,
                           family: graft.operators.TextAnalysis.CountFamily)
       : org.apache.spark.sql.streaming.StreamingQuery =
     maintainDerivedRows(docsStream, root, "counts", checkpointDir,
-      "doc_id")((fr, _) => family.counts(fr))
+      "doc_id")((fr, _) => Seq("" -> family.counts(fr)))
 
-  /** The shared ADDITIVE maintenance protocol: per fenced micro-batch,
-    * `derive(freshRows, publishedParts)`'s rows land under
+  /** The shared maintenance protocol: per fenced micro-batch, the tables
+    * `derive(freshRows, publishedParts)` names land under
     * `root/<sub>_m/batch=<lineage>_<batchId>` with their `_ids` sidecar
-    * in ONE atomic publish. Every maintainer here but MinHash's runs it —
-    * counts, postings, IVF lists, PQ codes — so all share the IDENTICAL
-    * protocol (fence enumeration rule, crashed-temp invisibility,
-    * marker-skip replay, stamp-economy exit) and a protocol fix lands
-    * everywhere at once.
+    * in ONE atomic publish ([[graft.index.StandingIndex.publishPart]]).
+    * Every maintainer here runs it — counts, postings, IVF lists, PQ
+    * codes, MinHash — so all share the IDENTICAL protocol and a protocol
+    * fix lands everywhere at once:
+    *   - FENCE: rows whose `idCol` a PUBLISHED part's `_ids` names are
+    *     dropped, so a cross-lineage replay (recreated checkpoint
+    *     re-feeding delivered rows) never indexes a row twice; a crashed
+    *     attempt's dot-named temp is invisible to the fence and to every
+    *     read view, and only the idle sweep
+    *     ([[graft.index.StandingIndex.vacuumMaintained]]) touches it;
+    *   - REPLAY: a published part is never rewritten — a same-lineage
+    *     replay skips it by marker, and an unpublished one recomputes
+    *     from published state only;
+    *   - STAMP ECONOMY EXIT: the first maintained batch deletes the
+    *     root's `_GRAFT_STAMP` (when the root is a stamped static build):
+    *     its contents now exceed the stamp's file coverage, and a
+    *     truthless stamp would let a later append-refresh inherit
+    *     streamed rows or a vacuum drop streamed-only entries. A
+    *     maintained root is never a predecessor and never a vacuum
+    *     victim.
+    *
+    * The checkpoint directory is REQUIRED: without one, a restarted query
+    * replays the whole source from offset 0 under NEW batch ids.
+    *
+    * CONTRACT: `idCol` identifies IMMUTABLE content and arrives at most
+    * once per lineage offset range; a mutated re-arrival under the same
+    * id is fenced as a replay, never re-indexed. Feeds that mutate rows
+    * must assign a fresh id per revision (the CDC layer's key-version
+    * pattern).
     */
   private def maintainDerivedRows(stream: DataFrame, root: String,
                                   sub: String, checkpointDir: String,
                                   idCol: String)(
-                                  derive: (DataFrame, Seq[org.apache.hadoop.fs.Path]) => DataFrame)
+                                  derive: (DataFrame, Seq[org.apache.hadoop.fs.Path]) => Seq[(String, DataFrame)])
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.index.StandingIndex
     lazy val lineage: String = streamLineage(checkpointDir)
@@ -628,8 +577,6 @@ object Docs {
           val fs = target.getFileSystem(conf)
           val marker = new org.apache.hadoop.fs.Path(target, "_ids/_SUCCESS")
           if (!fs.exists(marker)) {
-            // the fence reads the _ids of PUBLISHED batch dirs only — a
-            // crashed attempt's temp never fences its docs out
             val published = StandingIndex.publishedBatches(fs,
               new org.apache.hadoop.fs.Path(mRoot))
             val idPaths = StandingIndex.fenceIdPaths(fs, published)
@@ -640,11 +587,9 @@ object Docs {
             val fresh = seen
               .map(ids => batch0.join(ids, Seq(idCol), "left_anti"))
               .getOrElse(batch0)
-            // leaves the stamp economy on first maintenance (see
-            // maintainMinhashIndex)
             val stamp = new org.apache.hadoop.fs.Path(s"$root/_GRAFT_STAMP")
             fs.delete(stamp, false): Unit
-            // one batch-local materialization feeds both writes
+            // one batch-local materialization feeds every write
             val fr = fresh.localCheckpoint()
             StandingIndex.publishPart(mRoot, batchKey, derive(fr, published),
               fr.select(idCol).distinct())
@@ -682,7 +627,7 @@ object Docs {
       // is deterministic across replays (and a re-seeded root would be a
       // NEW root per the immutable-dir rule)
       val cents = b.sparkSession.read.parquet(s"$root/centroids")
-      Similarity.ivfAssign(Similarity.unitizeVecs(b), cents)
+      Seq("" -> Similarity.ivfAssign(Similarity.unitizeVecs(b), cents))
     }
   }
 
@@ -701,7 +646,7 @@ object Docs {
       "vec_id") { (b, _) =>
       graft.functions.VectorOps.register(b.sparkSession)
       val cb = b.sparkSession.read.parquet(s"$root/codebook")
-      Similarity.pqEncode(Similarity.pqSubvecs(b), cb)
+      Seq("" -> Similarity.pqEncode(Similarity.pqSubvecs(b), cb))
     }
   }
 
@@ -710,10 +655,10 @@ object Docs {
     * rare-gram-Jaccard probe tables) — the last standing-index tier that
     * staled against a live feed. The family's df invariant (true df =
     * live rows + tombstone dfs, capping applied by the READ view —
-    * `Dedup.postingsTable`) is what keeps this the SIMPLE additive
-    * protocol instead of the MinHash occupancy/orphan machinery: a batch
-    * part is order-independent and replay-deterministic whatever the
-    * interleaving, because admission is not decided at write time.
+    * `Dedup.postingsTable`) is what keeps this free of MinHash's
+    * write-time occupancy admission: a batch part is order-independent
+    * and replay-deterministic whatever the interleaving, because
+    * admission is not decided at write time.
     *
     * Per micro-batch (foreachBatch = batch context):
     *   1. `_ids` of published parts fence the arriving docs (exactly
@@ -759,176 +704,32 @@ object Docs {
         if (evidence.isEmpty) None
         else Some(family.totals(s.read.parquet(evidence: _*)
           .select(col("doc_id"), col("gram"), col("df"))))
-      family.part(family.post(fr), known)
+      Seq("" -> family.part(family.post(fr), known))
     }
 
+  /** Streaming MAINTENANCE of the standing MinHash index
+    * ([[graft.operators.Dedup.buildMinhashIndex]] seeds it): each
+    * micro-batch's `sigs`, `bands` and `reps` rows
+    * ([[graft.operators.Dedup.minhashGrowth]] — byte-copies of repped
+    * content drop, band keys admit under the base + published bands'
+    * occupancy) publish as one part under `root/minhash_m` through
+    * [[maintainDerivedRows]]. For a doc_id-ascending feed this reproduces
+    * the static build's deterministic lowest-doc_id cap EXACTLY
+    * (StreamBatchParitySpec). Readers:
+    * [[graft.operators.Dedup.minhashIndexTable]].
+    */
   def maintainMinhashIndex(docsStream: DataFrame, root: String,
                            checkpointDir: String,
                            cap: Int = graft.operators.Dedup.BucketCap)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    import org.apache.spark.sql.expressions.Window
-    // batch dirs key on (LINEAGE, batchId), not batchId alone: batch
-    // composition is only deterministic within one checkpoint lineage
-    // (offsets are logged there). A recreated checkpoint restarts batch
-    // ids at 0 over a GROWN source, and a bare batch=0 overwrite would
-    // then clobber the rows the dead lineage's batch 0 indexed — silent
-    // index data loss. Read lazily — StreamExecution writes the metadata
-    // file at query start, before any batch runs.
-    lazy val lineage: String = streamLineage(checkpointDir)
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          val s = batch0.sparkSession
-          val conf = s.sessionState.newHadoopConf()
-          val batchKey = s"${lineage}_$batchId"
-          val withH = batch0.withColumn("__h",
-            md5(TextAnalysis.normText(col("text")).cast("binary")))
-          // TWO fences, each EXCLUDING this batch's own prior attempt
-          // (like the bands occupancy read below), so a same-lineage
-          // replay recomputes every decision from the PRE-batch state and
-          // overwrites its own partitions byte-identically:
-          //  - content fence (reps, by norm-hash): a byte-copy of an
-          //    already-indexed text never re-indexes;
-          //  - identity fence (sigs, by doc_id): a doc already signed
-          //    under ANY other batch — including a DEAD lineage whose
-          //    partitions a recreated checkpoint can never overwrite —
-          //    never re-indexes, so a cross-lineage restart cannot
-          //    duplicate rows.
-          // A fence reading the batch's OWN attempt would be cheaper on a
-          // clean replay (fully-fenced ⇒ no rewrites) but is unsafe under
-          // a PARTIAL commit: a crash mid-write can leave some rows
-          // visible, and believing them would shrink the replay and
-          // overwrite sigs/bands WITHOUT the partially-fenced docs —
-          // silent index loss. Docs a dead lineage signed but never
-          // fenced (crash between its sigs and reps writes) are ORPHANS:
-          // identity-fenced from re-signing, then explicitly COMPLETED
-          // below (bands/reps backfilled from the standing sig rows), so
-          // a mid-protocol crash plus checkpoint recreation still
-          // converges to a fully-indexed, duplicate-free table.
-          val repsT = Dedup.minhashIndexTable(s, root, "reps",
-            excludeBatch = Some(batchKey))
-          val afterReps = repsT match {
-            case Some(reps) =>
-              withH.join(reps.select(col("h").as("__h")), Seq("__h"),
-                "left_anti")
-            case None => withH
-          }
-          val standingSigs = Dedup.minhashIndexTable(s, root, "sigs",
-            excludeBatch = Some(batchKey))
-          // RETIREMENT (see the contract above): an arriving doc that is
-          // identity-signed but whose content is repped under a DIFFERENT
-          // doc_id holds dangling sig rows a dead lineage wrote — neither
-          // completable (content-fenced) nor overwritable (dead
-          // partition). Tombstone its doc_id; the read path subtracts it.
-          // standingSigs already excludes previously-retired docs, so a
-          // retirement lands exactly once and a replay (own partition
-          // excluded) recomputes it byte-identically.
-          // retired/batch/orphanIds are each referenced by several
-          // actions below (emptiness probes, writes, the reps union) and
-          // every reference would re-run their joins against the FULL
-          // standing index — localCheckpoint materializes each once (the
-          // pattern sigs already uses)
-          val retired = (standingSigs, repsT) match {
-            case (Some(sigs0), Some(reps0)) =>
-              withH.join(sigs0.select("doc_id").distinct(),
-                  Seq("doc_id"), "left_semi")
-                .join(reps0.select(col("h").as("__h"),
-                  col("doc_id").as("__rep")), Seq("__h"))
-                .filter(col("__rep") =!= col("doc_id"))
-                .select("doc_id").distinct()
-                .localCheckpoint()
-            case _ => null
-          }
-          val anyRetired = retired != null && !retired.isEmpty
-          val batch = (standingSigs match {
-            case Some(sigs0) =>
-              afterReps.join(sigs0.select("doc_id").distinct(),
-                Seq("doc_id"), "left_anti")
-            case None => afterReps
-          }).localCheckpoint()
-          // ORPHANS: docs a dead lineage SIGNED (identity-fenced out of
-          // `batch` above) whose protocol never completed — their content
-          // hash reached no reps partition (reps is written LAST), so
-          // their bands/reps rows may be missing and a recreated
-          // checkpoint can never overwrite the dead partitions. Complete
-          // them from the STANDING sig rows instead of re-signing (sigs
-          // stay exactly-once): recompute their band keys, admit under
-          // current occupancy, drop any keys they already hold, and fold
-          // their reps rows into this batch's.
-          val orphanIds = (standingSigs match {
-            case Some(sigs0) =>
-              afterReps.join(sigs0.select("doc_id").distinct(),
-                Seq("doc_id"), "left_semi").select(col("doc_id"), col("__h"))
-            case None => afterReps.limit(0).select(col("doc_id"), col("__h"))
-          }).localCheckpoint()
-          if (!batch.isEmpty || !orphanIds.isEmpty || anyRetired) {
-            // any maintenance action — including a retirement-only batch,
-            // which changes the sigs/bands READ VIEW — leaves the stamp
-            // economy (contract above)
-            val stamp = new org.apache.hadoop.fs.Path(s"$root/_GRAFT_STAMP")
-            stamp.getFileSystem(conf).delete(stamp, false): Unit
-          }
-          if (anyRetired)
-            retired.write.mode("overwrite")
-              .parquet(s"$root/sigs_retired_m/batch=$batchKey")
-          if (!batch.isEmpty || !orphanIds.isEmpty) {
-            val sigs = Dedup.minhashSignatures(batch.drop("__h"))
-              .localCheckpoint()
-            sigs.write.mode("overwrite")
-              .parquet(s"$root/sigs_m/batch=$batchKey")
-            val orphanSigs = standingSigs.map(_.join(
-                orphanIds.select("doc_id"), Seq("doc_id"), "left_semi"))
-              .getOrElse(sigs.limit(0))
-            val w = Window.partitionBy(col("band"), col("bkey"))
-              .orderBy(col("doc_id"))
-            val bandsOpt = Dedup.minhashIndexTable(s, root, "bands",
-              excludeBatch = Some(batchKey))
-            // keys ALREADY LANDED (an orphan whose dead lineage crashed
-            // between its bands and reps writes) drop BEFORE the ranking
-            // window: they sit inside the occupancy count n0 already, so
-            // also giving them a row_number slot would double-count the
-            // same key against the cap and wrongly reject another doc in
-            // the bucket (the static build would have admitted it)
-            val newKeysRaw = Dedup.bandKeys(sigs.unionByName(orphanSigs))
-            val newKeys = bandsOpt match {
-              case Some(bands) => newKeysRaw.join(
-                bands.select("doc_id", "band", "bkey"),
-                Seq("doc_id", "band", "bkey"), "left_anti")
-              case None => newKeysRaw
-            }
-            val admitted = bandsOpt match {
-              case Some(bands) =>
-                val occupancy = bands.groupBy(col("band"), col("bkey"))
-                  .agg(count(lit(1)).as("n0"))
-                newKeys
-                  .join(occupancy, Seq("band", "bkey"), "left")
-                  .withColumn("n0", coalesce(col("n0"), lit(0L)))
-                  .withColumn("rn", row_number().over(w))
-                  .filter(col("n0") + col("rn") <= cap)
-                  .select("doc_id", "band", "bkey")
-              case None =>
-                newKeys.withColumn("rn", row_number().over(w))
-                  .filter(col("rn") <= cap)
-                  .select("doc_id", "band", "bkey")
-            }
-            admitted.write.mode("overwrite")
-              .parquet(s"$root/bands_m/batch=$batchKey")
-            // reps LAST: it is the fence, so it must only admit a batch
-            // whose sigs/bands partitions all landed; a crash before this
-            // point replays the batch, which OVERWRITES those partitions
-            // with identical content instead of double-appending
-            batch.select(col("__h").as("h"), col("doc_id"))
-              .unionByName(orphanIds.select(col("__h").as("h"), col("doc_id")))
-              .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
-              .write.mode("overwrite")
-              .parquet(s"$root/reps_m/batch=$batchKey")
-          }
-        }
-      }
-      .start()
+    Dedup.requireAtomicMinhashLayout(docsStream.sparkSession, root)
+    maintainDerivedRows(docsStream, root, "minhash", checkpointDir,
+      "doc_id") { (fr, _) =>
+      val s = fr.sparkSession
+      Dedup.minhashGrowth(fr, Dedup.minhashIndexTable(s, root, "reps"),
+        Dedup.minhashIndexTable(s, root, "bands"), cap)
+    }
   }
 
   /** Streaming RAG chunking: the q_doc_chunks window geometry applied to

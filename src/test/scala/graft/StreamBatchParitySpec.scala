@@ -1,5 +1,6 @@
 package graft
 
+import graft.index.StandingIndex
 import graft.streaming.Events
 import graft.streaming.Events.Event
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -623,12 +624,10 @@ class StreamBatchParitySpec extends AnyFunSuite {
     assert(sub("sigs").count() > 0)
 
     // REPLAY SAFETY. (a) full restart with a fresh checkpoint re-delivers
-    // every batch under the same ids: each is fenced by its own reps
-    // partition, so the index comes out byte-identical — nothing
+    // every batch under the same ids: each doc is fenced by the published
+    // parts' `_ids`, so the index comes out byte-identical — nothing
     // re-appends, no cap slot is re-spent (the pre-r8 append layout spent
-    // them twice). (b) a crash BEFORE the reps write (simulated by
-    // deleting the last batch's reps partition) replays that one batch,
-    // which OVERWRITES its own partitions with identical content.
+    // them twice).
     val sigsBefore = table(sub("sigs"), sigCols: _*)
     val bandsBefore = table(sub("bands"), "doc_id", "band", "bkey")
     val nBandRows = sub("bands").count()
@@ -649,12 +648,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
     // (a2) SAME-LINEAGE replay WITH DATA BEHIND IT: resume the ORIGINAL
     // checkpoint with its last two commits (and the final offset entry)
     // removed — Structured Streaming re-executes batch 3 under the SAME
-    // lineage and batchId, so the fences exclude the batch's own standing
-    // partitions, every doc comes back unfenced, and the recomputation
-    // must OVERWRITE lineage1_3 byte-identically (this is the crash-replay
-    // path the own-attempt exclusion exists for; a fence reading its own
-    // rows would turn this into an empty batch and a partial one into
-    // silent loss).
+    // lineage and batchId, whose part is already published: the replay
+    // must skip it by marker and leave the index byte-identical.
     val ckfs = new org.apache.hadoop.fs.Path(ckptDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     Seq("commits/3", "commits/4", "offsets/4").foreach(f =>
@@ -666,69 +661,59 @@ class StreamBatchParitySpec extends AnyFunSuite {
     assert(table(sub("bands"), "doc_id", "band", "bkey") == bandsBefore)
     assert(sub("bands").count() == nBandRows,
       "same-lineage replay duplicated band rows")
-    // (b) crash at batch start: drop the LAST batch's partitions (its
-    // rows now exist nowhere) and replay — the un-fenced docs re-index
-    // under the replaying lineage and the tables converge to the same
-    // content, with no duplicate rows
+    // (b) a published batch lost as a whole: delete the LAST batch's
+    // `minhash_m/batch=…` dirs (its rows and fence now exist nowhere) and
+    // replay — the unfenced docs re-index under the replaying lineage and
+    // the tables converge to the same content, with no duplicate rows
     val fsys = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    def lastBatchDirs(subName: String): Seq[org.apache.hadoop.fs.Path] =
-      fsys.listStatus(new org.apache.hadoop.fs.Path(s"$root/${subName}_m"))
+    def lastBatchDirs(): Seq[org.apache.hadoop.fs.Path] =
+      fsys.listStatus(new org.apache.hadoop.fs.Path(s"$root/minhash_m"))
         .toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(s"_${chunks.size - 1}"))
-    Seq("reps", "sigs", "bands").foreach(sn =>
-      lastBatchDirs(sn).foreach(p => assert(fsys.delete(p, true))))
+        .filter(p => p.getName.startsWith("batch=") &&
+          p.getName.endsWith(s"_${chunks.size - 1}"))
+    assert(lastBatchDirs().nonEmpty)
+    lastBatchDirs().foreach(p => assert(fsys.delete(p, true)))
     replayAll()
     assert(table(sub("sigs"), sigCols: _*) == sigsBefore)
     assert(table(sub("bands"), "doc_id", "band", "bkey") == bandsBefore)
     assert(sub("bands").count() == nBandRows)
 
-    // (b2) PARTIAL reps commit: a crash mid-way through the reps parquet
-    // job can leave SOME of the batch's reps rows visible. A SAME-lineage
-    // replay must not believe its own partial attempt (a fence reading it
-    // would shrink the replay and overwrite sigs/bands without the
-    // partially-fenced docs — silent index loss); a CROSS-lineage restart
-    // (this replayAll: fresh checkpoint) must not re-index the docs whose
-    // sigs already landed under the dead lineage either — the identity
-    // fence keeps them indexed exactly once. Truncate the last batch's
-    // reps to one row, replay, and require the index unchanged.
-    val repsDir = lastBatchDirs("reps")
-    assert(repsDir.nonEmpty)
-    val repsPath = repsDir.head.toString
-    val half = spark.read.parquet(repsPath).limit(1).localCheckpoint()
-    fsys.delete(repsDir.head, true)
-    half.write.parquet(repsPath)
+    // (b2) KILLED ATTEMPT: the one crash the atomic publish leaves — an
+    // attempt killed after writing its dot-named temp (sigs, bands, reps
+    // AND _ids) but before the move. Simulate it by moving the last
+    // batch's published dirs back into `.build_*` temps: their _ids must
+    // fence nothing and their rows must read nowhere, so a replay
+    // re-indexes those docs exactly once; the janitor then sweeps the
+    // temps once idle, without touching live rows.
+    val killed = lastBatchDirs().zipWithIndex.map { case (p, i) =>
+      val t = new org.apache.hadoop.fs.Path(p.getParent, s".build_killed_$i")
+      assert(fsys.rename(p, t))
+      t
+    }
+    assert(killed.nonEmpty)
+    assert(table(sub("sigs"), sigCols: _*) != sigsBefore,
+      "a killed attempt's temp was read as published")
     replayAll()
     assert(table(sub("sigs"), sigCols: _*) == sigsBefore,
-      "partial reps commit dropped signature rows on replay")
+      "a killed attempt's temp fenced its docs out of the replay")
     assert(table(sub("bands"), "doc_id", "band", "bkey") == bandsBefore)
     assert(sub("bands").count() == nBandRows)
-
-    // (b3) ORPHAN COMPLETION: a dead lineage that crashed AFTER its sigs
-    // write but before bands/reps leaves docs signed yet unreachable by
-    // LSH (no band rows) and unfenced (no reps rows). A cross-lineage
-    // restart must complete them from the standing sig rows — bands and
-    // reps restored, sigs NOT duplicated.
-    Seq("reps", "bands").foreach(sn =>
-      lastBatchDirs(sn).foreach(p => assert(fsys.delete(p, true))))
-    replayAll()
+    assert(StandingIndex.vacuumMaintained(spark, root, graceMs = 0L).isEmpty,
+      "a fresh temp was swept inside the idle floor")
+    val aged = System.currentTimeMillis() - 2L * 3600 * 1000
+    def ageTree(p: org.apache.hadoop.fs.Path): Unit = {
+      fsys.listStatus(p).foreach(st => if (st.isDirectory) ageTree(st.getPath)
+        else fsys.setTimes(st.getPath, aged, aged))
+      fsys.setTimes(p, aged, aged)
+    }
+    killed.foreach(ageTree)
+    val swept = StandingIndex.vacuumMaintained(spark, root, graceMs = 0L)
+    assert(killed.forall(t => swept.exists(_.endsWith(t.getName)) &&
+      !fsys.exists(t)), s"idle killed temps not swept: $swept")
     assert(table(sub("sigs"), sigCols: _*) == sigsBefore,
-      "orphan completion re-signed docs (duplicate sig rows)")
-    assert(table(sub("bands"), "doc_id", "band", "bkey") == bandsBefore,
-      "orphaned docs' band rows were not backfilled exactly")
-    assert(sub("bands").count() == nBandRows)
-    // the content fence works again: a byte-copy of an orphaned doc's
-    // text arriving later must be dropped by the restored reps rows
-    val orphanCopy = chunks.last.head.copy(doc_id = 1999998L)
-    val in4 = MemoryStream[Doc]
-    val q4 = Docs.maintainMinhashIndex(in4.toDF(), root,
-      java.nio.file.Files.createTempDirectory("graft_orphan_ckpt").toString)
-    try {
-      in4.addData(Seq(orphanCopy))
-      q4.processAllAvailable()
-    } finally q4.stop()
-    assert(sub("sigs").filter(col("doc_id") === 1999998L).count() == 0,
-      "byte-copy of an orphan-completed doc was re-indexed")
+      "the sweep touched live rows")
+    assert(table(sub("bands"), "doc_id", "band", "bkey") == bandsBefore)
 
     // (c) LINEAGE SAFETY: a wiped-and-recreated checkpoint restarts batch
     // ids at 0 over a GROWN source. Batch 0 now has a DIFFERENT (superset)
@@ -750,6 +735,28 @@ class StreamBatchParitySpec extends AnyFunSuite {
     assert(sub("sigs").filter(col("doc_id") === 1999999L).count() == 1,
       "the grown source's new doc was not indexed")
     assert(sigsAfter.size == sigsBefore.size + 1)
+  }
+
+  test("a MinHash root in the retired per-subtable layout fails loudly") {
+    import graft.operators.Dedup
+    import graft.streaming.Docs
+    import graft.streaming.Docs.Doc
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+
+    // a root the older maintainer wrote: per-subtable `sigs_m/batch=…`
+    // partitions that the atomic-part reader would silently ignore
+    val root = java.nio.file.Files.createTempDirectory("graft_legacy_mh").toString
+    val docs = Seq(Doc(1L, "alpha beta gamma delta", "en", "web", 22L)).toDF()
+    Dedup.minhashSignatures(docs).write.parquet(s"$root/sigs_m/batch=x")
+    def assertLoud(what: String)(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains(root) && e.getMessage.contains("sigs_m") &&
+        e.getMessage.contains("re-seed"), s"$what: unclear error: ${e.getMessage}")
+    }
+    assertLoud("read view")(Dedup.minhashIndexTable(spark, root, "sigs"))
+    assertLoud("maintainer")(Docs.maintainMinhashIndex(MemoryStream[Doc].toDF(),
+      root, java.nio.file.Files.createTempDirectory("graft_legacy_ck").toString))
   }
 
   test("streamed count-family maintenance equals the cold build for all six families") {
@@ -897,7 +904,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
     // the floor — and never touches a fresh (possibly-live) one
     val fs2 = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(TextAnalysis.vacuumCountsIndex(spark, root, graceMs = 0L).isEmpty,
+    assert(StandingIndex.vacuumMaintained(spark, root, graceMs = 0L).isEmpty,
       "a fresh temp was swept inside the idle floor")
     val dead = new org.apache.hadoop.fs.Path(s"$root/counts_m/.build_dead_x")
     val old = System.currentTimeMillis() - 2L * 3600 * 1000
@@ -907,7 +914,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
       fs2.setTimes(p, old, old)
     }
     ageTree(dead)
-    val swept = TextAnalysis.vacuumCountsIndex(spark, root, graceMs = 0L)
+    val swept = StandingIndex.vacuumMaintained(spark, root, graceMs = 0L)
     assert(swept.exists(_.endsWith(".build_dead_x")) && !fs2.exists(dead),
       s"idle dead temp not swept: $swept")
     assert(TextAnalysis.countsTable(spark, root, fam).get
@@ -958,87 +965,6 @@ class StreamBatchParitySpec extends AnyFunSuite {
     val frozen = TextAnalysis.spanScrubScore(corpus, dupCold)
       .collect().map(_.toSeq).toSet
     assert(live == frozen && live.nonEmpty)
-  }
-
-  test("dead-lineage sigs of a later-repped byte-copy are retired") {
-    import graft.operators.Dedup
-    import graft.streaming.Docs
-    import graft.streaming.Docs.Doc
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    // the r8 residue interleave: lineage L1 SIGNS d1..d4 then crashes
-    // before its bands/reps writes (all four orphaned); a recreated
-    // checkpoint later sees d2's text arrive as a byte-copy under doc_id
-    // 100 (indexed + repped), after which d2 itself re-arrives — its
-    // content is now repped under 100, so orphan completion can never
-    // touch it and its dead-lineage sig rows would dangle band-less
-    // forever. Retirement must drop them from the sigs/bands views while
-    // leaving the other orphans (still completable) intact.
-    def doc(id: Long, text: String) =
-      Doc(id, text, "en", "web", text.length.toLong)
-    val d = Seq(
-      doc(1L, "alpha beta gamma delta epsilon zeta"),
-      doc(2L, "one two three four five six seven"),
-      doc(3L, "lorem ipsum dolor sit amet consectetur"),
-      doc(4L, "spark catalyst tungsten codegen shuffle exchange"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_retire_idx").toString
-    def sub(name: String) =
-      Dedup.minhashIndexTable(spark, root, name).get
-    val in1 = MemoryStream[Doc]
-    val q1 = Docs.maintainMinhashIndex(in1.toDF(), root,
-      java.nio.file.Files.createTempDirectory("graft_retire_ck1").toString)
-    try { in1.addData(d); q1.processAllAvailable() } finally q1.stop()
-    // crash AFTER the sigs write: drop the batch's bands + reps partitions
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    Seq("bands", "reps").foreach { sn =>
-      fsys.listStatus(new org.apache.hadoop.fs.Path(s"$root/${sn}_m"))
-        .foreach(st => assert(fsys.delete(st.getPath, true)))
-    }
-    // recreated checkpoint: the byte-copy arrives, then d2 itself
-    val copy = d(1).copy(doc_id = 100L)
-    val in2 = MemoryStream[Doc]
-    val q2 = Docs.maintainMinhashIndex(in2.toDF(), root,
-      java.nio.file.Files.createTempDirectory("graft_retire_ck2").toString)
-    try {
-      in2.addData(Seq(copy)); q2.processAllAvailable()
-      assert(sub("sigs").filter(col("doc_id") === 100L).count() > 0,
-        "the byte-copy was not indexed (orphan reps never landed)")
-      in2.addData(Seq(d(1))); q2.processAllAvailable()
-    } finally q2.stop()
-    // d2's dangling sigs are retired from every doc-keyed view…
-    assert(sub("sigs").filter(col("doc_id") === 2L).count() == 0,
-      "dead-lineage sigs of the later-repped byte-copy were not retired")
-    assert(sub("bands").filter(col("doc_id") === 2L).count() == 0)
-    // …its content stays reachable through exactly one rep (the copy)…
-    val reps2 = Dedup.minhashIndexTable(spark, root, "reps").get
-      .join(sub("sigs").filter(col("doc_id") === 100L).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-    assert(reps2.count() == 1)
-    // …and the OTHER orphans are untouched (still completable later)
-    assert(sub("sigs").filter(col("doc_id").isin(1L, 3L, 4L)).count() == 3,
-      "retirement over-retired orphans whose content is not repped elsewhere")
-    // one of them completing afterwards still works: d1 re-arrives and is
-    // completed (reps restored, no duplicate sig rows)
-    val in3 = MemoryStream[Doc]
-    val q3 = Docs.maintainMinhashIndex(in3.toDF(), root,
-      java.nio.file.Files.createTempDirectory("graft_retire_ck3").toString)
-    try { in3.addData(Seq(d.head)); q3.processAllAvailable() } finally q3.stop()
-    assert(sub("sigs").filter(col("doc_id") === 1L).count() == 1)
-    assert(Dedup.minhashIndexTable(spark, root, "reps").get
-      .filter(col("doc_id") === 1L).count() == 1,
-      "orphan completion stopped working alongside retirement")
-    // idempotence: d2 re-arriving AGAIN adds nothing (already retired,
-    // already content-fenced)
-    val nSig = sub("sigs").count()
-    val in4 = MemoryStream[Doc]
-    val q4 = Docs.maintainMinhashIndex(in4.toDF(), root,
-      java.nio.file.Files.createTempDirectory("graft_retire_ck4").toString)
-    try { in4.addData(Seq(d(1))); q4.processAllAvailable() } finally q4.stop()
-    assert(sub("sigs").count() == nSig)
-    assert(sub("sigs").filter(col("doc_id") === 2L).count() == 0)
   }
 
   test("streamed postings maintenance equals the cold build for both df-capped families") {
@@ -1247,7 +1173,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
       fam.live(fam.post(all.take(2).toDF()).withColumn("df", lit(1L)))
         .as[(Long, String)].collect().toSet,
       "a crashed unpublished attempt's _ids fenced live docs out")
-    assert(Dedup.vacuumPostingsIndex(spark, root3, graceMs = 0L).isEmpty,
+    assert(StandingIndex.vacuumMaintained(spark, root3, graceMs = 0L).isEmpty,
       "a fresh temp was swept inside the idle floor")
   }
 
@@ -1343,7 +1269,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
       "the maintainer tombstoned on base evidence the read view ignores")
   }
 
-  test("read views skip a crashed temp and an unmarked seeded base: counts, postings, IVF, PQ") {
+  test("read views skip a crashed temp and an unmarked seeded base: counts, postings, IVF, PQ, MinHash") {
     import graft.operators.{Dedup, Similarity, TextAnalysis}
     import spark.implicits._
 
@@ -1354,35 +1280,44 @@ class StreamBatchParitySpec extends AnyFunSuite {
     val lists = Seq((1L, Seq(1.0, 0.0), 0), (2L, Seq(0.0, 1.0), 1))
       .toDF("c_id", "ce", "cell")
     val codes = Seq((1L, 0, 3), (1L, 1, 5), (2L, 0, 7)).toDF("c_id", "sub", "code")
-    // (sub dir, stored rows, the family's read view, its view of the rows)
-    val views: Seq[(String, org.apache.spark.sql.DataFrame,
+    val sigs = Dedup.minhashSignatures(docs)
+    // (maintained side, table dir inside a part and of the seeded base,
+    // stored rows, the family's read view, its view of the rows); a
+    // single-table family stores its rows at the part root and at
+    // `root/<side>`
+    val views: Seq[(String, String, org.apache.spark.sql.DataFrame,
         String => Option[org.apache.spark.sql.DataFrame],
         org.apache.spark.sql.DataFrame)] = Seq(
-      ("counts", cfam.counts(docs),
+      ("counts", "", cfam.counts(docs),
         r => TextAnalysis.countsTable(spark, r, cfam), cfam.counts(docs)),
-      ("postings", pfam.part(pfam.post(docs), None),
+      ("postings", "", pfam.part(pfam.post(docs), None),
         r => Dedup.postingsTable(spark, r, pfam),
         pfam.live(pfam.part(pfam.post(docs), None))),
-      ("lists", lists, r => Similarity.ivfListsTable(spark, r), lists),
-      ("codes", codes, r => Similarity.pqCodesTable(spark, r), codes))
+      ("lists", "", lists, r => Similarity.ivfListsTable(spark, r), lists),
+      ("codes", "", codes, r => Similarity.pqCodesTable(spark, r), codes),
+      ("minhash", "sigs", sigs,
+        r => Dedup.minhashIndexTable(spark, r, "sigs"), sigs))
     val fs = new org.apache.hadoop.fs.Path(System.getProperty("java.io.tmpdir"))
       .getFileSystem(spark.sessionState.newHadoopConf())
     def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
-    for ((sub, stored, read, want) <- views) {
+    for ((sub, tbl, stored, read, want) <- views) {
       val root = java.nio.file.Files.createTempDirectory(s"graft_rv_$sub").toString
+      val base = if (tbl.isEmpty) s"$root/$sub" else s"$root/$tbl"
       // a maintained side holding only a dead build temp is absent…
-      stored.write.parquet(s"$root/${sub}_m/.build_dead_x")
+      stored.write.parquet(s"$root/${sub}_m/.build_dead_x" +
+        (if (tbl.isEmpty) "" else s"/$tbl"))
       assert(read(root).isEmpty, s"$sub: a dead temp read as a maintained part")
       // …and never shadows or joins a marked seeded base
-      graft.sources.Export.flush(stored, s"$root/$sub")
+      graft.sources.Export.flush(stored, base)
       assert(read(root).map(rows).contains(rows(want)),
         s"$sub: the dead temp leaked into the base's view")
       // an unmarked seeded base reads as absent
-      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/$sub/_SUCCESS"),
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/_SUCCESS"),
         false))
       assert(read(root).isEmpty, s"$sub: an unmarked seeded base was served")
     }
-    assert(rows(views(1)._4).nonEmpty, "the postings case derived no live rows")
+    assert(rows(views(1)._5).nonEmpty, "the postings case derived no live rows")
+    assert(rows(sigs).nonEmpty, "the MinHash case derived no signatures")
   }
 
   test("streamed IVF/PQ assignment equals the batch append-refresh; search probes the live table") {
