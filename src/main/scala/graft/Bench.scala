@@ -141,9 +141,8 @@ object Bench {
   }
 
   /** THE measurement session — Bench's confs, on `SPARK_GRAFT_CPUS`
-    * local cores (default 32). Every profiling main (TimeTool,
-    * StageProbe, ExplainTool) builds its session here, so what they time
-    * and plan is what the bench runs.
+    * local cores (default 32). [[Profile]] builds its session here, so
+    * what it times and plans is what the bench runs.
     */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

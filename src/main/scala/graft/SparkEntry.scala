@@ -7,7 +7,7 @@ object SparkEntry {
 
   /** All oracle-checked query packs, one per SURVEY §2 group. Cached:
     * building the packs constructs 155 Q objects with their oracle-SQL
-    * strings, and `queries(name)` sits inside Bench/TimeTool's timed
+    * strings, and `queries(name)` sits inside Bench/Profile's timed
     * region — a `def` re-paid that construction on every lookup. */
   lazy val packs: Seq[Q] =
     operators.SpecQueries.pack ++ operators.Relational.pack ++

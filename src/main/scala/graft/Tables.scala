@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.StructType
 
 /** Table catalog over a scale-factor directory of parquet files.
   *
@@ -22,53 +23,76 @@ object Tables {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  /** Session-lifetime parquet schema memo. DSv1 parquet schema inference
-    * runs a 1-task Spark job per `spark.read.parquet(path)` call (footer
-    * read); a session that touches the same table many times — every real
-    * consumer, and the bench/verify mains most of all — pays that
-    * scheduler round-trip on every read. The schema is pure metadata and
-    * the cached paths are immutable within a session (driver test data;
-    * standing indexes are content-keyed and write-once), so the first
-    * read infers and every later read passes the schema explicitly. Data
-    * is still read from parquet on every action — nothing about results
-    * is cached.
+  /** The one JVM-global metadata memo: an LRU map that evicts its least
+    * recently used entry past [[Memo.Bound]] entries. The parquet schema
+    * memo, [[spread]]'s partition counts and `Versioned`'s version schemas
+    * share it, their keys tagged apart. File metadata is checked against
+    * a [[listing]] token of the frame being built, so an in-place rewrite
+    * re-derives instead of serving stale metadata. Values are computed
+    * outside the lock (they may run Spark jobs); racing misses both
+    * compute the same value.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  /** `spark.read.parquet(paths)` with the footer-schema job memoized per
-    * path set. Use ONLY for paths whose content is immutable for the life
-    * of the JVM (catalog tables of a scale dir, content-keyed standing
-    * indexes) — never for paths that are rewritten in place.
-    */
-  def parquetImmutable(spark: SparkSession, paths: String*): DataFrame = {
-    val key = paths.mkString("\u0000")
-    val cached = schemaCache.get(key)
-    if (cached != null) spark.read.schema(cached).parquet(paths: _*)
-    else {
-      val df = spark.read.parquet(paths: _*)
-      schemaCache.put(key, df.schema)
-      df
+  private[graft] object Memo {
+    val Bound = 1024
+    private val entries = new java.util.LinkedHashMap[Product, Any](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Product, Any]): Boolean =
+        this.size > Bound
     }
+    def get[V](key: Product): Option[V] =
+      entries.synchronized(Option(entries.get(key)).map(_.asInstanceOf[V]))
+    def put(key: Product, value: Any): Unit = entries.synchronized { entries.put(key, value) }
+    def getOrElseUpdate[V](key: Product)(compute: => V): V =
+      get[V](key).getOrElse { val v = compute; put(key, v); v }
+    def size: Int = entries.synchronized(entries.size)
   }
 
-  /** [[parquetImmutable]] for a multi-dir read that needs `mergeSchema`
-    * (versioned tables whose appends may add columns): the first read
-    * merges footers — a Spark job over every file — and memoizes the
-    * merged schema per path SET; later reads pass it explicitly, which
-    * projects each file onto the union schema (nulls for absent columns),
-    * exactly what mergeSchema produces. Same immutability contract as
-    * [[parquetImmutable]].
+  /** Sorted root paths and a digest of (path, length, mtime) over every
+    * file of `df`'s file relations, taken from the listing their
+    * FileIndex already holds — no IO, no Spark job. None when `df` reads
+    * anything but file relations.
     */
-  def parquetImmutableMerged(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val key = "M|" + paths.mkString(" ")
-    val cached = schemaCache.get(key)
-    if (cached != null) spark.read.schema(cached).parquet(paths: _*)
-    else {
-      val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      schemaCache.put(key, df.schema)
-      df
-    }
+  private[graft] def listing(df: DataFrame): Option[(Seq[String], String)] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val rels = df.queryExecution.analyzed.collect { case lr: LogicalRelation => lr.relation }
+    val locs = rels.collect { case h: HadoopFsRelation => h.location }
+    if (locs.isEmpty || locs.size < rels.size) return None
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    locs.flatMap(_.listFiles(Nil, Nil)).flatMap(_.files)
+      .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+      .sorted.foreach(l => md.update(l.getBytes("UTF-8")))
+    Some((locs.flatMap(_.rootPaths.map(_.toString)).sorted,
+      BigInt(1, md.digest()).toString(16)))
+  }
+
+  /** `spark.read.parquet(paths)` without the footer-schema job on repeat
+    * reads. DSv1 parquet schema inference runs a 1-task Spark job per
+    * read, and a session touches the same tables many times; a memoized
+    * schema is passed explicitly and kept only while the read's listing
+    * matches the one it was inferred from. Data is read on every action.
+    */
+  def parquetImmutable(spark: SparkSession, paths: String*): DataFrame =
+    parquetMemo(spark, paths, merge = false)
+
+  /** [[parquetImmutable]] for a multi-dir read that needs `mergeSchema`
+    * (versioned tables whose appends may add columns). A memoized merged
+    * schema projects each file onto the union schema (nulls for absent
+    * columns), exactly what mergeSchema produces.
+    */
+  def parquetImmutableMerged(spark: SparkSession, paths: Seq[String]): DataFrame =
+    parquetMemo(spark, paths, merge = true)
+
+  private def parquetMemo(spark: SparkSession, paths: Seq[String],
+                          merge: Boolean): DataFrame = {
+    val key = ("schema", paths, merge)
+    Memo.get[(Option[(Seq[String], String)], StructType)](key)
+      .map { case (tok, schema) => tok -> spark.read.schema(schema).parquet(paths: _*) }
+      .collect { case (tok, df) if tok.isDefined && listing(df) == tok => df }
+      .getOrElse {
+        val r = if (merge) spark.read.option("mergeSchema", "true") else spark.read
+        val df = r.parquet(paths: _*)
+        Memo.put(key, (listing(df), df.schema))
+        df
+      }
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -103,35 +127,16 @@ object Tables {
   def spread(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
     // `.rdd.getNumPartitions` plans a SEPARATE physical query per call
-    // (~40-50 ms of driver time); the count is a pure function of the
-    // scanned files and the session's split/parallelism confs, so memoize
-    // it per (root paths, want). spread is only ever applied to plain
-    // scans of immutable inputs (catalog tables, freshly published index
-    // batches); frames with no file relation fall back to planning.
-    val roots = df.queryExecution.logical.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.mkString(",")
-          case _ => ""
-        }
-    }
-    val key =
-      if (roots.nonEmpty && roots.forall(_.nonEmpty))
-        Some(roots.sorted.mkString(";") + "|" + want)
-      else None
-    val n: Int = key.flatMap(k => Option(partitionCountCache.get(k))) match {
-      case Some(c) => c.intValue()
-      case None =>
-        val m = df.rdd.getNumPartitions
-        key.foreach(k => partitionCountCache.put(k, m))
-        m
+    // (~40-50 ms of driver time); the count is a function of the scanned
+    // files and the session's split/parallelism confs, so memoize it per
+    // (roots, want, listing token). Frames with no file relation plan.
+    val n = listing(df) match {
+      case Some((roots, token)) =>
+        Memo.getOrElseUpdate(("parts", roots, want, token))(df.rdd.getNumPartitions)
+      case None => df.rdd.getNumPartitions
     }
     if (n < want) df.repartition(want) else df
   }
-
-  private val partitionCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   /** Register every table as a temp view so `spark.sql` works against the dir. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

@@ -254,8 +254,6 @@ object StandingIndex {
         grow = Option(incr).map(f => (tmp, predRoot, newPaths) =>
           graft.sources.Export.flush(f(s.read.parquet(predRoot),
             Tables.spread(s.read.parquet(newPaths: _*))), tmp)))
-      // content-keyed dir (the key hashes corpus identity + params), so
-      // the footer-schema memo is safe: same path ⇒ same table
       Tables.parquetImmutable(s, root)
     }
 

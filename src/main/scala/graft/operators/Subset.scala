@@ -249,8 +249,7 @@ object Subset {
     * thread afterwards, in sorted edge order, so results stay deterministic.
     */
   def extract(spark: SparkSession, sfDir: String, spec: QuerySpec,
-              graph: RelGraph = RelGraph.tpch,
-              bloomPrune: Boolean = false): Extraction = {
+              graph: RelGraph = RelGraph.tpch): Extraction = {
     // phase profiler (dbcut --profiler analogue): localCheckpoint is eager,
     // so per-phase wall times reflect real compute, not just plan building
     val phase = scala.collection.mutable.LinkedHashMap.empty[String, Long]
@@ -286,27 +285,6 @@ object Subset {
     def keySide(keys: DataFrame): DataFrame =
       if (boundedKeys) broadcast(keys) else keys
 
-    // Opt-in 100 TB path: when the key set is UNBOUNDED (no broadcast, so
-    // the semi-join shuffles the whole parent) and the edge is a single
-    // integral column, prefilter the parent scan with a bloom of the keys
-    // before the shuffle — the parent-side shuffle shrinks to the true
-    // selectivity plus the fpp tax, and the exact semi-join keeps the
-    // result provably identical (SubsetSpec pins parity). Costs two extra
-    // key-side jobs per edge, so it stays off by default at test scale.
-    def parentSide(parentName: String, keys: DataFrame, fk: FK): DataFrame = {
-      val parent = load(parentName)
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-      val single = fk.parentCols.size == 1 &&
-        Set[org.apache.spark.sql.types.DataType](ByteType, ShortType, IntegerType, LongType)
-          .contains(parent.schema(fk.parentCols.head).dataType)
-      if (bloomPrune && !boundedKeys && single) {
-        val bf = graft.functions.Bloom.build(
-          keys, fk.childCols.head, keys.count(), 0.03)
-        parent.filter(graft.functions.Bloom.mightContain(
-          parent(fk.parentCols.head), bf))
-      } else parent
-    }
-
     // A pre-materialized (already-checkpointed) pull merging into a table
     // that had no prior selection needs no further materialization — record
     // its version as checkpointed so checkpoint() skips it.
@@ -328,7 +306,7 @@ object Subset {
         // join edge: parent ⋉ child-FK keys
         val keys = src.select(e.fk.childCols.map(col): _*)
           .na.drop().distinct()
-        val parent = parentSide(e.to, keys, e.fk)
+        val parent = load(e.to)
         val on = e.fk.childCols.zip(e.fk.parentCols).map { case (c, pc) =>
           keys(c) === parent(pc)
         }.reduce(_ && _)
@@ -452,7 +430,7 @@ object Subset {
             fks.map { fk =>
               val keys = sel(t).select(fk.childCols.map(col): _*)
                 .na.drop().distinct()
-              val parent = parentSide(fk.parent, keys, fk)
+              val parent = load(fk.parent)
               val on = fk.childCols.zip(fk.parentCols).map { case (c, pc) =>
                 keys(c) === parent(pc)
               }.reduce(_ && _)

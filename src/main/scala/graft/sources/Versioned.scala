@@ -553,9 +553,7 @@ object Versioned {
     if (entries.isEmpty) return None
     val dvByEntry = dvs.map(d => d.entry -> d).toMap
     val (dvd, free) = entries.partition(dvByEntry.contains)
-    // entries are write-once (immutable-dir rule), so the footer-schema
-    // memo applies — repeat reads of the same entry set skip the
-    // per-file footer job (graft.Tables.parquetImmutable*)
+    // repeat reads of an entry set skip the footer job (Tables' memo)
     def rd(ds: Seq[String]) =
       if (ds.length > 1) graft.Tables.parquetImmutableMerged(spark, ds)
       else graft.Tables.parquetImmutable(spark, ds.head)
@@ -604,26 +602,16 @@ object Versioned {
       }
   }
 
-  /** Schema of a committed version, CACHED: manifests are immutable and
-    * data-directory names token-unique, so (dir, version, dataDirs)
-    * identifies the merged schema forever — even across a
-    * wiped-and-recreated table at the same path (its dirs differ).
-    * Without the cache every pruned read pays a mergeSchema footer
-    * sweep across ALL the version's data dirs just to null-pad evolved
-    * columns, defeating the "cost ∝ touched buckets" bound at high
-    * bucket counts. Bounded: cleared wholesale past 1024 entries (a
-    * long-lived driver touching many tables/versions).
+  /** Schema of a committed version, memoized in [[graft.Tables.Memo]]
+    * without a listing token: manifests are immutable and data-directory
+    * names token-unique, so (dir, version, dataDirs) identifies the merged
+    * schema. Without it every pruned read pays a mergeSchema footer sweep
+    * across ALL the version's data dirs just to null-pad evolved columns.
     */
-  private val versionSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Seq[String]),
-      org.apache.spark.sql.types.StructType]()
-
   private def versionSchema(spark: SparkSession, dir: String,
-                            m: Manifest): org.apache.spark.sql.types.StructType = {
-    if (versionSchemaCache.size > 1024) versionSchemaCache.clear()
-    versionSchemaCache.computeIfAbsent((dir, m.version, m.dataDirs),
-      _ => read(spark, dir, Some(m.version)).schema)
-  }
+                            m: Manifest): org.apache.spark.sql.types.StructType =
+    graft.Tables.Memo.getOrElseUpdate(("version", dir, m.version, m.dataDirs))(
+      read(spark, dir, Some(m.version)).schema)
 
   /** Read only the rows whose `column` value is in `values`, pruning at
     * MANIFEST level when the table is bucketed ON that column: the

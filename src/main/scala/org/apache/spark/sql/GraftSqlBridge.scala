@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Minimal bridge into `private[sql]` surface — the standard pattern for
   * Spark extension libraries that build custom logical plans (Column ↔
   * Expression conversion and Dataset-from-LogicalPlan construction have no
-  * public equivalents in Spark 4's split API).
+  * public equivalents in Spark 4's split API, and neither has a drain of
+  * the `private[spark]` listener bus).
   */
 object GraftSqlBridge {
 
@@ -24,4 +25,10 @@ object GraftSqlBridge {
 
   def logicalPlan(df: Dataset[_]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
+
+  /** Block until the listener bus has delivered every posted event, so a
+    * listener read right after an action sees its last job and stage.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -92,17 +92,4 @@ class SubsetSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.max("count")).collect()(0).getLong(0)
     assert(maxPerCust <= 4)
   }
-
-  test("bloom-pruned closure extracts exactly the same subset") {
-    // unbounded spec (no root limit → key sides are not broadcast) so the
-    // bloom path actually engages on every single-column join edge
-    val yaml = "from: customer\nwhere:\n  c_mktsegment: MACHINERY\nlimit: null\n" +
-      "join_depth: 5\nbackref_depth: 1\nbackref_limit: 3\n"
-    val plain = Subset.extract(spark, TestSpark.sf, SpecJson.parse(yaml))
-    val bloomed = Subset.extract(spark, TestSpark.sf, SpecJson.parse(yaml),
-      bloomPrune = true)
-    val a = Subset.summary(plain).collect().map(_.toSeq).toSet
-    val b = Subset.summary(bloomed).collect().map(_.toSeq).toSet
-    assert(a.nonEmpty && a == b)
-  }
 }
