@@ -297,12 +297,17 @@ object Cli {
         }
         log(s"query $qn: ${df.count()} rows")
       case "load" =>
+        // one concurrent write wave: the rows land with no FK enforcement
+        // (integrity comes from the closure, verified after the fact by
+        // `check`), so the per-table writes are independent. Each count is
+        // read back from the landed files' footers — no Spark job, and a
+        // write that lost rows still shows.
         val order = fkOrder(extracted)
-        order.foreach { n =>
-          extracted(n).write.mode(SaveMode.Overwrite)
-            .parquet(s"${cfg.destDir}/$n")
+        val counts = Wave.run(order) { n =>
+          val dir = s"${cfg.destDir}/$n"
+          extracted(n).write.mode(SaveMode.Overwrite).parquet(dir)
+          s"$n=${Tables.footerRowCount(spark, dir)}"
         }
-        val counts = order.map(n => s"$n=${spark.read.parquet(s"${cfg.destDir}/$n").count()}")
         log(s"load: ${counts.mkString(", ")}")
       case "flush" =>
         // dbcut flush: drop + recreate the destination (cmd_flush.py)
@@ -359,12 +364,12 @@ object Cli {
         log(s"dumpsql: ${order.size} tables (${cfg.dialect.name}) -> ${cfg.destDir}/sql")
       case "dumpjson" =>
         val order = fkOrder(extracted)
-        order.foreach(n => extracted(n).coalesce(1).write.mode(SaveMode.Overwrite)
+        Wave.run(order)(n => extracted(n).coalesce(1).write.mode(SaveMode.Overwrite)
           .json(s"${cfg.destDir}/json/$n.json"))
         log(s"dumpjson: ${order.size} tables -> ${cfg.destDir}/json")
       case "dumporc" =>
         val order = fkOrder(extracted)
-        order.foreach(n => extracted(n).write.mode(SaveMode.Overwrite)
+        Wave.run(order)(n => extracted(n).write.mode(SaveMode.Overwrite)
           .orc(s"${cfg.destDir}/orc/$n"))
         log(s"dumporc: ${order.size} tables -> ${cfg.destDir}/orc")
       case "models" =>
@@ -383,7 +388,8 @@ object Cli {
       case "snapshot" =>
         // versioned load: each extraction commits as the next version of
         // destination_dir/versioned/<table> — repeated runs build history
-        // a reader can time-travel through (sources/Versioned.scala)
+        // a reader can time-travel through (sources/Versioned.scala).
+        // Serial, unlike load: each commit runs Versioned's own log protocol
         val order = fkOrder(extracted)
         val vs = order.map { n =>
           val v = graft.sources.Versioned.commit(

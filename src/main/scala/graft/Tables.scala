@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.StructType
 
@@ -274,22 +274,25 @@ object Tables {
   /** Row count from parquet FOOTERS only — driver-side metadata reads, no
     * Spark job, no data scan. The cheap-count primitive behind the CLI's
     * `estimate` (dbcut `--estimate` reads information_schema stats,
-    * `database.py:323-345`) and the LSH plane-count sizing.
+    * `database.py:323-345`), CLI `load`'s landed counts and the LSH
+    * plane-count sizing. It counts the files `spark.read.parquet(path)`
+    * scans: every name below `path` passes Spark's hidden-path rule, so a
+    * crashed writer's `_temporary/` or a `.hidden.parquet` adds nothing.
     */
   def footerRowCount(spark: SparkSession, path: String): Long = {
+    import org.apache.hadoop.fs.FileStatus
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     // RECURSIVE listing: a hive-partitioned table keeps its data files in
     // key=value subdirectories — a top-level-only listing would silently
     // report 0 rows for a populated table
-    val files = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.FileStatus]
-    if (fs.getFileStatus(p).isDirectory) {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) files += it.next()
-    } else files += fs.getFileStatus(p)
-    files.iterator
+    def visible(dir: org.apache.hadoop.fs.Path): Iterator[FileStatus] =
+      fs.listStatus(dir).iterator
+        .filterNot(st => GraftSqlBridge.hiddenPathName(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) visible(st.getPath) else Iterator(st))
+    val root = fs.getFileStatus(p)
+    (if (root.isDirectory) visible(p) else Iterator(root))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map { st =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)

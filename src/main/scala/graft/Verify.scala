@@ -54,7 +54,7 @@ object Verify {
   }
 
   /** Run each query and write its result to `<outDir>/<name>` as parquet,
-    * a few queries at a time. A query that throws has its dump dir
+    * one [[Wave]] of queries. A query that throws has its dump dir
     * DELETED — an earlier run's output must never pass the compare as
     * its own — and is listed with its error in `<outDir>/failed.txt`
     * (empty when all ran). Returns the failures, name → message.
@@ -63,31 +63,22 @@ object Verify {
            queries: Seq[(String, (SparkSession, String) => DataFrame)])
       : Seq[(String, String)] = {
     new java.io.File(outDir).mkdirs()
-    // The ~60 dumps are independent; submitting them from a few threads
-    // keeps the scheduler fed (one thread leaves cores idle between the
-    // many small jobs). Writes go to per-query dirs, so no output races.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val failed = try {
-      val work = queries.map { case (name, fn) =>
-        Future {
-          try {
-            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-            None
-          } catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            val stale = new org.apache.hadoop.fs.Path(s"$outDir/$name")
-            stale.getFileSystem(spark.sessionState.newHadoopConf())
-              .delete(stale, true)
-            Some(name -> String.valueOf(e.getMessage).replace('\n', ' '))
-          }
-        }
+    // The dumps are independent; submitting them as one wave keeps the
+    // scheduler fed (one thread leaves cores idle between the many small
+    // jobs). Writes go to per-query dirs, so no output races.
+    val failed = Wave.run(queries) { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val stale = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+        stale.getFileSystem(spark.sessionState.newHadoopConf())
+          .delete(stale, true)
+        Some(name -> String.valueOf(e.getMessage).replace('\n', ' '))
       }
-      Await.result(Future.sequence(work), Duration.Inf).flatten.sortBy(_._1)
-    } finally pool.shutdown()
+    }.flatten.sortBy(_._1)
     Files.writeString(Paths.get(s"$outDir/failed.txt"),
       failed.map { case (n, m) => s"$n\t$m" }.mkString("\n"))
     failed

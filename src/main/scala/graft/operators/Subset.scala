@@ -329,123 +329,112 @@ object Subset {
         }
       }
 
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     /** Materialize several independent pulls as concurrent Spark jobs. */
     def materialize[T](work: Seq[(T, DataFrame)]): Seq[(T, DataFrame)] =
-      Await.result(
-        Future.sequence(work.map { case (tag, df) =>
-          Future((tag, df.localCheckpoint()))
-        }), Duration.Inf)
+      graft.Wave.run(work) { case (tag, df) => (tag, df.localCheckpoint()) }
     /** Checkpoint several merged selections as concurrent jobs — the
       * serial foreach(checkpoint) form paid one blocking scheduler
-      * round-trip per table per level. Mutation happens after the Await,
+      * round-trip per table per level. Mutation happens after the wave,
       * on the caller thread, like materialize's merge step. */
     def checkpointAll(ts: Iterable[String]): Unit = {
       val todo = ts.toSeq.distinct.filter(t => ckptVersion(t) != version(t))
-      val done = Await.result(
-        Future.sequence(todo.map(t => Future(t -> sel(t).localCheckpoint()))),
-        Duration.Inf)
+      val done = graft.Wave.run(todo)(t => t -> sel(t).localCheckpoint())
       done.foreach { case (t, df) =>
         sel(t) = df
         ckptVersion(t) = version(t)
       }
     }
 
-    try {
-      // Phase 2: level-by-level with snapshot semantics.
-      val byLevel = p.edges.groupBy(_.level).toSeq.sortBy(_._1)
-      for ((lvl, levelEdges) <- byLevel) timed(s"level_$lvl") {
-        val snapshot = sel.toMap // selections as of end of previous level
-        val snapVersion = version.toMap.withDefaultValue(0)
-        val ordered = levelEdges.sortBy(te => (te.from, te.to))
-        ordered.foreach(e =>
-          if (!e.backref) joinEdgeSeenAt((e.from, e.fk)) = snapVersion(e.from))
-        val soleFresh = ordered.groupBy(_.to).collect {
-          case (t, es) if es.size == 1 && !snapshot.contains(t) => t
-        }.toSet
-        // pullMap below is keyed by TreeEdge value equality — two equal
-        // edges in one level would silently collapse to one pull (masked
-        // only by the dropDuplicates in unionInto); the planner never
-        // emits duplicates, so make that assumption explicit
-        require(ordered.distinct.size == ordered.size,
-          s"duplicate edges in level $lvl: $ordered")
-        val (matEdges, lazyEdges) = ordered.partition(e => soleFresh(e.to))
-        def pullOf(e: TreeEdge): DataFrame = {
-          val src = snapshot.getOrElse(e.from,
-            sys.error(s"edge source ${e.from} not yet selected"))
-          pullEdge(e, src)
-        }
-        val pullMap = (materialize(matEdges.map(e => e -> pullOf(e))) ++
-          lazyEdges.map(e => e -> pullOf(e))).toMap
-        for (e <- ordered) { val df = pullMap(e); {
-          // A backref pull that CREATES its child's selection also proves the
-          // reverse join edge complete: every pulled row's FK value is a PK
-          // of the (monotone, union-only) parent selection it was pulled by.
-          // Recording it lets the re-closure pass skip the no-op re-pull.
-          val freshBackref = e.backref && !sel.contains(e.to)
-          unionInto(e.to, df, addCheckpointed = soleFresh(e.to))
-          if (freshBackref) joinEdgeSeenAt((e.to, e.fk)) = version(e.to)
-        } }
-        // materialize merged selections (no-op for single-pull new tables):
-        // selections are tiny by construction and every downstream plan
-        // (next level, re-closure, summary) restarts from materialized
-        // blocks instead of growing one deep AQE lineage
-        checkpointAll(levelEdges.map(_.to))
+    // Phase 2: level-by-level with snapshot semantics.
+    val byLevel = p.edges.groupBy(_.level).toSeq.sortBy(_._1)
+    for ((lvl, levelEdges) <- byLevel) timed(s"level_$lvl") {
+      val snapshot = sel.toMap // selections as of end of previous level
+      val snapVersion = version.toMap.withDefaultValue(0)
+      val ordered = levelEdges.sortBy(te => (te.from, te.to))
+      ordered.foreach(e =>
+        if (!e.backref) joinEdgeSeenAt((e.from, e.fk)) = snapVersion(e.from))
+      val soleFresh = ordered.groupBy(_.to).collect {
+        case (t, es) if es.size == 1 && !snapshot.contains(t) => t
+      }.toSet
+      // pullMap below is keyed by TreeEdge value equality — two equal
+      // edges in one level would silently collapse to one pull (masked
+      // only by the dropDuplicates in unionInto); the planner never
+      // emits duplicates, so make that assumption explicit
+      require(ordered.distinct.size == ordered.size,
+        s"duplicate edges in level $lvl: $ordered")
+      val (matEdges, lazyEdges) = ordered.partition(e => soleFresh(e.to))
+      def pullOf(e: TreeEdge): DataFrame = {
+        val src = snapshot.getOrElse(e.from,
+          sys.error(s"edge source ${e.from} not yet selected"))
+        pullEdge(e, src)
       }
+      val pullMap = (materialize(matEdges.map(e => e -> pullOf(e))) ++
+        lazyEdges.map(e => e -> pullOf(e))).toMap
+      for (e <- ordered) { val df = pullMap(e); {
+        // A backref pull that CREATES its child's selection also proves the
+        // reverse join edge complete: every pulled row's FK value is a PK
+        // of the (monotone, union-only) parent selection it was pulled by.
+        // Recording it lets the re-closure pass skip the no-op re-pull.
+        val freshBackref = e.backref && !sel.contains(e.to)
+        unionInto(e.to, df, addCheckpointed = soleFresh(e.to))
+        if (freshBackref) joinEdgeSeenAt((e.to, e.fk)) = version(e.to)
+      } }
+      // materialize merged selections (no-op for single-pull new tables):
+      // selections are tiny by construction and every downstream plan
+      // (next level, re-closure, summary) restarts from materialized
+      // blocks instead of growing one deep AQE lineage
+      checkpointAll(levelEdges.map(_.to))
+    }
 
-      // Phase 3: parent re-closure (child-before-parent), guarantees RI for
-      // every included parent table. Edges whose phase-2 pull already saw the
-      // child's final selection are provably complete — skip them.
-      //
-      // Tables are processed in RANK batches rather than one at a time:
-      // rank(t) = longest included child-chain below t, so no included join
-      // edge can link two tables of equal rank (an edge c→t forces
-      // rank(t) > rank(c)) — a batch's pulls read selections only earlier
-      // batches could have touched, making them mutually independent. Their
-      // checkpoints then run as ONE concurrent wave (checkpointAll) instead
-      // of one blocking scheduler round-trip per table; on the TPC-H graph
-      // this folds {orders, part, supplier} into a single wave. Results are
-      // identical to the serial child-before-parent walk: within a batch,
-      // selection merges still happen on the caller thread in sorted table
-      // order.
-      val included = p.tables.toSet
-      timed("reclosure") {
-        val inc = p.graph.reverseTopological.filter(included)
-        val rank = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-        for (t <- inc) {
-          // children appear before t in reverseTopological, so their ranks
-          // are already assigned
-          val childRanks = inc.filter(c =>
-            p.graph.joinEdges(c).exists(_.parent == t)).flatMap(rank.get)
-          rank(t) = if (childRanks.isEmpty) 0 else childRanks.max + 1
-        }
-        for ((_, batch) <- rank.toSeq.groupBy(_._2).toSeq.sortBy(_._1)) {
-          val pulls = batch.map(_._1).sorted.flatMap { t =>
-            val fks = p.graph.joinEdges(t).filter(fk =>
-              included(fk.parent) && sel.contains(t) &&
-                !joinEdgeSeenAt.get((t, fk)).contains(version(t)))
-            fks.map { fk =>
-              val keys = sel(t).select(fk.childCols.map(col): _*)
-                .na.drop().distinct()
-              val parent = load(fk.parent)
-              val on = fk.childCols.zip(fk.parentCols).map { case (c, pc) =>
-                keys(c) === parent(pc)
-              }.reduce(_ && _)
-              fk -> parent.join(keySide(keys), on, "left_semi")
-            }
-          }
-          pulls.foreach { case (fk, df) =>
-            unionInto(fk.parent, df, addCheckpointed = false) }
-          // materialize merged selections: unionInto only builds lazy plans,
-          // so checkpointing here keeps the profiler honest about where time
-          // went
-          checkpointAll(pulls.map(_._1.parent))
-        }
+    // Phase 3: parent re-closure (child-before-parent), guarantees RI for
+    // every included parent table. Edges whose phase-2 pull already saw the
+    // child's final selection are provably complete — skip them.
+    //
+    // Tables are processed in RANK batches rather than one at a time:
+    // rank(t) = longest included child-chain below t, so no included join
+    // edge can link two tables of equal rank (an edge c→t forces
+    // rank(t) > rank(c)) — a batch's pulls read selections only earlier
+    // batches could have touched, making them mutually independent. Their
+    // checkpoints then run as ONE concurrent wave (checkpointAll) instead
+    // of one blocking scheduler round-trip per table; on the TPC-H graph
+    // this folds {orders, part, supplier} into a single wave. Results are
+    // identical to the serial child-before-parent walk: within a batch,
+    // selection merges still happen on the caller thread in sorted table
+    // order.
+    val included = p.tables.toSet
+    timed("reclosure") {
+      val inc = p.graph.reverseTopological.filter(included)
+      val rank = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      for (t <- inc) {
+        // children appear before t in reverseTopological, so their ranks
+        // are already assigned
+        val childRanks = inc.filter(c =>
+          p.graph.joinEdges(c).exists(_.parent == t)).flatMap(rank.get)
+        rank(t) = if (childRanks.isEmpty) 0 else childRanks.max + 1
       }
-    } finally pool.shutdown()
+      for ((_, batch) <- rank.toSeq.groupBy(_._2).toSeq.sortBy(_._1)) {
+        val pulls = batch.map(_._1).sorted.flatMap { t =>
+          val fks = p.graph.joinEdges(t).filter(fk =>
+            included(fk.parent) && sel.contains(t) &&
+              !joinEdgeSeenAt.get((t, fk)).contains(version(t)))
+          fks.map { fk =>
+            val keys = sel(t).select(fk.childCols.map(col): _*)
+              .na.drop().distinct()
+            val parent = load(fk.parent)
+            val on = fk.childCols.zip(fk.parentCols).map { case (c, pc) =>
+              keys(c) === parent(pc)
+            }.reduce(_ && _)
+            fk -> parent.join(keySide(keys), on, "left_semi")
+          }
+        }
+        pulls.foreach { case (fk, df) =>
+          unionInto(fk.parent, df, addCheckpointed = false) }
+        // materialize merged selections: unionInto only builds lazy plans,
+        // so checkpointing here keeps the profiler honest about where time
+        // went
+        checkpointAll(pulls.map(_._1.parent))
+      }
+    }
 
     Extraction(spec, p, sel.toMap, phase.toMap)
   }

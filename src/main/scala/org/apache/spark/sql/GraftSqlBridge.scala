@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Minimal bridge into `private[sql]` surface — the standard pattern for
   * Spark extension libraries that build custom logical plans (Column ↔
   * Expression conversion and Dataset-from-LogicalPlan construction have no
-  * public equivalents in Spark 4's split API, and neither has a drain of
-  * the `private[spark]` listener bus).
+  * public equivalents in Spark 4's split API, and neither have a drain of
+  * the `private[spark]` listener bus or the file index's hidden-path rule).
   */
 object GraftSqlBridge {
 
@@ -31,4 +31,12 @@ object GraftSqlBridge {
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Spark's rule for the file and directory names its file index skips
+    * while listing a table (`_temporary`, `.hidden`, `*._COPYING_`, but
+    * not `key=value` partition dirs), so a driver-side listing can count
+    * exactly the files a scan reads.
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

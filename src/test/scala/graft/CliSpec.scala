@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end drive of the chained CLI against real sf0.001 parquet —
   * the dbcut session shape: load, inspect the src/dest diff, dump SQL and
@@ -66,6 +67,75 @@ class CliSpec extends AnyFunSuite {
 
     // the cache was populated by the load
     assert(scala.util.Using.resource(Files.list(Paths.get(s"$work/cache")))(_.count()) == 1)
+  }
+
+  test("load starts one Spark job per table and counts what landed") {
+    val work = tmp()
+    val cfgPath = writeConfig(work,
+      s"""databases:
+         |  source_dir: ${TestSpark.sf}
+         |  destination_dir: $work/dest
+         |queries:
+         |  - from: customer
+         |    limit: 5
+         |    join_depth: 5
+         |    backref_depth: 1
+         |    backref_limit: 2
+         |    exclude: [lineitem]
+         |""".stripMargin)
+    val args = Seq("-c", cfgPath, "--quiet", "--record", "load_jobs",
+      "--record-dir", s"$work/rec")
+    Cli.run(spark, Cli.parseArgs(args :+ "load"))
+    // the second run replays the recorded extraction from local rows, which
+    // starts no Spark job: every job counted is load's own
+    var out = Seq.empty[String]
+    val jobs = TestSpark.jobsOf {
+      out = Cli.run(spark, Cli.parseArgs(args ++ Seq("flush", "load")))
+    }
+    val counts = out.find(_.startsWith("load: ")).get.stripPrefix("load: ")
+      .split(", ").toSeq.map { kv =>
+        val Array(t, n) = kv.split("=")
+        t -> n.toLong
+      }
+    assert(counts.map(_._1).toSet == Set("region", "nation", "customer", "orders"))
+    assert(jobs == counts.size)
+    for ((t, n) <- counts)
+      assert(spark.read.parquet(s"$work/dest/$t").count() == n, t)
+  }
+
+  test("a table that fails to write fails load after the others landed") {
+    val work = tmp()
+    val cfgPath = writeConfig(work,
+      s"""databases:
+         |  source_dir: ${TestSpark.sf}
+         |  destination_dir: $work/dest
+         |cache: $work/cache
+         |log_file: $work/graft.log
+         |queries:
+         |  - from: customer
+         |    limit: 5
+         |    join_depth: 5
+         |    backref_depth: 0
+         |""".stripMargin)
+    val args = Seq("-c", cfgPath, "--quiet")
+    Cli.run(spark, Cli.parseArgs(args :+ "load"))
+    // a cache hit reads each table lazily from the cache entry; a file whose
+    // key column disagrees in type with the others makes region's scan, and
+    // so its write, fail
+    val entry = scala.util.Using.resource(Files.list(Paths.get(s"$work/cache")))(
+      _.iterator().next())
+    val region = entry.resolve("region").toString
+    spark.read.parquet(region)
+      .withColumn("r_regionkey", org.apache.spark.sql.functions.col("r_regionkey").cast("string"))
+      .write.mode("append").parquet(region)
+    val log = Paths.get(s"$work/graft.log")
+    Files.delete(log)
+    intercept[Exception](Cli.run(spark, Cli.parseArgs(args ++ Seq("flush", "load"))))
+    for (t <- Seq("customer", "nation"))
+      assert(Files.exists(Paths.get(s"$work/dest/$t/_SUCCESS")), t)
+    val logged = Files.readAllLines(log).asScala
+    assert(logged.exists(_.contains("flush:")))
+    assert(!logged.exists(_.contains("load:")), logged)
   }
 
   test("models command emits case-class source and an FK-ordered DDL script") {
@@ -151,6 +221,10 @@ class CliSpec extends AnyFunSuite {
     val out2 = Cli.run(spark, Cli.parseArgs(
       Seq("-c", cfgPath, "--quiet", "--last-only", "flush", "load")))
     assert(out2.last == "load: supplier=2")
+    // --only naming no query root: nothing to load, and still a load line
+    val out2b = Cli.run(spark, Cli.parseArgs(
+      Seq("-c", cfgPath, "--quiet", "--only", "region", "load")))
+    assert(out2b == Seq("load: "))
     // clear keeps the table dir but empties it
     val out3 = Cli.run(spark, Cli.parseArgs(Seq("-c", cfgPath, "--quiet", "clear")))
     assert(out3.head == "clear: truncated 1 tables")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,20 +9,6 @@ class MemoSpec extends AnyFunSuite {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_memo").toString
-
-  /** Spark jobs started while `f` runs, counted by a listener. */
-  private def jobsOf(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try f finally {
-      GraftSqlBridge.drainListenerBus(spark)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    n.get
-  }
 
   test("an in-place rewrite that adds a column is visible to the next Tables.load") {
     import spark.implicits._
@@ -44,8 +28,8 @@ class MemoSpec extends AnyFunSuite {
     val dir = tmp()
     Seq(1L, 2L).toDF("o_orderkey").write.parquet(Tables.path(dir, "orders"))
     // the first load infers the footer schema: the listener sees its job
-    assert(jobsOf(Tables.load(spark, dir, "orders")) > 0)
-    assert(jobsOf(Tables.load(spark, dir, "orders")) == 0)
+    assert(TestSpark.jobsOf(Tables.load(spark, dir, "orders")) > 0)
+    assert(TestSpark.jobsOf(Tables.load(spark, dir, "orders")) == 0)
   }
 
   test("spread re-counts partitions after its input is rewritten") {

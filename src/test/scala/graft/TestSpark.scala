@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
@@ -16,4 +17,23 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `f` runs, counted by a listener. The bus is
+    * drained before the listener is added, so late events of earlier work
+    * are not counted, and again before it is read, so none of `f`'s are
+    * missed.
+    */
+  def jobsOf(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    GraftSqlBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try f finally {
+      GraftSqlBridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    n.get
+  }
 }
