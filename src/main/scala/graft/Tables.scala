@@ -138,10 +138,6 @@ object Tables {
     if (n < want) df.repartition(want) else df
   }
 
-  /** Register every table as a temp view so `spark.sql` works against the dir. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
   /** Root directory for every persisted standing index (MinHash/SimHash
     * signatures, winnow postings, CC labels, incremental-dedup index,
     * IVF/PQ tables). These are build-once/probe-many parquet tables, so on
@@ -154,7 +150,10 @@ object Tables {
     *   3. `<corpusDir>/_graft_index` when the corpus URI scheme is a
     *      non-local filesystem (hdfs/s3a/abfs/…): the corpus itself proves
     *      that location is shared storage, and co-locating the index with
-    *      the data it derives from is the natural ingestion layout;
+    *      the data it derives from is the natural ingestion layout.
+    *      On an object store (s3a, gs, …) an index publish there refuses
+    *      unless `spark.graft.versioned.singleWriter=true` acknowledges a
+    *      lone builder ([[Publish.putDir]]): two builders could race;
     *   4. `java.io.tmpdir` — the single-JVM fallback (local[*] dev/test),
     *      where driver-local IS shared. Never the default on a cluster:
     *      any non-local corpus path takes branch 3.
@@ -224,7 +223,7 @@ object Tables {
         // alive there.
         val rootPath = new org.apache.hadoop.fs.Path(root)
         def specific(p: org.apache.hadoop.fs.Path) = p.depth() >= 2 ||
-          (p.depth() >= 1 && p.toUri.getScheme != null)
+          (p.depth() >= 1 && p.toUri.isAbsolute)
         val r = root.stripSuffix("/")
         val candidates =
           (if (specific(rootPath)) Seq(r) else Seq.empty) ++

@@ -92,19 +92,22 @@ object StandingIndex {
     * (name → rows; the name "" puts the rows at the part root, a named
     * table in its own subdir) and its `_ids` sidecar land in a dot-named
     * temp, then ONE atomic move — so `_ids` membership alone proves every
-    * table landed.
+    * table landed. Refuses before any write where the move cannot be made
+    * ([[graft.Publish.checkPut]]).
     */
   private[graft] def publishPart(mRoot: String, key: String,
                                  tables: Seq[(String, DataFrame)],
                                  ids: DataFrame): Unit = {
+    val fs = new Path(mRoot)
+      .getFileSystem(ids.sparkSession.sessionState.newHadoopConf())
+    val root = new Path(s"$mRoot/batch=$key")
+    graft.Publish.checkPut(ids.sparkSession, fs, root)
     val tmp = s"$mRoot/.build_${key}_${java.util.UUID.randomUUID.toString.take(8)}"
     tables.foreach { case (name, rows) =>
       rows.write.parquet(if (name.isEmpty) tmp else s"$tmp/$name")
     }
     ids.write.parquet(s"$tmp/_ids")
-    val fs = new Path(mRoot)
-      .getFileSystem(ids.sparkSession.sessionState.newHadoopConf())
-    publishIndexDir(fs, new Path(tmp), new Path(s"$mRoot/batch=$key"),
+    publishIndexDir(ids.sparkSession, fs, new Path(tmp), root,
       marker = "_ids/_SUCCESS"): Unit
   }
 
@@ -186,8 +189,9 @@ object StandingIndex {
     * `cold(tmp)` otherwise; writes the stamp LAST ([[writeStampFile]]);
     * then atomically moves the temp to the root ([[publishIndexDir]]).
     * Two drivers sharing an index root race only that move — the loser
-    * reads the winner's equivalent (same-keyed) index. Returns the root.
-    * Callers hold their own monitor around it.
+    * reads the winner's equivalent (same-keyed) index. Where the root
+    * cannot be published ([[graft.Publish.checkPut]]) it refuses before
+    * the build. Returns the root. Callers hold their own monitor around it.
     */
   private[graft] def stampedBuild(s: SparkSession, dir: String, tag: String,
                                   table: String, params: String,
@@ -201,6 +205,7 @@ object StandingIndex {
     val root = contentDir(idxRoot, tag, corpus, entries, params)
     val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
     if (!fs.exists(new Path(s"$root/$marker"))) {
+      graft.Publish.checkPut(s, fs, new Path(root))
       val pred = grow.flatMap(_ => predecessorIndex(fs, idxRoot, tag, corpus,
         table, params, entries.map(_._2).toSet, marker))
       val tmp = s"$idxRoot/.build_${new Path(root).getName.stripPrefix("graft_")}_" +
@@ -213,7 +218,7 @@ object StandingIndex {
           case _ => cold(tmp)
         }
         writeStampFile(fs, tmp, corpus, table, params, entries.map(_._2))
-        publishIndexDir(fs, new Path(tmp), new Path(root), marker): Unit
+        publishIndexDir(s, fs, new Path(tmp), new Path(root), marker): Unit
       }
     }
     root
@@ -257,83 +262,35 @@ object StandingIndex {
       Tables.parquetImmutable(s, root)
     }
 
-  /** Atomically publish a fully-built index directory at its final
-    * content-keyed path. Returns true when this builder WON (root is now
-    * its data); false when a concurrent builder published first — the
-    * loser's temp dir is cleaned up and the caller reads the winner's
-    * (equivalent, same content key) table. Per scheme:
-    *
-    *  - `file://`: NIO ATOMIC_MOVE — a true rename(2), which fails on an
-    *    existing non-empty destination instead of merging into it;
-    *  - HDFS-family: `rename` is atomic but renames INTO an existing
-    *    destination directory — detected afterwards by the nested
-    *    dot-named dir (invisible to readers while nested) and undone;
-    *  - object stores: rename is copy+delete, so the publish cannot be
-    *    made atomic from this side alone; the exists-then-rename below
-    *    narrows the window but two racing builders on s3a can still
-    *    interleave — co-locate shared index roots on an atomic-rename
-    *    filesystem (the same guidance Versioned commits enforce).
+  /** Publish a fully-built index directory at its content-keyed root
+    * ([[graft.Publish.putDir]]). True when this builder WON; false when a
+    * concurrent builder published first (the caller reads the winner's
+    * equivalent, same-keyed table). A real winner always moves a complete
+    * dir, marker included, into place atomically, so an occupant WITHOUT
+    * the marker is garbage (e.g. a pre-two-phase crashed direct flush
+    * that parquet would serve PARTIAL rows from forever). It is evicted
+    * by RENAME-ASIDE, never deleted, so an index published between the
+    * check and the evict moves aside intact; vacuumIndexes' idle sweep
+    * reclaims the dot-named trash. Losing with the marker still absent
+    * is loud: conceding is only correct when the marker PROVES a publish.
+    * Its callers run [[graft.Publish.checkPut]] before they build `tmp`,
+    * so a refused scheme never reaches the eviction.
     */
-  private[graft] def publishIndexDir(fs: FileSystem, tmp: Path, root: Path,
+  private[graft] def publishIndexDir(s: SparkSession, fs: FileSystem,
+                                     tmp: Path, root: Path,
                                      marker: String = "_SUCCESS"): Boolean = {
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file")
-    def moveOnce(): Boolean =
-      if (scheme == "file") {
-        try {
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(fs.makeQualified(tmp).toUri),
-            java.nio.file.Paths.get(fs.makeQualified(root).toUri),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.nio.file.DirectoryNotEmptyException => false
-          case _: java.nio.file.FileSystemException if fs.exists(root) =>
-            false
-        }
-      } else {
-        if (fs.exists(root)) false
-        else if (!fs.rename(tmp, root)) false
-        else {
-          val nested = new Path(root, tmp.getName)
-          if (fs.exists(nested)) { fs.delete(nested, true); false } else true
-        }
-      }
-    var won = moveOnce()
-    // before conceding, VERIFY the occupant is a completed publish: a
-    // real winner always moves a complete dir (marker included) into
-    // place atomically, so a markerless occupant is garbage — e.g. a
-    // pre-two-phase crashed direct flush, which parquet would silently
-    // serve PARTIAL rows from forever while every rebuild concedes to
-    // it. Evict by ATOMIC RENAME-ASIDE, never delete: if a complete
-    // index was in fact published between the marker check and the
-    // evict (ms-scale race), it moves aside INTACT — nothing is ever
-    // half-deleted at the final path under a reader, and the end state
-    // is this builder's equivalent (same content key) index. The
-    // dot-named trash dir is reclaimed by the same idle-keyed sweep
-    // that handles crashed builds (vacuumIndexes).
-    if (!won && !fs.exists(new Path(root, marker))) {
-      val trash = new Path(root.getParent,
-        s".build_evicted_${java.util.UUID.randomUUID.toString.take(8)}")
-      val evicted = fs.rename(root, trash)
-      won = moveOnce()
-      // conceding is only correct when the marker PROVES a complete
-      // publish. Losing the retried move with the marker still absent
-      // must be loud whatever happened to the eviction: either the
-      // markerless occupant is still in place (rename failed), or the
-      // eviction succeeded and a SECOND markerless writer recreated the
-      // root inside the window — both leave partial parquet live, which
-      // readers would silently serve forever. (A racing WINNER losing us
-      // the retry is the one benign case, and then the marker exists.)
-      if (!won && !fs.exists(new Path(root, marker))) {
-        fs.delete(tmp, true)
-        throw new java.io.IOException(
-          s"standing-index publish: no complete publish exists at $root " +
-            s"after eviction (evicted=$evicted to $trash) and the retried " +
-            "move lost — refusing to leave partial data live")
-      }
-    }
-    if (!won) fs.delete(tmp, true)
+    val done = new Path(root, marker)
+    val trash = new Path(root.getParent,
+      s".build_evicted_${java.util.UUID.randomUUID.toString.take(8)}")
+    // a fresh name no writer targets, so a plain rename; it publishes
+    // nothing, hence not through Publish
+    val evicted = fs.exists(root) && !fs.exists(done) && fs.rename(root, trash)
+    val won = graft.Publish.putDir(s, fs, tmp, root)
+    if (!won && !fs.exists(done))
+      throw new java.io.IOException(
+        s"standing-index publish: no complete publish exists at $root " +
+          s"(evicted=$evicted to $trash) and the move lost — refusing " +
+          "to leave partial data live")
     won
   }
 

@@ -20,8 +20,6 @@ final case class RelGraph(tables: Map[String, TableMeta]) {
   def meta(name: String): TableMeta =
     tables.getOrElse(name, sys.error(s"unknown table: $name"))
 
-  def pkOf(name: String): Seq[String] = meta(name).pk
-
   /** Many-to-one ("join") edges out of `table`: its own FKs. */
   def joinEdges(table: String): Seq[FK] = meta(table).fks
 

@@ -66,10 +66,6 @@ object Export {
       path
     }
 
-  /** ORC twin of [[flush]] for a single table. */
-  def orcFlush(df: DataFrame, destPath: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(destPath)
-
   /** dbcut `clear`: delete all rows but keep schema ≡ overwrite with the
     * empty slice of the same schema.
     */
@@ -80,15 +76,11 @@ object Export {
     * ~`targetBytes` each. Streaming sinks and over-partitioned jobs leave
     * thousands of tiny files whose per-file open/footer cost dominates the
     * next scan; at 100 TB an uncompacted table can spend longer listing
-    * than reading. Writes to a sibling temp dir, then publishes by moving
-    * the original aside BEFORE promoting the rewrite (rename-aside): the
-    * data is never deleted before its replacement exists, so a crash
-    * loses nothing — but between the two renames there IS a window where
-    * the published path itself is momentarily absent (the data sits in
-    * `__compact_old`); a reader racing that window fails its listing,
-    * and recovery is renaming `__compact_old` back. (Plain-filesystem
-    * renames are not a transaction; the Versioned commit log is the full
-    * answer at warehouse scale.) Returns (filesBefore, filesAfter).
+    * than reading. Writes to `<path>__compact_tmp`, then publishes it
+    * with [[graft.Publish.swap]], keeping the original at
+    * `<path>__compact_old` until the rewrite is in place (crash-safe, not
+    * a transaction; the Versioned commit log is the full answer at
+    * warehouse scale). Returns (filesBefore, filesAfter).
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetBytes: Long = 256L << 20): (Int, Int) = {
@@ -110,14 +102,7 @@ object Export {
     val old = new org.apache.hadoop.fs.Path(path + "__compact_old")
     spark.read.parquet(path).repartition(parts)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(old, true) // leftover from an earlier crashed swap
-    require(fs.rename(p, old), s"compact: could not move $path aside")
-    if (!fs.rename(tmp, p)) {
-      // promotion failed: put the original back so the table is intact
-      require(fs.rename(old, p), s"compact: swap AND rollback failed for $path")
-      throw new IllegalStateException(s"compact swap failed for $path (rolled back)")
-    }
-    fs.delete(old, true)
+    graft.Publish.swap(fs, tmp, p, aside = old)
     (files.length, parts)
   }
 

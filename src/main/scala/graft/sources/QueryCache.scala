@@ -55,16 +55,18 @@ object QueryCache {
       e.tables.foreach { case (n, df) =>
         df.write.mode(SaveMode.Overwrite).parquet(dir.resolve(n).toString)
       }
-      // count + return FROM the just-written parquet, not the live
-      // closure lineage: counting the lineage re-runs the whole
-      // extraction per table (and the caller's first use would run it a
-      // third time) — reading back makes the count a footer read and
-      // hands out cached data, exactly like the hit path
+      // count FROM the just-written files' parquet footers, not the live
+      // closure lineage (counting that re-runs the extraction per table);
+      // hand out the cached data, exactly like the hit path
       val cached = e.tables.keys.map(n =>
         n -> spark.read.parquet(dir.resolve(n).toString)).toMap
-      val counts = cached.toSeq.sortBy(_._1)
-        .map { case (n, df) => s"$n=${df.count()}" }
-      Files.write(countFile(dir), counts.asJava)
+      val counts = cached.keys.toSeq.sorted.map(n =>
+        s"$n=${graft.Tables.footerRowCount(spark, dir.resolve(n).toString)}")
+      // the marker lands whole: a crash mid-write must not leave a
+      // partial table list that the next run serves as a complete hit
+      val tmp = Files.createTempFile(dir, "._counts", ".tmp")
+      Files.write(tmp, counts.asJava)
+      graft.Publish.swapLocal(tmp, countFile(dir))
       (cached, false)
     }
   }

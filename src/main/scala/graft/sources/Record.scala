@@ -115,8 +115,8 @@ final class Recorder(val spark: SparkSession, val name: String,
     * write entirely (nothing was appended, so rewriting would only churn
     * a committed fixture and risk truncating it on a crash mid-write);
     * when something WAS recorded, the bytes go to a temp file in the
-    * same directory and move into place atomically, so a reader (or a
-    * crash) never sees a half-written cassette.
+    * same directory and replace it whole ([[graft.Publish.swapLocal]]), so a
+    * reader (or a crash) never sees a half-written cassette.
     */
   def save(): Unit = if (dirty && records.nonEmpty) {
     Files.createDirectories(recordPath.getParent)
@@ -133,9 +133,7 @@ final class Recorder(val spark: SparkSession, val name: String,
     val tmp = Files.createTempFile(recordPath.getParent, s".$name", ".json.tmp")
     Files.writeString(tmp,
       mapper.writerWithDefaultPrettyPrinter().writeValueAsString(arr))
-    Files.move(tmp, recordPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.Publish.swapLocal(tmp, recordPath)
   }
 }
 

@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * table format the lakehouse operators (§2f) mutate through. The
   * reference reinjects into a live DBMS whose transactions give it
   * atomicity (`/root/reference/dbcut/cli/operations.py:84-139`); plain
-  * parquet directories have none, and `Export.compact`'s rename-aside is
-  * only crash-safe, not versioned. This adds the missing property with
+  * parquet directories have none, and `Export.compact`'s rename-aside
+  * ([[graft.Publish.swap]]) is only crash-safe, not versioned. This adds the missing property with
   * the same design every production table format (Delta, Iceberg, Hudi)
   * builds on: IMMUTABLE data files + an append-only commit log whose
   * single-file manifest publish is the atomic commit point.
@@ -33,16 +33,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Spark's parquet reader does the (parallel) file listing, so a commit
   * is O(1) driver work regardless of table size.
   *
-  * Concurrency: the manifest publish is an atomic put-if-absent chosen
-  * per filesystem scheme (see [[publishManifest]]) — HDFS-family rename
-  * (refuses existing targets), POSIX hard-link on file:// (plain local
-  * rename overwrites silently, so it is NOT a commit primitive), and an
-  * explicit refusal on object stores whose rename is copy+delete (s3a,
-  * gs, …) unless `spark.graft.versioned.singleWriter=true` acknowledges
-  * a lone writer — the Delta-on-S3 situation made loud instead of
-  * silent. Two writers racing the same version resolve optimistically:
-  * the loser's publish fails and it retries under the next number with
-  * the same data directory. Readers are safe in every case because data
+  * Concurrency: the manifest publish is an atomic put-if-absent,
+  * [[graft.Publish.putFile]]; its per-scheme table says how, and when a
+  * scheme refuses. Two writers racing the same version resolve
+  * optimistically: the loser's publish fails and it retries under the
+  * next number with the same data directory. Readers are safe in every case because data
   * files are immutable and manifests are never edited in place.
   */
 object Versioned {
@@ -315,7 +310,8 @@ object Versioned {
     val out = f.create(tmp, true)
     try out.write(json.writeValueAsBytes(payload))
     finally out.close()
-    publishManifest(spark, f, tmp, manifestPath(dir, m.version))
+    // THE commit point: false when a concurrent winner took this version
+    graft.Publish.putFile(spark, f, tmp, manifestPath(dir, m.version))
   }
 
   /** Commit ALREADY-WRITTEN data directories as the next version,
@@ -894,67 +890,6 @@ object Versioned {
         }
       }
     } finally rd.close()
-  }
-
-  /** Schemes whose `rename` is atomic and refuses an existing target —
-    * the HDFS family plus ABFS (Azure Data Lake Gen2 renames via a
-    * single metadata op).
-    */
-  private val AtomicRenameSchemes =
-    Set("hdfs", "viewfs", "webhdfs", "swebhdfs", "ofs", "o3fs",
-      "abfs", "abfss")
-
-  /** Atomic put-if-absent of the manifest — THE commit point. Returns
-    * false (and removes `tmp`) when the target version was already
-    * published by a concurrent winner.
-    *
-    *  - `file://`: POSIX hard-link, which is atomic and fails EEXIST on
-    *    an existing target. A plain local rename OVERWRITES silently —
-    *    the pre-round-7 protocol was unknowingly single-writer on local
-    *    disks, which the two-writer race in VersionedSpec now pins.
-    *  - HDFS-family / ABFS: `rename`, atomic without overwrite there.
-    *  - Object stores (s3a, gs, oss, wasb…): rename is copy+delete and
-    *    both racers "win", so the commit CANNOT be made atomic from this
-    *    side alone (Delta needs a coordination service there too). Refuse
-    *    loudly unless `spark.graft.versioned.singleWriter=true`
-    *    acknowledges the table has exactly one committer, in which case
-    *    an existence check stands in (safe by assumption, and the
-    *    assumption is now explicit instead of silent corruption).
-    */
-  private def publishManifest(spark: SparkSession,
-                              f: org.apache.hadoop.fs.FileSystem,
-                              tmp: Path, dst: Path): Boolean = {
-    val scheme = Option(f.getUri.getScheme).getOrElse("file")
-    val won = scheme match {
-      case "file" =>
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(f.makeQualified(dst).toUri),
-            java.nio.file.Paths.get(f.makeQualified(tmp).toUri))
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      case sch if AtomicRenameSchemes(sch) =>
-        f.rename(tmp, dst)
-      case sch =>
-        val single = spark.conf
-          .getOption("spark.graft.versioned.singleWriter")
-          .exists(_.toBoolean)
-        if (!single) throw new IllegalStateException(
-          s"Versioned commit on scheme '$sch' has no atomic put-if-absent: " +
-            "rename there is copy+delete, so two concurrent committers can " +
-            "both publish the same version and silently corrupt the log. " +
-            "Either guarantee a single committer and set " +
-            "spark.graft.versioned.singleWriter=true, or place the table on " +
-            "an atomic-rename filesystem (HDFS/ABFS) or local disk.")
-        !f.exists(dst) && f.rename(tmp, dst)
-    }
-    // loser or winner, the temp name is done — f.delete also removes the
-    // checksum sidecar LocalFileSystem keeps (the published link shares
-    // the inode, not the directory entry, so it is untouched)
-    f.delete(tmp, false)
-    won
   }
 
   /** Read the table at `asOf` (default: latest committed version).

@@ -28,10 +28,6 @@ object SpecJson {
 
   def parse(text: String): QuerySpec = fromNode(yaml.readTree(text))
 
-  def parseFile(path: String): QuerySpec =
-    parse(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"))
-
   /** Normalized YAML echo of a spec — the analogue of dbcut printing the
     * normalized query dict back to the user. `parse(toYaml(s)) == s`.
     */

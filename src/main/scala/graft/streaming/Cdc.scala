@@ -90,6 +90,83 @@ object Cdc {
       .start()
   }
 
+  private def deliveredMarker(checkpointDir: String) =
+    new org.apache.hadoop.fs.Path(s"$checkpointDir/_graft_delivered")
+
+  /** The marker's batchId, or None when absent or unparsable (a crash
+    * mid-publish — repaired by the next [[recordDelivered]]). Read once
+    * per micro-batch, and once more on a batch's first delivery until
+    * the marker is recorded; an in-memory copy would outlive a checkpoint
+    * wiped and recreated at the same path.
+    */
+  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
+                         p: org.apache.hadoop.fs.Path): Option[Long] = {
+    if (!fs.exists(p)) return None
+    val in = fs.open(p)
+    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+    txt.trim.toLongOption
+  }
+
+  /** Whether THIS subscription (identified by its checkpoint) DELIVERED
+    * a version in a batch before the given one. Bootstrap-vs-lag is
+    * decided by this, NOT by `batchId == 0`: with `maxFilesPerTrigger`
+    * set (or an empty first poll on a not-yet-committed table) the
+    * initial backlog legitimately spans several batches, and the oldest
+    * retained version can surface in batch 1+ while still being the
+    * subscription's honest initial load.
+    *
+    * Decided from ACTUAL delivery, recorded durably: the first `apply`
+    * writes a tiny marker under the checkpoint carrying its batchId
+    * ([[recordDelivered]]), and "delivered before batch N" ⟺ "the
+    * marker's batchId < N". Inferring delivery from the file-source
+    * metadata log (the pre-r11 rule: "a prior batch PLANNED files")
+    * wedged one corner permanently: when every version in the first
+    * batch(es) fell before the retention window, nothing was applied,
+    * yet the log carried lower batchIds — so the next batch's oldest
+    * retained version took the loud vacuumed-mid-stream exception
+    * instead of the bootstrap snapshot. The marker records the FIRST
+    * delivering batch, so a replay of that same batch reaches the same
+    * bootstrap decision as its original run (strict `<`), and a crash
+    * between apply and marker write just re-bootstraps the same version
+    * — fenced by `_commit_version` like every at-least-once delivery.
+    * An unparsable marker reads as "never delivered" for this batch (one
+    * extra bootstrap snapshot, version-fenced by the consumer — never a
+    * wedge or silent skip) and is repaired by the delivery's own
+    * [[recordDelivered]].
+    */
+  private[graft] def deliveredBefore(spark: org.apache.spark.sql.SparkSession,
+                                     checkpointDir: String, batchId: Long): Boolean = {
+    val p = deliveredMarker(checkpointDir)
+    readMarker(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      .exists(_ < batchId)
+  }
+
+  /** Record the subscription's FIRST delivery durably (see
+    * [[deliveredBefore]]); later batches keep the original batchId.
+    * Written whole, then published over any occupant
+    * ([[graft.Publish.swap]]), so no reader ever sees a partial marker,
+    * and RE-VERIFIED on each batch's first delivery until a parsable
+    * marker provably exists: a crash mid-publish, a transient FS error
+    * or a truncated file from an earlier process must all repair
+    * themselves — a permanently unparsable marker would revert every
+    * restart to "never delivered" and re-enable the bootstrap
+    * double-apply this marker exists to prevent.
+    */
+  private def recordDelivered(spark: org.apache.spark.sql.SparkSession,
+                              checkpointDir: String, batchId: Long): Unit = {
+    val p = deliveredMarker(checkpointDir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (readMarker(fs, p).isEmpty) {
+      val tmp = new org.apache.hadoop.fs.Path(checkpointDir,
+        s"._graft_delivered.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(batchId.toString.getBytes("UTF-8"))
+      finally out.close()
+      graft.Publish.swap(fs, tmp, p)
+    }
+  }
+
   /** SUBSCRIBE to a Versioned table's change feed as a Structured
     * Streaming query (CDC OUT, the streaming face of
     * [[graft.sources.Versioned.changes]]). Spark's own FileStreamSource
@@ -113,101 +190,6 @@ object Cdc {
     * manifest-cursor pattern, or any transactional sink keyed on
     * `_commit_version`.
     */
-  /** Whether THIS subscription (identified by its checkpoint) DELIVERED
-    * a version in a batch before the given one. Bootstrap-vs-lag is
-    * decided by this, NOT by `batchId == 0`: with `maxFilesPerTrigger`
-    * set (or an empty first poll on a not-yet-committed table) the
-    * initial backlog legitimately spans several batches, and the oldest
-    * retained version can surface in batch 1+ while still being the
-    * subscription's honest initial load.
-    *
-    * Decided from ACTUAL delivery, recorded durably: the first `apply`
-    * writes a tiny marker under the checkpoint carrying its batchId
-    * ([[recordDelivered]]), and "delivered before batch N" ⟺ "the
-    * marker's batchId < N". Inferring delivery from the file-source
-    * metadata log (the pre-r11 rule: "a prior batch PLANNED files")
-    * wedged one corner permanently: when every version in the first
-    * batch(es) fell before the retention window, nothing was applied,
-    * yet the log carried lower batchIds — so the next batch's oldest
-    * retained version took the loud vacuumed-mid-stream exception
-    * instead of the bootstrap snapshot. The marker records the FIRST
-    * delivering batch, so a replay of that same batch reaches the same
-    * bootstrap decision as its original run (strict `<`), and a crash
-    * between apply and marker write just re-bootstraps the same version
-    * — fenced by `_commit_version` like every at-least-once delivery.
-    */
-  private val everDelivered =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def deliveredMarker(checkpointDir: String) =
-    new org.apache.hadoop.fs.Path(s"$checkpointDir/_graft_delivered")
-
-  /** The marker's batchId, or None when absent or unparsable (a crash
-    * mid-publish — repaired by the next [[recordDelivered]]).
-    */
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path): Option[Long] = {
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    txt.trim.toLongOption
-  }
-
-  private[graft] def deliveredBefore(spark: org.apache.spark.sql.SparkSession,
-                                     checkpointDir: String, batchId: Long): Boolean = {
-    val first = Option(everDelivered.get(checkpointDir)).map(_.longValue)
-      .orElse {
-        val p = deliveredMarker(checkpointDir)
-        val parsed = readMarker(
-          p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-        // cache only a PARSED marker; an unparsable one reads as "never
-        // delivered" for this batch (one extra bootstrap snapshot,
-        // version-fenced by the consumer — never a wedge or silent skip)
-        // and is repaired by the delivery's own recordDelivered
-        parsed.foreach(b =>
-          everDelivered.putIfAbsent(checkpointDir, java.lang.Long.valueOf(b)))
-        parsed
-      }
-    first.exists(_ < batchId)
-  }
-
-  /** Record the subscription's FIRST delivery durably (see
-    * [[deliveredBefore]]); later batches keep the original batchId.
-    * Written whole-then-renamed so no reader ever sees a partial marker,
-    * and RE-VERIFIED (not skipped) on every delivery until a parsable
-    * marker provably exists: a crash mid-publish, a transient FS error
-    * after the in-memory cache was set, or a truncated file from an
-    * earlier process must all repair themselves — a permanently
-    * unparsable marker would revert every restart to "never delivered"
-    * and re-enable the bootstrap double-apply this marker exists to
-    * prevent. The in-memory cache is set only from a VERIFIED durable
-    * marker.
-    */
-  private def recordDelivered(spark: org.apache.spark.sql.SparkSession,
-                              checkpointDir: String, batchId: Long): Unit = {
-    if (everDelivered.containsKey(checkpointDir)) return
-    val p = deliveredMarker(checkpointDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    readMarker(fs, p) match {
-      case Some(b) =>
-        everDelivered.putIfAbsent(checkpointDir,
-          java.lang.Long.valueOf(b)): Unit
-      case None =>
-        val tmp = new org.apache.hadoop.fs.Path(checkpointDir,
-          s"._graft_delivered.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(batchId.toString.getBytes("UTF-8"))
-        finally out.close()
-        fs.delete(p, false) // a corrupt occupant blocks rename — clear it
-        if (fs.rename(tmp, p))
-          everDelivered.putIfAbsent(checkpointDir,
-            java.lang.Long.valueOf(batchId)): Unit
-        else fs.delete(tmp, false): Unit // lost a same-process race;
-                                         // the next delivery re-verifies
-    }
-  }
-
   def followChanges(spark: org.apache.spark.sql.SparkSession,
                     tableDir: String, checkpointDir: String, key: String,
                     valueCols: Seq[String] = Seq.empty,
@@ -274,11 +256,13 @@ object Cdc {
                       // nothing to deliver
           if (feed != null) {
             apply(feed, v)
-            // durable first-delivery record + in-process cache: later
-            // batches (and restarts) must see the subscription as live —
-            // a vacuum racing between batches must hit the loud path,
-            // not a second "bootstrap" snapshot (= double-apply)
-            recordDelivered(spark, checkpointDir, batchId)
+            // durable first-delivery record: later batches (and restarts)
+            // must see the subscription as live — a vacuum racing between
+            // batches must hit the loud path, not a second "bootstrap"
+            // snapshot (= double-apply). Once delivered before, the marker
+            // was just read back parsable, so there is nothing to record.
+            if (bootstrap && !deliveredThisBatch)
+              recordDelivered(spark, checkpointDir, batchId)
             deliveredThisBatch = true
           }
         }

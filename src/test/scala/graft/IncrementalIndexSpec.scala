@@ -408,11 +408,11 @@ class IncrementalIndexSpec extends AnyFunSuite {
     Seq((1L, 1L)).toDF("doc_id", "m").write.parquet(tmpA)
     Seq((1L, 2L)).toDF("doc_id", "m").write.parquet(tmpB)
     val root = new org.apache.hadoop.fs.Path(s"$idxRoot/graft_race_k")
-    val wonA = StandingIndex.publishIndexDir(fs,
+    val wonA = StandingIndex.publishIndexDir(spark, fs,
       new org.apache.hadoop.fs.Path(tmpA), root)
     // a reader that resolved the winner's table mid-scan
     val reader = spark.read.parquet(root.toString)
-    val wonB = StandingIndex.publishIndexDir(fs,
+    val wonB = StandingIndex.publishIndexDir(spark, fs,
       new org.apache.hadoop.fs.Path(tmpB), root)
     assert(wonA && !wonB, s"wonA=$wonA wonB=$wonB")
     // the loser's attempt neither replaced nor tore the winner's data...
@@ -438,7 +438,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // race to it forever
     val tmp = s"$idxRoot/.build_evict_k_cccc"
     Seq((1L, 7L), (2L, 7L)).toDF("doc_id", "m").write.parquet(tmp)
-    assert(StandingIndex.publishIndexDir(fs, new org.apache.hadoop.fs.Path(tmp), root),
+    assert(StandingIndex.publishIndexDir(spark, fs, new org.apache.hadoop.fs.Path(tmp), root),
       "builder conceded to a markerless partial dir")
     assert(fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS")))
     assert(spark.read.parquet(root.toString).select("m")
@@ -446,7 +446,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // ...while a COMPLETE occupant (marker present) still wins the race
     val tmp2 = s"$idxRoot/.build_evict_k_dddd"
     Seq((1L, 9L)).toDF("doc_id", "m").write.parquet(tmp2)
-    assert(!StandingIndex.publishIndexDir(fs, new org.apache.hadoop.fs.Path(tmp2), root))
+    assert(!StandingIndex.publishIndexDir(spark, fs, new org.apache.hadoop.fs.Path(tmp2), root))
     assert(spark.read.parquet(root.toString).select("m")
       .as[Long].collect().toSet == Set(7L))
   }

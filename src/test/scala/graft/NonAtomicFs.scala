@@ -1,0 +1,35 @@
+package graft
+
+import java.net.URI
+import org.apache.hadoop.fs.{FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.SparkSession
+
+/** A test-only filesystem, scheme `nonatomic`, over local disk. Its
+  * scheme is in no atomic-rename family, so [[Publish]] treats it as it
+  * treats an object store. A rename whose source is named
+  * [[NonAtomicFs.failRenameOf]] returns false, to drive a failed promote.
+  */
+class NonAtomicFs extends FilterFileSystem(new NonAtomicFs.Raw) {
+  override def getScheme: String = NonAtomicFs.Scheme
+  override def rename(src: Path, dst: Path): Boolean =
+    !NonAtomicFs.failRenameOf.contains(src.getName) && super.rename(src, dst)
+}
+
+object NonAtomicFs {
+  val Scheme = "nonatomic"
+
+  @volatile var failRenameOf: Option[String] = None
+
+  final class Raw extends RawLocalFileSystem {
+    override def getUri: URI = URI.create(s"$Scheme:///")
+  }
+
+  /** Registers the scheme with the session's Hadoop conf (`fs.<scheme>.impl`). */
+  def register(spark: SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.$Scheme.impl", classOf[NonAtomicFs].getName)
+
+  /** A fresh local temp dir, as a `nonatomic:` URI string. */
+  def tempDir(tag: String): String =
+    s"$Scheme://" + java.nio.file.Files.createTempDirectory(tag).toString
+}

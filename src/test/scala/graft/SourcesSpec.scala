@@ -304,6 +304,20 @@ class SourcesSpec extends AnyFunSuite {
     assert(!hit1 && t1("nation").count() == 5)
     val (t2, hit2) = QueryCache.extract(spark, TestSpark.sf, spec, root)
     assert(hit2 && t2("nation").count() == 5)
+    // the `_counts` marker holds each table's landed row count and was
+    // published whole: no temp is left next to it
+    import scala.jdk.CollectionConverters._
+    val entry = java.nio.file.Paths.get(root,
+      QueryCache.cacheKey(spec, TestSpark.sf, RelGraph.tpch))
+    val counts = Files.readAllLines(entry.resolve("_counts")).asScala
+      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+    assert(counts.keySet == t1.keySet)
+    counts.foreach { case (n, c) =>
+      assert(c == spark.read.parquet(entry.resolve(n).toString).count(), n)
+    }
+    val siblings = scala.util.Using.resource(Files.list(entry))(
+      _.iterator().asScala.map(_.getFileName.toString).toSet)
+    assert(siblings == t1.keySet + "_counts", s"cache entry holds $siblings")
     // same query text, different formatting → same key
     val spec2 = SpecJson.parse("{\"from\": \"nation\", \"limit\": 5, \"join_depth\": 1, \"backref_depth\": 0}")
     assert(QueryCache.cacheKey(spec, TestSpark.sf, RelGraph.tpch) ==

@@ -1738,6 +1738,38 @@ class VersionedSpec extends AnyFunSuite {
       "a zero-byte marker must not end bootstrap")
   }
 
+  test("a checkpoint wiped and recreated at the same path records its new delivery") {
+    import spark.implicits._
+    val base = tmp("wipe")
+    val src = s"$base/t"; val ckpt = s"$base/ck"
+    val marker = new org.apache.hadoop.fs.Path(s"$ckpt/_graft_delivered")
+    val f = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    def deliver(appId: String): Seq[Int] = {
+      Cdc.applyBatch(Seq((1L, "U", "v1", 1L)).toDF("k", "op", "new_v", "seq"),
+        src, "k", Seq("v"), "seq", epochId = Some(0L), appId = Some(appId),
+        nBuckets = 2)
+      val seen = scala.collection.mutable.ArrayBuffer[Int]()
+      val q = Cdc.followChanges(spark, src, ckpt, "k", Seq("v")) {
+        (_, v) => seen += v; ()
+      }
+      try q.processAllAvailable() finally q.stop()
+      seen.toSeq
+    }
+    def markerBatch(): String = {
+      val in = f.open(marker)
+      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    }
+    // subscription A delivers on checkpoint C, then C and the table go
+    assert(deliver("a") == Seq(1) && markerBatch() == "0")
+    f.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    f.delete(new org.apache.hadoop.fs.Path(src), true)
+    // subscription B on the recreated C must leave its own marker: a
+    // per-JVM memo of A's delivery must not stand in for it
+    assert(deliver("b") == Seq(1))
+    assert(f.exists(marker), "no delivery marker for the new subscription")
+    assert(markerBatch() == "0")
+  }
+
   test("a backlog split across batches still bootstraps a vacuumed table") {
     import spark.implicits._
     val src = tmp("mbboot")
