@@ -18,9 +18,10 @@ import graft.plans.{TopKRewrite, TopKStrategy}
   * wires the library into EVERY session of the application with no code
   * changes: the native similarity expressions become plain SQL functions
   * (`vec_dot`, `vec_cosine`), the mergeable Misra-Gries heavy-hitter
-  * aggregate becomes `mg_topk(tokens, k)`, and the bounded-heap
-  * top-k-per-group physical strategy plans any [[graft.plans.TopKPerGroup]]
-  * node without the per-DataFrame `experimental.extraStrategies`
+  * aggregate becomes `mg_topk(tokens, k)`, [[graft.plans.TopKRewrite]]
+  * puts the per-partition [[graft.plans.TopKPerGroup]] pre-aggregation
+  * under every eligible `row_number() <= k` window, and the strategy plans
+  * that node without the per-DataFrame `experimental.extraStrategies`
   * registration that [[graft.plans.TopK.perGroup]] falls back to.
   *
   * The per-session `VectorOps.register` / `FreqSketch.register` helpers

@@ -227,36 +227,56 @@ object Lakehouse {
     */
   def refreshMvFromFeed(s: SparkSession, srcDir: String, mvDir: String,
                         key: String, groupCol: String,
-                        sumCol: String): Int = {
-    import graft.sources.Versioned
-    val app = s"mv:$mvDir"
-    val srcLatest = Versioned.versions(s, srcDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed versions at $srcDir"))
-    val cursor = Versioned.latestEpochFor(s, mvDir, app)
-      .map(_.toInt).getOrElse(0)
-    if (cursor >= srcLatest) return cursor
-    val state =
-      if (cursor == 0)
-        Versioned.read(s, srcDir, Some(srcLatest))
-          .groupBy(groupCol)
-          .agg(count(lit(1)).as("n_rows"), sum(col(sumCol)).as("sum_val"))
-      else {
-        val feed = Versioned.changes(s, srcDir, cursor, srcLatest, key,
-          Seq(groupCol, sumCol))
+                        sumCol: String): Int =
+    subscribe(s, srcDir, mvDir, key, "mv", Seq(groupCol, sumCol))(
+      _.groupBy(groupCol)
+        .agg(count(lit(1)).as("n_rows"), sum(col(sumCol)).as("sum_val"))) {
+      (mv, feed, _) =>
         val sign = when(
           col("_change_type").isin("insert", "update_postimage"), lit(1L))
           .otherwise(lit(-1L))
         val deltas = feed.groupBy(groupCol)
           .agg(sum(sign).as("n_rows"),
             sum(sign * col(sumCol)).as("sum_val"))
-        Versioned.read(s, mvDir).unionByName(deltas)
+        (mv.unionByName(deltas)
           .groupBy(groupCol)
           .agg(sum(col("n_rows")).as("n_rows"),
             sum(col("sum_val")).as("sum_val"))
-          .filter(col("n_rows") > 0)
-      }
-    Versioned.commit(state, mvDir,
+          .filter(col("n_rows") > 0), None)
+    }
+
+  /** The one subscription protocol under every `refreshMv*FromFeed`.
+    * The MV's cursor is the source version its newest `<prefix>:<mvDir>`
+    * manifest records; at or past the source's latest version the
+    * refresh returns it unchanged. Otherwise cursor 0 bootstraps from the
+    * full source version and a later cursor folds the change feed
+    * (`feedCols` of the commits since the cursor) into the standing MV
+    * rows. The fold gets (MV, feed, source version) and may hand back a
+    * frame it persisted. The new state commits with the cursor in one
+    * manifest, then that frame is unpersisted. Returns the source version
+    * now reflected.
+    */
+  private def subscribe(s: SparkSession, srcDir: String, mvDir: String,
+                        key: String, prefix: String, feedCols: Seq[String])(
+                        bootstrap: DataFrame => DataFrame)(
+                        fold: (DataFrame, DataFrame, Int) =>
+                          (DataFrame, Option[DataFrame])): Int = {
+    import graft.sources.Versioned
+    val app = s"$prefix:$mvDir"
+    val srcLatest = Versioned.versions(s, srcDir).lastOption.getOrElse(
+      throw new IllegalStateException(s"no committed versions at $srcDir"))
+    val cursor = Versioned.latestEpochFor(s, mvDir, app)
+      .map(_.toInt).getOrElse(0)
+    if (cursor >= srcLatest) return cursor
+    val (state, cached) =
+      if (cursor == 0) (bootstrap(Versioned.read(s, srcDir, Some(srcLatest))), None)
+      else fold(Versioned.read(s, mvDir),
+        Versioned.changes(s, srcDir, cursor, srcLatest, key, feedCols), srcLatest)
+    try Versioned.commit(state, mvDir,
       epochId = Some(srcLatest.toLong), appId = Some(app))
+    // commit is the last consumer of the fold's cache — release its blocks
+    // so a long-lived session doesn't accumulate one per refresh
+    finally cached.foreach(_.unpersist(false))
     srcLatest
   }
 
@@ -339,36 +359,18 @@ object Lakehouse {
   def refreshMvMinMaxFromFeed(s: SparkSession, srcDir: String, mvDir: String,
                               key: String, groupCol: String,
                               valCol: String): Int = {
-    import graft.sources.Versioned
-    val app = s"mvx:$mvDir"
-    val srcLatest = Versioned.versions(s, srcDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed versions at $srcDir"))
-    val cursor = Versioned.latestEpochFor(s, mvDir, app)
-      .map(_.toInt).getOrElse(0)
-    if (cursor >= srcLatest) return cursor
     def fullAgg(d: DataFrame): DataFrame = d.groupBy(groupCol)
       .agg(count(lit(1)).as("n_rows"), sum(col(valCol)).as("sum_val"),
         min(col(valCol)).as("min_val"), max(col(valCol)).as("max_val"))
-    val (state, cached) =
-      if (cursor == 0)
-        (fullAgg(Versioned.read(s, srcDir, Some(srcLatest))), None)
-      else {
-        val feed = Versioned.changes(s, srcDir, cursor, srcLatest, key,
-          Seq(groupCol, valCol))
-        val (st, c) = applyMinMaxFeedTracked(
-          Versioned.read(s, mvDir), feed, groupCol, valCol) { gs =>
-            val groups = gs.collect().map(_.get(0)).toSeq
-            fullAgg(Versioned.readPruned(s, srcDir, groupCol, groups,
-              Some(srcLatest)))
+    subscribe(s, srcDir, mvDir, key, "mvx", Seq(groupCol, valCol))(fullAgg) {
+      (mv, feed, srcLatest) =>
+        val (st, c) = applyMinMaxFeedTracked(mv, feed, groupCol, valCol) { gs =>
+          val groups = gs.collect().map(_.get(0)).toSeq
+          fullAgg(graft.sources.Versioned.readPruned(s, srcDir, groupCol,
+            groups, Some(srcLatest)))
         }
         (st, Some(c))
-      }
-    try Versioned.commit(state, mvDir,
-      epochId = Some(srcLatest.toLong), appId = Some(app))
-    // commit is the last consumer of the fold cache — release its blocks
-    // so a long-lived session doesn't accumulate one per refresh
-    finally cached.foreach(_.unpersist(false))
-    srcLatest
+    }
   }
 
   /** One feed-span fold for an ARBITRARY per-group aggregate — the
@@ -419,38 +421,19 @@ object Lakehouse {
   def refreshMvGeneralFromFeed(s: SparkSession, srcDir: String,
                                mvDir: String, key: String, groupCol: String,
                                valueCols: Seq[String])(
-                               agg: DataFrame => DataFrame): Int = {
-    import graft.sources.Versioned
-    val app = s"mvg:$mvDir"
-    val srcLatest = Versioned.versions(s, srcDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed versions at $srcDir"))
-    val cursor = Versioned.latestEpochFor(s, mvDir, app)
-      .map(_.toInt).getOrElse(0)
-    if (cursor >= srcLatest) return cursor
-    val (state, cached) =
-      if (cursor == 0)
-        (agg(Versioned.read(s, srcDir, Some(srcLatest))), None)
-      else {
-        val feed = Versioned.changes(s, srcDir, cursor, srcLatest, key,
-          (groupCol +: valueCols).distinct)
-        val (st, c) = applyFeedGroupRescanTracked(
-          Versioned.read(s, mvDir), feed, groupCol) { gs =>
-            val groups = gs.collect().map(_.get(0)).toSeq
-            if (groups.isEmpty) gs.sparkSession.createDataFrame(
-              gs.sparkSession.sparkContext
-                .emptyRDD[org.apache.spark.sql.Row],
-              Versioned.read(s, mvDir).schema)
-            else agg(Versioned.readPruned(s, srcDir, groupCol, groups,
-              Some(srcLatest)))
+                               agg: DataFrame => DataFrame): Int =
+    subscribe(s, srcDir, mvDir, key, "mvg", (groupCol +: valueCols).distinct)(agg) {
+      (mv, feed, srcLatest) =>
+        val (st, c) = applyFeedGroupRescanTracked(mv, feed, groupCol) { gs =>
+          val groups = gs.collect().map(_.get(0)).toSeq
+          if (groups.isEmpty) gs.sparkSession.createDataFrame(
+            gs.sparkSession.sparkContext
+              .emptyRDD[org.apache.spark.sql.Row], mv.schema)
+          else agg(graft.sources.Versioned.readPruned(s, srcDir, groupCol,
+            groups, Some(srcLatest)))
         }
         (st, Some(c))
-      }
-    try Versioned.commit(state, mvDir,
-      epochId = Some(srcLatest.toLong), appId = Some(app))
-    // commit is the last consumer of the touched-set cache — release it
-    finally cached.foreach(_.unpersist(false))
-    srcLatest
-  }
+    }
 
   /** Exact per-group DISTINCT COUNT maintained from the feed with NO
     * rescans at all — the classic incremental-view trick the general
@@ -473,38 +456,22 @@ object Lakehouse {
     */
   def refreshMvDistinctFromFeed(s: SparkSession, srcDir: String,
                                 mvDir: String, key: String,
-                                groupCol: String, valCol: String): Int = {
-    import graft.sources.Versioned
-    val app = s"mvd:$mvDir"
-    val srcLatest = Versioned.versions(s, srcDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed versions at $srcDir"))
-    val cursor = Versioned.latestEpochFor(s, mvDir, app)
-      .map(_.toInt).getOrElse(0)
-    if (cursor >= srcLatest) return cursor
-    val state =
-      if (cursor == 0)
-        Versioned.read(s, srcDir, Some(srcLatest))
-          .filter(col(valCol).isNotNull)
-          .groupBy(col(groupCol), col(valCol))
-          .agg(count(lit(1)).as("n_copies"))
-      else {
-        val feed = Versioned.changes(s, srcDir, cursor, srcLatest, key,
-          Seq(groupCol, valCol))
-        val sign = when(
-          col("_change_type").isin("insert", "update_postimage"), lit(1L))
-          .otherwise(lit(-1L))
-        val deltas = feed.filter(col(valCol).isNotNull)
-          .groupBy(col(groupCol), col(valCol))
-          .agg(sum(sign).as("n_copies"))
-        Versioned.read(s, mvDir).unionByName(deltas)
-          .groupBy(col(groupCol), col(valCol))
-          .agg(sum(col("n_copies")).as("n_copies"))
-          .filter(col("n_copies") > 0)
-      }
-    Versioned.commit(state, mvDir,
-      epochId = Some(srcLatest.toLong), appId = Some(app))
-    srcLatest
-  }
+                                groupCol: String, valCol: String): Int =
+    subscribe(s, srcDir, mvDir, key, "mvd", Seq(groupCol, valCol))(
+      _.filter(col(valCol).isNotNull)
+        .groupBy(col(groupCol), col(valCol))
+        .agg(count(lit(1)).as("n_copies"))) { (mv, feed, _) =>
+      val sign = when(
+        col("_change_type").isin("insert", "update_postimage"), lit(1L))
+        .otherwise(lit(-1L))
+      val deltas = feed.filter(col(valCol).isNotNull)
+        .groupBy(col(groupCol), col(valCol))
+        .agg(sum(sign).as("n_copies"))
+      (mv.unionByName(deltas)
+        .groupBy(col(groupCol), col(valCol))
+        .agg(sum(col("n_copies")).as("n_copies"))
+        .filter(col("n_copies") > 0), None)
+    }
 
   /** The distinct-count view over a [[refreshMvDistinctFromFeed]] MV:
     * one count over live (group, value) pairs.

@@ -342,8 +342,9 @@ object Relational {
       }),
 
     // 24b. the same top-k through the custom TopKPerGroup operator
-    // (partial per-partition heaps → one exchange → final merge; see
-    // graft.plans.TopKPerGroup) — oracle-checked against the window answer
+    // (per-partition heaps under the native row_number window, which
+    // does the exchange and final merge; see graft.plans.TopKPerGroup) —
+    // oracle-checked against the window answer
     Q("q_topk_custom",
       """SELECT o_custkey, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,

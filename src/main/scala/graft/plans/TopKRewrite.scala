@@ -4,37 +4,35 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Optimizer rule (injected by [[graft.GraftExtensions]]): rewrite the
+/** Optimizer rule (injected by [[graft.GraftExtensions]]): under the
   * universal top-k-per-group idiom
   *
   * {{{
   *   df.withColumn("rn", row_number().over(Window.partitionBy(g).orderBy(o)))
   *     .filter($"rn" <= k)
-  *     .drop("rn")
   * }}}
   *
-  * into the bounded-heap [[TopKPerGroup]] operator. The window formulation
-  * shuffles and FULLY SORTS every group before discarding all but k rows
-  * (Spark's own InferWindowGroupLimit prunes rows early but its physical
-  * operator still requires sorted input, so the map-side sort of the whole
-  * input survives); the rewrite streams each partition through k-sized
-  * heaps instead — O(n log k) with shuffle traffic bounded by
-  * partitions × groups × k. At 100 TB that is the difference between
-  * sorting the corpus and scanning it.
+  * insert the per-partition [[TopKPerGroup]] pre-aggregation below the
+  * window (and below Spark's `WindowGroupLimit`, if one is there):
   *
-  * Conservative by construction — fires only when:
+  * {{{
+  *   Filter(rn <= k, Window(row_number, [WindowGroupLimit,] TopKPerGroup(g, o, k, child)))
+  * }}}
+  *
+  * The window still computes `rn` and groups by normalized keys; it just
+  * shuffles and sorts k rows per group per partition instead of the whole
+  * input. Fires only when:
   *  - the Window computes exactly one expression: `row_number()` with the
   *    standard (UNBOUNDED PRECEDING, CURRENT ROW) row frame over a
   *    non-empty partitionSpec and orderSpec (rank/dense_rank keep ties and
-  *    can emit more than k rows, so they are NOT eligible);
+  *    can need more than k rows per group, so they are NOT eligible);
   *  - the filter condition constrains ONLY the row-number attribute to a
   *    positive literal bound (`rn <= k`, `rn < k`, `rn = 1` and mirror
   *    forms);
-  *  - the projection above discards the row-number column (its value is
-  *    unreconstructible from a heap) and references only the window
-  *    child's columns;
   *  - k is at most [[TopKRewrite.MaxK]] — beyond that a per-group heap is
-  *    no better than the sort it replaces.
+  *    no better than the sort it feeds;
+  *  - no partial node is there yet: the optimizer batch re-applies its
+  *    rules, and [[TopK.perGroup]] builds this shape itself.
   *
   * Row_number's tie choice among order-equal rows is nondeterministic in
   * both formulations, so the rewrite preserves semantics, not accidental
@@ -63,41 +61,25 @@ object TopKRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case p @ Project(projList, Filter(cond, w: Window))
-        if w.partitionSpec.nonEmpty && w.orderSpec.nonEmpty =>
-      val rewritten = for {
-        a <- rowNumberAlias(w)
-        rn = a.toAttribute
-        k <- limitOf(cond, rn)
-        if k > 0 && k <= MaxK
-        // floating-point partition keys decline the rewrite: Spark's
-        // NormalizeFloatingNumbers pass canonicalizes -0.0/0.0 and NaN in
-        // Window partition keys, but it runs AFTER this optimizer batch
-        // and never matches the custom node — our byte-level grouping
-        // would split one logical group into two. Integer/string/date
-        // keys (the overwhelmingly common case) keep the fast path.
-        if w.partitionSpec.forall(e => !hasFloat(e.dataType))
-        // if Spark's InferWindowGroupLimit already inserted its row filter,
-        // replace it too — its physical operator would force the sort back
-        source = w.child match {
-          case g: WindowGroupLimit => g.child
-          case c => c
-        }
-        if projList.forall(ne => !ne.references.contains(rn)) &&
-          projList.forall(_.references.subsetOf(source.outputSet))
-      } yield Project(projList, TopKPerGroup(w.partitionSpec, w.orderSpec, k, source))
-      rewritten.getOrElse(p)
+  private def hasPartial(p: LogicalPlan): Boolean = p match {
+    case _: TopKPerGroup => true
+    case g: WindowGroupLimit => hasPartial(g.child)
+    case Project(_, c) => hasPartial(c)
+    case _ => false
   }
 
-  private def hasFloat(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case FloatType | DoubleType => true
-      case ArrayType(et, _) => hasFloat(et)
-      case MapType(kt, vt, _) => hasFloat(kt) || hasFloat(vt)
-      case StructType(fs) => fs.exists(f => hasFloat(f.dataType))
-      case _ => false
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+    case f @ Filter(cond, w: Window)
+        if w.partitionSpec.nonEmpty && w.orderSpec.nonEmpty && !hasPartial(w.child) =>
+      rowNumberAlias(w).flatMap(a => limitOf(cond, a.toAttribute))
+        .filter(k => k > 0 && k <= MaxK)
+        .fold(f: LogicalPlan) { k =>
+          def partial(c: LogicalPlan) = TopKPerGroup(w.partitionSpec, w.orderSpec, k, c)
+          val below = w.child match {
+            case g: WindowGroupLimit => g.withNewChildren(Seq(partial(g.child)))
+            case c => partial(c)
+          }
+          f.copy(child = w.copy(child = below))
+        }
   }
 }

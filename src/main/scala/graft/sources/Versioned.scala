@@ -153,36 +153,16 @@ object Versioned {
     readManifest(spark, dir, asOf.getOrElse(vs.last))
   }
 
-  /** (appId, epochId) recorded by the latest committed version (None for
-    * a fresh table or a commit made without one) — the streaming-CDC
-    * replay fence, Delta's txnAppId/txnVersion pattern: foreachBatch
-    * re-delivers the LAST batch after a crash and epoch ids are monotone
-    * WITHIN one stream identity, so one manifest read answers "did this
-    * stream already apply this (or a later) batch?". The appId keeps a
-    * DIFFERENT stream (new checkpoint) from being fenced by a colliding
-    * batch number — bare batchId equality would silently drop its data.
-    */
-  /** SUPERSEDED by [[latestEpochFor]] — kept package-private for its
-    * spec coverage only: fencing on the LAST writer's manifest is
-    * silently disarmed by any interleaved commit (see latestEpochFor's
-    * doc), so no production path may call this.
-    */
-  private[graft] def latestTxn(spark: SparkSession, dir: String): Option[(String, Long)] =
-    versions(spark, dir).lastOption.flatMap { v =>
-      val m = readManifest(spark, dir, v)
-      for (a <- m.appId; e <- m.epochId) yield (a, e)
-    }
-
   /** Latest epoch committed BY `appId`, scanning manifests newest-first —
-    * Delta's per-appId txn high-water mark. [[latestTxn]] reads only the
-    * top manifest, which silently disarms the replay fence whenever ANY
-    * other commit (a second stream, a batch job, a CLI snapshot)
-    * interleaves between a stream's commit and its crash-replay; this
-    * scan stops at the newest manifest carrying the stream's own
-    * identity, so an interleaved writer can never un-fence a replay. The
-    * common case still reads one manifest (the stream is the table's
-    * most frequent writer); the worst case is bounded by the retained
-    * version count, and manifests are O(100 bytes).
+    * Delta's per-appId txn high-water mark. Reading only the top manifest
+    * would silently disarm the replay fence whenever ANY other commit (a
+    * second stream, a batch job, a CLI snapshot) interleaves between a
+    * stream's commit and its crash-replay; this scan stops at the newest
+    * manifest carrying the stream's own identity, so an interleaved
+    * writer can never un-fence a replay. The common case reads one
+    * manifest (the stream is the table's most frequent writer); the
+    * worst case is bounded by the retained version count, and manifests
+    * are O(100 bytes).
     */
   def latestEpochFor(spark: SparkSession, dir: String,
                      appId: String): Option[Long] =

@@ -57,9 +57,7 @@ object Cdc {
     * `appId` is the stream's transactional identity (Delta's txnAppId):
     * it defaults to the checkpoint path, which is stable across restarts
     * of the same stream and distinct per stream — a DIFFERENT stream
-    * whose batch numbers happen to collide is never fenced. Deleting and
-    * reusing a checkpoint directory resets batch ids under the SAME
-    * identity; like Delta, that requires a fresh appId (or table).
+    * whose batch numbers happen to collide is never fenced.
     */
   def applyChanges(changes: DataFrame, tableDir: String, checkpointDir: String,
                    key: String, valueCols: Seq[String], seqCol: String,
@@ -292,23 +290,6 @@ object Cdc {
     * writers between this stream's publish and its replay never un-fence
     * (the high-water is per appId, not last-writer).
     */
-  /** In-process per-(table, appId) epoch high-water: epochs are monotone
-    * within a stream identity, so after ONE manifest scan (or one
-    * commit) the fence is a map lookup — without it a stream sharing a
-    * table with a chatty second writer re-reads the whole interleaved
-    * manifest history every micro-batch. `Long.MinValue` caches a
-    * scanned "never committed" so the pre-first-commit batches don't
-    * rescan either. Process-local by design: an appId names exactly one
-    * stream, and reusing an appId against a wiped table already requires
-    * a fresh identity (documented above, the Delta rule).
-    */
-  private val epochHighWater =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
-  private def bump(k: (String, String), e: Long): Unit =
-    epochHighWater.merge(k, java.lang.Long.valueOf(e),
-      (a, b) => java.lang.Long.valueOf(math.max(a, b)))
-
   def applyBatch(batch: DataFrame, tableDir: String, key: String,
                  valueCols: Seq[String], seqCol: String,
                  epochId: Option[Long] = None,
@@ -338,27 +319,13 @@ object Cdc {
     val bcJoined = keys.mkString(",")
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    // one manifest listing per batch (needed below for the empty-base
-    // branch anyway). An EMPTY list with a populated high-water cache
-    // means the table dir was wiped and recreated at the same path in
-    // this JVM (tests, notebooks, long-lived drivers): the cached
-    // high-water belongs to the dead table and would silently skip the
-    // recreated stream's first epochs as replays — drop it and rescan.
-    val tableVersions = Versioned.versions(spark, tableDir)
-    if (tableVersions.isEmpty)
-      appId.foreach(a => epochHighWater.remove((tableDir, a)))
+    // the fence reads this stream's newest manifest on every batch: a
+    // table wiped and recreated at the same path has only its own
+    // manifests to answer from
     val replayed = (for {
       e <- epochId; a <- appId
-    } yield {
-      val k = (tableDir, a)
-      val hw = Option(epochHighWater.get(k)).map(_.longValue).getOrElse {
-        val scanned = Versioned.latestEpochFor(spark, tableDir, a)
-          .getOrElse(Long.MinValue)
-        bump(k, scanned)
-        scanned
-      }
-      e <= hw
-    }).getOrElse(false)
+      hw <- Versioned.latestEpochFor(spark, tableDir, a)
+    } yield e <= hw).getOrElse(false)
     if (replayed) return
     // seq ties break on a content hash, NOT shuffle arrival order: a
     // replayed batch must pick the SAME winner or the idempotent-replay
@@ -440,7 +407,6 @@ object Cdc {
         if (exact.isDefined && compacted.filter(col("op") =!= "D").isEmpty) {
           Versioned.deleteKeys(spark, tableDir,
             cappedKeys.toSeq.map(keyOf), epochId, appId)
-          for (e <- epochId; a <- appId) bump((tableDir, a), e)
           return
         }
         // a bucket can be backed by SEVERAL entries (the migrated base,
@@ -550,6 +516,5 @@ object Cdc {
           bucketCol = Some(bcJoined), nBuckets = Some(nBuckets),
           baseVersion = Some(parentM.map(_.version).getOrElse(0)))
     }
-    for (e <- epochId; a <- appId) bump((tableDir, a), e)
   }
 }

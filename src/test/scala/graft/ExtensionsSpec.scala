@@ -164,7 +164,11 @@ class ExtensionsSpec extends AnyFunSuite {
           GraftSqlBridge.expression(col("v")),
           org.apache.spark.sql.catalyst.expressions.Descending)),
         2, GraftSqlBridge.logicalPlan(df))
+      import org.apache.spark.sql.expressions.{Window => W}
       val out = GraftSqlBridge.ofRows(s, plan)
+        .withColumn("rn", row_number().over(W.partitionBy("g").orderBy(col("v").desc)))
+        .filter(col("rn") <= 2)
+        .drop("rn")
       assert(s.experimental.extraStrategies.isEmpty,
         "the extensions path must not rely on experimental strategies")
       val rows = out.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -172,8 +176,8 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(rows.toSeq == expect)
       // AQE wraps the tree; inspect the finalized plan's rendering
       val planStr = out.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-      assert("TopKPerGroup \\[".r.findAllIn(planStr).size == 2,
-        s"expected partial+final TopKPerGroup in:\n$planStr")
+      assert("TopKPerGroup \\[".r.findAllIn(planStr).size == 1,
+        s"expected one partial TopKPerGroup in:\n$planStr")
     }
   }
 
@@ -188,9 +192,8 @@ class ExtensionsSpec extends AnyFunSuite {
         .drop("rn")
       idiom.collect() // finalize AQE
       val planStr = idiom.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-      assert("TopKPerGroup \\[".r.findAllIn(planStr).size == 2,
-        s"window idiom should plan as partial+final TopKPerGroup:\n$planStr")
-      assert(!planStr.contains("Window "), s"Window operator should be gone:\n$planStr")
+      assert("TopKPerGroup \\[".r.findAllIn(planStr).size == 1,
+        s"window idiom should plan one partial TopKPerGroup under the window:\n$planStr")
       val got = idiom.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
       val expect = (0L until 1000L).groupBy(_ % 7).toSeq.flatMap { case (g, ids) =>
         ids.sorted(Ordering[Long].reverse).take(3).map(v => (g, v, v * 2))
@@ -199,36 +202,40 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("rewrite declines when the rank column is kept or the function is rank()") {
+  test("rewrite keeps the row-number column and float group keys exact, and declines rank()") {
     withExtendedSession { s =>
       import org.apache.spark.sql.expressions.{Window => W}
+      def finalPlan(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
       val df = s.range(0, 100).selectExpr("id % 5 AS g", "id AS v")
+      // the window above the partial pass still computes rn, so it may stay
       val keepRn = df
         .withColumn("rn", row_number().over(W.partitionBy("g").orderBy("v")))
         .filter(col("rn") <= 2)
-      keepRn.collect()
-      val p1 = keepRn.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-      assert(!p1.contains("TopKPerGroup"), s"rn kept in output — must stay a window:\n$p1")
+      val kept = keepRn.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(kept == (0L until 5L).flatMap(g => Seq((g, g, 1), (g, g + 5, 2))).toSet)
+      val p1 = finalPlan(keepRn)
+      assert(p1.contains("TopKPerGroup"), s"rn kept in output — still rewritten:\n$p1")
 
       val ranked = df
         .withColumn("rk", rank().over(W.partitionBy("g").orderBy("v")))
         .filter(col("rk") <= 2).drop("rk")
       ranked.collect()
-      val p2 = ranked.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+      val p2 = finalPlan(ranked)
       assert(!p2.contains("TopKPerGroup"), s"rank() keeps ties — must stay a window:\n$p2")
 
-      // floating-point group keys: -0.0/0.0 and NaN only canonicalize in
-      // the LATER NormalizeFloatingNumbers batch, which never matches the
-      // custom node — the rewrite must decline, and results must group
-      // -0.0 with 0.0 like the window does
+      // floating-point group keys: the partial pass may split -0.0 and 0.0
+      // into two heaps, but the window above normalizes its keys, so they
+      // stay ONE group
       val fdf = s.range(0, 8).selectExpr(
         "CAST(IF(id % 2 = 0, 0.0, -0.0) AS DOUBLE) AS g", "id AS v")
       val fk = fdf
         .withColumn("rn", row_number().over(W.partitionBy("g").orderBy("v")))
         .filter(col("rn") <= 3).drop("rn")
       assert(fk.count() == 3, "-0.0 and 0.0 must be ONE group of top-3")
-      val p3 = fk.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-      assert(!p3.contains("TopKPerGroup"), s"float keys must stay a window:\n$p3")
+      assert(fk.collect().map(_.getLong(1)).sorted.toSeq == Seq(0L, 1L, 2L))
+      val p3 = finalPlan(fk)
+      assert(p3.contains("TopKPerGroup"), s"float keys are rewritten too:\n$p3")
     }
   }
 }

@@ -190,7 +190,7 @@ class VersionedSpec extends AnyFunSuite {
       "epoch-less commit by the same identity disarmed the replay fence")
   }
 
-  test("a wiped-and-recreated table drops the stale in-process epoch cache") {
+  test("a wiped-and-recreated table fences only on its own manifests") {
     import spark.implicits._
     val dir = tmp("wipe")
     def batch(rows: (Long, String, String, Long)*) =
@@ -201,7 +201,8 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.versions(spark, dir) == Seq(1))
     // wipe the table dir and recreate at the same path (tests, notebooks,
     // long-lived drivers): the restarted stream's first epochs are NOT
-    // replays — a stale cached high-water would silently skip them
+    // replays — a high-water remembered from the dead table would
+    // silently skip them
     val f = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -211,6 +212,28 @@ class VersionedSpec extends AnyFunSuite {
       "first epoch of the recreated table was skipped as a replay")
     assert(Versioned.read(spark, dir).select("k", "v")
       .as[(Long, String)].collect().toSet == Set((7L, "fresh")))
+  }
+
+  test("a table recreated by a plain commit does not fence a stream's earlier epochs") {
+    import spark.implicits._
+    val dir = tmp("recreate")
+    def batch(rows: (Long, String, String, Long)*) =
+      rows.toDF("k", "op", "new_v", "seq")
+    val app = Some("cdc:/ckpt/recreate")
+    Cdc.applyBatch(batch((1L, "U", "a", 1L)), dir, "k", Seq("v"), "seq",
+      epochId = Some(3L), appId = app)
+    val f = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    f.delete(new org.apache.hadoop.fs.Path(dir), true)
+    // the recreated table has versions again before the stream's next
+    // batch, and none of them carries the stream's identity
+    assert(Versioned.commit(Seq((5L, "base")).toDF("k", "v"), dir) == 1)
+    Cdc.applyBatch(batch((7L, "U", "fresh", 1L)), dir, "k", Seq("v"), "seq",
+      epochId = Some(0L), appId = app)
+    assert(Versioned.versions(spark, dir) == Seq(1, 2),
+      "epoch 0 on the recreated table was skipped as a replay")
+    assert(Versioned.read(spark, dir).select("k", "v")
+      .as[(Long, String)].collect().toSet == Set((5L, "base"), (7L, "fresh")))
   }
 
   test("uncommitted data is invisible until the manifest publishes") {
@@ -241,7 +264,8 @@ class VersionedSpec extends AnyFunSuite {
       epochId = Some(0L), appId = app)
     assert(Versioned.versions(spark, dir) == Seq(1),
       "replayed epoch must not commit a second version")
-    assert(Versioned.latestTxn(spark, dir).contains(("cdc:/ckpt/a", 0L)))
+    val top = Versioned.manifest(spark, dir)
+    assert(top.appId.contains("cdc:/ckpt/a") && top.epochId.contains(0L))
     // the next epoch of the SAME stream commits normally
     Cdc.applyBatch(batch((2L, "U", "b", 2L)), dir, "k", Seq("v"), "seq",
       epochId = Some(1L), appId = app)
@@ -260,7 +284,8 @@ class VersionedSpec extends AnyFunSuite {
     // epoch-less commits (batch jobs) stay un-fenced and never match
     Cdc.applyBatch(batch((3L, "U", "c", 3L)), dir, "k", Seq("v"), "seq")
     assert(Versioned.versions(spark, dir) == Seq(1, 2, 3, 4))
-    assert(Versioned.latestTxn(spark, dir).isEmpty)
+    val batchTop = Versioned.manifest(spark, dir)
+    assert(batchTop.appId.isEmpty && batchTop.epochId.isEmpty)
     // INTERLEAVED-writer replay: the epoch-less batch commit above is now
     // the latest manifest, so a last-writer fence would be disarmed — but
     // stream a's high-water is per appId, so replaying its epoch 1 must

@@ -6,12 +6,16 @@ working tree, with alternating run order.
         [--trace 0] [--base HEAD]
 
 The base revision is exported with `git archive` into
-`.bench_build/ab/<sha>/` (kept, so its benchmark build is reused by the
-next call); the working tree runs as it is, uncommitted edits included.
-For each seed both trees run `perfbench/run.py` once, one run at a time;
-the side that goes first alternates from seed to seed, base first. Each
-tree runs its own `perfbench/` and builds into its own `.bench_build/`;
-neither is modified. Works offline.
+`.bench_build/ab/<sha>/`. The working tree's files (`git ls-files -co
+--exclude-standard`, uncommitted edits included) are copied into
+`.bench_build/ab/<key>/`, where the key is the 40-hex SHA-1 of their
+names and contents. Both sides thus run under paths of equal length, so
+metrics that count bytes of path-bearing files (Versioned manifests hold
+absolute paths) compare. Both copies are kept, so their benchmark builds
+are reused by the next call with the same content. For each seed both
+trees run `perfbench/run.py` once, one run at a time; the side that goes
+first alternates from seed to seed, base first. Each copy runs its own
+`perfbench/` and builds into its own `.bench_build/`. Works offline.
 
 Prints every run, then per metric: each side's median, the base's
 interquartile range, and the pairs the working tree won (direction from
@@ -19,10 +23,12 @@ BENCHMARK.json). Exits 1 if any run failed, or if any seed's extract digest
 or `correct` verdict differs between the two sides.
 """
 import argparse
+import hashlib
 import io
 import json
 import os
 import re
+import shutil
 import statistics
 import subprocess
 import sys
@@ -51,6 +57,28 @@ def export(rev):
         tarfile.open(fileobj=io.BytesIO(tar)).extractall(d + ".part")
         os.rename(d + ".part", d)
     return sha[:12], d
+
+
+def export_work():
+    out = subprocess.run(["git", "ls-files", "-co", "--exclude-standard", "-z"], cwd=ROOT,
+                         check=True, stdout=subprocess.PIPE).stdout.decode()
+    files = sorted(f for f in set(out.split("\0")) if f and os.path.isfile(os.path.join(ROOT, f)))
+    h = hashlib.sha1()
+    for f in files:
+        with open(os.path.join(ROOT, f), "rb") as fh:
+            data = fh.read()
+        h.update(f"{f}\0{len(data)}\0".encode())
+        h.update(data)
+    key = h.hexdigest()
+    d = os.path.join(ROOT, ".bench_build", "ab", key)
+    if not os.path.isdir(d):
+        shutil.rmtree(d + ".part", ignore_errors=True)
+        for f in files:
+            dst = os.path.join(d + ".part", f)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.copy2(os.path.join(ROOT, f), dst)
+        os.rename(d + ".part", d)
+    return key[:12], d
 
 
 def run(tree, a, seed):
@@ -94,7 +122,8 @@ def main():
     ap.add_argument("--base", default="HEAD", help="git revision to compare against")
     a = ap.parse_args()
     sha, base_dir = export(a.base)
-    sides = {"base": base_dir, "work": ROOT}
+    key, work_dir = export_work()
+    sides = {"base": base_dir, "work": work_dir}
     runs = {"base": {}, "work": {}}
     problems = []
     for i, seed in enumerate(seeds(a.seeds)):
@@ -119,7 +148,7 @@ def main():
     better = directions()
     pairs = [s for s in runs["base"] if runs["base"][s]["ok"] and runs["work"][s]["ok"]]
     names = sorted({k for s in pairs for k in runs["work"][s]["result"]["metrics"]})
-    print(f"\n{a.workload}, base {a.base} ({sha}) vs working tree, {len(pairs)} pairs:")
+    print(f"\n{a.workload}, base {a.base} ({sha}) vs working tree ({key}), {len(pairs)} pairs:")
     print(f"{'metric':<34} {'base p50':>12} {'work p50':>12} {'base IQR':>12} {'work wins':>9}")
     for k in names:
         bv = [runs["base"][s]["result"]["metrics"][k]["value"] for s in pairs
