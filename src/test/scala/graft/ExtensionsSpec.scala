@@ -202,7 +202,32 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("rewrite keeps the row-number column and float group keys exact, and declines rank()") {
+  test("rewrite declines when the rank column is kept or the function is rank()") {
+    withExtendedSession { s =>
+      import org.apache.spark.sql.expressions.{Window => W}
+      def finalPlan(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+      // ties at every rank: rank()/dense_rank() may return more than k rows
+      val df = s.range(0, 100).selectExpr("id % 5 AS g", "id % 3 AS v")
+      val w = W.partitionBy("g").orderBy("v")
+      val rankedKept = df.withColumn("rk", rank().over(w)).filter(col("rk") <= 1)
+      assert(rankedKept.count() == 34, "rank() keeps every tie at rank 1")
+      val p1 = finalPlan(rankedKept)
+      assert(!p1.contains("TopKPerGroup"), s"rank column kept — must stay a window:\n$p1")
+
+      val ranked = df.withColumn("rk", rank().over(w)).filter(col("rk") <= 2).drop("rk")
+      ranked.collect()
+      val p2 = finalPlan(ranked)
+      assert(!p2.contains("TopKPerGroup"), s"rank() keeps ties — must stay a window:\n$p2")
+
+      val dense = df.withColumn("dr", dense_rank().over(w)).filter(col("dr") <= 1).drop("dr")
+      dense.collect()
+      val p3 = finalPlan(dense)
+      assert(!p3.contains("TopKPerGroup"), s"dense_rank() keeps ties — must stay a window:\n$p3")
+    }
+  }
+
+  test("rewrite keeps the row-number column and float group keys exact") {
     withExtendedSession { s =>
       import org.apache.spark.sql.expressions.{Window => W}
       def finalPlan(df: org.apache.spark.sql.DataFrame) =
@@ -216,13 +241,6 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(kept == (0L until 5L).flatMap(g => Seq((g, g, 1), (g, g + 5, 2))).toSet)
       val p1 = finalPlan(keepRn)
       assert(p1.contains("TopKPerGroup"), s"rn kept in output — still rewritten:\n$p1")
-
-      val ranked = df
-        .withColumn("rk", rank().over(W.partitionBy("g").orderBy("v")))
-        .filter(col("rk") <= 2).drop("rk")
-      ranked.collect()
-      val p2 = finalPlan(ranked)
-      assert(!p2.contains("TopKPerGroup"), s"rank() keeps ties — must stay a window:\n$p2")
 
       // floating-point group keys: the partial pass may split -0.0 and 0.0
       // into two heaps, but the window above normalizes its keys, so they
