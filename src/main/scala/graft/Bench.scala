@@ -140,15 +140,19 @@ object Bench {
     spark.stop()
   }
 
-  /** THE measurement session — Bench's confs, on `SPARK_GRAFT_CPUS`
-    * local cores (default 32). [[Profile]] builds its session here, so
-    * what it times and plans is what the bench runs.
+  /** THE measurement session — Bench's confs, on `cpus` local cores
+    * (`SPARK_GRAFT_CPUS`, default 32). [[Profile]] builds its session
+    * here, so what it times and plans is what the bench runs; the CLI and
+    * [[Verify]] build theirs here too, with their own core default and
+    * shuffle width. Parquet nanos-as-long is set at build time, so
+    * concurrent queries never observe a session conf flipped mid-flight
+    * by [[Tables.load]].
     */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+              shufflePartitions: String = "32"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -342,17 +342,17 @@ object Cli {
           plan.renderTree.linesIterator.foreach(l => log(s"  $l"))
           plan.tables.sorted.foreach { n =>
             val p = Tables.path(cfg.sourceDir, n)
-            val cnt =
-              if (Files.exists(Paths.get(p))) Tables.footerRowCount(spark, p)
-              else -1L
-            log(f"  $n%-12s <= $cnt%d source rows")
+            // a missing source fails here as `load` would fail on it — a
+            // count of -1 would read as a plan that loads nothing
+            if (!Files.exists(Paths.get(p)))
+              throw new IllegalArgumentException(s"estimate: source table $n missing at $p")
+            log(f"  $n%-12s <= ${Tables.footerRowCount(spark, p)}%d source rows")
           }
         }
       case "dumpsql" =>
         val order = fkOrder(extracted)
         order.foreach { n =>
-          val pk = graph.tables.get(n).map(_.pk)
-            .getOrElse(RelGraph.synthesizePk(extracted(n).columns.toSeq))
+          val pk = graph.pkOf(n, extracted(n).columns.toSeq)
           // FK clauses only toward tables that are in the dump — a
           // REFERENCES to an absent table would make the file unloadable
           val fks = graph.tables.get(n).map(_.fks).getOrElse(Nil)
@@ -461,9 +461,7 @@ object Cli {
           fkOrder(tables).foreach { n =>
             val df = tables(n)
             val meta = graph.tables.get(n)
-            val pk = meta.map(_.pk)
-              .getOrElse(RelGraph.synthesizePk(df.columns.toSeq))
-              .filter(df.columns.contains)
+            val pk = graph.pkOf(n, df.columns.toSeq).filter(df.columns.contains)
             val rules =
               pk.map(Inspect.DqNotNull(_)) ++
                 (if (pk.nonEmpty) Seq(Inspect.DqUnique(pk)) else Nil) ++
@@ -631,13 +629,8 @@ object Cli {
       println(usage)
       return
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), shufflePartitions = "8")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, parseArgs(args.toSeq))
     catch {

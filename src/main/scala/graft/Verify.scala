@@ -14,16 +14,7 @@ object Verify {
     // optional extra args: run only these query names (local iteration)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // set at build time so concurrent query futures never observe a
-      // session conf being flipped mid-flight by Tables.load (its lazy
-      // re-set of the same value stays as a guard for user sessions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus, shufflePartitions = cpus)
     spark.sparkContext.setLogLevel("WARN")
     val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) })

@@ -20,6 +20,13 @@ final case class RelGraph(tables: Map[String, TableMeta]) {
   def meta(name: String): TableMeta =
     tables.getOrElse(name, sys.error(s"unknown table: $name"))
 
+  /** The columns that key `table`: its declared PK, or else the key
+    * [[RelGraph.synthesizePk]] picks from `columns` (read only for a table
+    * the graph does not declare). Every PK-dedupe and checksum uses it.
+    */
+  def pkOf(table: String, columns: => Seq[String]): Seq[String] =
+    tables.get(table).map(_.pk).getOrElse(RelGraph.synthesizePk(columns))
+
   /** Many-to-one ("join") edges out of `table`: its own FKs. */
   def joinEdges(table: String): Seq[FK] = meta(table).fks
 

@@ -40,9 +40,11 @@ import org.apache.spark.sql.expressions.Window
   *
   * Scale posture: key sets are bounded by construction (root `limit` ×
   * `backrefLimit` fan-out), so every closure step is a semi-join against a
-  * small key set — AQE turns those into broadcast joins at runtime. Each
-  * level's selections are persisted to stop lineage growth; nothing is ever
-  * collected to the driver.
+  * small key set — AQE turns those into broadcast joins at runtime. The
+  * closure runs in steps — one per BFS level, one per re-closure rank batch
+  * — and each step checkpoints every table it touched in one concurrent
+  * wave, which stops lineage growth; nothing is ever collected to the
+  * driver.
   */
 object Subset {
 
@@ -204,8 +206,7 @@ object Subset {
           .select(rootCols.map(c => col(s"${spec.from}.$c")).toIndexedSeq: _*)
     }
 
-    val pk = graph.tables.get(spec.from).map(_.pk)
-      .getOrElse(RelGraph.synthesizePk(rootCols.toSeq))
+    val pk = graph.pkOf(spec.from, rootCols.toSeq)
     val userKeys = spec.orderBy.map(k => if (k.desc) col(k.field).desc else col(k.field).asc)
     val orderCols = userKeys ++ pk.filterNot(p => spec.orderBy.exists(_.field == p)).map(col(_).asc)
     val ordered = filtered.orderBy(orderCols: _*)
@@ -239,14 +240,22 @@ object Subset {
     bfs(List((from, Nil)), Set(from))
   }
 
+  /** Fold `add` into table `t`'s selection `cur`: their union, deduped on
+    * `t`'s PK. The closure's steps and [[graft.sources.Job.run]]'s
+    * cross-query merge both fold through it.
+    */
+  def merge(graph: RelGraph, t: String)(cur: DataFrame, add: DataFrame): DataFrame =
+    cur.unionByName(add).dropDuplicates(graph.pkOf(t, cur.columns.toSeq))
+
   /** Phases 2+3 — run the closure and return per-table selected rows.
     *
-    * Independent edge pulls within a BFS level (and a table's several join
-    * edges in the re-closure) materialize CONCURRENTLY: each pull is its own
-    * small Spark job, and submitting them from one thread serializes the
-    * cluster — on local[n] that is per-job overhead × #edges of wall clock,
-    * on a real cluster it is idle executors. Selections merge on the caller
-    * thread afterwards, in sorted edge order, so results stay deterministic.
+    * The closure runs in steps: each BFS level, and each rank batch of the
+    * re-closure, is one step. A step folds its pulls into their targets in
+    * sorted edge order on the caller thread, so results stay deterministic,
+    * then checkpoints every table it touched in ONE concurrent wave: each
+    * checkpoint is its own small Spark job, and submitting them from one
+    * thread serializes the cluster — on local[n] that is per-job overhead ×
+    * #tables of wall clock, on a real cluster it is idle executors.
     */
   def extract(spark: SparkSession, sfDir: String, spec: QuerySpec,
               graph: RelGraph = RelGraph.tpch): Extraction = {
@@ -262,14 +271,11 @@ object Subset {
     val sel = scala.collection.mutable.Map[String, DataFrame](
       spec.from -> timed("root")(
         applyRootQuery(spark, sfDir, spec, p.graph).localCheckpoint()))
-    // selection versions: lets the re-closure pass skip join edges that
-    // phase 2 already evaluated against the final child selection
+    // selection versions, bumped once per step that touches a table: lets
+    // the re-closure pass skip join edges that phase 2 already evaluated
+    // against the final child selection
     val version = scala.collection.mutable.Map(spec.from -> 1).withDefaultValue(0)
     val joinEdgeSeenAt = scala.collection.mutable.Map.empty[(String, FK), Int]
-    val ckptVersion = scala.collection.mutable.Map(spec.from -> 1).withDefaultValue(-1)
-
-    def pkCols(t: String): Seq[String] =
-      p.graph.tables.get(t).map(_.pk).getOrElse(RelGraph.synthesizePk(load(t).columns.toSeq))
 
     // Broadcast the key side only when the spec truly bounds it: a root
     // limit AND bounded backref fan-out (no backref edge in the PLAN, or
@@ -285,33 +291,20 @@ object Subset {
     def keySide(keys: DataFrame): DataFrame =
       if (boundedKeys) broadcast(keys) else keys
 
-    // A pre-materialized (already-checkpointed) pull merging into a table
-    // that had no prior selection needs no further materialization — record
-    // its version as checkpointed so checkpoint() skips it.
-    def unionInto(t: String, add: DataFrame, addCheckpointed: Boolean): Unit = {
-      sel.get(t) match {
-        case Some(cur) =>
-          sel(t) = cur.unionByName(add).dropDuplicates(pkCols(t))
-          version(t) = version(t) + 1
-        case None =>
-          sel(t) = add
-          version(t) = version(t) + 1
-          if (addCheckpointed) ckptVersion(t) = version(t)
-      }
+    /** Lazy plan for the parents of `src`'s rows: parent ⋉ child-FK keys. */
+    def parentsOf(src: DataFrame, fk: FK): DataFrame = {
+      val keys = src.select(fk.childCols.map(col): _*).na.drop().distinct()
+      val parent = load(fk.parent)
+      val on = fk.childCols.zip(fk.parentCols).map { case (c, pc) =>
+        keys(c) === parent(pc)
+      }.reduce(_ && _)
+      parent.join(keySide(keys), on, "left_semi")
     }
 
     /** Lazy plan for one edge pull against a source-selection snapshot. */
     def pullEdge(e: TreeEdge, src: DataFrame): DataFrame =
-      if (!e.backref) {
-        // join edge: parent ⋉ child-FK keys
-        val keys = src.select(e.fk.childCols.map(col): _*)
-          .na.drop().distinct()
-        val parent = load(e.to)
-        val on = e.fk.childCols.zip(e.fk.parentCols).map { case (c, pc) =>
-          keys(c) === parent(pc)
-        }.reduce(_ && _)
-        parent.join(keySide(keys), on, "left_semi")
-      } else {
+      if (!e.backref) parentsOf(src, e.fk)
+      else {
         // backref edge: children of selected parents, capped per parent
         val keys = src.select(e.fk.parentCols.map(col): _*).distinct()
         val child = load(e.to)
@@ -322,69 +315,49 @@ object Subset {
         spec.backrefLimit match {
           case Some(lim) =>
             val w = Window.partitionBy(e.fk.childCols.map(col): _*)
-              .orderBy(pkCols(e.to).map(col(_).asc): _*)
+              .orderBy(p.graph.pkOf(e.to, child.columns.toSeq).map(col(_).asc): _*)
             pulled.withColumn("__rn", row_number().over(w))
               .filter(col("__rn") <= lim).drop("__rn")
           case None => pulled
         }
       }
 
-    /** Materialize several independent pulls as concurrent Spark jobs. */
-    def materialize[T](work: Seq[(T, DataFrame)]): Seq[(T, DataFrame)] =
-      graft.Wave.run(work) { case (tag, df) => (tag, df.localCheckpoint()) }
-    /** Checkpoint several merged selections as concurrent jobs — the
-      * serial foreach(checkpoint) form paid one blocking scheduler
-      * round-trip per table per level. Mutation happens after the wave,
-      * on the caller thread, like materialize's merge step. */
-    def checkpointAll(ts: Iterable[String]): Unit = {
-      val todo = ts.toSeq.distinct.filter(t => ckptVersion(t) != version(t))
-      val done = graft.Wave.run(todo)(t => t -> sel(t).localCheckpoint())
-      done.foreach { case (t, df) =>
-        sel(t) = df
-        ckptVersion(t) = version(t)
+    /** One closure step over (target, pull) pairs in sorted edge order. A
+      * table with no selection that gets one pull takes the plain pull;
+      * every other target merges its pulls in. Then every touched table is
+      * checkpointed in one wave and its version bumped once — selections
+      * are tiny by construction, and every later plan (next step, summary)
+      * restarts from checkpointed blocks instead of one deep AQE lineage.
+      * Returns the targets that took a plain pull.
+      */
+    def step(pulls: Seq[(String, DataFrame)]): Set[String] = {
+      val byTarget = pulls.groupBy(_._1).toSeq.sortBy(_._1)
+      val fresh = byTarget.collect { case (t, Seq(_)) if !sel.contains(t) => t }.toSet
+      val merged = byTarget.map { case (t, adds) =>
+        t -> (sel.get(t).toSeq ++ adds.map(_._2)).reduceLeft(merge(p.graph, t))
       }
+      graft.Wave.run(merged) { case (t, df) => t -> df.localCheckpoint() }
+        .foreach { case (t, df) => sel(t) = df; version(t) += 1 }
+      fresh
     }
 
-    // Phase 2: level-by-level with snapshot semantics.
-    val byLevel = p.edges.groupBy(_.level).toSeq.sortBy(_._1)
-    for ((lvl, levelEdges) <- byLevel) timed(s"level_$lvl") {
-      val snapshot = sel.toMap // selections as of end of previous level
-      val snapVersion = version.toMap.withDefaultValue(0)
-      val ordered = levelEdges.sortBy(te => (te.from, te.to))
-      ordered.foreach(e =>
-        if (!e.backref) joinEdgeSeenAt((e.from, e.fk)) = snapVersion(e.from))
-      val soleFresh = ordered.groupBy(_.to).collect {
-        case (t, es) if es.size == 1 && !snapshot.contains(t) => t
-      }.toSet
-      // pullMap below is keyed by TreeEdge value equality — two equal
-      // edges in one level would silently collapse to one pull (masked
-      // only by the dropDuplicates in unionInto); the planner never
-      // emits duplicates, so make that assumption explicit
-      require(ordered.distinct.size == ordered.size,
-        s"duplicate edges in level $lvl: $ordered")
-      val (matEdges, lazyEdges) = ordered.partition(e => soleFresh(e.to))
-      def pullOf(e: TreeEdge): DataFrame = {
-        val src = snapshot.getOrElse(e.from,
-          sys.error(s"edge source ${e.from} not yet selected"))
-        pullEdge(e, src)
+    // Phase 2: level-by-level with snapshot semantics — every pull of a
+    // level is planned against the selections as of the previous level.
+    for ((lvl, levelEdges) <- p.edges.groupBy(_.level).toSeq.sortBy(_._1))
+      timed(s"level_$lvl") {
+        val ordered = levelEdges.sortBy(e => (e.from, e.to))
+        ordered.foreach(e =>
+          if (!e.backref) joinEdgeSeenAt((e.from, e.fk)) = version(e.from))
+        val fresh = step(ordered.map(e => e.to -> pullEdge(e,
+          sel.getOrElse(e.from, sys.error(s"edge source ${e.from} not yet selected")))))
+        // A backref pull that alone CREATES its child's selection also
+        // proves the reverse join edge complete: every pulled row's FK
+        // value is a PK of the (monotone, union-only) parent selection it
+        // was pulled by. Recording it lets the re-closure skip the no-op
+        // re-pull.
+        ordered.foreach(e =>
+          if (e.backref && fresh(e.to)) joinEdgeSeenAt((e.to, e.fk)) = version(e.to))
       }
-      val pullMap = (materialize(matEdges.map(e => e -> pullOf(e))) ++
-        lazyEdges.map(e => e -> pullOf(e))).toMap
-      for (e <- ordered) { val df = pullMap(e); {
-        // A backref pull that CREATES its child's selection also proves the
-        // reverse join edge complete: every pulled row's FK value is a PK
-        // of the (monotone, union-only) parent selection it was pulled by.
-        // Recording it lets the re-closure pass skip the no-op re-pull.
-        val freshBackref = e.backref && !sel.contains(e.to)
-        unionInto(e.to, df, addCheckpointed = soleFresh(e.to))
-        if (freshBackref) joinEdgeSeenAt((e.to, e.fk)) = version(e.to)
-      } }
-      // materialize merged selections (no-op for single-pull new tables):
-      // selections are tiny by construction and every downstream plan
-      // (next level, re-closure, summary) restarts from materialized
-      // blocks instead of growing one deep AQE lineage
-      checkpointAll(levelEdges.map(_.to))
-    }
 
     // Phase 3: parent re-closure (child-before-parent), guarantees RI for
     // every included parent table. Edges whose phase-2 pull already saw the
@@ -394,13 +367,10 @@ object Subset {
     // rank(t) = longest included child-chain below t, so no included join
     // edge can link two tables of equal rank (an edge c→t forces
     // rank(t) > rank(c)) — a batch's pulls read selections only earlier
-    // batches could have touched, making them mutually independent. Their
-    // checkpoints then run as ONE concurrent wave (checkpointAll) instead
-    // of one blocking scheduler round-trip per table; on the TPC-H graph
-    // this folds {orders, part, supplier} into a single wave. Results are
-    // identical to the serial child-before-parent walk: within a batch,
-    // selection merges still happen on the caller thread in sorted table
-    // order.
+    // batches could have touched, making them mutually independent, so
+    // each batch is one step; on the TPC-H graph this folds {orders, part,
+    // supplier} into a single wave. Results are identical to the serial
+    // child-before-parent walk.
     val included = p.tables.toSet
     timed("reclosure") {
       val inc = p.graph.reverseTopological.filter(included)
@@ -412,28 +382,12 @@ object Subset {
           p.graph.joinEdges(c).exists(_.parent == t)).flatMap(rank.get)
         rank(t) = if (childRanks.isEmpty) 0 else childRanks.max + 1
       }
-      for ((_, batch) <- rank.toSeq.groupBy(_._2).toSeq.sortBy(_._1)) {
-        val pulls = batch.map(_._1).sorted.flatMap { t =>
-          val fks = p.graph.joinEdges(t).filter(fk =>
-            included(fk.parent) && sel.contains(t) &&
-              !joinEdgeSeenAt.get((t, fk)).contains(version(t)))
-          fks.map { fk =>
-            val keys = sel(t).select(fk.childCols.map(col): _*)
-              .na.drop().distinct()
-            val parent = load(fk.parent)
-            val on = fk.childCols.zip(fk.parentCols).map { case (c, pc) =>
-              keys(c) === parent(pc)
-            }.reduce(_ && _)
-            fk -> parent.join(keySide(keys), on, "left_semi")
-          }
-        }
-        pulls.foreach { case (fk, df) =>
-          unionInto(fk.parent, df, addCheckpointed = false) }
-        // materialize merged selections: unionInto only builds lazy plans,
-        // so checkpointing here keeps the profiler honest about where time
-        // went
-        checkpointAll(pulls.map(_._1.parent))
-      }
+      for ((_, batch) <- rank.toSeq.groupBy(_._2).toSeq.sortBy(_._1))
+        step(for {
+          t <- batch.map(_._1).sorted if sel.contains(t)
+          fk <- p.graph.joinEdges(t)
+          if included(fk.parent) && !joinEdgeSeenAt.get((t, fk)).contains(version(t))
+        } yield fk.parent -> parentsOf(sel(t), fk))
     }
 
     Extraction(spec, p, sel.toMap, phase.toMap)
@@ -453,7 +407,7 @@ object Subset {
     // them), with sum(__w) standing in for count.
     val spark = e.tables.head._2.sparkSession
     val parts = e.tables.toSeq.sortBy(_._1).map { case (name, df) =>
-      val pk = e.plan.graph.tables.get(name).map(_.pk).getOrElse(Seq(df.columns.head))
+      val pk = e.plan.graph.pkOf(name, df.columns.toSeq)
       // integral key parts only: double→long casts round differently across
       // engines, so non-integral PK components stay out of the checksum
       val integral = pk.filter { c =>

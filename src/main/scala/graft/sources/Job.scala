@@ -70,15 +70,8 @@ object Job {
         case Some(c) => QueryCache.extract(spark, sfDir, spec, c, graph, force)._1
         case None => Subset.extract(spark, sfDir, spec, graph).tables
       }
-      for ((name, df) <- tables) {
-        merged(name) = merged.get(name) match {
-          case Some(cur) =>
-            val pk = graph.tables.get(name).map(_.pk)
-              .getOrElse(RelGraph.synthesizePk(df.columns.toSeq))
-            cur.unionByName(df).dropDuplicates(pk)
-          case None => df
-        }
-      }
+      for ((name, df) <- tables)
+        merged(name) = merged.get(name).fold(df)(Subset.merge(graph, name)(_, df))
     }
     merged.toMap
   }

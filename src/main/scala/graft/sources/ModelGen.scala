@@ -85,7 +85,7 @@ object ModelGen {
     */
   def caseClass(table: String, schema: StructType, graph: RelGraph): String = {
     val meta = graph.tables.get(table)
-    val pk = meta.map(_.pk).getOrElse(RelGraph.synthesizePk(schema.fieldNames.toSeq))
+    val pk = graph.pkOf(table, schema.fieldNames.toSeq)
     val fks = meta.map(_.fks).getOrElse(Nil)
     val backrefs = if (meta.isDefined) graph.backrefEdges(table) else Nil
     val doc = Seq(
@@ -106,8 +106,7 @@ object ModelGen {
   def module(pkg: String, catalog: Seq[(String, StructType)], graph: RelGraph): String = {
     val classes = catalog.map { case (t, s) => caseClass(t, s, graph) }
     val registry = catalog.map { case (t, s) =>
-      val pk = graph.tables.get(t).map(_.pk)
-        .getOrElse(RelGraph.synthesizePk(s.fieldNames.toSeq))
+      val pk = graph.pkOf(t, s.fieldNames.toSeq)
       s"""    "$t" -> ("${className(t)}", Seq(${pk.map("\"" + _ + "\"").mkString(", ")}))"""
     }.mkString(",\n")
     (Seq(s"package $pkg", "",
@@ -134,8 +133,7 @@ object ModelGen {
       (present -- graph.tables.keySet).toSeq.sorted
     order.map { t =>
       val meta = graph.tables.get(t)
-      val pk = meta.map(_.pk)
-        .getOrElse(RelGraph.synthesizePk(catalog(t).fieldNames.toSeq))
+      val pk = graph.pkOf(t, catalog(t).fieldNames.toSeq)
       val fks = meta.map(_.fks).getOrElse(Nil).filter(fk => present(fk.parent))
         .map(fk => SqlDump.FkClause(fk.childCols, fk.parent, fk.parentCols))
       SqlDump.ddl(t, catalog(t), pk, fks, dialect)

@@ -255,6 +255,27 @@ class CliSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(s"$work/dest")))
   }
 
+  test("estimate fails loudly, naming the table and path, on a missing source") {
+    val work = tmp()
+    val src = Files.createDirectories(Paths.get(work, "src"))
+    // the root is there; its parent `nation` is not
+    Files.createSymbolicLink(src.resolve("customer.parquet"),
+      Paths.get(Tables.path(TestSpark.sf, "customer")))
+    val cfgPath = writeConfig(work,
+      s"""databases:
+         |  source_dir: $src
+         |  destination_dir: $work/dest
+         |queries:
+         |  - from: customer
+         |    limit: 5
+         |    include: [region]
+         |""".stripMargin)
+    val e = intercept[IllegalArgumentException](
+      Cli.run(spark, Cli.parseArgs(Seq("-c", cfgPath, "--quiet", "estimate"))))
+    assert(e.getMessage.contains("nation") &&
+      e.getMessage.contains(Tables.path(src.toString, "nation")), e.getMessage)
+  }
+
   test("config paths expand ${VAR} from the environment and a sibling .env") {
     val work = tmp()
     Files.writeString(Paths.get(work, ".env"),

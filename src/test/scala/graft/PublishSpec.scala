@@ -5,7 +5,6 @@ import graft.sources.Versioned
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** The publish matrix: local two-writer races for both puts, a swap
   * whose promote fails, the refusal on a scheme without atomic
@@ -208,22 +207,12 @@ class PublishSpec extends AnyFunSuite {
     "StandingIndex.scala" -> "fs.rename(root, trash)")
 
   test("no main source but Publish renames, moves or links a file") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
     val banned = Seq(".rename(", "Files.move", "Files.createLink", "ATOMIC_MOVE")
     def exempt(f: java.nio.file.Path, line: String) = notPublishes.exists {
       case (file, call) => f.getFileName.toString == file && line.contains(call)
     }
-    val hits = scala.util.Using.resource(java.nio.file.Files.walk(root)) { s =>
-      s.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filterNot(_.getFileName.toString == "Publish.scala")
-        .flatMap { f =>
-          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-            case (line, i) if banned.exists(line.contains) && !exempt(f, line) =>
-              s"$f:${i + 1}: ${line.trim}"
-          }
-        }.toList
-    }
+    val hits = TestSpark.mainSourceHits("Publish.scala")((f, line) =>
+      banned.exists(line.contains) && !exempt(f, line))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

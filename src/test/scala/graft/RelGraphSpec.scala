@@ -44,4 +44,13 @@ class RelGraphSpec extends AnyFunSuite {
     assert(!g.tables.contains("supplier"))
     assert(g.joinEdges("lineitem").forall(_.parent != "supplier"))
   }
+
+  test("no main source but RelGraph synthesizes a PK on its own") {
+    // every key lookup goes through RelGraph.pkOf, so a PK-less table is
+    // keyed the same way by the closure, its summary, the job merge, the
+    // CLI and the generated models
+    val hits = TestSpark.mainSourceHits("RelGraph.scala")((_, line) =>
+      line.contains("synthesizePk("))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -92,4 +92,49 @@ class SubsetSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.max("count")).collect()(0).getLong(0)
     assert(maxPerCust <= 4)
   }
+
+  /** Spark jobs and summary rows of three closures: q_subset_full's spec
+    * (level 2 mixes fresh `part` with already-selected `supplier`), an
+    * orders root that re-pulls `nation` at level 2, and a part root whose
+    * re-closure re-pulls `orders`. A closure rewrite that moves either
+    * number updates the pin and says why. Each spec runs once unmeasured
+    * first, so the parquet schema reads of a cold memo are not counted.
+    */
+  private val pinned = Seq(
+    ("from: customer\nwhere:\n  c_mktsegment: AUTOMOBILE\nlimit: 10\n" +
+      "join_depth: 5\nbackref_depth: 2\nbackref_limit: 5\n", 32, Seq(
+        ("customer", 10L, 452L), ("lineitem", 178L, 97846L), ("nation", 15L, 206L),
+        ("orders", 50L, 22435L), ("part", 121L, 12265L), ("region", 5L, 10L),
+        ("supplier", 10L, 45L))),
+    ("from: orders\nlimit: 20\njoin_depth: 5\nbackref_depth: 1\nbackref_limit: 3\n", 26, Seq(
+        ("customer", 20L, 1445L), ("lineitem", 51L, 6061L), ("nation", 19L, 234L),
+        ("orders", 20L, 190L), ("part", 45L, 4537L), ("region", 5L, 10L),
+        ("supplier", 10L, 45L))),
+    ("from: part\nlimit: 20\njoin_depth: 2\nbackref_depth: 1\nbackref_limit: 3\n", 10, Seq(
+        ("lineitem", 60L, 7646L), ("orders", 56L, 6266L), ("part", 20L, 190L),
+        ("supplier", 10L, 45L))))
+
+  test("closure job counts and summaries stay pinned") {
+    def run(yaml: String) = Subset.extract(spark, TestSpark.sf, SpecJson.parse(yaml))
+    for ((yaml, jobs, rows) <- pinned) {
+      run(yaml)
+      var e: Subset.Extraction = null
+      val n = TestSpark.jobsOf { e = run(yaml) }
+      val got = Subset.summary(e).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      assert(n == jobs, s"jobs of $yaml")
+      assert(got == rows, s"summary of $yaml")
+    }
+  }
+
+  test("summary checksums a PK-less table on its synthesized key") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-subset").toString
+    // the first column is not the synthesized key: `item_id` ends in _id
+    Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("seq", "item_id")
+      .write.parquet(Tables.path(dir, "items"))
+    val e = Subset.extract(spark, dir, SpecJson.parse("from: items\n"))
+    val row = Subset.summary(e).collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(row.toSeq == Seq(("items", 3L, 60L)))
+  }
 }

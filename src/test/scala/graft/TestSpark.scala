@@ -18,6 +18,25 @@ object TestSpark {
   }
   val sf = "/root/testdata/sf0.001"
 
+  /** `path:line: text` of every line of `src/main/scala` that `hit` flags,
+    * files named `skip` left out: the scan behind the guards that keep one
+    * rule inside one module.
+    */
+  def mainSourceHits(skip: String)(hit: (java.nio.file.Path, String) => Boolean): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    require(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { s =>
+      s.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filterNot(_.getFileName.toString == skip)
+        .flatMap { f =>
+          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+            case (line, i) if hit(f, line) => s"$f:${i + 1}: ${line.trim}"
+          }
+        }.toList
+    }
+  }
+
   /** Spark jobs started while `f` runs, counted by a listener. The bus is
     * drained before the listener is added, so late events of earlier work
     * are not counted, and again before it is read, so none of `f`'s are
