@@ -389,9 +389,12 @@ object Cli {
         // versioned load: each extraction commits as the next version of
         // destination_dir/versioned/<table> — repeated runs build history
         // a reader can time-travel through (sources/Versioned.scala).
-        // Serial, unlike load: each commit runs Versioned's own log protocol
+        // Each table has its own commit log, so the commits run as one
+        // write wave, like load. A multi-table snapshot is not atomic
+        // either way: a run that fails part-way leaves some tables at the
+        // new version and the rest at the old
         val order = fkOrder(extracted)
-        val vs = order.map { n =>
+        val vs = Wave.run(order) { n =>
           val v = graft.sources.Versioned.commit(
             extracted(n), s"${cfg.destDir}/versioned/$n")
           s"$n=v$v"
@@ -421,20 +424,21 @@ object Cli {
         // type. The operational answer to "what did the last snapshot
         // actually change". Composite PKs feed the multi-key form; only
         // a table with NO declared PK points at the API (no key to merge
-        // images on).
+        // images on). The tables' feeds run as one wave; their lines are
+        // logged afterwards, in table order.
         val root = Paths.get(s"${cfg.destDir}/versioned")
         if (!Files.isDirectory(root)) log("changes: no versioned tables")
-        else listDir(root).filter(Files.isDirectory(_))
-          .sortBy(_.getFileName.toString).foreach { p =>
+        else Wave.run(listDir(root).filter(Files.isDirectory(_))
+          .sortBy(_.getFileName.toString)) { p =>
             val table = p.getFileName.toString
             val vs = graft.sources.Versioned.versions(spark, p.toString)
             val pk = graph.tables.get(table).map(_.pk).getOrElse(Nil)
             if (vs.size < 2)
-              log(s"changes $table: v${vs.lastOption.getOrElse(0)} " +
-                "(no prior version)")
+              s"changes $table: v${vs.lastOption.getOrElse(0)} " +
+                "(no prior version)"
             else if (pk.isEmpty)
-              log(s"changes $table: no declared PK — no key to merge " +
-                "images on; use Versioned.changesKeyed with your own key")
+              s"changes $table: no declared PK — no key to merge " +
+                "images on; use Versioned.changesKeyed with your own key"
             else {
               val (a, b) = (vs(vs.size - 2), vs.last)
               val byType = graft.sources.Versioned
@@ -442,10 +446,10 @@ object Cli {
                 .groupBy("_change_type").count()
                 .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
                 .sorted
-              log(s"changes $table v$a->v$b: " +
-                (if (byType.isEmpty) "none" else byType.mkString(", ")))
+              s"changes $table v$a->v$b: " +
+                (if (byType.isEmpty) "none" else byType.mkString(", "))
             }
-          }
+          }.foreach(log)
       case "check" =>
         // post-load data-quality gate over the DESTINATION: rules derive
         // from the FK graph (PK uniqueness + not-null, FK referential

@@ -52,7 +52,9 @@ object QueryCache {
       // marker over mixed old/new table dirs, and the next plain run
       // would serve that mix as a complete, consistent extraction
       Files.deleteIfExists(countFile(dir))
-      e.tables.foreach { case (n, df) =>
+      // one concurrent write wave, like CLI load: the tables are
+      // independent files
+      graft.Wave.run(e.tables.toSeq) { case (n, df) =>
         df.write.mode(SaveMode.Overwrite).parquet(dir.resolve(n).toString)
       }
       // count FROM the just-written files' parquet footers, not the live

@@ -33,12 +33,16 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Spark's parquet reader does the (parallel) file listing, so a commit
   * is O(1) driver work regardless of table size.
   *
-  * Concurrency: the manifest publish is an atomic put-if-absent,
-  * [[graft.Publish.putFile]]; its per-scheme table says how, and when a
-  * scheme refuses. Two writers racing the same version resolve
-  * optimistically: the loser's publish fails and it retries under the
-  * next number with the same data directory. Readers are safe in every case because data
-  * files are immutable and manifests are never edited in place.
+  * Concurrency: every write (snapshot, append, replace, compaction,
+  * deletion vector, CDC apply) writes its data first ([[writeData]]) and
+  * then publishes through ONE optimistic loop, [[publishNext]]. The loop
+  * numbers the next version, reads its parent, lets the writer form its
+  * manifest from that parent or name a conflict, and publishes with an
+  * atomic put-if-absent, [[graft.Publish.putFile]]; its per-scheme table
+  * says how, and when a scheme refuses. A writer that loses the race
+  * retries under the next number with the same data directory, against
+  * the new parent. Readers are safe in every case because data files
+  * are immutable and manifests are never edited in place.
   */
 object Versioned {
 
@@ -180,18 +184,13 @@ object Versioned {
   /** Publish `df` as the next version. `append = false` commits a full
     * snapshot (the new version reads only this data); `append = true`
     * extends the parent version's directory list. Returns the committed
-    * version number. The data write happens BEFORE the manifest rename —
-    * the rename is the commit point; on rename failure (concurrent
-    * writer won the version) the data dir is re-referenced under the
-    * next number without rewriting.
+    * version number. The data write happens BEFORE the manifest publish,
+    * which is the commit point.
     */
   def commit(df: DataFrame, dir: String, append: Boolean = false,
              epochId: Option[Long] = None,
              appId: Option[String] = None): Int = {
     val spark = df.sparkSession
-    val f = fs(spark, dir)
-    f.mkdirs(new Path(s"$dir/_commits"))
-    var v = versions(spark, dir).lastOption.getOrElse(0) + 1
     // an APPEND to a bucketed table carries the layout: the appended rows
     // are written as `__bucket=N` dirs under the parent's (bucketCol,
     // nBuckets) and the manifest keeps the layout — a plain append here
@@ -202,68 +201,106 @@ object Versioned {
     // compactCommit folds them back to one). A SNAPSHOT commit
     // (append=false) deliberately installs a fresh un-bucketed layout —
     // it replaces the whole table, so re-migration is the honest cost.
-    if (append && v > 1) {
-      val parent = readManifest(spark, dir, v - 1)
-      (parent.bucketCol, parent.nBuckets) match {
-        case (Some(bc), Some(n))
-            if parent.dataDirs.forall(d => bucketOf(d).isDefined) =>
-          require(splitKeyCols(bc).forall(df.columns.contains),
-            s"append to bucketed table $dir must carry its bucket column(s) " +
-              s"'$bc' (layout installed by the CDC apply path)")
-          val token = java.util.UUID.randomUUID.toString.take(8)
-          val dataDir = f"$dir/data/v$v%05d-$token"
-          val newDirs = writeBucketed(df, dataDir, bc, n)
-          val newRows = newDirs.map(graft.Tables.footerRowCount(spark, _)).sum
-          return commitDirs(spark, dir, newDirs, newRows, Set.empty, 0L,
-            epochId, appId, Some(bc), Some(n),
-            baseVersion = Some(parent.version), pureAppend = true)
-        case _ =>
-      }
+    val base =
+      if (append) versions(spark, dir).lastOption.map(readManifest(spark, dir, _))
+      else None
+    val layout = base.flatMap(bucketLayout)
+    layout.foreach { case (bc, _) =>
+      require(splitKeyCols(bc).forall(df.columns.contains),
+        s"append to bucketed table $dir must carry its bucket column(s) " +
+          s"'$bc' (layout installed by the CDC apply path)")
     }
-    // unique data-dir AND temp-manifest names (not keyed to the version):
-    // two writers racing to the same version number must never collide on
-    // anything they write — only the manifest publish decides the race
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val dataDir = f"$dir/data/v$v%05d-$token"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-    // footer record counts — metadata reads, not a second full scan of
-    // the data this commit just wrote (the same bookkeeping every other
-    // commit path uses)
-    val nNew = graft.Tables.footerRowCount(spark, dataDir)
-    var committed = -1
-    while (committed < 0) {
-      val parent =
-        if (!append || v == 1) None
-        else Some(readManifest(spark, dir, v - 1))
-      // the bucketed-vs-plain decision was made against the parent at
-      // ENTRY; a retry against a parent that installed a bucket layout
-      // in the meantime (a concurrent CDC migration) must not merge a
-      // plain dir in and publish a layout-less manifest — that would
-      // silently wipe the layout the migration paid a full rewrite for
-      parent.foreach { p =>
-        if (p.bucketCol.isDefined &&
-            p.dataDirs.forall(d => bucketOf(d).isDefined))
-          throw new java.util.ConcurrentModificationException(
-            s"append to $dir conflicts with a concurrent commit that " +
-              "installed a bucket layout — retry the append (it will " +
-              "write bucketed dirs under the new layout)")
-      }
-      val dirs = parent.map(_.dataDirs).getOrElse(Seq.empty) :+ dataDir
-      val nRows = parent.map(_.nRows).getOrElse(0L) + (
-        if (append) nNew else 0L)
-      // an append keeps every parent dir, so their deletion vectors
-      // carry verbatim; a snapshot replaces everything — DVs fold away
-      val dvs =
-        if (append) parent.map(_.dvs).getOrElse(Seq.empty) else Seq.empty
-      val m = Manifest(v, dirs, if (append) nRows else nNew, epochId, appId,
-        dvs = dvs)
-      // atomic publish: put-if-absent fails if the version already
-      // exists — a concurrent writer won; retry as v+1 with the SAME
-      // data dir
-      if (writeAndPublish(spark, f, dir, m, token)) committed = v
-      else v += 1
+    val (newDirs, newRows) = writeData(df, dir, layout)
+    if (layout.isDefined)
+      commitDirs(spark, dir, newDirs, newRows, Set.empty, 0L, epochId, appId,
+        layout.map(_._1), layout.map(_._2),
+        baseVersion = base.map(_.version), pureAppend = true)
+    else if (!append)
+      publishNext(spark, dir, "snapshot")(_ =>
+        Right(Manifest(0, newDirs, newRows, epochId, appId)))
+    else publishNext(spark, dir, "append") { parent =>
+      // the bucketed-vs-plain decision was made against the base; a
+      // parent that installed a bucket layout in the meantime (a
+      // concurrent CDC migration) must not get a plain dir merged in
+      // under a layout-less manifest — that would silently wipe the
+      // layout the migration paid a full rewrite for
+      if (parent.flatMap(bucketLayout).isDefined)
+        Left(s"parent v${parent.get.version} installed a bucket layout " +
+          "(the retried append writes bucketed dirs under it)")
+      else
+        // an append keeps every parent dir, so their deletion vectors
+        // carry verbatim
+        Right(Manifest(0, parent.map(_.dataDirs).getOrElse(Nil) ++ newDirs,
+          parent.map(_.nRows).getOrElse(0L) + newRows, epochId, appId,
+          dvs = parent.map(_.dvs).getOrElse(Nil)))
     }
-    committed
+  }
+
+  /** The (bucket column(s), bucket count) of a manifest whose every data
+    * entry is a bucket entry — the layout appends, replaces and deletion
+    * vectors rely on. None for a plain table.
+    */
+  private[graft] def bucketLayout(m: Manifest): Option[(String, Int)] =
+    for {
+      bc <- m.bucketCol; n <- m.nBuckets
+      if m.dataDirs.forall(d => bucketOf(d).isDefined)
+    } yield (bc, n)
+
+  private def newToken(): String = java.util.UUID.randomUUID.toString.take(8)
+
+  /** Write `df` as one new data directory `data/v<next>-<token>` of table
+    * `dir`, hash-bucketed under `layout` (bucket column(s), bucket count)
+    * or plain, and return the data entries it created with their total
+    * row count. The name is unique, not keyed to the version alone: two
+    * writers racing to the same version never collide on anything they
+    * write — only the manifest publish decides the race. The count comes
+    * from the parquet footers — metadata reads, not a second scan of the
+    * data just written.
+    */
+  private[graft] def writeData(df: DataFrame, dir: String,
+                               layout: Option[(String, Int)],
+                               maxRecordsPerFile: Long = 0L)
+      : (Seq[String], Long) = {
+    val spark = df.sparkSession
+    val v = versions(spark, dir).lastOption.getOrElse(0) + 1
+    val dataDir = f"$dir/data/v$v%05d-${newToken()}"
+    val entries = layout match {
+      case Some((bc, n)) =>
+        writeBucketed(df, dataDir, bc, n, maxRecordsPerFile)
+      case None =>
+        df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
+        Seq(dataDir)
+    }
+    (entries, entries.map(graft.Tables.footerRowCount(spark, _)).sum)
+  }
+
+  private def conflict(what: String, dir: String, why: String): Nothing =
+    throw new java.util.ConcurrentModificationException(
+      s"$what at $dir conflicts with a concurrent commit: $why — " +
+        "recompute against the current version and retry")
+
+  /** THE commit loop every write publishes through. Per attempt it reads
+    * the parent of the next version (None for a table's first version)
+    * and asks `attempt` for the manifest to publish on top of it — or
+    * for the reason the write no longer holds against that parent, which
+    * surfaces as a `ConcurrentModificationException` naming `what`. The
+    * manifest's version field is the loop's. A publish lost to a
+    * concurrent winner retries at the next number; the data the writer
+    * already wrote is re-referenced, never rewritten. Returns the
+    * committed version.
+    */
+  private def publishNext(spark: SparkSession, dir: String, what: String)(
+      attempt: Option[Manifest] => Either[String, Manifest]): Int = {
+    val f = fs(spark, dir)
+    f.mkdirs(new Path(s"$dir/_commits"))
+    val token = newToken()
+    @annotation.tailrec def from(v: Int): Int = {
+      val parent = if (v == 1) None else Some(readManifest(spark, dir, v - 1))
+      val m = attempt(parent).fold(conflict(what, dir, _), _.copy(version = v))
+      // put-if-absent is false when a concurrent writer won this version
+      if (writeAndPublish(spark, f, dir, m, token)) v else from(v + 1)
+    }
+    from(versions(spark, dir).lastOption.getOrElse(0) + 1)
   }
 
   private def writeAndPublish(spark: SparkSession,
@@ -301,13 +338,14 @@ object Versioned {
     * 64 buckets writes 3 new directories and the other 61 are inherited
     * without any IO proportional to table size. `newRows`/`replacedRows`
     * keep the manifest's row count exact without a table scan (callers
-    * use parquet footer counts).
+    * use parquet footer counts). `baseVersion` is the version the caller
+    * computed its merge against (None: the table had no version).
     *
-    * Optimistic concurrency, the Delta conflict rule: on a lost publish
-    * race the commit retries against the new parent ONLY if that parent
-    * still references every `replacedDirs` entry and the bucket layout is
-    * unchanged — the concurrent commit touched disjoint data, so merging
-    * the directory lists is safe. Otherwise a
+    * Optimistic concurrency, the Delta conflict rule: the commit publishes
+    * against a parent newer than the base ONLY if that parent still
+    * references every `replacedDirs` entry and the bucket layout is
+    * unchanged — the interleaved commits touched disjoint data, so
+    * merging the directory lists is safe ([[retryConflict]]). Otherwise a
     * `ConcurrentModificationException` surfaces: the merge was computed
     * against a table state that no longer exists, and blindly publishing
     * it would silently erase the other writer's changes (write skew).
@@ -318,61 +356,32 @@ object Versioned {
                  epochId: Option[Long] = None, appId: Option[String] = None,
                  bucketCol: Option[String] = None,
                  nBuckets: Option[Int] = None,
-                 baseVersion: Option[Int] = None,
+                 baseVersion: Option[Int],
                  pureAppend: Boolean = false): Int = {
-    val f = fs(spark, dir)
-    f.mkdirs(new Path(s"$dir/_commits"))
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    var v = versions(spark, dir).lastOption.getOrElse(0) + 1
-    // the merge in newDirs was computed against the BASE manifest, which
-    // the CALLER names (baseVersion; 0 = the table was empty) — a commit
-    // that lands between the caller's manifest read and this point must
-    // hit the same conflict rule as one landing during the publish loop.
-    // Legacy callers omit it and the manifest at entry is assumed, which
-    // re-opens that window; every merging path should pass it.
-    val base = baseVersion match {
-      case Some(0) => None
-      case Some(b) =>
-        // the base manifest can be vacuumed away in exactly the
-        // concurrent-commit window this parameter exists for — surface
-        // that as the documented conflict (recompute and retry), not a
-        // raw missing-file error
-        try Some(readManifest(spark, dir, b)) catch {
-          case _: java.io.FileNotFoundException =>
-            throw new java.util.ConcurrentModificationException(
-              s"replace commit at $dir conflicts with concurrent history: " +
-                s"base manifest v$b was vacuumed while the merge ran — " +
-                "recompute the merge against the current version and retry")
-        }
-      case None => if (v == 1) None else Some(readManifest(spark, dir, v - 1))
-    }
+    // the base manifest can be vacuumed away in exactly the
+    // concurrent-commit window the base exists for — surface that as the
+    // documented conflict (recompute and retry), not a raw missing-file
+    // error
+    val base = baseVersion.map(b =>
+      try readManifest(spark, dir, b) catch {
+        case _: java.io.FileNotFoundException =>
+          conflict("replace commit", dir,
+            s"base manifest v$b was vacuumed while the merge ran")
+      })
     val touchedBuckets =
       (replacedDirs.toSeq ++ newDirs).flatMap(bucketOf).toSet
-    var committed = -1
-    while (committed < 0) {
-      val parent = if (v == 1) None else Some(readManifest(spark, dir, v - 1))
-      val parentDirs = parent.map(_.dataDirs).getOrElse(Seq.empty)
-      def conflict(why: String): Nothing =
-        throw new java.util.ConcurrentModificationException(
-          s"replace commit at $dir conflicts with a concurrent commit: $why" +
-            " — recompute the merge against the current version and retry")
-      parent.orElse(Some(Manifest(0, Seq.empty, 0L)))
-        .flatMap(p => retryConflict(base, p, replacedDirs, touchedBuckets,
-          bucketCol, nBuckets, pureAppend))
-        .foreach(why => conflict(why))
-      val dirs = parentDirs.filterNot(replacedDirs) ++ newDirs
-      val nRows = parent.map(_.nRows).getOrElse(0L) - replacedRows + newRows
-      // kept entries carry their deletion vectors; replaced entries'
-      // DVs drop (the rewrite materialized the deletes) — the rule that
-      // makes compactCommit fold DVs away with no special casing
-      val dvs = parent.map(_.dvs).getOrElse(Seq.empty)
-        .filter(d => dirs.contains(d.entry))
-      val m = Manifest(v, dirs, nRows, epochId, appId, bucketCol, nBuckets,
-        dvs)
-      if (writeAndPublish(spark, f, dir, m, token)) committed = v
-      else v += 1
+    publishNext(spark, dir, "replace commit") { parent =>
+      val p = parent.getOrElse(Manifest(0, Seq.empty, 0L))
+      retryConflict(base, p, replacedDirs, touchedBuckets, bucketCol,
+        nBuckets, pureAppend).toLeft {
+        val dirs = p.dataDirs.filterNot(replacedDirs) ++ newDirs
+        // kept entries carry their deletion vectors; replaced entries'
+        // DVs drop (the rewrite materialized the deletes) — the rule that
+        // makes compactCommit fold DVs away with no special casing
+        Manifest(0, dirs, p.nRows - replacedRows + newRows, epochId, appId,
+          bucketCol, nBuckets, p.dvs.filter(d => dirs.contains(d.entry)))
+      }
     }
-    committed
   }
 
   /** Whether publishing a replace commit computed against `base` is still
@@ -685,44 +694,18 @@ object Versioned {
     import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "deleteKeys: empty key set")
     val base = manifest(spark, dir)
-    val (bc, n) = (base.bucketCol, base.nBuckets) match {
-      case (Some(b), Some(nn))
-          if base.dataDirs.forall(d => bucketOf(d).isDefined) => (b, nn)
-      case _ => throw new IllegalStateException(
-        s"deletion vectors need the bucketed layout at $dir (bucketCol + " +
-          "per-bucket dirs, installed by the CDC apply path) — use a " +
-          "snapshot commit to delete from an unbucketed table")
-    }
+    val (bc, n) = bucketLayout(base).getOrElse(throw new IllegalStateException(
+      s"deletion vectors need the bucketed layout at $dir (bucketCol + " +
+        "per-bucket dirs, installed by the CDC apply path) — use a " +
+        "snapshot commit to delete from an unbucketed table"))
     val conf = spark.sessionState.newHadoopConf()
-    val f = fs(spark, dir)
-    if (base.dataDirs.isEmpty) {
-      // fully-emptied table: nothing to delete from, but the commit
-      // still lands so a CDC epoch fence advances. The retry loop must
-      // RE-CHECK the parent like every other commit path: a concurrent
-      // insert landing between our manifest read and the publish would
-      // otherwise be silently erased by a blind empty-manifest publish
-      // at the next version number.
-      var v0 = versions(spark, dir).last + 1
-      val tk = java.util.UUID.randomUUID.toString.take(8)
-      var committed0 = -1
-      while (committed0 < 0) {
-        val parent = readManifest(spark, dir, v0 - 1)
-        if (parent.dataDirs.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"deletion-vector commit at $dir conflicts with a concurrent " +
-              "commit: the table gained data while a no-op delete " +
-              "committed — recompute against the current version and retry")
-        if (writeAndPublish(spark, f, dir,
-          Manifest(v0, Seq.empty, 0L, epochId, appId, Some(bc), Some(n)),
-          tk)) committed0 = v0
-        else v0 += 1
-      }
-      return committed0
-    }
     // all bucket ids in ONE local job (not one per key — a 4096-key
     // CDC delete batch would otherwise pay 4096 driver-side jobs), with
-    // the EXACT on-disk bucketing expression (bucketsOf)
-    val byBucket: Map[Long, Seq[Any]] =
+    // the EXACT on-disk bucketing expression (bucketsOf). Lazy: a fully
+    // emptied table has no entry to sample the key type from, and
+    // nothing to touch — its no-op delete still commits, so a CDC epoch
+    // fence advances
+    lazy val byBucket: Map[Long, Seq[Any]] =
       bucketsOf(spark, base.dataDirs.head, bc, n, keys)
         .groupMap(_._2)(_._1)
     val dvByEntry = base.dvs.map(d => d.entry -> d).toMap
@@ -735,8 +718,7 @@ object Versioned {
         if (mayHold) Some(e -> ks) else None
       }
     }
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val dvRoot = f"$dir/data/dv${base.version + 1}%05d-$token"
+    val dvRoot = f"$dir/data/dv${base.version + 1}%05d-${newToken()}"
     val kCols = splitKeyCols(bc)
     val newDvs = touched.zipWithIndex.flatMap { case ((e, ks), i) =>
       val prior = dvByEntry.get(e)
@@ -769,28 +751,17 @@ object Versioned {
       touched.flatMap { case (e, _) => dvByEntry.get(e) }.map(_.n).sum
     val touchedSet = touched.map(_._1).toSet
     val touchedBuckets = touchedSet.flatMap(bucketOf)
-    var committed = -1
-    var v = versions(spark, dir).last + 1
-    while (committed < 0) {
-      val parent = readManifest(spark, dir, v - 1)
-      def conflict(why: String): Nothing =
-        throw new java.util.ConcurrentModificationException(
-          s"deletion-vector commit at $dir conflicts with a concurrent " +
-            s"commit: $why — recompute against the current version and retry")
+    publishNext(spark, dir, "deletion-vector commit") { parent =>
+      val p = parent.get // base exists, so every later version has a parent
       // a concurrent DV landing on a touched entry conflicts through
       // retryConflict's own DV-delta clause (folding from a stale base
       // would silently drop the other writer's keys) — one formulation,
       // shared with every replace commit
-      retryConflict(Some(base), parent, touchedSet, touchedBuckets,
-        Some(bc), Some(n)).foreach(conflict)
-      val dvs = parent.dvs.filterNot(d => touchedSet.contains(d.entry)) ++
-        newDvs
-      val m = Manifest(v, parent.dataDirs, parent.nRows - nRemoved,
-        epochId, appId, Some(bc), Some(n), dvs)
-      if (writeAndPublish(spark, f, dir, m, token)) committed = v
-      else v += 1
+      retryConflict(Some(base), p, touchedSet, touchedBuckets, Some(bc),
+        Some(n)).toLeft(Manifest(0, p.dataDirs, p.nRows - nRemoved, epochId,
+        appId, Some(bc), Some(n),
+        p.dvs.filterNot(d => touchedSet.contains(d.entry)) ++ newDvs))
     }
-    committed
   }
 
   /** Lexicographic comparison of byte arrays as UNSIGNED bytes — the
@@ -1089,42 +1060,38 @@ object Versioned {
   }
 
   /** Fold an append chain back into one directory: commits the current
-    * contents as a fresh SNAPSHOT version (one data dir), after which
-    * `vacuum` can reclaim the fragment directories once older versions
-    * age out of retention. The versioned-table answer to small-files
-    * buildup from per-batch appends (Export.compact's job, done as a
-    * commit instead of an in-place rewrite).
+    * contents as a replace of every directory of the latest version, after
+    * which `vacuum` can reclaim the fragment directories once older
+    * versions age out of retention. The versioned-table answer to
+    * small-files buildup from per-batch appends (Export.compact's job,
+    * done as a commit instead of an in-place rewrite).
     */
   def compactCommit(spark: SparkSession, dir: String,
                     targetBytes: Long = 256L << 20): Int = {
-    val m = {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed versions at $dir")
-      readManifest(spark, dir, vs.last)
+    val m = manifest(spark, dir)
+    val layout = for (bc <- m.bucketCol; n <- m.nBuckets) yield (bc, n)
+    val rows = layout match {
+      // a bucketed table compacts INTO its bucket layout (one fresh dir
+      // per bucket) so subsequent replace commits keep their file-level
+      // granularity — folding to a single plain dir would force the next
+      // CDC batch through a full re-bucketing migration
+      case Some(_) => read(spark, dir)
+      case None =>
+        val f = fs(spark, dir)
+        val bytes = m.dataDirs.map { d =>
+          val p = new Path(d)
+          if (f.exists(p)) f.getContentSummary(p).getLength else 0L
+        }.sum
+        read(spark, dir).repartition(
+          math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt)
     }
-    val f = fs(spark, dir)
-    val bytes = m.dataDirs.map { d =>
-      val p = new Path(d)
-      if (f.exists(p)) f.getContentSummary(p).getLength else 0L
-    }.sum
-    val parts = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt
-    (m.bucketCol, m.nBuckets) match {
-      case (Some(bc), Some(n)) =>
-        // a bucketed table compacts INTO its bucket layout (one fresh dir
-        // per bucket) so subsequent replace commits keep their file-level
-        // granularity — folding to a single plain dir would force the next
-        // CDC batch through a full re-bucketing migration
-        val v = versions(spark, dir).last + 1
-        val token = java.util.UUID.randomUUID.toString.take(8)
-        val dataDir = f"$dir/data/v$v%05d-$token"
-        val newDirs = writeBucketed(read(spark, dir), dataDir, bc, n)
-        val newRows = newDirs.map(graft.Tables.footerRowCount(spark, _)).sum
-        commitDirs(spark, dir, newDirs, newRows,
-          m.dataDirs.toSet, m.nRows, bucketCol = Some(bc), nBuckets = Some(n),
-          baseVersion = Some(m.version))
-      case _ =>
-        commit(read(spark, dir).repartition(parts), dir)
-    }
+    val (newDirs, newRows) = writeData(rows, dir, layout)
+    // a replace of every dir of version m, not a snapshot: a commit that
+    // lands between the manifest read and the publish (an append) must
+    // conflict, not drop out of the latest version
+    commitDirs(spark, dir, newDirs, newRows, m.dataDirs.toSet, m.nRows,
+      bucketCol = layout.map(_._1), nBuckets = layout.map(_._2),
+      baseVersion = Some(m.version))
   }
 
   /** Drop data directories referenced by NO retained manifest and delete

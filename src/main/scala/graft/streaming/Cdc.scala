@@ -355,21 +355,14 @@ object Cdc {
                              nBuckets: Int, maxRecordsPerFile: Long,
                              bcJoined: String): Unit = {
     val spark = compacted.sparkSession
-    val tableVersions = Versioned.versions(spark, tableDir)
-
     // the parent layout decides the apply granularity: a bucketed parent
     // gets a file-level replace commit; anything else (fresh table, or a
     // table last written by plain snapshot commits) gets a one-time full
     // rewrite INTO the bucketed layout
-    val parentM =
-      if (tableVersions.isEmpty) None
-      else Some(Versioned.manifest(spark, tableDir))
-    val layout = parentM.flatMap(m =>
-      for {
-        bc <- m.bucketCol if bc == bcJoined
-        n <- m.nBuckets
-        if m.dataDirs.forall(d => Versioned.bucketOf(d).isDefined)
-      } yield (m, n))
+    val parentM = Versioned.versions(spark, tableDir).lastOption
+      .map(v => Versioned.manifest(spark, tableDir, Some(v)))
+    val layout = parentM.flatMap(m => Versioned.bucketLayout(m)
+      .collect { case (bc, n) if bc == bcJoined => (m, n) })
 
     layout match {
       case Some((m, n)) =>
@@ -476,15 +469,13 @@ object Cdc {
         }
         val merged = Lakehouse.mergeUpsertKeyed(base, compacted, keys,
           valueCols).drop("src")
-        val v = tableVersions.last + 1
-        val token = java.util.UUID.randomUUID.toString.take(8)
-        val dataDir = f"$tableDir/data/v$v%05d-$token"
-        val fresh = Versioned.writeBucketed(merged, dataDir, bcJoined, n,
-          maxRecordsPerFile)
+        val (fresh, freshRows) = Versioned.writeData(merged, tableDir,
+          Some((bcJoined, n)), maxRecordsPerFile)
         val newDirs = fresh ++ carriedFiles
         // exact row bookkeeping from parquet FOOTERS — metadata reads,
         // no second scan of the touched data
-        val newRows = newDirs.map(graft.Tables.footerRowCount(spark, _)).sum
+        val newRows = freshRows +
+          carriedFiles.map(graft.Tables.footerRowCount(spark, _)).sum
         // logical rows of a replaced entry = its footer rows minus the
         // rows its deletion vector hid
         val replacedRows =
@@ -504,17 +495,13 @@ object Cdc {
         }
         val merged = Lakehouse.mergeUpsertKeyed(base, compacted, keys,
           valueCols).drop("src")
-        val v = tableVersions.lastOption.getOrElse(0) + 1
-        val token = java.util.UUID.randomUUID.toString.take(8)
-        val dataDir = f"$tableDir/data/v$v%05d-$token"
-        val newDirs = Versioned.writeBucketed(merged, dataDir, bcJoined,
-          nBuckets, maxRecordsPerFile)
-        val newRows = newDirs.map(graft.Tables.footerRowCount(spark, _)).sum
+        val (newDirs, newRows) = Versioned.writeData(merged, tableDir,
+          Some((bcJoined, nBuckets)), maxRecordsPerFile)
         Versioned.commitDirs(spark, tableDir, newDirs, newRows,
           parentM.map(_.dataDirs.toSet).getOrElse(Set.empty),
           parentM.map(_.nRows).getOrElse(0L), epochId, appId,
           bucketCol = Some(bcJoined), nBuckets = Some(nBuckets),
-          baseVersion = Some(parentM.map(_.version).getOrElse(0)))
+          baseVersion = parentM.map(_.version))
     }
   }
 }

@@ -404,7 +404,7 @@ class VersionedSpec extends AnyFunSuite {
     Versioned.compactCommit(spark, dir)
     intercept[java.util.ConcurrentModificationException] {
       Versioned.commitDirs(spark, dir, Seq.empty, 0L,
-        m.dataDirs.toSet, m.nRows)
+        m.dataDirs.toSet, m.nRows, baseVersion = Some(m.version))
     }
   }
 
@@ -1223,7 +1223,7 @@ class VersionedSpec extends AnyFunSuite {
     val dataDir = s"$dir/data/v00001-seed"
     val dirs = Versioned.writeBucketed(df, dataDir, "g", 4)
     Versioned.commitDirs(spark, dir, dirs, 64L, Set.empty, 0L,
-      bucketCol = Some("g"), nBuckets = Some(4))
+      bucketCol = Some("g"), nBuckets = Some(4), baseVersion = None)
     val pruned = Versioned.readPruned(spark, dir, "g", Seq("g3"))
     // correctness: exactly g3's rows
     assert(pruned.select("k", "g", "v").as[(Long, String, Long)]
@@ -1481,6 +1481,64 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.versions(spark, dir).last == v4 &&
       Versioned.read(spark, dir).count() == 0)
     assert(Versioned.latestEpochFor(spark, dir, "s").contains(9L))
+    // a no-op delete next to a concurrent bucketed insert keeps the
+    // insert: the delete touches no bucket, so publishing it on top of
+    // the insert is a valid serialization (the insert first). The insert
+    // lands, through `file:`, when the delete creates its temp manifest
+    NonAtomicFs.register(spark)
+    NonAtomicFs.onCreate = Some((_.endsWith(".json.tmp"), () =>
+      Versioned.commit(Seq((5L, "v5")).toDF("k", "v"), dir, append = true): Unit))
+    spark.conf.set(Publish.SingleWriterKey, "true")
+    val v6 = try Versioned.deleteKeys(spark, s"${NonAtomicFs.Scheme}://$dir",
+      Seq(1L), epochId = Some(10L), appId = Some("s"))
+    finally {
+      NonAtomicFs.onCreate = None
+      spark.conf.unset(Publish.SingleWriterKey)
+    }
+    assert(v6 == v4 + 2 && Versioned.versions(spark, dir).last == v6)
+    assert(Versioned.read(spark, dir).select("k", "v").as[(Long, String)]
+      .collect().toSeq == Seq((5L, "v5")))
+    assert(Versioned.manifest(spark, dir).nRows == 1)
+    assert(Versioned.latestEpochFor(spark, dir, "s").contains(10L))
+  }
+
+  test("a compaction racing an append conflicts instead of dropping the append") {
+    import spark.implicits._
+    NonAtomicFs.register(spark)
+    val dir = NonAtomicFs.tempDir("cpr")
+    spark.conf.set(Publish.SingleWriterKey, "true")
+    try {
+      Versioned.commit(Seq((1L, "a")).toDF("k", "v"), dir)
+      Versioned.commit(Seq((2L, "b")).toDF("k", "v"), dir, append = true)
+      // the append lands, through `file:`, between the compaction's
+      // manifest read and its publish: it takes v3, the compaction's
+      // publish loses and meets the append as its new parent
+      NonAtomicFs.onCreate = Some((_.endsWith(".json.tmp"), () =>
+        Versioned.commit(Seq((3L, "c")).toDF("k", "v"),
+          dir.stripPrefix(s"${NonAtomicFs.Scheme}://"), append = true): Unit))
+      intercept[java.util.ConcurrentModificationException] {
+        Versioned.compactCommit(spark, dir)
+      }
+      assert(Versioned.versions(spark, dir) == Seq(1, 2, 3))
+      assert(Versioned.read(spark, dir).select("k").as[Long].collect()
+        .sorted.toSeq == Seq(1L, 2L, 3L))
+      // recomputed against the current version, it folds all three
+      assert(Versioned.compactCommit(spark, dir) == 4)
+    } finally {
+      NonAtomicFs.onCreate = None
+      spark.conf.unset(Publish.SingleWriterKey)
+    }
+    val m = Versioned.manifest(spark, dir)
+    assert(m.dataDirs.size == 1 && m.nRows == 3)
+  }
+
+  test("no main source but the commit loop publishes a Versioned manifest") {
+    // snapshot, append, replace, compaction, deletion vector and CDC
+    // apply all form their manifest inside publishNext's one loop
+    val hits = TestSpark.mainSourceHits(skip = "")((_, line) =>
+      line.contains("writeAndPublish(") && !line.contains("def writeAndPublish("))
+    assert(hits.size == 1 && hits.head.contains("Versioned.scala"),
+      hits.mkString("\n"))
   }
 
   test("two stale DVs on one bucket never mask a re-inserted key (per-entry masking)") {
