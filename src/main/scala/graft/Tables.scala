@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.StructType
@@ -25,10 +30,10 @@ object Tables {
 
   /** The one JVM-global metadata memo: an LRU map that evicts its least
     * recently used entry past [[Memo.Bound]] entries. The parquet schema
-    * memo, [[spread]]'s partition counts and `Versioned`'s version schemas
-    * share it, their keys tagged apart. File metadata is checked against
-    * a [[listing]] token of the frame being built, so an in-place rewrite
-    * re-derives instead of serving stale metadata. Values are computed
+    * memo, [[scanPartitions]]' partition counts and `Versioned`'s version
+    * schemas share it, their keys tagged apart. File metadata is checked
+    * against a [[listing]] token of the frame being built, so an in-place
+    * rewrite re-derives instead of serving stale metadata. Values are computed
     * outside the lock (they may run Spark jobs); racing misses both
     * compute the same value.
     */
@@ -126,16 +131,22 @@ object Tables {
     */
   def spread(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    // `.rdd.getNumPartitions` plans a SEPARATE physical query per call
-    // (~40-50 ms of driver time); the count is a function of the scanned
-    // files and the session's split/parallelism confs, so memoize it per
-    // (roots, want, listing token). Frames with no file relation plan.
-    val n = listing(df) match {
+    if (scanPartitions(df) < want) df.repartition(want) else df
+  }
+
+  /** Partitions a scan of `df` splits into. `.rdd.getNumPartitions` plans
+    * a SEPARATE physical query per call (~40-50 ms of driver time); the
+    * count is a function of the scanned files and the session's
+    * split/parallelism confs, so it is memoized per (roots, parallelism,
+    * listing token). Frames with no file relation plan on every call.
+    */
+  def scanPartitions(df: DataFrame): Int = {
+    val want = df.sparkSession.sparkContext.defaultParallelism
+    listing(df) match {
       case Some((roots, token)) =>
         Memo.getOrElseUpdate(("parts", roots, want, token))(df.rdd.getNumPartitions)
       case None => df.rdd.getNumPartitions
     }
-    if (n < want) df.repartition(want) else df
   }
 
   /** Root directory for every persisted standing index (MinHash/SimHash
@@ -270,6 +281,14 @@ object Tables {
     r.load(path)
   }
 
+  /** A footer reader for one parquet file under `conf`. The one-argument
+    * `ParquetFileReader.open` builds a fresh Hadoop `Configuration` for
+    * every file, re-parsing its XML defaults (about 10 ms each); every
+    * footer read in `src/main` opens through here instead.
+    */
+  def openParquet(conf: Configuration, file: InputFile): ParquetFileReader =
+    ParquetFileReader.open(file, HadoopReadOptions.builder(conf).build())
+
   /** Row count from parquet FOOTERS only — driver-side metadata reads, no
     * Spark job, no data scan. The cheap-count primitive behind the CLI's
     * `estimate` (dbcut `--estimate` reads information_schema stats,
@@ -294,8 +313,7 @@ object Tables {
     (if (root.isDirectory) visible(p) else Iterator(root))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = openParquet(conf, HadoopInputFile.fromStatus(st, conf))
         try r.getRecordCount finally r.close()
       }.sum
   }
@@ -317,8 +335,7 @@ object Tables {
     var mn = Double.MaxValue
     var mx = Double.MinValue
     for (st <- files) {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openParquet(conf, HadoopInputFile.fromStatus(st, conf))
       try {
         val blocks = r.getFooter.getBlocks
         val it = blocks.iterator()

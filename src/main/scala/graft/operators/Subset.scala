@@ -3,9 +3,10 @@ package graft.operators
 import graft.Tables
 import graft.model.{FK, RelGraph}
 import graft.spec._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 /** Referentially-consistent subset extraction — the heart of the reference
   * (`/root/reference/dbcut/query.py:146-239,352-445`), re-expressed as
@@ -38,13 +39,20 @@ import org.apache.spark.sql.expressions.Window
   *     paths and can leave dangling FKs (it reinjects with FK checks
   *     disabled, `cli/operations.py:84-139`); graft guarantees integrity.
   *
-  * Scale posture: key sets are bounded by construction (root `limit` ×
-  * `backrefLimit` fan-out), so every closure step is a semi-join against a
-  * small key set — AQE turns those into broadcast joins at runtime. The
-  * closure runs in steps — one per BFS level, one per re-closure rank batch
-  * — and each step checkpoints every table it touched in one concurrent
-  * wave, which stops lineage growth; nothing is ever collected to the
-  * driver.
+  * Scale posture: the closure runs in steps — one per BFS level, one per
+  * re-closure rank batch — and each step checkpoints every table it
+  * touched in one concurrent wave, which stops lineage growth. A bounded
+  * spec (a root `limit`, and every planned backref capped) bounds every
+  * key set by construction (root `limit` × `backrefLimit` fan-out), so it
+  * runs keyed: the job that checkpoints a table also collects its key
+  * columns to the driver — never whole rows — and a pull is a literal
+  * `InSet` filter on the table's scan; a sink, which no pull reads, keeps
+  * that filter lazy and runs no job. An edge falls back to a broadcast
+  * semi-join against the checkpointed source selection when its key set
+  * exceeds [[LiteralKeyCap]], when a key column is float, double or a
+  * collated string, or when child and parent key types differ. Any other
+  * spec collects nothing to the driver: every pull is a semi-join against
+  * the distinct source keys, planned by AQE at runtime.
   */
 object Subset {
 
@@ -158,7 +166,7 @@ object Subset {
     */
   def applyRootQuery(spark: SparkSession, sfDir: String, spec: QuerySpec, graph: RelGraph): DataFrame = {
     val root = Tables.load(spark, sfDir, spec.from).alias(spec.from)
-    val rootCols = Tables.load(spark, sfDir, spec.from).columns
+    val rootCols = root.columns
 
     val filtered = spec.where match {
       case None => root
@@ -247,98 +255,242 @@ object Subset {
   def merge(graph: RelGraph, t: String)(cur: DataFrame, add: DataFrame): DataFrame =
     cur.unionByName(add).dropDuplicates(graph.pkOf(t, cur.columns.toSeq))
 
+  /** Most distinct keys one literal `InSet` pull carries. Past it a
+    * broadcast semi-join is cheaper: on local[4], a 1k-key filter beat
+    * the join (146 vs 157 ms), a 10k-key one took 1.5× its time, a
+    * 100k-key one 3.7×.
+    */
+  private[graft] val LiteralKeyCap = 1000
+
+  /** Whether key columns of type `t` may pull through a literal `InSet`.
+    * A collated string may not: its equality is not binary. Nor may a
+    * float or double key, whose join equality normalizes −0.0 to 0.0 and
+    * NaN to NaN; Spark 4.1's `InSet` happens to match both the same way,
+    * but the semi-join guarantees it by construction.
+    */
+  private[graft] def literalKeyType(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType | StringType |
+         DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+    case _ => false
+  }
+
+  /** One pull into `to`: its rows whose `toCols` match the `fromCols` of
+    * `from`'s selection, capped per parent when it is a backref.
+    */
+  private final case class Pull(from: String, to: String, fromCols: Seq[String],
+      toCols: Seq[String], backref: Boolean)
+
+  /** An addition to a target's selection. `keys`, when present, are the
+    * keys of a literal join pull, none of them selected before.
+    */
+  private final case class Add(df: DataFrame, keys: Option[Set[Seq[Any]]] = None)
+
+  private def pullOf(e: TreeEdge): Pull =
+    if (e.backref) Pull(e.from, e.to, e.fk.parentCols, e.fk.childCols, backref = true)
+    else Pull(e.from, e.to, e.fk.childCols, e.fk.parentCols, backref = false)
+
   /** Phases 2+3 — run the closure and return per-table selected rows.
     *
     * The closure runs in steps: each BFS level, and each rank batch of the
-    * re-closure, is one step. A step folds its pulls into their targets in
-    * sorted edge order on the caller thread, so results stay deterministic,
-    * then checkpoints every table it touched in ONE concurrent wave: each
-    * checkpoint is its own small Spark job, and submitting them from one
-    * thread serializes the cluster — on local[n] that is per-job overhead ×
+    * re-closure, is one step. A step plans its pulls per target in sorted
+    * order on the caller thread, so results stay deterministic, then
+    * materializes every table it touched in ONE concurrent wave: each is
+    * its own small Spark job, and submitting them from one thread
+    * serializes the cluster — on local[n] that is per-job overhead ×
     * #tables of wall clock, on a real cluster it is idle executors.
+    *
+    * Keyed (see the header), the driver holds each materialized table's
+    * key columns: its FK columns to included parents, and the columns its
+    * backrefs and incoming FKs match. A join pull carries only keys its
+    * target has not selected, and the pulls into one target on the same
+    * columns fold into one filter; a pull with no such key runs nothing.
+    * A sink — a table no pull reads, whose incoming FKs all match one set
+    * of columns — keeps a literal pull lazy: the driver already knows the
+    * keys it asked for, and the consumer's job evaluates the filter.
+    * Unkeyed, a pull is a semi-join against the distinct source keys and
+    * every checkpoint is eager.
     */
   def extract(spark: SparkSession, sfDir: String, spec: QuerySpec,
               graph: RelGraph = RelGraph.tpch): Extraction = {
-    // phase profiler (dbcut --profiler analogue): localCheckpoint is eager,
-    // so per-phase wall times reflect real compute, not just plan building
+    // phase profiler (dbcut --profiler analogue): every step materializes
+    // what it touched, so per-phase wall times reflect real compute, not
+    // just plan building
     val phase = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     def timed[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       phase(name) = (System.nanoTime() - t0) / 1000000; r
     }
     val p = timed("plan")(plan(spec, graph))
-    val load: String => DataFrame = name => Tables.load(spark, sfDir, name)
-    val sel = scala.collection.mutable.Map[String, DataFrame](
-      spec.from -> timed("root")(
-        applyRootQuery(spark, sfDir, spec, p.graph).localCheckpoint()))
-    // selection versions, bumped once per step that touches a table: lets
+    // one scan plan per table: literal filters never self-join, and the
+    // analyzer re-instances the scan a fallback semi-join meets twice
+    val loads = scala.collection.mutable.Map.empty[String, DataFrame]
+    def load(t: String): DataFrame = loads.getOrElseUpdate(t, Tables.load(spark, sfDir, t))
+    val sel = scala.collection.mutable.Map.empty[String, DataFrame]
+    // selection versions, bumped once per step that changes a table: lets
     // the re-closure pass skip join edges that phase 2 already evaluated
     // against the final child selection
-    val version = scala.collection.mutable.Map(spec.from -> 1).withDefaultValue(0)
+    val version = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     val joinEdgeSeenAt = scala.collection.mutable.Map.empty[(String, FK), Int]
+    val included = p.tables.toSet
+    def joinsOf(t: String): Seq[FK] =
+      if (p.graph.tables.contains(t)) p.graph.joinEdges(t).filter(fk => included(fk.parent))
+      else Nil
 
-    // Broadcast the key side only when the spec truly bounds it: a root
-    // limit AND bounded backref fan-out (no backref edge in the PLAN, or
-    // a per-parent cap). Decided from the planned edges, not the raw
-    // spec depths — `include` overrides backrefDepth to unlimited inside
+    // Keyed only when the spec truly bounds every key set: a root limit
+    // AND bounded backref fan-out (no backref edge in the PLAN, or a
+    // per-parent cap). Decided from the planned edges, not the raw spec
+    // depths — `include` overrides backrefDepth to unlimited inside
     // plan(), so a spec declaring backrefDepth=0 can still traverse
-    // uncapped backrefs, and broadcasting that key set is exactly the
+    // uncapped backrefs, and holding that key set is exactly the
     // driver-OOM this guard exists to prevent. Otherwise leave the join
     // strategy to AQE, which broadcasts at runtime if the set turns out
     // small and falls back to a shuffled hash join if not.
-    val boundedKeys = spec.limit.isDefined &&
+    val keyed = spec.limit.isDefined &&
       (!p.edges.exists(_.backref) || spec.backrefLimit.isDefined)
-    def keySide(keys: DataFrame): DataFrame =
-      if (boundedKeys) broadcast(keys) else keys
-
-    /** Lazy plan for the parents of `src`'s rows: parent ⋉ child-FK keys. */
-    def parentsOf(src: DataFrame, fk: FK): DataFrame = {
-      val keys = src.select(fk.childCols.map(col): _*).na.drop().distinct()
-      val parent = load(fk.parent)
-      val on = fk.childCols.zip(fk.parentCols).map { case (c, pc) =>
-        keys(c) === parent(pc)
-      }.reduce(_ && _)
-      parent.join(keySide(keys), on, "left_semi")
+    def backrefCols(t: String): Seq[Seq[String]] =
+      p.edges.filter(e => e.backref && e.from == t).map(_.fk.parentCols)
+    def incomingCols(t: String): Seq[Seq[String]] =
+      p.tables.flatMap(joinsOf).filter(_.parent == t).map(_.parentCols).distinct
+    val keyCols: Map[String, Seq[String]] =
+      if (!keyed) Map.empty
+      else p.tables.map(t => t -> (joinsOf(t).flatMap(_.childCols) ++
+        backrefCols(t).flatten ++ incomingCols(t).flatten).distinct).toMap
+    // A sink is a table no pull ever reads: no FK to an included parent,
+    // no backref from it, and one set of columns its incoming FKs match.
+    // Its key columns are those, so a literal pull into it tells the
+    // driver its keys without a job, and its selection can stay a lazy
+    // filter on its scan, evaluated by the job that consumes it.
+    val sinks: Set[String] = keyCols.keySet.filter(t =>
+      joinsOf(t).isEmpty && backrefCols(t).isEmpty && incomingCols(t).size == 1)
+    // keyed: keyCols(t) of every row selected in t (for a sink, of every
+    // key requested from it)
+    val held = scala.collection.mutable.Map.empty[String, Array[Row]]
+    def heldKeys(t: String, cols: Seq[String]): Set[Seq[Any]] = {
+      val ix = cols.map(keyCols(t).indexOf(_))
+      held.getOrElse(t, Array.empty[Row]).iterator.map(r => ix.map(r.get))
+        .filterNot(_.contains(null)).toSet
     }
 
-    /** Lazy plan for one edge pull against a source-selection snapshot. */
-    def pullEdge(e: TreeEdge, src: DataFrame): DataFrame =
-      if (!e.backref) parentsOf(src, e.fk)
+    /** Checkpoint `df` as `t`'s selection: one Spark job, plus any its
+      * exchanges plan. Keyed, the checkpoint stays lazy and the action
+      * that collects `t`'s key columns fills its blocks: rows stay on the
+      * executors, and only key columns reach the driver.
+      */
+    def materialize(t: String, df: DataFrame): (DataFrame, Array[Row]) =
+      if (!keyed) (df.localCheckpoint(), Array.empty)
       else {
-        // backref edge: children of selected parents, capped per parent
-        val keys = src.select(e.fk.parentCols.map(col): _*).distinct()
-        val child = load(e.to)
-        val on = e.fk.childCols.zip(e.fk.parentCols).map { case (c, pc) =>
-          child(c) === keys(pc)
-        }.reduce(_ && _)
-        val pulled = child.join(keySide(keys), on, "left_semi")
-        spec.backrefLimit match {
-          case Some(lim) =>
-            val w = Window.partitionBy(e.fk.childCols.map(col): _*)
-              .orderBy(p.graph.pkOf(e.to, child.columns.toSeq).map(col(_).asc): _*)
-            pulled.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") <= lim).drop("__rn")
-          case None => pulled
-        }
+        val cp = df.localCheckpoint(eager = false)
+        (cp, cp.select(keyCols(t).map(col): _*).collect())
       }
 
-    /** One closure step over (target, pull) pairs in sorted edge order. A
-      * table with no selection that gets one pull takes the plain pull;
-      * every other target merges its pulls in. Then every touched table is
-      * checkpointed in one wave and its version bumped once — selections
-      * are tiny by construction, and every later plan (next step, summary)
-      * restarts from checkpointed blocks instead of one deep AQE lineage.
-      * Returns the targets that took a plain pull.
+    def semiJoin(pl: Pull, keys: DataFrame): DataFrame = {
+      val target = load(pl.to)
+      val on = pl.toCols.zip(pl.fromCols).map { case (tc, fc) =>
+        target(tc) === keys(fc)
+      }.reduce(_ && _)
+      target.join(keys, on, "left_semi")
+    }
+
+    /** A backref pull keeps at most `backrefLimit` children per parent,
+      * in child-PK order. Keyed, a child read in one scan split needs no
+      * exchange for the window: one partition already clusters its
+      * parents, so it coalesces instead of shuffling.
       */
-    def step(pulls: Seq[(String, DataFrame)]): Set[String] = {
-      val byTarget = pulls.groupBy(_._1).toSeq.sortBy(_._1)
-      val fresh = byTarget.collect { case (t, Seq(_)) if !sel.contains(t) => t }.toSet
-      val merged = byTarget.map { case (t, adds) =>
-        t -> (sel.get(t).toSeq ++ adds.map(_._2)).reduceLeft(merge(p.graph, t))
+    def capped(pl: Pull, pulled: DataFrame): DataFrame = spec.backrefLimit match {
+      case Some(lim) if pl.backref =>
+        val w = Window.partitionBy(pl.toCols.map(col): _*)
+          .orderBy(p.graph.pkOf(pl.to, load(pl.to).columns.toSeq).map(col(_).asc): _*)
+        val in =
+          if (keyed && Tables.scanPartitions(load(pl.to)) == 1) pulled.coalesce(1) else pulled
+        in.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") <= lim).drop("__rn")
+      case _ => pulled
+    }
+
+    /** Keyed fallback: a broadcast semi-join against the checkpointed
+      * source selection.
+      */
+    def fallback(pl: Pull): DataFrame =
+      capped(pl, semiJoin(pl, broadcast(sel(pl.from).select(pl.fromCols.map(col): _*))))
+
+    /** Keyed additions to `t` from its pulls. */
+    def keyedAdds(t: String, pulls: Seq[Pull]): Seq[Add] = {
+      val target = load(t)
+      def literal(ps: Seq[Pull], keys: Set[Seq[Any]]): Boolean =
+        keys.size <= LiteralKeyCap && ps.forall(pl => pl.toCols.zip(pl.fromCols).forall {
+          case (tc, fc) =>
+            val tt = target.schema(tc).dataType
+            literalKeyType(tt) && sel(pl.from).schema(fc).dataType == tt
+        })
+      def filtered(cols: Seq[String], keys: Set[Seq[Any]]): DataFrame =
+        target.where(GraftSqlBridge.inSet(cols.map(target(_)),
+          cols.map(target.schema(_).dataType), keys))
+      val (backrefs, joins) = pulls.partition(_.backref)
+      val joinAdds = joins.groupBy(_.toCols).toSeq.sortBy(_._1.mkString(",")).flatMap {
+        case (cols, ps) =>
+          val have = heldKeys(t, cols)
+          val missing = ps.flatMap(pl => heldKeys(pl.from, pl.fromCols)).toSet -- have
+          if (missing.isEmpty) Nil
+          else if (literal(ps, missing)) Seq(Add(filtered(cols, missing), Some(missing)))
+          else ps.filterNot(pl => heldKeys(pl.from, pl.fromCols).subsetOf(have))
+            .map(pl => Add(fallback(pl)))
       }
-      graft.Wave.run(merged) { case (t, df) => t -> df.localCheckpoint() }
-        .foreach { case (t, df) => sel(t) = df; version(t) += 1 }
+      joinAdds ++ backrefs.flatMap { pl =>
+        val keys = heldKeys(pl.from, pl.fromCols)
+        if (keys.isEmpty) None
+        else if (literal(Seq(pl), keys)) Some(Add(capped(pl, filtered(pl.toCols, keys))))
+        else Some(Add(fallback(pl)))
+      }
+    }
+
+    /** AQE path: a semi-join against the distinct source keys. */
+    def aqePull(pl: Pull): DataFrame =
+      capped(pl, semiJoin(pl,
+        sel(pl.from).select(pl.fromCols.map(col): _*).na.drop().distinct()))
+
+    /** One closure step over `pulls`, planned against the selections as
+      * they stand before it. A target's additions are unioned into its
+      * selection, deduped through [[merge]] unless they provably hold no
+      * row twice: a lone addition to an empty target, or one literal
+      * join pull of only unselected keys. Then every touched table is
+      * materialized in one wave and its version bumped once — selections
+      * are tiny by construction, and every later plan (next step,
+      * summary) restarts from checkpointed blocks instead of one deep AQE
+      * lineage. Keyed, a target that nothing reaches takes an empty
+      * selection, and a sink that takes one literal join pull keeps its
+      * selection lazy; neither runs a job. Returns the targets that took
+      * a lone pull into an empty selection.
+      */
+    def step(pulls: Seq[Pull]): Set[String] = {
+      val byTarget = pulls.groupBy(_.to).toSeq.sortBy(_._1)
+      val fresh = byTarget.collect { case (t, Seq(_)) if !sel.contains(t) => t }.toSet
+      val planned = byTarget.map { case (t, ps) =>
+        t -> (if (keyed) keyedAdds(t, ps) else ps.map(pl => Add(aqePull(pl))))
+      }
+      val merged = planned.collect { case (t, adds) if adds.nonEmpty =>
+        val dfs = sel.get(t).toSeq ++ adds.map(_.df)
+        (t, adds, if (adds.size == 1 && (!sel.contains(t) || adds.head.keys.isDefined))
+          dfs.reduce(_ unionByName _) else dfs.reduceLeft(merge(p.graph, t)))
+      }
+      for ((t, adds) <- planned if adds.isEmpty && !sel.contains(t)) {
+        sel(t) = load(t).where(lit(false)); version(t) += 1
+      }
+      val (lazySinks, touched) = merged.partition { case (t, adds, _) =>
+        sinks(t) && adds.size == 1 && adds.head.keys.isDefined
+      }
+      for ((t, adds, df) <- lazySinks) {
+        sel(t) = df; version(t) += 1
+        held(t) = held.getOrElse(t, Array.empty[Row]) ++ adds.head.keys.get.map(Row.fromSeq)
+      }
+      graft.Wave.run(touched) { case (t, _, df) => t -> materialize(t, df) }
+        .foreach { case (t, (df, keys)) => sel(t) = df; held(t) = keys; version(t) += 1 }
       fresh
+    }
+
+    timed("root") {
+      val (df, keys) = materialize(spec.from,
+        applyRootQuery(spark, sfDir, spec, p.graph))
+      sel(spec.from) = df; held(spec.from) = keys; version(spec.from) = 1
     }
 
     // Phase 2: level-by-level with snapshot semantics — every pull of a
@@ -346,10 +498,11 @@ object Subset {
     for ((lvl, levelEdges) <- p.edges.groupBy(_.level).toSeq.sortBy(_._1))
       timed(s"level_$lvl") {
         val ordered = levelEdges.sortBy(e => (e.from, e.to))
-        ordered.foreach(e =>
-          if (!e.backref) joinEdgeSeenAt((e.from, e.fk)) = version(e.from))
-        val fresh = step(ordered.map(e => e.to -> pullEdge(e,
-          sel.getOrElse(e.from, sys.error(s"edge source ${e.from} not yet selected")))))
+        ordered.foreach { e =>
+          if (!sel.contains(e.from)) sys.error(s"edge source ${e.from} not yet selected")
+          if (!e.backref) joinEdgeSeenAt((e.from, e.fk)) = version(e.from)
+        }
+        val fresh = step(ordered.map(pullOf))
         // A backref pull that alone CREATES its child's selection also
         // proves the reverse join edge complete: every pulled row's FK
         // value is a PK of the (monotone, union-only) parent selection it
@@ -371,7 +524,6 @@ object Subset {
     // each batch is one step; on the TPC-H graph this folds {orders, part,
     // supplier} into a single wave. Results are identical to the serial
     // child-before-parent walk.
-    val included = p.tables.toSet
     timed("reclosure") {
       val inc = p.graph.reverseTopological.filter(included)
       val rank = scala.collection.mutable.LinkedHashMap.empty[String, Int]
@@ -385,9 +537,8 @@ object Subset {
       for ((_, batch) <- rank.toSeq.groupBy(_._2).toSeq.sortBy(_._1))
         step(for {
           t <- batch.map(_._1).sorted if sel.contains(t)
-          fk <- p.graph.joinEdges(t)
-          if included(fk.parent) && !joinEdgeSeenAt.get((t, fk)).contains(version(t))
-        } yield fk.parent -> parentsOf(sel(t), fk))
+          fk <- joinsOf(t) if !joinEdgeSeenAt.get((t, fk)).contains(version(t))
+        } yield Pull(t, fk.parent, fk.childCols, fk.parentCols, backref = false))
     }
 
     Extraction(spec, p, sel.toMap, phase.toMap)
@@ -397,7 +548,6 @@ object Subset {
     * row count and a PK checksum. Deterministic and cheap to compare.
     */
   def summary(e: Extraction): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
     // ONE tagged union + ONE group-by instead of a single-partition
     // aggregate per table: the per-table form paid one AQE stage (a
     // scheduler round-trip) per table; here every table's rows map to

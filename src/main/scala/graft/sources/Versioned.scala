@@ -824,9 +824,8 @@ object Versioned {
       file: String, key: String, keys: Seq[Any]): Boolean = {
     import scala.jdk.CollectionConverters._
     val cols = splitKeyCols(key)
-    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(file), conf))
+    val rd = graft.Tables.openParquet(conf,
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf))
     try {
       rd.getFooter.getBlocks.asScala.exists { blk =>
         val byCol = blk.getColumns.asScala

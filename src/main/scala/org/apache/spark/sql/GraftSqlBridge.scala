@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{CreateStruct, Expression, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.DataType
 
 /** Minimal bridge into `private[sql]` surface — the standard pattern for
   * Spark extension libraries that build custom logical plans (Column ↔
@@ -22,6 +24,25 @@ object GraftSqlBridge {
     classic.ColumnNodeToExpressionConverter(c.node)
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** `cols` IN `keys` as one `InSet` node, whose plan does not grow with
+    * the key count as `Column.isin`'s does. One column tests its value
+    * (and pushes into a parquet scan); several test the struct of their
+    * values. Each key holds one external value per column, converted to
+    * its column's type in `types`.
+    */
+  def inSet(cols: Seq[Column], types: Seq[DataType], keys: Iterable[Seq[Any]]): Column = {
+    val convert = types.map(CatalystTypeConverters.createToCatalystConverter)
+    val values = keys.iterator.map { k =>
+      val v = k.zip(convert).map { case (x, f) => f(x) }
+      if (v.size == 1) v.head else InternalRow.fromSeq(v)
+    }.toSet[Any]
+    val child = cols.map(expression) match {
+      case Seq(one) => one
+      case many => CreateStruct(many)
+    }
+    column(InSet(child, values))
+  }
 
   def logicalPlan(df: Dataset[_]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan

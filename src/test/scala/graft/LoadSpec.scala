@@ -55,4 +55,21 @@ class LoadSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 10)
     assert(Tables.footerRowCount(spark, dir) == 10)
   }
+
+  test("no main source opens a parquet footer through the one-argument open") {
+    // that overload builds a fresh Hadoop Configuration per file; a call
+    // passes unless its arguments close on the same line after a comma
+    val call = "ParquetFileReader.open("
+    def oneArg(line: String): Boolean = {
+      val i = line.indexOf(call)
+      i >= 0 && {
+        val args = line.substring(i + call.length)
+        val depth = args.scanLeft(0)((d, c) => d + (if (c == '(') 1 else if (c == ')') -1 else 0))
+        val close = depth.indexWhere(_ < 0)
+        close < 0 || !args.take(close - 1).zip(depth).exists { case (c, d) => c == ',' && d == 0 }
+      }
+    }
+    val hits = TestSpark.mainSourceHits(skip = "")((_, line) => oneArg(line))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
