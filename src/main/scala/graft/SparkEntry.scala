@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** All oracle-checked query packs, one per SURVEY §2 group. Cached:
-    * building the packs constructs 155 Q objects with their oracle-SQL
+    * building the packs constructs 156 Q objects with their oracle-SQL
     * strings, and `queries(name)` sits inside Bench/Profile's timed
     * region — a `def` re-paid that construction on every lookup. */
   lazy val packs: Seq[Q] =

@@ -254,6 +254,35 @@ object SpecQueries {
         |include: [region]
         |""".stripMargin)),
 
+    // Unbounded closure: no root limit and an uncapped backref. At sf0.01
+    // lineitem's 1,202 order keys pass the literal cap, so orders takes a
+    // semi-join while part (947 keys) still pulls literally; at sf0.001
+    // every pull is literal.
+    Q("q_subset_unbounded",
+      """WITH root AS (SELECT * FROM supplier WHERE s_nationkey IN (12, 20)),
+        |nat AS (SELECT * FROM nation WHERE n_nationkey IN (SELECT s_nationkey FROM root)),
+        |li AS (SELECT * FROM lineitem WHERE l_suppkey IN (SELECT s_suppkey FROM root)),
+        |reg AS (SELECT * FROM region WHERE r_regionkey IN (SELECT n_regionkey FROM nat)),
+        |ord AS (SELECT * FROM orders WHERE o_orderkey IN (SELECT l_orderkey FROM li)),
+        |part_sel AS (SELECT * FROM part WHERE p_partkey IN (SELECT l_partkey FROM li))
+        |SELECT * FROM (
+        |  SELECT 'supplier' AS tbl, count(*) AS n_rows, CAST(coalesce(sum(s_suppkey),0) AS BIGINT) AS key_sum FROM root
+        |  UNION ALL SELECT 'nation', count(*), CAST(coalesce(sum(n_nationkey),0) AS BIGINT) FROM nat
+        |  UNION ALL SELECT 'lineitem', count(*), CAST(coalesce(sum(l_orderkey + l_linenumber + l_partkey + l_suppkey),0) AS BIGINT) FROM li
+        |  UNION ALL SELECT 'region', count(*), CAST(coalesce(sum(r_regionkey),0) AS BIGINT) FROM reg
+        |  UNION ALL SELECT 'orders', count(*), CAST(coalesce(sum(o_orderkey),0) AS BIGINT) FROM ord
+        |  UNION ALL SELECT 'part', count(*), CAST(coalesce(sum(p_partkey),0) AS BIGINT) FROM part_sel
+        |) ORDER BY tbl""".stripMargin)(
+      subsetQ("""
+        |from: supplier
+        |where:
+        |  s_nationkey: {$in: [12, 20]}
+        |limit: null
+        |join_depth: 2
+        |backref_depth: 1
+        |backref_limit: null
+        |""".stripMargin)),
+
     // Full mixed closure: parents + capped backrefs + parent re-closure of
     // pulled children. Level-by-level derivation documented in Subset.scala;
     // nat0 is the nation selection as of end of level 0 (the snapshot the

@@ -3,7 +3,9 @@ package graft.operators
 import graft.Tables
 import graft.model.{FK, RelGraph}
 import graft.spec._
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -41,18 +43,15 @@ import org.apache.spark.sql.types._
   *
   * Scale posture: the closure runs in steps — one per BFS level, one per
   * re-closure rank batch — and each step checkpoints every table it
-  * touched in one concurrent wave, which stops lineage growth. A bounded
-  * spec (a root `limit`, and every planned backref capped) bounds every
-  * key set by construction (root `limit` × `backrefLimit` fan-out), so it
-  * runs keyed: the job that checkpoints a table also collects its key
-  * columns to the driver — never whole rows — and a pull is a literal
-  * `InSet` filter on the table's scan; a sink, which no pull reads, keeps
-  * that filter lazy and runs no job. An edge falls back to a broadcast
-  * semi-join against the checkpointed source selection when its key set
-  * exceeds [[LiteralKeyCap]], when a key column is float, double or a
-  * collated string, or when child and parent key types differ. Any other
-  * spec collects nothing to the driver: every pull is a semi-join against
-  * the distinct source keys, planned by AQE at runtime.
+  * touched in one concurrent wave, which stops lineage growth. The job
+  * that checkpoints a table also counts its rows and gathers the distinct
+  * keys of each column set a pull reads or matches, never whole rows: at
+  * most [[LiteralKeyCap]] + 1 per partition and set. A set within the cap
+  * is held on the driver, and a pull through it is a literal `InSet`
+  * filter on the target's scan; a sink, which no pull reads, keeps that
+  * filter lazy and runs no job. Any other pull (a set past the cap, a
+  * collated-string key, key types that differ) is a semi-join against
+  * the checkpointed source selection, planned by AQE.
   */
 object Subset {
 
@@ -255,23 +254,50 @@ object Subset {
   def merge(graph: RelGraph, t: String)(cur: DataFrame, add: DataFrame): DataFrame =
     cur.unionByName(add).dropDuplicates(graph.pkOf(t, cur.columns.toSeq))
 
-  /** Most distinct keys one literal `InSet` pull carries. Past it a
-    * broadcast semi-join is cheaper: on local[4], a 1k-key filter beat
-    * the join (146 vs 157 ms), a 10k-key one took 1.5× its time, a
-    * 100k-key one 3.7×.
+  /** Most distinct keys the driver holds per column set of a selection,
+    * and so the most one literal `InSet` pull carries. Past it a
+    * semi-join is cheaper: on local[4], a 1k-key filter beat a broadcast
+    * join (146 vs 157 ms), a 10k-key one took 1.5× its time, a 100k-key
+    * one 3.7×.
     */
   private[graft] val LiteralKeyCap = 1000
 
   /** Whether key columns of type `t` may pull through a literal `InSet`.
-    * A collated string may not: its equality is not binary. Nor may a
-    * float or double key, whose join equality normalizes −0.0 to 0.0 and
-    * NaN to NaN; Spark 4.1's `InSet` happens to match both the same way,
-    * but the semi-join guarantees it by construction.
+    * A collated string may not: its equality is not binary. A float or
+    * double may: held keys are normalized as join keys are, and Spark
+    * 4.1's `InSet` matches a 0.0 key to −0.0 and a NaN key to NaN.
     */
   private[graft] def literalKeyType(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType | BooleanType | StringType |
-         DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+    case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+         BooleanType | StringType | DateType | TimestampType | TimestampNTZType |
+         _: DecimalType => true
     case _ => false
+  }
+
+  /** Distinct non-null keys of one column set, as catalyst values. */
+  private type Keys = Set[GenericInternalRow]
+
+  /** One partition's row count and, per column set (ordinals and types in
+    * its rows), at most `cap` + 1 of its distinct non-null keys, so a set
+    * past the cap shows as one. Float keys are normalized as join keys
+    * are: adding 0.0 turns −0.0 into 0.0, and every NaN compares equal.
+    */
+  private def partitionKeys(sets: Seq[Seq[(Int, DataType)]], cap: Int)(
+      rows: Iterator[InternalRow]): (Long, Seq[Keys]) = {
+    val keys = sets.map(cols => (cols, scala.collection.mutable.HashSet.empty[GenericInternalRow]))
+    var n = 0L
+    for (r <- rows) {
+      n += 1
+      for ((cols, ks) <- keys if ks.size <= cap && cols.forall(c => !r.isNullAt(c._1)))
+        ks += new GenericInternalRow(cols.map { case (i, t) =>
+          r.get(i, t) match {
+            case d: Double => d + 0.0d
+            case f: Float => f + 0.0f
+            case v => v
+          }
+        }.toArray[Any])
+    }
+    (n, keys.map(_._2.toSet))
   }
 
   /** One pull into `to`: its rows whose `toCols` match the `fromCols` of
@@ -283,7 +309,7 @@ object Subset {
   /** An addition to a target's selection. `keys`, when present, are the
     * keys of a literal join pull, none of them selected before.
     */
-  private final case class Add(df: DataFrame, keys: Option[Set[Seq[Any]]] = None)
+  private final case class Add(df: DataFrame, keys: Option[Keys] = None)
 
   private def pullOf(e: TreeEdge): Pull =
     if (e.backref) Pull(e.from, e.to, e.fk.parentCols, e.fk.childCols, backref = true)
@@ -299,16 +325,14 @@ object Subset {
     * serializes the cluster — on local[n] that is per-job overhead ×
     * #tables of wall clock, on a real cluster it is idle executors.
     *
-    * Keyed (see the header), the driver holds each materialized table's
-    * key columns: its FK columns to included parents, and the columns its
-    * backrefs and incoming FKs match. A join pull carries only keys its
-    * target has not selected, and the pulls into one target on the same
-    * columns fold into one filter; a pull with no such key runs nothing.
-    * A sink — a table no pull reads, whose incoming FKs all match one set
-    * of columns — keeps a literal pull lazy: the driver already knows the
-    * keys it asked for, and the consumer's job evaluates the filter.
-    * Unkeyed, a pull is a semi-join against the distinct source keys and
-    * every checkpoint is eager.
+    * A table's key sets (see the header) are its FK columns to included
+    * parents, and the columns its backrefs and incoming FKs match. The
+    * join pulls into one target on the same columns fold into one pull,
+    * which carries only keys the target has not selected when its keys on
+    * those columns are held; a pull with no such key runs nothing. A sink
+    * (a table no pull reads, whose incoming FKs all match one set of
+    * columns) keeps a literal pull lazy: the driver already knows the keys
+    * it asked for, and the consumer's job evaluates the filter.
     */
   def extract(spark: SparkSession, sfDir: String, spec: QuerySpec,
               graph: RelGraph = RelGraph.tpch): Extraction = {
@@ -322,7 +346,7 @@ object Subset {
     }
     val p = timed("plan")(plan(spec, graph))
     // one scan plan per table: literal filters never self-join, and the
-    // analyzer re-instances the scan a fallback semi-join meets twice
+    // analyzer re-instances the scan a semi-join meets twice
     val loads = scala.collection.mutable.Map.empty[String, DataFrame]
     def load(t: String): DataFrame = loads.getOrElseUpdate(t, Tables.load(spark, sfDir, t))
     val sel = scala.collection.mutable.Map.empty[String, DataFrame]
@@ -335,64 +359,46 @@ object Subset {
     def joinsOf(t: String): Seq[FK] =
       if (p.graph.tables.contains(t)) p.graph.joinEdges(t).filter(fk => included(fk.parent))
       else Nil
-
-    // Keyed only when the spec truly bounds every key set: a root limit
-    // AND bounded backref fan-out (no backref edge in the PLAN, or a
-    // per-parent cap). Decided from the planned edges, not the raw spec
-    // depths — `include` overrides backrefDepth to unlimited inside
-    // plan(), so a spec declaring backrefDepth=0 can still traverse
-    // uncapped backrefs, and holding that key set is exactly the
-    // driver-OOM this guard exists to prevent. Otherwise leave the join
-    // strategy to AQE, which broadcasts at runtime if the set turns out
-    // small and falls back to a shuffled hash join if not.
-    val keyed = spec.limit.isDefined &&
-      (!p.edges.exists(_.backref) || spec.backrefLimit.isDefined)
     def backrefCols(t: String): Seq[Seq[String]] =
       p.edges.filter(e => e.backref && e.from == t).map(_.fk.parentCols)
     def incomingCols(t: String): Seq[Seq[String]] =
       p.tables.flatMap(joinsOf).filter(_.parent == t).map(_.parentCols).distinct
-    val keyCols: Map[String, Seq[String]] =
-      if (!keyed) Map.empty
-      else p.tables.map(t => t -> (joinsOf(t).flatMap(_.childCols) ++
-        backrefCols(t).flatten ++ incomingCols(t).flatten).distinct).toMap
+    val keySets: Map[String, Seq[Seq[String]]] = p.tables.map(t => t ->
+      (joinsOf(t).map(_.childCols) ++ backrefCols(t) ++ incomingCols(t)).distinct).toMap
     // A sink is a table no pull ever reads: no FK to an included parent,
     // no backref from it, and one set of columns its incoming FKs match.
-    // Its key columns are those, so a literal pull into it tells the
-    // driver its keys without a job, and its selection can stay a lazy
-    // filter on its scan, evaluated by the job that consumes it.
-    val sinks: Set[String] = keyCols.keySet.filter(t =>
-      joinsOf(t).isEmpty && backrefCols(t).isEmpty && incomingCols(t).size == 1)
-    // keyed: keyCols(t) of every row selected in t (for a sink, of every
-    // key requested from it)
-    val held = scala.collection.mutable.Map.empty[String, Array[Row]]
-    def heldKeys(t: String, cols: Seq[String]): Set[Seq[Any]] = {
-      val ix = cols.map(keyCols(t).indexOf(_))
-      held.getOrElse(t, Array.empty[Row]).iterator.map(r => ix.map(r.get))
-        .filterNot(_.contains(null)).toSet
-    }
+    // A literal pull into it tells the driver its keys without a job, and
+    // its selection can stay a lazy filter on its scan, evaluated by the
+    // job that consumes it.
+    val sinks: Set[String] = keySets.keySet.filter(t =>
+      joinsOf(t).isEmpty && backrefCols(t).isEmpty && keySets(t).size == 1)
+    // per selected table and key set: its keys, None past the cap (for a
+    // sink, every key asked of it); a table not selected has none
+    val held = scala.collection.mutable.Map.empty[String, Map[Seq[String], Option[Keys]]]
+    def heldKeys(t: String, cols: Seq[String]): Option[Keys] =
+      held.get(t).fold(Option(Set.empty[GenericInternalRow]))(_.getOrElse(cols, None))
+    def bounded(keys: Keys): Option[Keys] = Some(keys).filter(_.size <= LiteralKeyCap)
 
-    /** Checkpoint `df` as `t`'s selection: one Spark job, plus any its
-      * exchanges plan. Keyed, the checkpoint stays lazy and the action
-      * that collects `t`'s key columns fills its blocks: rows stay on the
-      * executors, and only key columns reach the driver.
+    /** Checkpoint `df` as `t`'s selection, as `Dataset.localCheckpoint`
+      * does, in one Spark job that also counts its rows and gathers its
+      * key sets: rows stay on the executors.
       */
-    def materialize(t: String, df: DataFrame): (DataFrame, Array[Row]) =
-      if (!keyed) (df.localCheckpoint(), Array.empty)
-      else {
-        val cp = df.localCheckpoint(eager = false)
-        (cp, cp.select(keyCols(t).map(col): _*).collect())
-      }
-
-    def semiJoin(pl: Pull, keys: DataFrame): DataFrame = {
-      val target = load(pl.to)
-      val on = pl.toCols.zip(pl.fromCols).map { case (tc, fc) =>
-        target(tc) === keys(fc)
-      }.reduce(_ && _)
-      target.join(keys, on, "left_semi")
+    def materialize(t: String, df: DataFrame): (DataFrame, Map[Seq[String], Option[Keys]]) = {
+      val (sets, schema) = (keySets(t), df.schema)
+      val fields = sets.map(_.map(c => (schema.fieldIndex(c), schema(c).dataType)))
+      val rdd = df.queryExecution.toRdd.map(_.copy()).localCheckpoint()
+      val parts = spark.sparkContext.runJob(rdd, partitionKeys(fields, LiteralKeyCap) _)
+      (GraftSqlBridge.ofCheckpoint(df, rdd, parts.map(_._1).sum),
+        sets.indices.map(i => sets(i) -> bounded(parts.flatMap(_._2(i)).toSet)).toMap)
     }
+
+    /** Materialize each of `selections` in one concurrent wave. */
+    def settle(selections: Seq[(String, DataFrame)]): Unit =
+      graft.Wave.run(selections) { case (t, df) => t -> materialize(t, df) }
+        .foreach { case (t, (df, keys)) => sel(t) = df; held(t) = keys; version(t) += 1 }
 
     /** A backref pull keeps at most `backrefLimit` children per parent,
-      * in child-PK order. Keyed, a child read in one scan split needs no
+      * in child-PK order. A child read in one scan split needs no
       * exchange for the window: one partition already clusters its
       * parents, so it coalesces instead of shuffling.
       */
@@ -400,73 +406,66 @@ object Subset {
       case Some(lim) if pl.backref =>
         val w = Window.partitionBy(pl.toCols.map(col): _*)
           .orderBy(p.graph.pkOf(pl.to, load(pl.to).columns.toSeq).map(col(_).asc): _*)
-        val in =
-          if (keyed && Tables.scanPartitions(load(pl.to)) == 1) pulled.coalesce(1) else pulled
+        val in = if (Tables.scanPartitions(load(pl.to)) == 1) pulled.coalesce(1) else pulled
         in.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") <= lim).drop("__rn")
       case _ => pulled
     }
 
-    /** Keyed fallback: a broadcast semi-join against the checkpointed
-      * source selection.
+    /** Additions to `t` from its pulls: the join pulls on one set of
+      * columns as one pull, each backref as its own. A pull whose keys are
+      * held, within the cap and of a literal type is an `InSet` filter;
+      * any other is a semi-join against the checkpointed source selection.
       */
-    def fallback(pl: Pull): DataFrame =
-      capped(pl, semiJoin(pl, broadcast(sel(pl.from).select(pl.fromCols.map(col): _*))))
-
-    /** Keyed additions to `t` from its pulls. */
-    def keyedAdds(t: String, pulls: Seq[Pull]): Seq[Add] = {
+    def adds(t: String, pulls: Seq[Pull]): Seq[Add] = {
       val target = load(t)
-      def literal(ps: Seq[Pull], keys: Set[Seq[Any]]): Boolean =
-        keys.size <= LiteralKeyCap && ps.forall(pl => pl.toCols.zip(pl.fromCols).forall {
-          case (tc, fc) =>
-            val tt = target.schema(tc).dataType
-            literalKeyType(tt) && sel(pl.from).schema(fc).dataType == tt
-        })
-      def filtered(cols: Seq[String], keys: Set[Seq[Any]]): DataFrame =
-        target.where(GraftSqlBridge.inSet(cols.map(target(_)),
-          cols.map(target.schema(_).dataType), keys))
-      val (backrefs, joins) = pulls.partition(_.backref)
-      val joinAdds = joins.groupBy(_.toCols).toSeq.sortBy(_._1.mkString(",")).flatMap {
-        case (cols, ps) =>
-          val have = heldKeys(t, cols)
-          val missing = ps.flatMap(pl => heldKeys(pl.from, pl.fromCols)).toSet -- have
-          if (missing.isEmpty) Nil
-          else if (literal(ps, missing)) Seq(Add(filtered(cols, missing), Some(missing)))
-          else ps.filterNot(pl => heldKeys(pl.from, pl.fromCols).subsetOf(have))
-            .map(pl => Add(fallback(pl)))
+      def types(df: DataFrame, cols: Seq[String]) = cols.map(df.schema(_).dataType)
+      // the pulls of one group share their target columns
+      def literal(ps: Seq[Pull], keys: Keys): Boolean = keys.size <= LiteralKeyCap &&
+        types(target, ps.head.toCols).forall(literalKeyType) &&
+        ps.forall(pl => types(sel(pl.from), pl.fromCols) == types(target, pl.toCols))
+      def semiJoin(pl: Pull): DataFrame = {
+        val keys = sel(pl.from)
+        capped(pl, target.join(keys, pl.toCols.zip(pl.fromCols)
+          .map { case (tc, fc) => target(tc) === keys(fc) }.reduce(_ && _), "left_semi"))
       }
-      joinAdds ++ backrefs.flatMap { pl =>
-        val keys = heldKeys(pl.from, pl.fromCols)
-        if (keys.isEmpty) None
-        else if (literal(Seq(pl), keys)) Some(Add(capped(pl, filtered(pl.toCols, keys))))
-        else Some(Add(fallback(pl)))
+      val (backrefs, joins) = pulls.partition(_.backref)
+      (joins.groupBy(_.toCols).toSeq.sortBy(_._1.mkString(",")) ++
+        backrefs.map(pl => (pl.toCols, Seq(pl)))).flatMap { case (cols, ps) =>
+        // a backref window needs every parent key, selected children's too
+        val have = if (ps.head.backref) None else heldKeys(t, cols)
+        val wanted = ps.map(pl => heldKeys(pl.from, pl.fromCols))
+        val missing = if (wanted.contains(None)) None
+          else Some(wanted.flatten.flatten.toSet -- have.getOrElse(Set.empty))
+        missing match {
+          case Some(m) if m.isEmpty => Nil
+          // keys missing from a complete held set match no selected row,
+          // so the union needs no dedup (the embedded-uniqueness argument
+          // of Entity Integrity, Referential Integrity, and Query
+          // Optimization with Embedded Uniqueness Constraints, ICDE 2019)
+          case Some(m) if literal(ps, m) => Seq(Add(capped(ps.head, target.where(
+            GraftSqlBridge.inSet(cols.map(target(_)), m))), have.map(_ => m)))
+          case _ => ps.map(pl => Add(semiJoin(pl)))
+        }
       }
     }
-
-    /** AQE path: a semi-join against the distinct source keys. */
-    def aqePull(pl: Pull): DataFrame =
-      capped(pl, semiJoin(pl,
-        sel(pl.from).select(pl.fromCols.map(col): _*).na.drop().distinct()))
 
     /** One closure step over `pulls`, planned against the selections as
       * they stand before it. A target's additions are unioned into its
       * selection, deduped through [[merge]] unless they provably hold no
       * row twice: a lone addition to an empty target, or one literal
       * join pull of only unselected keys. Then every touched table is
-      * materialized in one wave and its version bumped once — selections
-      * are tiny by construction, and every later plan (next step,
-      * summary) restarts from checkpointed blocks instead of one deep AQE
-      * lineage. Keyed, a target that nothing reaches takes an empty
-      * selection, and a sink that takes one literal join pull keeps its
-      * selection lazy; neither runs a job. Returns the targets that took
-      * a lone pull into an empty selection.
+      * materialized in one wave and its version bumped once — every later
+      * plan (next step, summary) restarts from checkpointed blocks instead
+      * of one deep AQE lineage. A target that nothing reaches takes an
+      * empty selection, and a sink that takes one literal join pull keeps
+      * its selection lazy; neither runs a job. Returns the targets that
+      * took a lone pull into an empty selection.
       */
     def step(pulls: Seq[Pull]): Set[String] = {
       val byTarget = pulls.groupBy(_.to).toSeq.sortBy(_._1)
       val fresh = byTarget.collect { case (t, Seq(_)) if !sel.contains(t) => t }.toSet
-      val planned = byTarget.map { case (t, ps) =>
-        t -> (if (keyed) keyedAdds(t, ps) else ps.map(pl => Add(aqePull(pl))))
-      }
+      val planned = byTarget.map { case (t, ps) => t -> adds(t, ps) }
       val merged = planned.collect { case (t, adds) if adds.nonEmpty =>
         val dfs = sel.get(t).toSeq ++ adds.map(_.df)
         (t, adds, if (adds.size == 1 && (!sel.contains(t) || adds.head.keys.isDefined))
@@ -479,19 +478,15 @@ object Subset {
         sinks(t) && adds.size == 1 && adds.head.keys.isDefined
       }
       for ((t, adds, df) <- lazySinks) {
+        val cols = keySets(t).head
         sel(t) = df; version(t) += 1
-        held(t) = held.getOrElse(t, Array.empty[Row]) ++ adds.head.keys.get.map(Row.fromSeq)
+        held(t) = Map(cols -> heldKeys(t, cols).flatMap(k => bounded(k ++ adds.head.keys.get)))
       }
-      graft.Wave.run(touched) { case (t, _, df) => t -> materialize(t, df) }
-        .foreach { case (t, (df, keys)) => sel(t) = df; held(t) = keys; version(t) += 1 }
+      settle(touched.map { case (t, _, df) => (t, df) })
       fresh
     }
 
-    timed("root") {
-      val (df, keys) = materialize(spec.from,
-        applyRootQuery(spark, sfDir, spec, p.graph))
-      sel(spec.from) = df; held(spec.from) = keys; version(spec.from) = 1
-    }
+    timed("root")(settle(Seq(spec.from -> applyRootQuery(spark, sfDir, spec, p.graph))))
 
     // Phase 2: level-by-level with snapshot semantics — every pull of a
     // level is planned against the selections as of the previous level.

@@ -1076,9 +1076,12 @@ object Versioned {
       // CDC batch through a full re-bucketing migration
       case Some(_) => read(spark, dir)
       case None =>
-        val f = fs(spark, dir)
+        // each entry through its own FileSystem: a table written through
+        // one scheme and compacted through another records both forms
+        val conf = spark.sessionState.newHadoopConf()
         val bytes = m.dataDirs.map { d =>
           val p = new Path(d)
+          val f = p.getFileSystem(conf)
           if (f.exists(p)) f.getContentSummary(p).getLength else 0L
         }.sum
         read(spark, dir).repartition(
@@ -1154,10 +1157,16 @@ object Versioned {
     // the caller passed; comparing raw strings made every bucketed
     // table's live dirs look unreferenced (topName fell through to the
     // nested "__bucket=N" name) and vacuum deleted the current version's
-    // data out from under its manifest
-    val qualDataRoot = f.makeQualified(dataRoot).toString.stripSuffix("/") + "/"
+    // data out from under its manifest. Each entry qualifies through its
+    // own FileSystem and compares without scheme and authority: a table
+    // written through one scheme and vacuumed through another over the
+    // same storage holds entries the other's FileSystem rejects
+    val conf = spark.sessionState.newHadoopConf()
+    def bare(p: Path): String =
+      Path.getPathWithoutSchemeAndAuthority(p.getFileSystem(conf).makeQualified(p)).toString
+    val qualDataRoot = bare(dataRoot).stripSuffix("/") + "/"
     def topName(r: String): String = {
-      val q = f.makeQualified(new Path(r)).toString
+      val q = bare(new Path(r))
       if (q.startsWith(qualDataRoot)) q.stripPrefix(qualDataRoot).split("/")(0)
       else new Path(r).getName
     }

@@ -1,9 +1,11 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{CreateStruct, Expression, InSet}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{CreateStruct, Expression, GenericInternalRow, InSet}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Minimal bridge into `private[sql]` surface — the standard pattern for
   * Spark extension libraries that build custom logical plans (Column ↔
@@ -28,20 +30,26 @@ object GraftSqlBridge {
   /** `cols` IN `keys` as one `InSet` node, whose plan does not grow with
     * the key count as `Column.isin`'s does. One column tests its value
     * (and pushes into a parquet scan); several test the struct of their
-    * values. Each key holds one external value per column, converted to
-    * its column's type in `types`.
+    * values. Each key holds one catalyst value per column.
     */
-  def inSet(cols: Seq[Column], types: Seq[DataType], keys: Iterable[Seq[Any]]): Column = {
-    val convert = types.map(CatalystTypeConverters.createToCatalystConverter)
-    val values = keys.iterator.map { k =>
-      val v = k.zip(convert).map { case (x, f) => f(x) }
-      if (v.size == 1) v.head else InternalRow.fromSeq(v)
-    }.toSet[Any]
+  def inSet(cols: Seq[Column], keys: Iterable[GenericInternalRow]): Column = {
+    val values = keys.iterator.map(k => if (cols.size == 1) k.values(0) else k).toSet[Any]
     val child = cols.map(expression) match {
       case Seq(one) => one
       case many => CreateStruct(many)
     }
     column(InSet(child, values))
+  }
+
+  /** `origin`'s rows as checkpointed in `rdd`, wrapped as
+    * `Dataset.localCheckpoint` wraps them, with `rows` counted rows as the
+    * plan's statistics, so AQE can broadcast a small selection.
+    */
+  def ofCheckpoint(origin: DataFrame, rdd: RDD[InternalRow], rows: Long): DataFrame = {
+    val ds = origin.asInstanceOf[classic.Dataset[_]]
+    val lr = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
+    val stats = Statistics(EstimationUtils.getSizePerRow(lr.output) * rows, Some(rows))
+    ofRows(ds.sparkSession, lr.copy()(ds.sparkSession, Some(stats), Some(lr.constraints)))
   }
 
   def logicalPlan(df: Dataset[_]): LogicalPlan =

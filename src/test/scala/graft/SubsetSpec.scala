@@ -96,10 +96,12 @@ class SubsetSpec extends AnyFunSuite {
     assert(maxPerCust <= 4)
   }
 
-  /** Spark jobs and summary rows of three closures: q_subset_full's spec
+  /** Spark jobs and summary rows of four closures: q_subset_full's spec
     * (level 2 mixes fresh `part` with already-selected `supplier`), an
-    * orders root that re-pulls `nation` at level 2, and a part root whose
-    * re-closure re-pulls `orders`. A closure rewrite that moves either
+    * orders root that re-pulls `nation` at level 2, a part root whose
+    * re-closure re-pulls `orders`, and an unbounded supplier root whose
+    * uncapped lineitem backref holds 1,215 order keys, past the literal
+    * cap, so `orders` takes a semi-join. A closure rewrite that moves either
     * number updates the pin and says why. Each spec runs once unmeasured
     * first, so the parquet schema reads of a cold memo are not counted.
     */
@@ -115,7 +117,11 @@ class SubsetSpec extends AnyFunSuite {
         ("supplier", 10L, 45L))),
     ("from: part\nlimit: 20\njoin_depth: 2\nbackref_depth: 1\nbackref_limit: 3\n", 2, Seq(
         ("lineitem", 60L, 7646L), ("orders", 56L, 6266L), ("part", 20L, 190L),
-        ("supplier", 10L, 45L))))
+        ("supplier", 10L, 45L))),
+    ("from: supplier\nwhere: {s_nationkey: {$in: [3, 8, 12, 20]}}\nlimit: null\n" +
+      "join_depth: 2\nbackref_depth: 1\nbackref_limit: null\n", 7, Seq(
+        ("lineitem", 2415L, 2082894L), ("nation", 4L, 43L), ("orders", 1215L, 907380L),
+        ("part", 200L, 19900L), ("region", 3L, 5L), ("supplier", 4L, 20L))))
 
   test("closure job counts and summaries stay pinned") {
     def run(yaml: String) = Subset.extract(spark, TestSpark.sf, SpecJson.parse(yaml))
@@ -195,7 +201,7 @@ class SubsetSpec extends AnyFunSuite {
         FK(Seq("promo_ref"), "promo", Seq("promo_id")))),
       "emp" -> TableMeta("emp", Seq("emp_id"), Seq(FK(Seq("boss"), "emp", Seq("emp_id"))))))
     assert(Subset.literalKeyType(StringType) && Subset.literalKeyType(DecimalType(12, 2)))
-    assert(!Subset.literalKeyType(DoubleType) && !Subset.literalKeyType(StringType("UTF8_LCASE")))
+    assert(Subset.literalKeyType(DoubleType) && !Subset.literalKeyType(StringType("UTF8_LCASE")))
     val load = (t: String) => Tables.load(spark, dir, t)
     def run(yaml: String) = Subset.extract(spark, dir, SpecJson.parse(yaml), graph).tables
     def semi(parent: String, fk: FK, child: DataFrame): DataFrame = {
@@ -246,14 +252,46 @@ class SubsetSpec extends AnyFunSuite {
     assert(twice.plan.edges.filter(_.to == "leaf").map(_.level).toSet == Set(1))
     sameRows("leaf pulled twice", twice.tables("leaf"), load("leaf"))
 
-    // a self-referencing FK: 1,200 boss keys take the fallback semi-join;
-    // 100 keys of an unbounded spec take the AQE path
+    // a self-referencing FK: 1,200 boss keys take the semi-join; the 100
+    // keys of an unbounded spec pull literally
     val self = graph.joinEdges("emp").head
     for ((lo, limit) <- Seq(1500 -> "1200", 2900 -> "null")) {
       val root = load("emp").where(col("emp_id") > lo).orderBy("emp_id")
       val r = if (limit == "null") root.cache() else root.limit(limit.toInt).cache()
       val e = run(s"from: emp\nwhere: {emp_id: {$$gt: $lo}}\nlimit: $limit\njoin_depth: 1\n")
       sameRows(s"emp above $lo", e("emp"), r.unionByName(semi("emp", self, r)))
+    }
+
+    // double keys on both sides of the cap, joined and backref'd: −0.0
+    // matches 0.0 and NaN matches NaN, as in a join. The −0.0 and NaN
+    // parents sit in parquet files of their own, so a pushed-down filter
+    // that missed them would skip the file.
+    for (part <- Seq(Seq(-0.0), Seq(Double.NaN), (1 to 1500).map(_.toDouble)))
+      part.toDF("f_val").coalesce(1).write.mode("append").parquet(Tables.path(dir, "fx"))
+    put("obs", ((1L, 0.0) +: (2L, Double.NaN) +: (3L, -0.0) +:
+      (4L to 1503L).map(i => (i, (i - 3).toDouble))).toDF("obs_id", "o_val"))
+    val fx = RelGraph(Map("fx" -> TableMeta("fx", Seq("f_val")),
+      "obs" -> TableMeta("obs", Seq("obs_id"), Seq(FK(Seq("o_val"), "fx", Seq("f_val"))))))
+    val val2fx = fx.joinEdges("obs").head
+    for ((limit, n) <- Seq("6" -> 5L, "null" -> 1502L)) {
+      val e = Subset.extract(spark, dir, SpecJson.parse(
+        s"from: obs\nlimit: $limit\njoin_depth: 1\nbackref_depth: 0\n"), fx).tables
+      val obs = load("obs").orderBy("obs_id")
+      val root = (if (limit == "null") obs else obs.limit(limit.toInt)).cache()
+      sameRows(s"fx under $limit obs", e("fx"), semi("fx", val2fx, root))
+      assert(e("fx").count() == n, s"fx under $limit obs")
+    }
+    val byVal = load("fx").orderBy("f_val")
+    for ((spec, root, n) <- Seq(("limit: 2", byVal.limit(2), 3L),
+        ("limit: 2\norder-by: [-f_val]", load("fx").orderBy(col("f_val").desc).limit(2), 2L),
+        ("limit: null", byVal, 1503L))) {
+      val e = Subset.extract(spark, dir, SpecJson.parse(
+        s"from: fx\n$spec\njoin_depth: 0\nbackref_depth: 1\nbackref_limit: null\n"), fx).tables
+      val r = root.cache()
+      sameRows(s"fx root, $spec", e("fx"), r)
+      sameRows(s"obs under fx, $spec", e("obs"),
+        semi("obs", FK(val2fx.parentCols, "obs", val2fx.childCols), r))
+      assert(e("obs").count() == n, s"obs under fx, $spec")
     }
   }
 }

@@ -1532,6 +1532,26 @@ class VersionedSpec extends AnyFunSuite {
     assert(m.dataDirs.size == 1 && m.nRows == 3)
   }
 
+  test("a table written through one scheme compacts and vacuums through another") {
+    import spark.implicits._
+    NonAtomicFs.register(spark)
+    val uri = NonAtomicFs.tempDir("mixfs")
+    val dir = uri.stripPrefix(s"${NonAtomicFs.Scheme}://")
+    spark.conf.set(Publish.SingleWriterKey, "true")
+    try {
+      Versioned.commit(Seq((1L, "a")).toDF("k", "v"), uri)
+      Versioned.commit(Seq((2L, "b")).toDF("k", "v"), uri, append = true)
+    } finally spark.conf.unset(Publish.SingleWriterKey)
+    // the manifests hold `nonatomic:` entries; compaction and vacuum run
+    // through `file:`, whose FileSystem rejects them
+    assert(Versioned.manifest(spark, dir).dataDirs.forall(_.startsWith(NonAtomicFs.Scheme)))
+    assert(Versioned.compactCommit(spark, dir) == 3)
+    assert(Versioned.vacuum(spark, dir, keepVersions = 3, graceMs = 0).isEmpty)
+    for (v <- 1 to 3) assert(Versioned.read(spark, dir, Some(v)).count() == math.min(v, 2))
+    assert(Versioned.vacuum(spark, dir, keepVersions = 1, graceMs = 0).size == 2)
+    assert(Versioned.read(spark, dir).select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
   test("no main source but the commit loop publishes a Versioned manifest") {
     // snapshot, append, replace, compaction, deletion vector and CDC
     // apply all form their manifest inside publishNext's one loop

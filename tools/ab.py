@@ -17,7 +17,9 @@ trees run `perfbench/run.py` once, one run at a time; the side that goes
 first alternates from seed to seed, base first. Each copy runs its own
 `perfbench/` and builds into its own `.bench_build/`. Works offline.
 
-Prints every run, then per metric: each side's median, the base's
+Prints every run with its end-to-end metrics (with `--trace 1`, also its
+counts: spark.jobs, spark.stages, subset.jobs, tables.schema_jobs and
+versioned.files), then per metric: each side's median, the base's
 interquartile range, and the pairs the working tree won (direction from
 BENCHMARK.json). Exits 1 if any run failed, or if any seed's extract digest
 or `correct` verdict differs between the two sides.
@@ -36,6 +38,9 @@ import tarfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIGEST = re.compile(r"digest\(seed=\d+, first \d+ ops\) = (\w+)")
+END_TO_END = ("setup_s", "ops_per_min", "op_p50_s")
+# traced counts that repeat per seed on unchanged code: each run prints them
+COUNTS = ("spark.jobs", "spark.stages", "subset.jobs", "tables.schema_jobs", "versioned.files")
 
 
 def seeds(spec):
@@ -134,7 +139,7 @@ def main():
                   f"failed={res.get('failed')} digest={r['digest']} " +
                   " ".join(f"{k}={m['value']:.4g}" for k, m in
                            sorted(res.get("metrics", {}).items())
-                           if k in ("setup_s", "ops_per_min", "op_p50_s")),
+                           if k in END_TO_END + (COUNTS if a.trace else ())),
                   flush=True)
             if not r["ok"]:
                 problems.append(f"seed {seed} {side}: run failed\n  " + "\n  ".join(r["tail"]))
