@@ -8,6 +8,7 @@ import graft.sources.{Export, Job, QueryCache, SqlDump}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success}
 
 /** The dbcut command-line surface re-expressed over the Spark engine: a
   * chained multi-command driven by a YAML config file
@@ -305,7 +306,7 @@ object Cli {
         val order = fkOrder(extracted)
         val counts = Wave.run(order) { n =>
           val dir = s"${cfg.destDir}/$n"
-          extracted(n).write.mode(SaveMode.Overwrite).parquet(dir)
+          Tables.writer(extracted(n)).mode(SaveMode.Overwrite).parquet(dir)
           s"$n=${Tables.footerRowCount(spark, dir)}"
         }
         log(s"load: ${counts.mkString(", ")}")
@@ -364,12 +365,12 @@ object Cli {
         log(s"dumpsql: ${order.size} tables (${cfg.dialect.name}) -> ${cfg.destDir}/sql")
       case "dumpjson" =>
         val order = fkOrder(extracted)
-        Wave.run(order)(n => extracted(n).coalesce(1).write.mode(SaveMode.Overwrite)
+        Wave.run(order)(n => Tables.writer(extracted(n).coalesce(1)).mode(SaveMode.Overwrite)
           .json(s"${cfg.destDir}/json/$n.json"))
         log(s"dumpjson: ${order.size} tables -> ${cfg.destDir}/json")
       case "dumporc" =>
         val order = fkOrder(extracted)
-        Wave.run(order)(n => extracted(n).write.mode(SaveMode.Overwrite)
+        Wave.run(order)(n => Tables.writer(extracted(n)).mode(SaveMode.Overwrite)
           .orc(s"${cfg.destDir}/orc/$n"))
         log(s"dumporc: ${order.size} tables -> ${cfg.destDir}/orc")
       case "models" =>
@@ -392,14 +393,23 @@ object Cli {
         // Each table has its own commit log, so the commits run as one
         // write wave, like load. A multi-table snapshot is not atomic
         // either way: a run that fails part-way leaves some tables at the
-        // new version and the rest at the old
+        // new version and the rest at the old, so every table's outcome
+        // is logged before the failed ones fail the command
         val order = fkOrder(extracted)
-        val vs = Wave.run(order) { n =>
-          val v = graft.sources.Versioned.commit(
-            extracted(n), s"${cfg.destDir}/versioned/$n")
-          s"$n=v$v"
+        val outcomes = order.zip(Wave.attempt(order) { n =>
+          graft.sources.Versioned.commit(extracted(n), s"${cfg.destDir}/versioned/$n")
+        })
+        val committed = outcomes.collect { case (n, Success(v)) => s"$n=v$v" }
+        val failed = outcomes.collect { case (n, Failure(e)) => n -> e }
+        log(s"snapshot: ${committed.mkString(", ")}")
+        failed.foreach { case (n, e) => log(s"snapshot: $n failed: $e") }
+        if (failed.nonEmpty) {
+          val e = new IllegalStateException(s"snapshot: ${failed.map(_._1).mkString(", ")} " +
+            s"failed to commit (${committed.size} of ${order.size} tables committed)",
+            failed.head._2)
+          failed.tail.foreach(f => e.addSuppressed(f._2))
+          throw e
         }
-        log(s"snapshot: ${vs.mkString(", ")}")
       case "vacuum" =>
         val root = Paths.get(s"${cfg.destDir}/versioned")
         if (!Files.isDirectory(root)) log("vacuum: no versioned tables")

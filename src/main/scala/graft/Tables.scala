@@ -5,7 +5,7 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.InputFile
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.StructType
 
@@ -299,7 +299,7 @@ object Tables {
     */
   def footerRowCount(spark: SparkSession, path: String): Long = {
     import org.apache.hadoop.fs.FileStatus
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = hadoopConf(spark)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     // RECURSIVE listing: a hive-partitioned table keeps its data files in
@@ -324,7 +324,7 @@ object Tables {
     */
   def footerDoubleBounds(spark: SparkSession, path: String,
                          column: String): Option[(Double, Double)] = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = hadoopConf(spark)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     val files =
@@ -364,11 +364,41 @@ object Tables {
     if (mn > mx) None else Some((mn, mx))
   }
 
+  /** The keys that bind `file:` to [[LocalFs]] for one Hadoop conf,
+    * uncached so the session's cached `file:` FileSystem stays as it is.
+    * Empty when the session binds `fs.file.impl` itself (Hadoop's
+    * default conf holds it empty).
+    */
+  private def localFsKeys(spark: SparkSession): Map[String, String] = {
+    val own = spark.conf.getOption("fs.file.impl")
+      .orElse(Option(spark.sparkContext.hadoopConfiguration.get("fs.file.impl")))
+    if (own.exists(_.nonEmpty)) Map.empty
+    else Map("fs.file.impl" -> classOf[LocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+  }
+
+  /** THE Hadoop conf of `src/main`: the session's, with `file:` bound to
+    * [[LocalFs]]. Every driver-side FileSystem graft opens comes from it.
+    */
+  def hadoopConf(spark: SparkSession): Configuration = {
+    val conf = spark.sessionState.newHadoopConf()
+    localFsKeys(spark).foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+
+  /** THE file writer of `src/main`: `df`'s `DataFrameWriter` carrying
+    * [[hadoopConf]]'s `file:` binding as options, which Spark copies into
+    * the write job's Hadoop conf on the driver and in every task. Spark
+    * reads and the session's own FileSystems are untouched.
+    */
+  def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(localFsKeys(df.sparkSession))
+
   /** Format-generic write (csv emits a header so reads round-trip). */
   def write(df: DataFrame, path: String, format: String = "parquet",
             mode: String = "overwrite",
             options: Map[String, String] = Map.empty): Unit = {
-    val w = df.write.format(format).mode(mode).options(options)
+    val w = writer(df).format(format).mode(mode).options(options)
     (if (format == "csv") w.option("header", "true") else w).save(path)
   }
 }

@@ -59,13 +59,13 @@ object Verify {
     // jobs). Writes go to per-query dirs, so no output races.
     val failed = Wave.run(queries) { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        Tables.writer(fn(spark, sfDir).coalesce(1)).mode("overwrite")
           .parquet(s"$outDir/$name")
         None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         val stale = new org.apache.hadoop.fs.Path(s"$outDir/$name")
-        stale.getFileSystem(spark.sessionState.newHadoopConf())
+        stale.getFileSystem(Tables.hadoopConf(spark))
           .delete(stale, true)
         Some(name -> String.valueOf(e.getMessage).replace('\n', ' '))
       }

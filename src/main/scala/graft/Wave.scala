@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.{Callable, ExecutionException, Executors}
-import scala.util.{Failure, Success, Try}
+import scala.util.{Failure, Try}
 
 /** One concurrent wave of independent driver-side tasks — typically Spark
   * actions on separate DataFrames, submitted from several threads so the
@@ -19,7 +19,10 @@ import scala.util.{Failure, Success, Try}
 object Wave {
   val MaxThreads = 8
 
-  def run[A, B](items: Seq[A])(f: A => B): Seq[B] =
+  def run[A, B](items: Seq[A])(f: A => B): Seq[B] = attempt(items)(f).map(_.get)
+
+  /** [[run]] that hands back every task's outcome, failures included. */
+  def attempt[A, B](items: Seq[A])(f: A => B): Seq[Try[B]] =
     if (items.isEmpty) Nil
     else {
       val pool = Executors.newFixedThreadPool(math.min(MaxThreads, items.size))
@@ -29,9 +32,8 @@ object Wave {
           .map(fut => Try(fut.get()))
         finally pool.shutdown()
       outcomes.map {
-        case Success(b) => b
-        case Failure(e: ExecutionException) if e.getCause != null => throw e.getCause
-        case Failure(e) => throw e
+        case Failure(e: ExecutionException) if e.getCause != null => Failure(e.getCause)
+        case o => o
       }
     }
 }

@@ -58,7 +58,7 @@ object StandingIndex {
   private[graft] def maintainedParts(s: SparkSession, root: String,
                                      sub: String, cols: Seq[String])
       : (Option[DataFrame], Option[DataFrame]) = {
-    val conf = s.sessionState.newHadoopConf()
+    val conf = Tables.hadoopConf(s)
     def read(p: String) = s.read.parquet(p).select(cols.map(col): _*)
     (existingSeededDir(conf, s"$root/$sub").map(read),
       existingIndexDir(conf, s"$root/${sub}_m", visible = true).map(read))
@@ -99,14 +99,14 @@ object StandingIndex {
                                  tables: Seq[(String, DataFrame)],
                                  ids: DataFrame): Unit = {
     val fs = new Path(mRoot)
-      .getFileSystem(ids.sparkSession.sessionState.newHadoopConf())
+      .getFileSystem(Tables.hadoopConf(ids.sparkSession))
     val root = new Path(s"$mRoot/batch=$key")
     graft.Publish.checkPut(ids.sparkSession, fs, root)
     val tmp = s"$mRoot/.build_${key}_${java.util.UUID.randomUUID.toString.take(8)}"
     tables.foreach { case (name, rows) =>
-      rows.write.parquet(if (name.isEmpty) tmp else s"$tmp/$name")
+      Tables.writer(rows).parquet(if (name.isEmpty) tmp else s"$tmp/$name")
     }
-    ids.write.parquet(s"$tmp/_ids")
+    Tables.writer(ids).parquet(s"$tmp/_ids")
     publishIndexDir(ids.sparkSession, fs, new Path(tmp), root,
       marker = "_ids/_SUCCESS"): Unit
   }
@@ -118,7 +118,7 @@ object StandingIndex {
   private[graft] def carryFence(s: SparkSession, root: String, newRoot: String,
                                 sub: String, schema: DataFrame): Unit = {
     val mRoot = new Path(s"$root/${sub}_m")
-    val fs = mRoot.getFileSystem(s.sessionState.newHadoopConf())
+    val fs = mRoot.getFileSystem(Tables.hadoopConf(s))
     val idPaths = fenceIdPaths(fs, publishedBatches(fs, mRoot))
     if (idPaths.nonEmpty)
       publishPart(s"$newRoot/${sub}_m",
@@ -134,7 +134,7 @@ object StandingIndex {
   def vacuumMaintained(s: SparkSession, root: String,
                        graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
     val p = new Path(root)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    val fs = p.getFileSystem(Tables.hadoopConf(s))
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.endsWith("_m"))
@@ -164,7 +164,7 @@ object StandingIndex {
   private[graft] def corpusFiles(s: SparkSession, dir: String,
                                  table: String): Seq[(String, String)] = {
     val corpus = Tables.path(dir, table)
-    val conf = s.sessionState.newHadoopConf()
+    val conf = Tables.hadoopConf(s)
     val p = new Path(corpus)
     val fs = p.getFileSystem(conf)
     val sts =
@@ -203,7 +203,7 @@ object StandingIndex {
     val entries = corpusFiles(s, dir, table)
     val idxRoot = Tables.indexRoot(s, dir)
     val root = contentDir(idxRoot, tag, corpus, entries, params)
-    val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
+    val fs = new Path(root).getFileSystem(Tables.hadoopConf(s))
     if (!fs.exists(new Path(s"$root/$marker"))) {
       graft.Publish.checkPut(s, fs, new Path(root))
       val pred = grow.flatMap(_ => predecessorIndex(fs, idxRoot, tag, corpus,
@@ -368,7 +368,7 @@ object StandingIndex {
     */
   def vacuumIndexes(s: SparkSession, dir: String,
                     graceMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
-    val conf = s.sessionState.newHadoopConf()
+    val conf = Tables.hadoopConf(s)
     val idxRoot = new Path(Tables.indexRoot(s, dir))
     val fs = idxRoot.getFileSystem(conf)
     if (!fs.exists(idxRoot)) return Seq.empty

@@ -937,7 +937,7 @@ object Dedup {
   def minhashIndexTable(s: SparkSession, root: String,
                         sub: String): Option[DataFrame] = {
     requireAtomicMinhashLayout(s, root)
-    val conf = s.sessionState.newHadoopConf()
+    val conf = Tables.hadoopConf(s)
     val mRoot = new org.apache.hadoop.fs.Path(s"$root/minhash_m")
     val parts = StandingIndex.publishedBatches(mRoot.getFileSystem(conf), mRoot)
       .map(b => s"$b/$sub")
@@ -954,7 +954,7 @@ object Dedup {
   private[graft] def requireAtomicMinhashLayout(s: SparkSession,
                                                 root: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    val fs = p.getFileSystem(Tables.hadoopConf(s))
     val legacy = if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).toSeq.map(_.getPath.getName)
         .filter(Set("sigs_m", "bands_m", "reps_m", "sigs_retired_m"))

@@ -526,7 +526,7 @@ object Similarity {
     reseedIvfIndex(s, root, fresh, k, iters)
     if (retireOldRoot) {
       val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true): Unit
+      p.getFileSystem(Tables.hadoopConf(s)).delete(p, true): Unit
     }
     fresh
   }

@@ -159,9 +159,10 @@ object Subset {
     p.copy(edges = p.edges.filter(keep))
   }
 
-  /** Root query: `where` with dotted-relation joins, deterministic ordering
-    * (user keys then PK tiebreak), `offset`, `limit`. Global order+limit plans
-    * as TakeOrderedAndProject — no full sort materialization at scale.
+  /** Root query: `where` with dotted-relation joins, then `offset` and
+    * `limit` over a deterministic order (user keys then PK tiebreak); with
+    * neither, the rows come unordered. Global order+limit plans as
+    * TakeOrderedAndProject — no full sort materialization at scale.
     */
   def applyRootQuery(spark: SparkSession, sfDir: String, spec: QuerySpec, graph: RelGraph): DataFrame = {
     val root = Tables.load(spark, sfDir, spec.from).alias(spec.from)
@@ -216,7 +217,12 @@ object Subset {
     val pk = graph.pkOf(spec.from, rootCols.toSeq)
     val userKeys = spec.orderBy.map(k => if (k.desc) col(k.field).desc else col(k.field).asc)
     val orderCols = userKeys ++ pk.filterNot(p => spec.orderBy.exists(_.field == p)).map(col(_).asc)
-    val ordered = filtered.orderBy(orderCols: _*)
+    // an extraction is a set: the order only picks which rows a limit or
+    // an offset keeps, and sorting an unbounded root costs a range sample
+    // and a shuffle the closure never reads
+    val ordered =
+      if (spec.limit.isEmpty && spec.offset.isEmpty) filtered
+      else filtered.orderBy(orderCols: _*)
     // offset/limit are Long in the spec (mlalchemy parity) but Spark's
     // operators take Int — refuse loudly past the range instead of the
     // silent .toInt wrap (limit(5e9.toInt) would quietly return the

@@ -33,7 +33,7 @@ object Export {
   def parquet(e: Extraction, destDir: String): Seq[String] =
     writeOrdered(e) { (df, name, i) =>
       val path = f"$destDir/$i%02d_$name"
-      df.write.mode(SaveMode.Overwrite).parquet(path)
+      graft.Tables.writer(df).mode(SaveMode.Overwrite).parquet(path)
       path
     }
 
@@ -45,13 +45,13 @@ object Export {
     writeOrdered(e) { (df, name, _) =>
       val out = if (singleFile) df.coalesce(1) else df
       val path = s"$destDir/$name.json"
-      out.write.mode(SaveMode.Overwrite).json(path)
+      graft.Tables.writer(out).mode(SaveMode.Overwrite).json(path)
       path
     }
 
   /** dbcut `flush`: drop + recreate ≡ overwrite the destination table. */
   def flush(df: DataFrame, destPath: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(destPath)
+    graft.Tables.writer(df).mode(SaveMode.Overwrite).parquet(destPath)
 
   /** ORC export: the extraction in FK order as ORC — the other columnar
     * format Spark ships a native vectorized reader/writer for, so a graft
@@ -62,7 +62,7 @@ object Export {
   def orc(e: Extraction, destDir: String): Seq[String] =
     writeOrdered(e) { (df, name, i) =>
       val path = f"$destDir/$i%02d_$name"
-      df.write.mode(SaveMode.Overwrite).orc(path)
+      graft.Tables.writer(df).mode(SaveMode.Overwrite).orc(path)
       path
     }
 
@@ -70,7 +70,7 @@ object Export {
     * empty slice of the same schema.
     */
   def clear(df: DataFrame, destPath: String): Unit =
-    df.limit(0).write.mode(SaveMode.Overwrite).parquet(destPath)
+    graft.Tables.writer(df.limit(0)).mode(SaveMode.Overwrite).parquet(destPath)
 
   /** Small-files repair: rewrite a parquet directory into files of
     * ~`targetBytes` each. Streaming sinks and over-partitioned jobs leave
@@ -84,7 +84,7 @@ object Export {
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetBytes: Long = 256L << 20): (Int, Int) = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = graft.Tables.hadoopConf(spark)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     val files = fs.listStatus(p)
@@ -100,8 +100,8 @@ object Export {
       math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toLong).toInt
     val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
     val old = new org.apache.hadoop.fs.Path(path + "__compact_old")
-    spark.read.parquet(path).repartition(parts)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    graft.Tables.writer(spark.read.parquet(path).repartition(parts))
+      .mode(SaveMode.Overwrite).parquet(tmp.toString)
     graft.Publish.swap(fs, tmp, p, aside = old)
     (files.length, parts)
   }
@@ -113,10 +113,11 @@ object Export {
     * sliver of a 100 TB table instead of all of it.
     */
   def sortedParquet(df: DataFrame, destPath: String, sortCol: String,
-                    numFiles: Int): Unit =
-    df.repartitionByRange(numFiles, org.apache.spark.sql.functions.col(sortCol))
+                    numFiles: Int): Unit = {
+    val sorted = df.repartitionByRange(numFiles, org.apache.spark.sql.functions.col(sortCol))
       .sortWithinPartitions(sortCol)
-      .write.mode(SaveMode.Overwrite).parquet(destPath)
+    graft.Tables.writer(sorted).mode(SaveMode.Overwrite).parquet(destPath)
+  }
 
   /** Z-ORDER (Morton-curve) layout: the multi-dimensional twin of
     * [[sortedParquet]]. A lexicographic sort gives tight per-file min/max
@@ -204,10 +205,10 @@ object Export {
         shiftleft(shiftright(cc, b) bitwiseAND lit(1L), b * cols.size + i)
       }
     }.reduce(_ bitwiseOR _)
-    df.withColumn("__z", z)
+    val sorted = df.withColumn("__z", z)
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(destPath)
+    graft.Tables.writer(sorted).mode(SaveMode.Overwrite).parquet(destPath)
   }
 }

@@ -55,7 +55,7 @@ object QueryCache {
       // one concurrent write wave, like CLI load: the tables are
       // independent files
       graft.Wave.run(e.tables.toSeq) { case (n, df) =>
-        df.write.mode(SaveMode.Overwrite).parquet(dir.resolve(n).toString)
+        graft.Tables.writer(df).mode(SaveMode.Overwrite).parquet(dir.resolve(n).toString)
       }
       // count FROM the just-written files' parquet footers, not the live
       // closure lineage (counting that re-runs the extraction per table);

@@ -400,10 +400,10 @@ object SqlDump {
         Seq((ddl(table, df, pk, fks, dialect), 1)) ++
         seqSync ++
         dialect.epilogue(Seq(table)).map((_, 4))
-    header.toDF("stmt", "ord")
+    val script = header.toDF("stmt", "ord")
       .unionByName(insertStatements(table, df, dialect).withColumn("ord", lit(2)))
       .orderBy("ord", "stmt").select("stmt")
       .coalesce(1)
-      .write.mode(SaveMode.Overwrite).text(destPath)
+    graft.Tables.writer(script).mode(SaveMode.Overwrite).text(destPath)
   }
 }

@@ -105,7 +105,7 @@ object Versioned {
                             dvs: Seq[Dv] = Seq.empty)
 
   private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    new Path(dir).getFileSystem(graft.Tables.hadoopConf(spark))
 
   private def manifestPath(dir: String, v: Int) =
     new Path(f"$dir/_commits/v$v%05d.json")
@@ -250,8 +250,9 @@ object Versioned {
 
   /** Write `df` as one new data directory `data/v<next>-<token>` of table
     * `dir`, hash-bucketed under `layout` (bucket column(s), bucket count)
-    * or plain, and return the data entries it created with their total
-    * row count. The name is unique, not keyed to the version alone: two
+    * or plain, and return the data entries it created, FileSystem-qualified
+    * (older manifests may hold the caller's raw `dir` form), with their
+    * total row count. The name is unique, not keyed to the version alone: two
     * writers racing to the same version never collide on anything they
     * write — only the manifest publish decides the race. The count comes
     * from the parquet footers — metadata reads, not a second scan of the
@@ -268,8 +269,8 @@ object Versioned {
       case Some((bc, n)) =>
         writeBucketed(df, dataDir, bc, n, maxRecordsPerFile)
       case None =>
-        df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-        Seq(dataDir)
+        graft.Tables.writer(df).mode(SaveMode.ErrorIfExists).parquet(dataDir)
+        Seq(fs(spark, dataDir).makeQualified(new Path(dataDir)).toString)
     }
     (entries, entries.map(graft.Tables.footerRowCount(spark, _)).sum)
   }
@@ -471,10 +472,10 @@ object Versioned {
     // effective. `maxRecordsPerFile` splits a large bucket into several
     // files (production: bucket ≈ 1 GB, files ≈ 128 MB) so a later
     // single-key batch can rewrite one FILE instead of the bucket.
-    val w = df.withColumn("__bucket", b)
+    val sorted = df.withColumn("__bucket", b)
       .repartition(nBuckets, col("__bucket"))
       .sortWithinPartitions(col("__bucket") +: splitKeyCols(key).map(col): _*)
-      .write.partitionBy("__bucket")
+    val w = graft.Tables.writer(sorted).partitionBy("__bucket")
       .mode(SaveMode.ErrorIfExists)
     (if (maxRecordsPerFile > 0)
        w.option("maxRecordsPerFile", maxRecordsPerFile)
@@ -698,7 +699,7 @@ object Versioned {
       s"deletion vectors need the bucketed layout at $dir (bucketCol + " +
         "per-bucket dirs, installed by the CDC apply path) — use a " +
         "snapshot commit to delete from an unbucketed table"))
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = graft.Tables.hadoopConf(spark)
     // all bucket ids in ONE local job (not one per key — a 4096-key
     // CDC delete batch would otherwise pay 4096 driver-side jobs), with
     // the EXACT on-disk bucketing expression (bucketsOf). Lazy: a fully
@@ -743,7 +744,7 @@ object Versioned {
         val folded = priorKeys
           .map(_.unionByName(present.distinct()).distinct())
           .getOrElse(present.distinct())
-        folded.coalesce(1).write.parquet(path)
+        graft.Tables.writer(folded.coalesce(1)).parquet(path)
         Some(Dv(e, path, prior.map(_.n).getOrElse(0L) + nNew))
       }
     }
@@ -1078,7 +1079,7 @@ object Versioned {
       case None =>
         // each entry through its own FileSystem: a table written through
         // one scheme and compacted through another records both forms
-        val conf = spark.sessionState.newHadoopConf()
+        val conf = graft.Tables.hadoopConf(spark)
         val bytes = m.dataDirs.map { d =>
           val p = new Path(d)
           val f = p.getFileSystem(conf)
@@ -1161,7 +1162,7 @@ object Versioned {
     // own FileSystem and compares without scheme and authority: a table
     // written through one scheme and vacuumed through another over the
     // same storage holds entries the other's FileSystem rejects
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = graft.Tables.hadoopConf(spark)
     def bare(p: Path): String =
       Path.getPathWithoutSchemeAndAuthority(p.getFileSystem(conf).makeQualified(p)).toString
     val qualDataRoot = bare(dataRoot).stripSuffix("/") + "/"

@@ -136,7 +136,7 @@ object Cdc {
   private[graft] def deliveredBefore(spark: org.apache.spark.sql.SparkSession,
                                      checkpointDir: String, batchId: Long): Boolean = {
     val p = deliveredMarker(checkpointDir)
-    readMarker(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    readMarker(p.getFileSystem(graft.Tables.hadoopConf(spark)), p)
       .exists(_ < batchId)
   }
 
@@ -154,7 +154,7 @@ object Cdc {
   private def recordDelivered(spark: org.apache.spark.sql.SparkSession,
                               checkpointDir: String, batchId: Long): Unit = {
     val p = deliveredMarker(checkpointDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = p.getFileSystem(graft.Tables.hadoopConf(spark))
     if (readMarker(fs, p).isEmpty) {
       val tmp = new org.apache.hadoop.fs.Path(checkpointDir,
         s"._graft_delivered.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
@@ -200,7 +200,7 @@ object Cdc {
     // requires the path to exist, and commit() mkdirs the same dir, so
     // pre-creating it is safe whichever side wins
     val commitsDir = new org.apache.hadoop.fs.Path(s"$tableDir/_commits")
-    commitsDir.getFileSystem(spark.sessionState.newHadoopConf())
+    commitsDir.getFileSystem(graft.Tables.hadoopConf(spark))
       .mkdirs(commitsDir): Unit
     spark.readStream.schema(schema).options(sourceOptions)
       .json(s"$tableDir/_commits")
@@ -420,7 +420,7 @@ object Cdc {
         // entries are always REPLACED in the manifest (carried files
         // re-enter as individual file references); compactCommit folds
         // the file fragments back into one dir per bucket.
-        val hconf = spark.sessionState.newHadoopConf()
+        val hconf = graft.Tables.hadoopConf(spark)
         // entries carrying a deletion vector always rewrite WHOLE (no
         // file carry): the rewrite materializes the DV away, so DVs
         // never propagate through replaces and per-file row bookkeeping

@@ -359,7 +359,7 @@ object Docs {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty)
-          score(batch).write.mode("overwrite")
+          graft.Tables.writer(score(batch)).mode("overwrite")
             .parquet(s"$outPath/batch=${lineage}_$batchId")
       }
       .start()
@@ -467,8 +467,7 @@ object Docs {
     // metadata read always failed there and the lineage silently
     // degraded to the path fallback, losing wipe-and-recreate
     // protection); called inside foreachBatch, so a session is active
-    val conf = scala.util.Try(org.apache.spark.sql.SparkSession.active
-        .sessionState.newHadoopConf())
+    val conf = scala.util.Try(graft.Tables.hadoopConf(org.apache.spark.sql.SparkSession.active))
       .getOrElse(new org.apache.hadoop.conf.Configuration())
     val fs = p.getFileSystem(conf)
     val id = try {
@@ -570,7 +569,7 @@ object Docs {
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         if (!batch0.isEmpty) {
           val s = batch0.sparkSession
-          val conf = s.sessionState.newHadoopConf()
+          val conf = graft.Tables.hadoopConf(s)
           val batchKey = s"${lineage}_$batchId"
           val mRoot = s"$root/${sub}_m"
           val target = new org.apache.hadoop.fs.Path(s"$mRoot/batch=$batchKey")
@@ -698,7 +697,7 @@ object Docs {
       // when PROVEN over-cap); the read view re-filters, so skipping
       // this read entirely would still be correct — just fatter parts.
       val evidence = graft.index.StandingIndex.existingSeededDir(
-        s.sessionState.newHadoopConf(), s"$root/postings").toSeq ++
+        graft.Tables.hadoopConf(s), s"$root/postings").toSeq ++
         published.map(_.toString)
       val known =
         if (evidence.isEmpty) None

@@ -138,6 +138,46 @@ class CliSpec extends AnyFunSuite {
     assert(!logged.exists(_.contains("load:")), logged)
   }
 
+  test("a table that fails to commit fails snapshot after logging every outcome") {
+    val work = tmp()
+    val cfgPath = writeConfig(work,
+      s"""databases:
+         |  source_dir: ${TestSpark.sf}
+         |  destination_dir: $work/dest
+         |cache: $work/cache
+         |log_file: $work/graft.log
+         |queries:
+         |  - from: customer
+         |    limit: 5
+         |    join_depth: 5
+         |    backref_depth: 0
+         |""".stripMargin)
+    val args = Seq("-c", cfgPath, "--quiet")
+    Cli.run(spark, Cli.parseArgs(args :+ "load"))
+    // as in the load case above: a cached region file whose key column
+    // disagrees in type makes region's scan, and so its commit, fail
+    val entry = scala.util.Using.resource(Files.list(Paths.get(s"$work/cache")))(
+      _.iterator().next())
+    val region = entry.resolve("region").toString
+    spark.read.parquet(region)
+      .withColumn("r_regionkey", org.apache.spark.sql.functions.col("r_regionkey").cast("string"))
+      .write.mode("append").parquet(region)
+    val log = Paths.get(s"$work/graft.log")
+    Files.delete(log)
+    val e = intercept[IllegalStateException](Cli.run(spark, Cli.parseArgs(args :+ "snapshot")))
+    assert(e.getMessage.startsWith("snapshot: region failed to commit"), e.getMessage)
+    assert(e.getMessage.contains("2 of 3 tables committed"), e.getMessage)
+    assert(e.getCause != null)
+    val logged = Files.readAllLines(log).asScala
+    assert(logged.exists(l => l.contains("snapshot: ") && l.contains("nation=v1") &&
+      l.contains("customer=v1")), logged)
+    assert(logged.exists(l => l.contains("snapshot: region failed: ") &&
+      l.contains(e.getCause.getClass.getName)), logged)
+    for (t <- Seq("customer", "nation"))
+      assert(graft.sources.Versioned.versions(spark, s"$work/dest/versioned/$t") == Seq(1), t)
+    assert(graft.sources.Versioned.versions(spark, s"$work/dest/versioned/region").isEmpty)
+  }
+
   test("models command emits case-class source and an FK-ordered DDL script") {
     val work = tmp()
     val cfgPath = writeConfig(work,

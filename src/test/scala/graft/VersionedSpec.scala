@@ -1552,6 +1552,31 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.read(spark, dir).select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
 
+  test("manifests holding the old raw-string entries still read, compact and vacuum") {
+    import spark.implicits._
+    val dir = tmp("rawform")
+    Versioned.commit(Seq((1L, "a")).toDF("k", "v"), dir)
+    Versioned.commit(Seq((2L, "b")).toDF("k", "v"), dir, append = true)
+    // a plain write records its data dir FileSystem-qualified, as a
+    // bucketed one records its buckets
+    assert(Versioned.manifest(spark, dir).dataDirs.forall(_.startsWith("file:/")))
+    // rewrite both manifests in the form older writers recorded: the
+    // caller's own `dir` string; the checksum sidecar goes with the bytes
+    for (v <- 1 to 2) {
+      val m = java.nio.file.Paths.get(f"$dir/_commits/v$v%05d.json")
+      java.nio.file.Files.writeString(m, java.nio.file.Files.readString(m).replace("\"file:/", "\"/"))
+      java.nio.file.Files.deleteIfExists(m.resolveSibling(f".v$v%05d.json.crc"))
+    }
+    assert(Versioned.manifest(spark, dir).dataDirs.forall(_.startsWith(s"$dir/data/")))
+    assert(Versioned.read(spark, dir, Some(1)).count() == 1)
+    assert(Versioned.compactCommit(spark, dir) == 3)
+    assert(Versioned.manifest(spark, dir).dataDirs.forall(_.startsWith("file:/")))
+    assert(Versioned.vacuum(spark, dir, keepVersions = 3, graceMs = 0).isEmpty)
+    for (v <- 1 to 3) assert(Versioned.read(spark, dir, Some(v)).count() == math.min(v, 2))
+    assert(Versioned.vacuum(spark, dir, keepVersions = 1, graceMs = 0).size == 2)
+    assert(Versioned.read(spark, dir).select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
   test("no main source but the commit loop publishes a Versioned manifest") {
     // snapshot, append, replace, compaction, deletion vector and CDC
     // apply all form their manifest inside publishNext's one loop

@@ -19,7 +19,10 @@ first alternates from seed to seed, base first. Each copy runs its own
 
 Prints every run with its end-to-end metrics (with `--trace 1`, also its
 counts: spark.jobs, spark.stages, subset.jobs, tables.schema_jobs and
-versioned.files), then per metric: each side's median, the base's
+versioned.files, and two layer times: versioned.commit_ms, graft's own
+Versioned commits, and load.write_ms, the harness's replay of plain
+DataFrameWriter writes, a control that no change to graft's write path
+moves), then per metric: each side's median, the base's
 interquartile range, and the pairs the working tree won (direction from
 BENCHMARK.json). Exits 1 if any run failed, or if any seed's extract digest
 or `correct` verdict differs between the two sides.
@@ -41,6 +44,8 @@ DIGEST = re.compile(r"digest\(seed=\d+, first \d+ ops\) = (\w+)")
 END_TO_END = ("setup_s", "ops_per_min", "op_p50_s")
 # traced counts that repeat per seed on unchanged code: each run prints them
 COUNTS = ("spark.jobs", "spark.stages", "subset.jobs", "tables.schema_jobs", "versioned.files")
+# traced layer times printed next to the counts: a treated layer and its control
+TIMES = ("versioned.commit_ms", "load.write_ms")
 
 
 def seeds(spec):
@@ -139,7 +144,7 @@ def main():
                   f"failed={res.get('failed')} digest={r['digest']} " +
                   " ".join(f"{k}={m['value']:.4g}" for k, m in
                            sorted(res.get("metrics", {}).items())
-                           if k in END_TO_END + (COUNTS if a.trace else ())),
+                           if k in END_TO_END + (COUNTS + TIMES if a.trace else ())),
                   flush=True)
             if not r["ok"]:
                 problems.append(f"seed {seed} {side}: run failed\n  " + "\n  ".join(r["tail"]))
